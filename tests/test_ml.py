@@ -45,7 +45,7 @@ def test_ivf_ann_recall(spark, sf_dir, exact_top3):
 
 
 def test_mmr_matches_reference_algorithm(spark, sf_dir):
-    """vec_mmr_rerank (applyInPandas) == independent driver-side greedy
+    """vec_mmr_rerank (the shared MMR expression) == independent Python greedy
     MMR on the same candidates (the app.py:261-268 semantics)."""
     from vectordb_agentic_rag_spark.functions.vector import cosine
     from vectordb_agentic_rag_spark.operators.ml import mmr_select, vec_mmr_rerank

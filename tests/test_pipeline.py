@@ -3,6 +3,9 @@ retrieve/route -> clear on the sf0.001 documents fixture."""
 
 from __future__ import annotations
 
+import math
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -109,3 +112,206 @@ def test_clear_removes_index(spark, sf_dir, tmp_path):
     p.clear()
     with pytest.raises(Exception):
         spark.read.parquet(f"{p.index_dir}/chunks").count()
+
+
+def test_zero_vector_scores_zero_instead_of_raising(spark, tmp_path):
+    """A TF-IDF vector can be all zero: a query or chunk whose only word
+    is in every chunk (idf 0), or a whitespace-only query. Its cosine is
+    0 (operators.ml.mmr_select's convention), not a 0/0 that raises
+    DIVIDE_BY_ZERO under ANSI."""
+    p = RagPipeline(spark, str(tmp_path / "idx"), dim=64)
+    docs = spark.createDataFrame(
+        [(1, "common alpha beta"), (2, "common gamma delta"),
+         (3, "common alpha gamma"), (4, "common")],
+        "doc_id long, text string",
+    )
+    p.ingest(docs)
+    q = spark.createDataFrame(
+        [(0, "common"), (1, "   "), (2, "alpha")], "query_id long, query_text string"
+    )
+    plain = {(r.query_id, r.chunk_id): r.sim
+             for r in p.retrieve(q, mmr=False, k=4).collect()}
+    chunk_ids = [1_000_000, 2_000_000, 3_000_000, 4_000_000]
+    for qid in (0, 1):
+        assert [plain[(qid, c)] for c in chunk_ids] == [0.0] * 4
+    assert plain[(2, 4_000_000)] == 0.0  # chunk "common" is the zero vector
+    assert plain[(2, 1_000_000)] > 0 and plain[(2, 3_000_000)] > 0
+    picked = sorted(p.retrieve(q).collect(), key=lambda r: (r.query_id, r.mmr_rank))
+    assert [r.mmr_rank for r in picked if r.query_id == 0] == [0, 1, 2, 3]
+    # all sims tie at 0: the first pick is the lowest chunk_id
+    assert picked[0].chunk_id == 1_000_000 and picked[0].mmr_score == 0.0
+    assert sorted(r.query_id for r in p.query(q).collect()) == [0, 1, 2]
+    p.clear()
+
+
+# ------------------------------------------------ value oracle (Python)
+
+_VALUE_QUERIES = [
+    (10, "spark table merge window batch"),
+    (11, "latest news about streaming data"),
+    (12, "zqx vwy unmatchable gibberish"),
+    (13, "current hash join order"),
+    (14, "scan scan scan"),
+    (15, "a to is"),  # no keyword longer than 3 chars
+    (16, "vector query group column small"),
+]
+
+
+@pytest.fixture(scope="module")
+def full_pipe(spark, sf_dir, tmp_path_factory):
+    """The whole sf0.001 documents table, in an index of its own (the
+    ``pipe`` fixture is re-ingested by test_reingest_overwrites)."""
+    p = RagPipeline(spark, str(tmp_path_factory.mktemp("rag_full") / "index"), dim=64)
+    p.ingest(table(spark, sf_dir, "documents").select("doc_id", "text"))
+    yield p
+    p.clear()
+
+
+def _seq_cos(a, b) -> float:
+    """Cosine with sequential left folds, the program's arithmetic; 0
+    when either norm is 0."""
+    dot = sum(x * y for x, y in zip(a, b))
+    na = math.sqrt(sum(x * x for x in a))
+    nb = math.sqrt(sum(x * x for x in b))
+    return dot / (na * nb) if na and nb else 0.0
+
+
+def test_pipeline_values_match_python_replay(full_pipe, spark):
+    """retrieve(mmr=False) == a NumPy brute-force top-k (ties within
+    1e-6); retrieve() == an mmr_select replay over the top fetch_k;
+    every query() row's plan_type and sources == a Python replay of
+    assess_relevance + route; one query() row per query id."""
+    import numpy as np
+    import pyarrow.parquet as pq
+    from pyspark.ml.feature import HashingTF, Tokenizer
+    from pyspark.ml.functions import vector_to_array
+
+    from vectordb_agentic_rag_spark.operators.ml import mmr_select
+    from vectordb_agentic_rag_spark.plans.pipeline import (
+        DEFAULT_FETCH_K, DEFAULT_K, DEFAULT_LAMBDA,
+    )
+
+    k, fetch_k, lam = DEFAULT_K, DEFAULT_FETCH_K, DEFAULT_LAMBDA
+    chunks = pq.read_table(f"{full_pipe.index_dir}/chunks").sort_by("chunk_id")
+    ids = chunks["chunk_id"].to_pylist()
+    texts = chunks["page_content"].to_pylist()
+    embs = chunks["embedding"].to_pylist()
+    emb = np.array(embs)
+    idf = pq.read_table(f"{full_pipe.index_dir}/idf")["idf"][0].as_py()
+    q = spark.createDataFrame(_VALUE_QUERIES, "query_id long, query_text string")
+    # query TF from pyspark.ml's HashingTF (a library call), times idf
+    tf = HashingTF(inputCol="w", outputCol="tf", numFeatures=full_pipe.dim).transform(
+        Tokenizer(inputCol="query_text", outputCol="w").transform(q)
+    )
+    qv = {r.query_id: [t * w for t, w in zip(r.tf, idf)]
+          for r in tf.select("query_id", vector_to_array("tf").alias("tf")).collect()}
+
+    def by_query(rows):
+        out = {qid: [] for qid, _ in _VALUE_QUERIES}
+        for r in rows:
+            out[r.query_id].append(r)
+        return out
+
+    plain = {n: by_query(full_pipe.retrieve(q, mmr=False, k=n).collect())
+             for n in (k, fetch_k)}
+    mmr = by_query(full_pipe.retrieve(q).collect())
+    # below k = 3 picks the keyword half of the relevance gate decides
+    answers = {}
+    for kq in (k, 2, 0):
+        rows = full_pipe.query(q, k=kq).collect()
+        assert sorted(r.query_id for r in rows) == sorted(i for i, _ in _VALUE_QUERIES)
+        answers[kq] = {r.query_id: r for r in rows}
+
+    for qid, text in _VALUE_QUERIES:
+        v = np.array(qv[qid])
+        nrm = np.linalg.norm(emb, axis=1) * np.linalg.norm(v)
+        sims = np.divide(emb @ v, nrm, out=np.zeros(len(ids)), where=nrm > 0)
+        for n, rows in plain.items():
+            want = np.lexsort((ids, -np.round(sims, 6)))[:n]
+            kth = sims[want[-1]]
+            assert len(rows[qid]) == n
+            row_of = {c: i for i, c in enumerate(ids)}
+            for r in rows[qid]:
+                i = row_of[r.chunk_id]
+                assert abs(r.sim - sims[i]) <= 1e-6
+                assert sims[i] >= kth - 1e-6  # in the top n up to a tie
+                assert (r.doc_id, r.page_content) == (r.chunk_id // 1_000_000, texts[i])
+            clear = {ids[i] for i in want if sims[i] > kth + 1e-6}
+            assert clear <= {r.chunk_id for r in rows[qid]}
+
+        seq = [round(_seq_cos(e, qv[qid]), 6) for e in embs]
+        top = sorted(range(len(ids)), key=lambda i: (-seq[i], ids[i]))[:fetch_k]
+        want = mmr_select([(ids[i], embs[i], seq[i]) for i in top], k, lam)
+        got = sorted(mmr[qid], key=lambda r: r.mmr_rank)
+        assert [r.chunk_id for r in got] == [c for c, _ in want]
+        assert [r.mmr_rank for r in got] == list(range(len(want)))
+        for r, (_, score) in zip(got, want):
+            # both round one raw score to 6 decimals, Spark half-up on its
+            # shortest repr and Python on its binary value: they may
+            # differ by one unit in the 6th decimal
+            assert abs(r.mmr_score - score) <= 1e-6 + 1e-12
+            assert r.sim == seq[ids.index(r.chunk_id)]
+
+        for kq, rows in answers.items():
+            # greedy MMR: the first kq picks of k are the picks of kq
+            picked = [texts[ids.index(c)] for c, _ in want[:kq]]
+            kws = [w for w in text.lower().split(" ") if len(w) > 3]
+            hits = max((sum(w in t.lower() for w in kws) for t in picked), default=0)
+            relevant = bool(picked) and (len(picked) >= 3 or hits >= len(kws) / 2)
+            if any(w in text.lower() for w in ("latest", "current", "news")):
+                plan = "hybrid_search" if relevant else "web_search"
+            else:
+                plan = "document_rag" if relevant else "direct_answer"
+            a = rows[qid]
+            assert (a.query_text, a.plan_type) == (text, plan), kq
+            assert a.sources == ([t[:300] for t in picked[:3]] if picked else None)
+
+
+# ------------------------------------------- job-count and plan pins
+
+
+def _count_jobs(spark, fn):
+    """fn()'s result and the number of Spark jobs it started, counted
+    with statusTracker under a job group of its own."""
+    sc = spark.sparkContext
+    group = f"pin-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_ingest_job_count(spark, sf_dir, tmp_path):
+    """ingest() derives its chunks once: the IDF fit, the two writes
+    and the document count — no recount of the written chunks."""
+    p = RagPipeline(spark, str(tmp_path / "idx"), dim=64)
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
+    stats, jobs = _count_jobs(spark, lambda: p.ingest(docs))
+    assert jobs <= 5
+    assert stats.n_chunks == spark.read.parquet(f"{p.index_dir}/chunks").count()
+    p.clear()
+
+
+def test_query_job_count(pipe, spark):
+    """query() runs scan -> window -> MMR once: at most 2 jobs beyond
+    retrieve(), and none while its plan is built (the index tables are
+    read with explicit schemas)."""
+    q = _queries(spark)
+    _, retrieve_jobs = _count_jobs(spark, lambda: pipe.retrieve(q).collect())
+    df, build_jobs = _count_jobs(spark, lambda: pipe.query(q))
+    _, exec_jobs = _count_jobs(spark, df.collect)
+    assert build_jobs == 0
+    assert exec_jobs <= retrieve_jobs + 2
+
+
+def test_read_path_runs_no_python_worker(pipe, spark):
+    """Neither retrieve() nor query() hands rows to a Python worker."""
+    q = _queries(spark)
+    for df in (pipe.retrieve(q), pipe.query(q)):
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        for node in ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
+            assert node not in plan

@@ -44,9 +44,32 @@ def norm(a: Column) -> Column:
     return F.sqrt(norm2(a))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity, the reference's distance metric (app.py:87)."""
-    return dot(a, b) / (norm(a) * norm(b))
+def _dot_hof_sql(a: str, b: str) -> str:
+    """``dot`` as SQL text over two array expressions."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+        "0D, (acc, v) -> acc + v)"
+    )
+
+
+def cosine(a: Column | str, b: Column | str) -> Column:
+    """Cosine similarity, the reference's distance metric (app.py:87).
+
+    0 when either vector has norm 0 (``operators.ml.mmr_select``'s
+    convention), where 0/0 would raise DIVIDE_BY_ZERO under ANSI — e.g.
+    for a query whose TF-IDF vector is all zero. Pass column names (str)
+    for a one-expr plan build: a Python-built higher-order function
+    costs several py4j calls per lambda. Both forms fold identically.
+    """
+    if isinstance(a, str) and isinstance(b, str):
+        a, b = f"`{a}`", f"`{b}`"
+        return F.expr(
+            f"coalesce({_dot_hof_sql(a, b)} / nullif(sqrt({_dot_hof_sql(a, a)}) * "
+            f"sqrt({_dot_hof_sql(b, b)}), 0D), 0D)"
+        )
+    return F.coalesce(
+        dot(a, b) / F.nullif(norm(a) * norm(b), F.lit(0.0)), F.lit(0.0)
+    )
 
 
 def cosine_to_const(a: Column, b: Column, b_norm: float) -> Column:
@@ -207,4 +230,55 @@ def l2_distance(a: Column, b: Column) -> Column:
             F.lit(0.0),
             lambda acc, x: acc + x,
         )
+    )
+
+
+# Greedy Maximal Marginal Relevance as ONE Catalyst expression over a
+# per-group candidate array (typically ``collect_list(struct(...))`` of
+# the <= fetch_k rows a window top-k kept). It replays
+# ``operators.ml.mmr_select`` exactly: sequential-fold cosines that are 0
+# when either norm is 0, the score ``lam*sim - (1-lam)*max cos to the
+# picked`` (0 before the first pick), arg-max by raw score with ties to
+# the lowest id. The state is an ``aggregate`` over least(k, n) steps
+# carrying the picks and each candidate's running max cosine to them,
+# so a step scores n candidates against ONE new pick. Rendered as one
+# SQL string: a single F.expr parse at plan build, no Python worker.
+
+
+def mmr_picks(cands: str, k: int, lam: float, id_field: str = "id") -> Column:
+    """Greedy-MMR picks over the array<struct> column ``cands`` as an
+    ``array<struct<idx: int, score: double>>`` in pick order: ``idx`` is
+    the 0-based position of the pick in ``cands`` and ``score`` its raw
+    (unrounded) MMR score. Each candidate struct has an integral
+    ``id_field`` (the tie-break), an ``embedding`` array and ``sim``, its
+    similarity to the query. Candidate order does not matter; ``k <= 0``
+    or an empty array gives no picks."""
+    c = f"`{cands}`"
+    nrm = f"transform({c}, x -> sqrt({_dot_hof_sql('x.embedding', 'x.embedding')}))"
+    zero = (
+        "named_struct('picks', CAST(array() AS ARRAY<STRUCT<idx: INT, score: DOUBLE>>), "
+        f"'red', array_repeat(CAST(NULL AS DOUBLE), size({c})), 'nrm', {nrm})"
+    )
+    # best unpicked candidate: struct order = (score desc, id asc)
+    best = (
+        f"array_max(filter(transform({c}, (x, i) -> named_struct("
+        f"'score', {float(lam)!r}D * CAST(x.sim AS DOUBLE) - "
+        f"{float(1 - lam)!r}D * coalesce(st.red[i], 0D), "
+        f"'neg_id', -CAST(x.`{id_field}` AS BIGINT), 'idx', i)), "
+        "e -> NOT exists(st.picks, p -> p.idx = e.idx)))"
+    )
+    cos = (
+        "CASE WHEN s.nrm[j] * s.nrm[b.idx] = 0D THEN 0D ELSE "
+        f"{_dot_hof_sql(f'{c}[j].embedding', f'{c}[b.idx].embedding')} "
+        "/ (s.nrm[j] * s.nrm[b.idx]) END"
+    )
+    step = (
+        f"aggregate(array({best}), st, (s, b) -> named_struct("
+        "'picks', concat(s.picks, array(named_struct('idx', b.idx, 'score', b.score))), "
+        f"'red', transform(s.red, (r, j) -> greatest(r, {cos})), "
+        "'nrm', s.nrm))"
+    )
+    return F.expr(
+        f"aggregate(array_repeat(0, least({int(k)}, size({c}))), {zero}, "
+        f"(st, _) -> {step}, st -> st.picks)"
     )

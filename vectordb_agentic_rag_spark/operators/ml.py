@@ -23,7 +23,8 @@ for ANN (app.py:271). Batch Spark replaces them with:
                         are scored and what each row costs;
 - vec_mmr_rerank      : exact port of the reference's MMR
                         (fetch_k=20, k=5, lambda=0.5, app.py:264-266)
-                        as an applyInPandas over the tiny candidate set.
+                        as one Catalyst expression over the tiny
+                        candidate set (functions.vector.mmr_picks).
 """
 
 from __future__ import annotations
@@ -31,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.vector import cosine, cosine_fixed
+from ..functions.vector import cosine_fixed, mmr_picks
 from ..registry import query
 from ..tables import table
 
@@ -932,8 +933,8 @@ _DD_RED = (
     # LATERAL to the argmax of 0.5*sim - 0.5*max_cos_to_selected over
     # the not-yet-picked candidates, carrying the selected ids and
     # embeddings forward as lists. Verified bit-for-bit against the
-    # applyInPandas greedy loop (same sequential-fold cosine, raw-score
-    # ordering, lowest-vec_id ties).
+    # greedy loop (same sequential-fold cosine, raw-score ordering,
+    # lowest-vec_id ties).
     oracle=f"""
     WITH RECURSIVE
     q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
@@ -969,13 +970,12 @@ def vec_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R8 port (perform_vector_search, app.py:256-296): fetch_k=20
     candidates by cosine vs query vec_id=0, then greedy MMR with
     lambda=0.5 down to k=5. Candidate fetch is the scalable
-    TakeOrderedAndProject; the greedy loop runs in applyInPandas over
-    one 20-row group per query — O(k*fetch_k) work on <=fetch_k rows,
-    never the corpus. Deterministic: ties broken on vec_id. Fully
-    oracle-checked: the greedy selection is expressible as a DuckDB
-    recursive CTE (see oracle), so this op is NOT rows-only."""
-    import pandas as pd
-
+    TakeOrderedAndProject; the greedy loop is the shared Catalyst
+    expression ``functions.vector.mmr_picks`` over each query's
+    collected candidates — O(k*fetch_k) work on <=fetch_k rows, never
+    the corpus, no Python worker. Deterministic: ties broken on vec_id.
+    Fully oracle-checked: the greedy selection is expressible as a
+    DuckDB recursive CTE (see oracle), so this op is NOT rows-only."""
     emb = table(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") == 0).select(
         F.lit(0).alias("query_id"), F.col("embedding").alias("qv")
@@ -992,25 +992,17 @@ def vec_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("sim").desc(), "vec_id")
         .limit(20)
     )
-
-    def rerank(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = [
-            (int(r.vec_id), [float(x) for x in r.embedding], float(r.sim))
-            for r in pdf.itertuples()
-        ]
-        rows.sort(key=lambda t: (-t[2], t[0]))
-        picked = mmr_select(rows, k=5, lam=0.5)
-        return pd.DataFrame(
-            {
-                "query_id": [int(pdf.query_id.iloc[0])] * len(picked),
-                "vec_id": [p[0] for p in picked],
-                "mmr_score": [p[1] for p in picked],
-                "rank": list(range(1, len(picked) + 1)),
-            }
-        )
-
-    return cand.groupBy("query_id").applyInPandas(
-        rerank, "query_id int, vec_id bigint, mmr_score double, rank int"
+    picked = (
+        cand.groupBy("query_id")
+        .agg(F.collect_list(F.struct("vec_id", "embedding", "sim")).alias("c"))
+        .select("query_id", "c", mmr_picks("c", 5, 0.5, id_field="vec_id").alias("p"))
+    )
+    return picked.select(
+        "query_id",
+        F.expr(
+            "inline(transform(p, (x, r) -> named_struct('vec_id', c[x.idx].vec_id, "
+            "'mmr_score', round(x.score, 6), 'rank', r + 1)))"
+        ),
     )
 
 

@@ -17,17 +17,25 @@ Scale design (the part the reference outsources to Qdrant/Cohere):
 
 - the "vector store" is a partitioned parquet layout under
   ``index_dir`` (chunks + embeddings + idf weights) — a storage format
-  a 1000-executor cluster can scan/prune, not a serving index;
+  a 1000-executor cluster can scan/prune, not a serving index. Its two
+  tables have fixed schemas (``CHUNKS_SCHEMA``, ``IDF_SCHEMA``) and are
+  read with them, so building a read plan runs no Spark job;
 - embedding is HashingTF(dim)+IDF: hashing is stateless murmur3 (any
   executor embeds any row with no model shuffle), and the IDF fit is
   the single global aggregate of the write path (SURVEY §3.1);
-- retrieval is batch top-k: cosine as a codegen'd higher-order-function
-  expression, fetch_k via TakeOrderedAndProject, MMR only ever touches
-  <= fetch_k rows (the reference's own bound, app.py:264-266);
+- retrieval is batch top-k: cosine as a higher-order-function
+  expression, fetch_k via a window top-k partitioned by query, and
+  greedy MMR as one Catalyst expression over each query's <= fetch_k
+  candidates (the reference's own bound, app.py:264-266). No row goes
+  through a Python worker;
 - queries are a DataFrame, not a string: ``retrieve`` takes a whole
   table of queries and resolves them in ONE pass over the corpus
   (query-side broadcast), because at 100 TB per-query scans are the
-  bug, not the feature.
+  bug, not the feature;
+- each call derives its data once: ``ingest`` takes the chunk count
+  from the IDF fit instead of recounting its output, and ``query``
+  builds relevance and sources from the per-query pick array that
+  ``retrieve`` explodes.
 """
 
 from __future__ import annotations
@@ -37,14 +45,58 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.vector import cosine
-from ..operators.ml import mmr_select
+from ..functions.vector import cosine, mmr_picks
 from ..operators.text import chunk_documents
 
 # reference retrieval constants, app.py:264-266
 DEFAULT_K = 5
 DEFAULT_FETCH_K = 20
 DEFAULT_LAMBDA = 0.5
+
+# The stored index tables. ingest() writes exactly these types and the
+# read path reads with them, so building a read plan needs no parquet
+# schema-inference job.
+CHUNKS_SCHEMA = (
+    "chunk_id long, doc_id long, chunk_no int, page_content string, "
+    "embedding array<double>"
+)
+IDF_SCHEMA = "idf array<double>"
+
+# app.py:298-343: the words that make a query need fresh (web) results
+FRESH_WORDS = ("latest", "current", "news")
+
+
+# The gate and route below are SQL text, parsed once each by F.expr: a
+# Python-built higher-order-function Column costs several py4j calls per
+# lambda, and plan build is a large share of a one-query call.
+
+
+def _keywords_sql(text: str) -> str:
+    """The query's lower-cased words longer than 3 chars (app.py:282)."""
+    return f"filter(split(lower({text}), ' '), w -> length(w) > 3)"
+
+
+def _hits_sql(keywords: str, content: str) -> str:
+    """How many keywords occur in a chunk — substring match, exactly the
+    reference's `keyword in content`."""
+    return f"size(filter({keywords}, w -> instr(lower({content}), w) > 0))"
+
+
+def _relevant_sql(n_docs: str, matches: str, n_keywords: str) -> str:
+    """R9's gate: >= 3 chunks retrieved OR one chunk holds at least half
+    of the keywords."""
+    return f"({n_docs} >= 3 OR {matches} >= {n_keywords} / 2)"
+
+
+def _plan_type_sql(text: str, relevant: str) -> str:
+    """R12's four-way branch (app.py:343-433); the LLM search-needed bit
+    is a freshness-keyword predicate."""
+    fresh = "(" + " OR ".join(f"instr(lower({text}), '{w}') > 0" for w in FRESH_WORDS) + ")"
+    return (
+        f"CASE WHEN {fresh} AND {relevant} THEN 'hybrid_search' "
+        f"WHEN {fresh} THEN 'web_search' "
+        f"WHEN {relevant} THEN 'document_rag' ELSE 'direct_answer' END"
+    )
 
 
 @dataclass(frozen=True)
@@ -75,24 +127,27 @@ class RagPipeline:
         re-ingest atomically replaces the collection.
 
         The only cross-node boundaries are the IDF document-frequency
-        reduce and the final write — same shape at any scale.
+        reduce and the final write — same shape at any scale. The chunk
+        count comes from that IDF fit (one document per chunk), so the
+        chunks are derived once.
         """
+        import pyarrow as pa
         from pyspark.ml.feature import IDF, HashingTF, Tokenizer
+        from pyspark.ml.functions import vector_to_array
 
-        chunks = chunk_documents(docs, text_col).withColumn(
-            "chunk_id",
-            F.col("doc_id") * F.lit(1_000_000) + F.col("chunk_no"),
+        doc_id = F.col("doc_id").cast("long")
+        chunks = chunk_documents(docs, text_col).select(
+            (doc_id * F.lit(1_000_000) + F.col("chunk_no")).alias("chunk_id"),
+            doc_id.alias("doc_id"),
+            "chunk_no",
+            "page_content",
         )
         toks = Tokenizer(inputCol="page_content", outputCol="words").transform(chunks)
         tf = HashingTF(
             inputCol="words", outputCol="tf", numFeatures=self.dim
         ).transform(toks)
         idf_model = IDF(inputCol="tf", outputCol="embedding").fit(tf)
-        embedded = idf_model.transform(tf)
-
-        from pyspark.ml.functions import vector_to_array
-
-        out = embedded.select(
+        out = idf_model.transform(tf).select(
             "chunk_id",
             "doc_id",
             "chunk_no",
@@ -101,24 +156,33 @@ class RagPipeline:
         )
         out.write.mode(mode).parquet(f"{self.index_dir}/chunks")
         # idf weights as a 1-row table so retrieve() can embed queries
-        # identically without refitting (hashing itself is stateless)
-        self.spark.createDataFrame(
-            [([float(x) for x in idf_model.idf],)], "idf array<double>"
-        ).write.mode(mode).parquet(f"{self.index_dir}/idf")
-
-        n_docs = docs.count()
-        n_chunks = out.count()
-        return IngestStats(n_docs=n_docs, n_chunks=n_chunks, dim=self.dim)
+        # identically without refitting (hashing itself is stateless).
+        # Built from an Arrow table: a Python-list DataFrame would be
+        # scanned through a Python worker.
+        idf = pa.table(
+            {"idf": pa.array([idf_model.idf.toArray().tolist()], pa.list_(pa.float64()))}
+        )
+        self.spark.createDataFrame(idf).write.mode(mode).parquet(
+            f"{self.index_dir}/idf"
+        )
+        return IngestStats(
+            n_docs=docs.count(), n_chunks=int(idf_model.numDocs), dim=self.dim
+        )
 
     # ----------------------------------------------------------- read path
 
     def _chunks(self) -> DataFrame:
-        return self.spark.read.parquet(f"{self.index_dir}/chunks")
+        return self.spark.read.schema(CHUNKS_SCHEMA).parquet(
+            f"{self.index_dir}/chunks"
+        )
 
-    def _embed_queries(self, queries: DataFrame, text_col: str) -> DataFrame:
-        """Embed query rows with the stored idf weights — murmur3
-        HashingTF is deterministic, so query and corpus land in the
-        same space with zero model state beyond the idf vector."""
+    def _embed_queries(
+        self, queries: DataFrame, text_col: str, id_col: str
+    ) -> DataFrame:
+        """(query_id, qv): query rows embedded with the stored idf
+        weights — murmur3 HashingTF is deterministic, so query and corpus
+        land in the same space with zero model state beyond the idf
+        vector."""
         from pyspark.ml.feature import HashingTF, Tokenizer
         from pyspark.ml.functions import vector_to_array
 
@@ -126,16 +190,61 @@ class RagPipeline:
         tf = HashingTF(
             inputCol="words", outputCol="tf", numFeatures=self.dim
         ).transform(toks)
-        idf = self.spark.read.parquet(f"{self.index_dir}/idf")
+        idf = self.spark.read.schema(IDF_SCHEMA).parquet(f"{self.index_dir}/idf")
+        return tf.crossJoin(F.broadcast(idf)).select(
+            F.col(id_col).alias("query_id"),
+            F.zip_with(vector_to_array("tf"), "idf", lambda a, b: a * b).alias("qv"),
+        )
+
+    def _candidates(
+        self, queries: DataFrame, text_col: str, id_col: str, n: int
+    ) -> DataFrame:
+        """Each query's ``n`` best chunks by 6-decimal cosine, ties to the
+        lowest chunk_id: one corpus pass against the broadcast query
+        vectors, then a window top-n partitioned by query. A query whose
+        vector is all zero scores 0 against every chunk."""
+        q = self._embed_queries(queries, text_col, id_col)
+        sim = F.round(cosine("embedding", "qv"), 6)
+        w = Window.partitionBy("query_id").orderBy(
+            F.col("sim").desc(), F.col("chunk_id")
+        )
         return (
-            tf.crossJoin(F.broadcast(idf))
-            .withColumn(
-                "qv",
-                F.zip_with(
-                    vector_to_array("tf"), "idf", lambda a, b: a * b
-                ),
-            )
-            .drop("words", "tf", "idf")
+            self._chunks()
+            .crossJoin(F.broadcast(q))
+            .select("query_id", "chunk_id", "doc_id", "page_content",
+                    "embedding", sim.alias("sim"))
+            .withColumn("rn", F.row_number().over(w))
+            .where(F.col("rn") <= n)
+            .drop("rn")
+        )
+
+    def _picks(
+        self, queries: DataFrame, text_col: str, id_col: str,
+        k: int, fetch_k: int, lambda_mult: float,
+    ) -> DataFrame:
+        """One row per query with candidates: ``query_id`` and ``picks``,
+        its greedy-MMR selection in rank order as array<struct<chunk_id,
+        doc_id, page_content, sim, mmr_score, mmr_rank>>. The groupBy
+        reuses the window's query_id partitioning (no extra exchange)
+        and MMR is one Catalyst expression over <= fetch_k candidates."""
+        cands = self._candidates(queries, text_col, id_col, fetch_k)
+        grouped = cands.groupBy("query_id").agg(
+            F.collect_list(
+                F.struct("chunk_id", "doc_id", "page_content", "embedding", "sim")
+            ).alias("c")
+        )
+        picked = grouped.select(
+            "query_id", "c",
+            mmr_picks("c", k, lambda_mult, id_field="chunk_id").alias("p"),
+        )
+        return picked.select(
+            "query_id",
+            F.expr(
+                "transform(p, (x, r) -> named_struct("
+                "'chunk_id', c[x.idx].chunk_id, 'doc_id', c[x.idx].doc_id, "
+                "'page_content', c[x.idx].page_content, 'sim', c[x.idx].sim, "
+                "'mmr_score', round(x.score, 6), 'mmr_rank', r))"
+            ).alias("picks"),
         )
 
     def retrieve(
@@ -151,52 +260,21 @@ class RagPipeline:
         """R8 port (perform_vector_search, app.py:256-296), set-oriented:
         ALL queries resolve in one corpus pass.
 
-        fetch_k candidates per query via a partitioned window top-k
-        (for a single query Catalyst degenerates this to the same
-        work as TakeOrderedAndProject), then greedy MMR per query
-        group in applyInPandas — bounded at fetch_k rows per group,
-        never the corpus. ``mmr=False`` reproduces the reference's
-        second, default-settings retriever (app.py:401).
+        fetch_k candidates per query via a partitioned window top-k,
+        then greedy MMR per query as one Catalyst expression
+        (functions.vector.mmr_picks) over that query's collected
+        candidates — bounded at fetch_k rows per query, never the
+        corpus, and no Python worker. ``mmr=False`` reproduces the
+        reference's second, default-settings retriever (app.py:401).
         """
-        import pandas as pd
-
-        q = self._embed_queries(queries, text_col).select(
-            F.col(id_col).alias("query_id"), "qv"
-        )
-        corpus = self._chunks()
-        sim = F.round(cosine(F.col("embedding"), F.col("qv")), 6)
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("sim").desc(), F.col("chunk_id")
-        )
-        cands = (
-            corpus.crossJoin(F.broadcast(q))
-            .select("query_id", "chunk_id", "doc_id", "page_content",
-                    "embedding", sim.alias("sim"))
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= (fetch_k if mmr else k))
-            .drop("rn")
-        )
         if not mmr:
-            return cands.select(
+            return self._candidates(queries, text_col, id_col, k).select(
                 "query_id", "chunk_id", "doc_id", "page_content", "sim"
             )
-
-        def rerank(pdf: pd.DataFrame) -> pd.DataFrame:
-            picked = mmr_select(
-                list(zip(pdf.chunk_id, pdf.embedding, pdf.sim)), k, lambda_mult
-            )
-            rank_of = {vid: i for i, (vid, _) in enumerate(picked)}
-            score_of = dict(picked)
-            out = pdf[pdf.chunk_id.isin(rank_of)].copy()
-            out["mmr_score"] = out.chunk_id.map(score_of)
-            out["mmr_rank"] = out.chunk_id.map(rank_of)
-            return out.sort_values("mmr_rank").drop(columns=["embedding"])
-
-        schema = (
-            "query_id long, chunk_id long, doc_id long, page_content string, "
-            "sim double, mmr_score double, mmr_rank int"
+        picks = self._picks(queries, text_col, id_col, k, fetch_k, lambda_mult)
+        return picks.select(
+            F.col("query_id").cast("long").alias("query_id"), F.inline("picks")
         )
-        return cands.groupBy("query_id").applyInPandas(rerank, schema)
 
     def assess_relevance(
         self, retrieved: DataFrame, queries: DataFrame,
@@ -206,20 +284,15 @@ class RagPipeline:
         relevant iff >= 3 chunks retrieved OR the chunks contain at
         least half of the query's len>3 keywords (substring match,
         exactly the reference's `keyword in content`)."""
-        kw = F.filter(
-            F.split(F.lower(F.col(text_col)), " "), lambda w: F.length(w) > 3
+        q = queries.select(
+            F.col(id_col).alias("query_id"),
+            F.expr(_keywords_sql(f"`{text_col}`")).alias("keywords"),
         )
-        q = queries.select(F.col(id_col).alias("query_id"), kw.alias("keywords"))
         joined = retrieved.join(F.broadcast(q), "query_id")
         per_chunk = joined.select(
             "query_id",
             "keywords",
-            F.size(
-                F.filter(
-                    F.col("keywords"),
-                    lambda k: F.instr(F.lower(F.col("page_content")), k) > 0,
-                )
-            ).alias("hits"),
+            F.expr(_hits_sql("keywords", "page_content")).alias("hits"),
         )
         return per_chunk.groupBy("query_id").agg(
             F.count("*").alias("n_docs"),
@@ -227,10 +300,7 @@ class RagPipeline:
             F.first(F.size("keywords")).alias("n_keywords"),
         ).select(
             "query_id",
-            (
-                (F.col("n_docs") >= 3)
-                | (F.col("matches") >= F.col("n_keywords") / 2)
-            ).alias("relevant"),
+            F.expr(_relevant_sql("n_docs", "matches", "n_keywords")).alias("relevant"),
         )
 
     def route(
@@ -241,22 +311,12 @@ class RagPipeline:
         search-needed bit becomes a freshness-keyword predicate; the
         four-way branch structure is the reference's own
         (app.py:343-433)."""
-        fresh = (
-            F.instr(F.lower(F.col(text_col)), "latest") > 0
-        ) | (F.instr(F.lower(F.col(text_col)), "current") > 0) | (
-            F.instr(F.lower(F.col(text_col)), "news") > 0
-        )
-        q = queries.select(
-            F.col(id_col).alias("query_id"), F.col(text_col), fresh.alias("needs_search")
-        )
+        q = queries.select(F.col(id_col).alias("query_id"), F.col(text_col))
         j = q.join(relevance, "query_id", "left").fillna({"relevant": False})
-        plan = (
-            F.when(F.col("needs_search") & F.col("relevant"), "hybrid_search")
-            .when(F.col("needs_search"), "web_search")
-            .when(F.col("relevant"), "document_rag")
-            .otherwise("direct_answer")
+        return j.select(
+            "query_id", text_col,
+            F.expr(_plan_type_sql(f"`{text_col}`", "relevant")).alias("plan_type"),
         )
-        return j.select("query_id", text_col, plan.alias("plan_type"))
 
     def query(
         self, queries: DataFrame,
@@ -266,27 +326,36 @@ class RagPipeline:
         """The full read path (SURVEY §3.2): retrieve -> gate -> route ->
         assemble context. Output mirrors the reference's plan dict
         (app.py:405-417): one row per query with plan_type and the
-        top-3 source previews (app.py:359 `[:3]`, app.py:544 `[:300]`)."""
-        retrieved = self.retrieve(queries, text_col, id_col, k=k)
-        rel = self.assess_relevance(retrieved, queries, text_col, id_col)
-        routed = self.route(queries, rel, text_col, id_col)
-        sources = (
-            retrieved.where(F.col("mmr_rank") < 3)
-            .groupBy("query_id")
-            .agg(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct("mmr_rank", F.substring("page_content", 1, 300).alias("preview"))
-                    )
-                ).alias("ranked")
-            )
-            .select(
-                "query_id",
-                F.transform(F.col("ranked"), lambda s: s.preview).alias("sources"),
-            )
+        top-3 source previews (app.py:359 `[:3]`, app.py:544 `[:300]`).
+
+        The same gate and route as ``assess_relevance`` + ``route``, but
+        computed from each query's one pick array (broadcast into a
+        left join with the queries), so scan -> window -> MMR runs once.
+        """
+        picks = self._picks(
+            queries, text_col, id_col, k, DEFAULT_FETCH_K, DEFAULT_LAMBDA
         )
-        return routed.join(sources, "query_id", "left").select(
-            "query_id", text_col, "plan_type", "sources"
+        text = f"`{text_col}`"
+        q = queries.select(
+            F.col(id_col).alias("query_id"), F.col(text_col),
+            F.expr(_keywords_sql(text)).alias("keywords"),
+        )
+        j = q.join(F.broadcast(picks), "query_id", "left")
+        # a query without picks has no relevance row: not relevant
+        n_docs = "coalesce(size(picks), 0)"
+        matches = (
+            "aggregate(picks, 0, (acc, p) -> "
+            f"greatest(acc, {_hits_sql('keywords', 'p.page_content')}))"
+        )
+        relevant = f"({n_docs} > 0 AND {_relevant_sql(n_docs, matches, 'size(keywords)')})"
+        sources = (
+            f"CASE WHEN {n_docs} > 0 THEN "
+            "transform(slice(picks, 1, 3), p -> substring(p.page_content, 1, 300)) END"
+        )
+        return j.select(
+            "query_id", text_col,
+            F.expr(_plan_type_sql(text, relevant)).alias("plan_type"),
+            F.expr(sources).alias("sources"),
         )
 
     # ----------------------------------------------------------- DDL path
