@@ -129,15 +129,15 @@ def test_partitioned_read_prunes(spark, sf_dir):
 def test_compaction_reduces_file_count(spark, sf_dir):
     import glob
 
-    from vectordb_agentic_rag_spark.tables import sf_tag
+    from vectordb_agentic_rag_spark.tables import SCRATCH, sf_tag
 
     QUERIES["maintenance_compact_small_files"](spark, sf_dir).collect()
     tag = sf_tag(sf_dir)
     frag = glob.glob(
-        f"/root/repo/_scratch/sources/docs_fragmented_{tag}.parquet/part-*"
+        f"{SCRATCH}/sources/docs_fragmented_{tag}.parquet/part-*"
     )
     compact = glob.glob(
-        f"/root/repo/_scratch/sources/docs_compacted_{tag}.parquet/part-*"
+        f"{SCRATCH}/sources/docs_compacted_{tag}.parquet/part-*"
     )
     assert len(frag) == 64
     assert len(compact) <= 4

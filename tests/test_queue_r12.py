@@ -1,5 +1,4 @@
-"""Recompute pytests for the round-12 queued ops (implemented round 11,
-registration deferred — see registry._DEFERRED_OPERATOR_MODULES).
+"""Recompute pytests for the operators in operators/queue_r12.py.
 Plain-Python re-derivations from the raw parquet: independent of both
 engines, so a logic bug mirrored into the oracle cannot hide."""
 

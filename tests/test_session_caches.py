@@ -1,80 +1,150 @@
-"""clear_session_caches must evict EVERY module-level session cache.
+"""The session-artifact memo (``tables.session_artifact``) and its clear.
 
-Round-14 verdict: five ``_*_CACHE`` dicts added over rounds 13-14 were
-missing from the old hand-maintained list in
-``tables.clear_session_caches`` (a long-lived multi-sf session then
-retains every localCheckpoint RDD ever built — the ADVICE-r10 leak).
-The function now discovers caches by the naming convention; these
-tests pin (a) that the convention catches every cache that exists on
-disk, and (b) that a call actually empties them all.
+Every driver-side session memo in the package goes through
+``session_artifact``: one key scheme (application id + the build
+function's positional arguments) and one registry, which
+``tables.clear_session_caches`` walks to unpersist what the builds
+persisted and to forget write-once layouts. These tests pin the hit,
+miss and release behaviour, and a text scan keeps hand-rolled memos
+from coming back.
 """
 
 from __future__ import annotations
 
 import re
+import uuid
 from pathlib import Path
 
+import pytest
+
 from vectordb_agentic_rag_spark import tables
-from vectordb_agentic_rag_spark.registry import (
-    _DEFERRED_OPERATOR_MODULES,
-    _OPERATOR_MODULES,
-    load_all_operators,
-    load_deferred_operators,
-)
 
 PKG_ROOT = Path(__file__).resolve().parents[1] / "vectordb_agentic_rag_spark"
 
-# module-level assignment of a session cache: `_FOO_CACHE: dict = {}`
-# (annotated or bare). Matches at column 0 only — locals don't count.
-_DECL = re.compile(r"^(_[A-Z0-9_]*_CACHE)\s*[:=]", re.MULTILINE)
+# worker-side memos of pure functions of bytes: no session state
+_WORKER_MEMOS = {
+    "_JPEG_DHT_CACHE",
+    "_JPEG_HUFF_LUT_CACHE",
+    "_JPEG_DCONLY_MEMO",
+    "_DEFLATE_REV_MEMO",
+    "_LZW_BASE_ENC",
+    "_LZW_BASE_DEC",
+    "_JAC_CODES_CACHE",
+}
+# module-level memo by name (any *cache* / *written* / *memo* global) or
+# by shape (an empty dict or set bound at column 0)
+_MEMO_DECL = re.compile(
+    r"^(_\w*(?:cache|written|memo)\w*)\s*[:=]"
+    r"|^(_\w+)\s*(?::[^=\n]*)?=\s*(?:\{\}|set\(\)|dict\(\))",
+    re.MULTILINE | re.IGNORECASE,
+)
 
 
-def _declared_caches_on_disk() -> dict[str, set[str]]:
-    """Map dotted module name -> cache globals found by text scan."""
-    found: dict[str, set[str]] = {}
-    for py in PKG_ROOT.rglob("*.py"):
-        names = set(_DECL.findall(py.read_text()))
-        if not names:
-            continue
-        rel = py.relative_to(PKG_ROOT.parent).with_suffix("")
-        found[".".join(rel.parts)] = names
-    return found
+def _count_jobs(spark, fn):
+    """fn()'s result and the number of Spark jobs it started, counted
+    with statusTracker under a job group of its own."""
+    sc = spark.sparkContext
+    group = f"memo-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _persistent_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_hit_returns_same_object_without_jobs(spark, sf_dir):
+    from vectordb_agentic_rag_spark.operators import analytics9
+    from vectordb_agentic_rag_spark.sources import readers
+
+    for build in (analytics9._day_cent_totals, readers._events_by_type):
+        first = build(spark, sf_dir)
+        again, jobs = _count_jobs(spark, lambda: build(spark, sf_dir))
+        assert again is first and jobs == 0, build.__name__
+    orders = tables.table(spark, sf_dir, "orders")
+    assert tables.table(spark, sf_dir, "orders") is orders
+
+
+def test_key_is_application_id_plus_arguments(spark, monkeypatch):
+    built = []
+
+    @tables.session_artifact
+    def probe(spark, n):
+        built.append(n)
+        return object()
+
+    a = probe(spark, 1)
+    assert probe(spark, 1) is a
+    assert probe(spark, 2) is not a  # different argument
+    app_id, jsc = tables._context(spark)
+    monkeypatch.setitem(
+        tables._CONTEXTS, spark.sparkContext, (f"{app_id}-other", jsc)
+    )
+    assert probe(spark, 1) is not a  # different application
+    assert built == [1, 2, 1]
+    with pytest.raises(TypeError, match="positionally"):
+        probe(spark, n=3)  # a keyed argument must not bypass the key
+
+
+def test_monkeypatched_lut_text_misses(spark, sf_dir, monkeypatch):
+    from vectordb_agentic_rag_spark.operators import ml
+
+    healthy = ml._pq16_frames(spark, sf_dir, ml._pq16_lut_expr())
+    monkeypatch.setattr(
+        ml, "_pq16_lut_expr", lambda: "CAST(0 AS DECIMAL(18,9))"
+    )
+    zeroed = ml._pq16_frames(spark, sf_dir, ml._pq16_lut_expr())
+    assert zeroed is not healthy
+    lutv = zeroed[1].select("lutv").distinct().collect()
+    assert [r.lutv for r in lutv] == [0]
+
+
+def test_clear_session_caches_empties_every_cache(spark, sf_dir):
+    """clear_session_caches unpersists every RDD the builds persisted —
+    returned checkpoints, intermediate ones (_day_type_cells,
+    _polish_frames) and pinned hot tables — then forgets every entry,
+    so the next call rebuilds, and rewrites write-once layouts."""
+    from vectordb_agentic_rag_spark.operators import analytics8, analytics9
+
+    tables.clear_session_caches()
+    before = _persistent_rdds(spark)
+    analytics9._day_type_cells(spark, sf_dir)
+    analytics8._polish_frames(spark, sf_dir)
+    tables.cache_hot_tables(spark, sf_dir, ["region"])
+    assert _persistent_rdds(spark) - before, "builds persisted nothing?"
+
+    tables.clear_session_caches()
+    assert _persistent_rdds(spark) <= before
+    assert not any(tables._MEMOS)
+    assert not tables.table(spark, sf_dir, "region").is_cached
+    assert analytics9._day_type_cells(spark, sf_dir).count() > 0
+
+    from vectordb_agentic_rag_spark.sources import readers
+
+    readers._events_by_type(spark, sf_dir)
+    tables.clear_session_caches()
+    _, jobs = _count_jobs(
+        spark, lambda: readers._events_by_type(spark, sf_dir)
+    )
+    assert jobs > 0  # the write-once layout is written again
 
 
 def test_every_cache_module_is_sweepable():
-    # every file that declares a _*_CACHE global must be reachable from
-    # the registry module lists (or the tables._EXTRA_CACHE_MODULES
-    # list for non-operator modules), or clear_session_caches can't
-    # see it
-    sweepable = (
-        set(_OPERATOR_MODULES)
-        | set(_DEFERRED_OPERATOR_MODULES)
-        | set(tables._EXTRA_CACHE_MODULES)
-    )
-    for mod, names in _declared_caches_on_disk().items():
-        assert mod in sweepable, (
-            f"{mod} declares session caches {sorted(names)} but is not "
-            "in _OPERATOR_MODULES/_DEFERRED_OPERATOR_MODULES — "
-            "clear_session_caches would never evict them"
-        )
-
-
-def test_clear_session_caches_empties_every_cache():
-    load_all_operators()
-    load_deferred_operators()
-    import importlib
-
-    touched = []
-    for mod_name, names in _declared_caches_on_disk().items():
-        mod = importlib.import_module(mod_name)
-        for name in names:
-            cache = getattr(mod, name)
-            assert isinstance(cache, dict), f"{mod_name}.{name} is not a dict"
-            cache["__sentinel__"] = object()
-            touched.append((mod_name, name, cache))
-    assert touched, "text scan found no session caches — pattern broken?"
-
-    tables.clear_session_caches()
-    leftovers = [f"{m}.{n}" for m, n, c in touched if c]
-    assert not leftovers, f"clear_session_caches missed: {leftovers}"
-    assert not tables._scan_cache and not tables._hot_cached
+    """No session memo outside the registry: no module-level cache,
+    written-set or memo global (the worker-side byte memos aside), no
+    id(spark) key, and no hard-coded checkout path."""
+    for py in PKG_ROOT.rglob("*.py"):
+        src = py.read_text()
+        rel = py.relative_to(PKG_ROOT)
+        assert "id(spark)" not in src, rel
+        assert str(PKG_ROOT.parent) not in src, rel
+        for m in _MEMO_DECL.finditer(src):
+            name = m.group(1) or m.group(2)
+            if (str(rel), name) == ("tables.py", "_MEMOS"):
+                continue
+            assert name in _WORKER_MEMOS, f"{rel}: hand-rolled memo {name}"

@@ -291,8 +291,7 @@ OPS = [
     # day-domain ops are covered by the existing events entries.
     # stream_psi_drift_live is streaming-replay-bound like the other
     # stream_* ops.  dedup_substring_span_purge and the band-tuning
-    # table are document-scaled and audit here (deferred-registration
-    # ops still load through load_deferred_operators).
+    # table are document-scaled and audit here.
     ("agg_qini_uplift_curve", "events"),
     ("agg_laspeyres_paasche_index", "lineitem"),
     ("graph_local_bridges", "lineitem"),
@@ -555,9 +554,6 @@ def main() -> None:
     from vectordb_agentic_rag_spark.tables import table
 
     load_all_operators()
-    from vectordb_agentic_rag_spark.registry import load_deferred_operators
-
-    load_deferred_operators()  # round-queued ops audit early too
     spark = get_spark("scale-exp")
     spark.sparkContext.setLogLevel("ERROR")
 

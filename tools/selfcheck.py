@@ -130,9 +130,6 @@ def main(only: list[str]) -> int:
     from vectordb_agentic_rag_spark.tables import TABLES
 
     load_all_operators()
-    from vectordb_agentic_rag_spark.registry import load_deferred_operators
-
-    load_deferred_operators()  # round-queued ops are checkable early
     sf_dir = os.environ.get("SELFCHECK_SF_DIR", "/root/testdata/sf0.01")
     spark = get_spark("selfcheck")
     con = duckdb.connect()

@@ -28,14 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# (applicationId, cache_key) -> checkpointed bucket assignment. The
-# localCheckpoint below is EAGER per DataFrame build (the r13 lesson:
-# a ckpt inside an op body re-derives on every build — for the
-# abc-pareto caller that was a full fact groupBy + range shuffle per
-# call); callers whose input is a pure function of (session, sf_dir)
-# pass cache_key to run it once per session. Swept by
-# tables.clear_session_caches via the _*_CACHE convention.
-_PREFIX_BUCKETS_CACHE: dict = {}
+from ..tables import session_artifact
 
 
 def dist_exclusive_prefix(
@@ -51,24 +44,20 @@ def dist_exclusive_prefix(
     order keys share one range bucket, so prefixes are well-defined;
     callers here all order by a key that is unique per row.  Sum
     columns keep their natural Spark sum type (BIGINT -> BIGINT,
-    DECIMAL(p,s) -> widened DECIMAL) — cast at the call site."""
+    DECIMAL(p,s) -> widened DECIMAL) — cast at the call site.
+
+    The bucket assignment's localCheckpoint is EAGER per DataFrame
+    build (the r13 lesson: a ckpt inside an op body re-derives on every
+    build — for the abc-pareto caller that was a full fact groupBy +
+    range shuffle per call); callers whose ``df`` is a pure function of
+    (session, ``cache_key``) pass ``cache_key`` to run it once per
+    session."""
     cols = [F.col(c).desc() if d else F.col(c).asc() for c, d in order]
-    if cache_key is not None:
-        spark = df.sparkSession
-        full_key = (spark.sparkContext.applicationId, cache_key)
-        dfp = _PREFIX_BUCKETS_CACHE.get(full_key)
-        if dfp is None:
-            dfp = (
-                df.repartitionByRange(buckets, *cols)
-                .withColumn("_pid", F.spark_partition_id())
-                .localCheckpoint()
-            )
-            _PREFIX_BUCKETS_CACHE[full_key] = dfp
+    if cache_key is None:
+        dfp = _range_buckets(df, cols, buckets)
     else:
-        dfp = (
-            df.repartitionByRange(buckets, *cols)
-            .withColumn("_pid", F.spark_partition_id())
-            .localCheckpoint()
+        dfp = _shared_range_buckets(
+            df.sparkSession, cache_key, df=df, cols=cols, buckets=buckets
         )
     w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
     offs = dfp.groupBy("_pid").agg(
@@ -101,3 +90,16 @@ def dist_exclusive_prefix(
         *[f"_o_{c}" for c in sums],
         *[f"_w_{c}" for c in sums],
     )
+
+
+def _range_buckets(df: DataFrame, cols: list, buckets: int) -> DataFrame:
+    return (
+        df.repartitionByRange(buckets, *cols)
+        .withColumn("_pid", F.spark_partition_id())
+        .localCheckpoint()
+    )
+
+
+@session_artifact
+def _shared_range_buckets(spark, cache_key: str, *, df, cols, buckets):
+    return _range_buckets(df, cols, buckets)

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import table
+from ..tables import session_artifact, table
 from .rag import _BM25_B, _BM25_K1, _BM25_TERMS, _KEYWORDS
 
 # ---------------------------------------------------------------------------
@@ -932,9 +932,7 @@ def _km_asg_ctes() -> list[str]:
     return parts
 
 
-_KM_ASG_CACHE: dict = {}
-
-
+@session_artifact
 def _km_assignments(spark: SparkSession, sf_dir: str):
     """Spark twin of _km_asg_ctes: the final Lloyd assignment frame
     (vec_id, e1..eD, d0..d{K-1}, cl) plus the final centroid frame —
@@ -945,10 +943,6 @@ def _km_assignments(spark: SparkSession, sf_dir: str):
     dedup_semantic_cluster_purge) were each re-running the 3-iteration
     unrolled Lloyd chain per DataFrame build. Both frames are
     corpus-bounded: asg = one row per embedding, cent = k rows."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _KM_ASG_CACHE.get(key)
-    if hit is not None:
-        return hit
     emb = table(spark, sf_dir, "embeddings")
     dims = range(1, _KM_D + 1)
     pts = emb.select(
@@ -983,9 +977,7 @@ def _km_assignments(spark: SparkSession, sf_dir: str):
             cent = asg.groupBy("cl").agg(
                 *[F.expr(_km_newdim(i)).alias(f"c{i}") for i in dims]
             )
-    hit = (asg.localCheckpoint(), cent.localCheckpoint())
-    _KM_ASG_CACHE[key] = hit
-    return hit
+    return asg.localCheckpoint(), cent.localCheckpoint()
 
 
 def _km_oracle() -> str:

@@ -807,7 +807,7 @@ def pipeline_dedup_threshold_sensitivity(
     # session-cached ckpt pair table at the loosest tau (threshold is
     # a kernel post-filter; same codes side-file as the 0.7 op) —
     # referenced by all 5 tau rows
-    pairs = _minhash_verified_pairs(spark, sf_dir, threshold=0.5).select(
+    pairs = _minhash_verified_pairs(spark, sf_dir, 0.5).select(
         "doc_b", "jac"
     )
     docs_total = (

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import sf_tag, table
+from ..tables import SCRATCH, session_artifact, sf_tag, table
 
 # ---------------------------------------------------------------------------
 # maintenance_rowgroup_pruning_sim
@@ -29,8 +29,23 @@ from ..tables import sf_tag, table
 _PRUNE_BUCKETS = 16  # target bucket count for both layouts
 _PRUNE_PREDS = 8  # predicate panel size
 
-# layouts written once per (session, sf_dir)
-_pruning_written: set[tuple[int, str]] = set()
+
+@session_artifact
+def _pruning_layouts(spark: SparkSession, sf_dir: str, *, layouts) -> str:
+    """Write one partitioned orders copy per ``layouts`` entry (name ->
+    grp expression, a function of sf_dir) once per session; return the
+    root the copies sit under."""
+    base = f"{SCRATCH}/sources/pruning_{sf_tag(sf_dir)}"
+    for layout, grp_expr in layouts.items():
+        (
+            table(spark, sf_dir, "orders")
+            .select("o_orderkey", F.expr(grp_expr).alias("grp"))
+            .repartition("grp")  # one task -> one file per bucket
+            .write.mode("overwrite")
+            .partitionBy("grp")
+            .parquet(f"{base}/{layout}")
+        )
+    return base
 
 
 def _pruning_oracle() -> str:
@@ -130,7 +145,6 @@ def maintenance_rowgroup_pruning_sim(
     mn, mx = int(mn), int(mx)
     span = mx - mn + 1
     width = span // _PRUNE_BUCKETS + 1
-    base = f"/root/repo/_scratch/sources/pruning_{sf_tag(sf_dir)}"
     layouts = {
         "clustered": f"(CAST(o_orderkey AS BIGINT) - {mn}) div {width}",
         "scattered": (
@@ -138,18 +152,7 @@ def maintenance_rowgroup_pruning_sim(
             " div 268435456"
         ),
     }
-    key = (id(spark), sf_dir)
-    if key not in _pruning_written:
-        for layout, grp_expr in layouts.items():
-            (
-                table(spark, sf_dir, "orders")
-                .select("o_orderkey", F.expr(grp_expr).alias("grp"))
-                .repartition("grp")  # one task -> one file per bucket
-                .write.mode("overwrite")
-                .partitionBy("grp")
-                .parquet(f"{base}/{layout}")
-            )
-        _pruning_written.add(key)
+    base = _pruning_layouts(spark, sf_dir, layouts=layouts)
 
     # real footer walk: fold per-row-group min/max/rows per bucket
     bucket_rows = []
@@ -666,8 +669,27 @@ def agg_hll_dense_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _Z2_BITS = 4  # 4 bits per dimension -> 16x16 = 256 buckets per layout
 
-# ckpt'd 1-row domain frame per (appId, sf_dir)
-_Z2_DOMAIN_CACHE: dict = {}
+
+@session_artifact
+def _z2_domain(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The 1-row (mnx, mxx, mny, mxy) domain frame referenced by both
+    layouts AND the box panel — ckpt once per session (round-13
+    lesson: an uncached in-op localCheckpoint re-derives EAGERLY on
+    every DataFrame build)."""
+    return (
+        table(spark, sf_dir, "orders")
+        .agg(
+            F.expr("CAST(min(o_custkey) AS BIGINT)").alias("mnx"),
+            F.expr("CAST(max(o_custkey) AS BIGINT)").alias("mxx"),
+            F.expr(
+                "min(CAST(o_totalprice * 100 + 0.5 AS BIGINT))"
+            ).alias("mny"),
+            F.expr(
+                "max(CAST(o_totalprice * 100 + 0.5 AS BIGINT))"
+            ).alias("mxy"),
+        )
+        .localCheckpoint()
+    )
 
 
 def _z2_morton(bx: str, by: str) -> str:
@@ -809,23 +831,7 @@ def maintenance_zorder_pruning_2d(
     shuffle as maintenance_rowgroup_pruning_sim's clustered copy."""
     e = _z2_exprs(duck=False)
     o = table(spark, sf_dir, "orders")
-    ckey = (spark.sparkContext.applicationId, sf_dir)
-    if ckey not in _Z2_DOMAIN_CACHE:
-        # 1-row domain frame referenced by both layouts AND the box
-        # panel — ckpt once per session (round-13 lesson: an
-        # uncached in-op localCheckpoint re-derives EAGERLY on every
-        # DataFrame build)
-        _Z2_DOMAIN_CACHE[ckey] = o.agg(
-            F.expr("CAST(min(o_custkey) AS BIGINT)").alias("mnx"),
-            F.expr("CAST(max(o_custkey) AS BIGINT)").alias("mxx"),
-            F.expr(
-                "min(CAST(o_totalprice * 100 + 0.5 AS BIGINT))"
-            ).alias("mny"),
-            F.expr(
-                "max(CAST(o_totalprice * 100 + 0.5 AS BIGINT))"
-            ).alias("mxy"),
-        ).localCheckpoint()
-    b = _Z2_DOMAIN_CACHE[ckey]
+    b = _z2_domain(spark, sf_dir)
     b.createOrReplaceTempView("z2_domain")
     base = o.crossJoin(F.broadcast(b))
     assigned = base.selectExpr(
@@ -876,12 +882,6 @@ def maintenance_zorder_pruning_2d(
 # ---------------------------------------------------------------------------
 
 _LGN_T = 4  # Fisher-scoring iterations (betas move < 1e-6 by step 4)
-
-# collected per-iteration betas, keyed (appId, sf_dir) — rebuilding the
-# output DataFrame is then pure plan-build (the round-13
-# localCheckpoint-in-op lesson: never redo driver actions per build)
-_LGN_BETAS_CACHE: dict = {}
-_LGN_USERS_CACHE: dict = {}
 
 
 def _lgn_user_sql(duck: bool) -> str:
@@ -983,64 +983,52 @@ def _lgn_correct_expr(b0: str, b1: str, b2: str) -> str:
     )
 
 
+@session_artifact
 def _lgn_fit(spark: SparkSession, sf_dir: str) -> tuple:
     """Session-cached (users_ckpt, per-iteration beta strings): the
     fit machinery shared by agg_logistic_newton and the downstream
-    model-evaluation ops (AUC)."""
+    model-evaluation ops (AUC). Caching the collected betas makes
+    rebuilding the output DataFrame pure plan-build (the round-13
+    localCheckpoint-in-op lesson: never redo driver actions per
+    build)."""
     ev = table(spark, sf_dir, "events")
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _LGN_USERS_CACHE:
-        u = (
-            ev.groupBy("user_id")
-            .agg(
-                F.sum(
-                    F.expr(
-                        "CASE WHEN event_type = 'purchase' THEN 1"
-                        " ELSE 0 END"
-                    )
-                ).alias("np"),
-                F.sum(
-                    F.expr(
-                        "CASE WHEN event_type = 'view' THEN 1 ELSE 0 END"
-                    )
-                ).alias("nv"),
-                F.sum(
-                    F.expr(
-                        "CASE WHEN event_type = 'click' THEN 1 ELSE 0 END"
-                    )
-                ).alias("nc"),
-            )
-            .selectExpr(
-                "CASE WHEN np >= 12 THEN 1 ELSE 0 END AS y",
-                "CAST(nv AS DOUBLE) / 64 AS x1",
-                "CAST(nc AS DOUBLE) / 64 AS x2",
-            )
-            .localCheckpoint()
-        )
-        _LGN_USERS_CACHE[key] = u
-    users = _LGN_USERS_CACHE[key]
-
-    if key not in _LGN_BETAS_CACHE:
-        betas = [("0.0", "0.0", "0.0")]
-        cur = betas[0]
-        for _ in range(_LGN_T):
-            bref = [f"CAST({b} AS DOUBLE)" for b in cur]
-            terms = users.selectExpr(*_lgn_term_selects(*bref))
-            sums = terms.agg(
-                *[
-                    F.sum(f"t_{nm}").alias(f"s_{nm}")
-                    for nm, _ in _LGN_TERMS
-                ]
-            )
-            row = sums.selectExpr(*_lgn_solve_selects(*bref)).first()
-            if row["det"] == 0.0:
-                raise ValueError(
-                    "logistic_newton: singular information matrix"
+    users = (
+        ev.groupBy("user_id")
+        .agg(
+            F.sum(
+                F.expr(
+                    "CASE WHEN event_type = 'purchase' THEN 1"
+                    " ELSE 0 END"
                 )
-            cur = tuple(f"{row[c]:.9f}" for c in ("b0", "b1", "b2"))
-            betas.append(cur)
-        _LGN_BETAS_CACHE[key] = betas
-    return users, _LGN_BETAS_CACHE[key]
+            ).alias("np"),
+            F.sum(
+                F.expr("CASE WHEN event_type = 'view' THEN 1 ELSE 0 END")
+            ).alias("nv"),
+            F.sum(
+                F.expr("CASE WHEN event_type = 'click' THEN 1 ELSE 0 END")
+            ).alias("nc"),
+        )
+        .selectExpr(
+            "CASE WHEN np >= 12 THEN 1 ELSE 0 END AS y",
+            "CAST(nv AS DOUBLE) / 64 AS x1",
+            "CAST(nc AS DOUBLE) / 64 AS x2",
+        )
+        .localCheckpoint()
+    )
+    betas = [("0.0", "0.0", "0.0")]
+    cur = betas[0]
+    for _ in range(_LGN_T):
+        bref = [f"CAST({b} AS DOUBLE)" for b in cur]
+        terms = users.selectExpr(*_lgn_term_selects(*bref))
+        sums = terms.agg(
+            *[F.sum(f"t_{nm}").alias(f"s_{nm}") for nm, _ in _LGN_TERMS]
+        )
+        row = sums.selectExpr(*_lgn_solve_selects(*bref)).first()
+        if row["det"] == 0.0:
+            raise ValueError("logistic_newton: singular information matrix")
+        cur = tuple(f"{row[c]:.9f}" for c in ("b0", "b1", "b2"))
+        betas.append(cur)
+    return users, betas
 
 
 def _lgn_cte_chain() -> list:
@@ -1169,8 +1157,41 @@ def agg_logistic_newton(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KCG_K = 8  # seeds
 _KCG_D = 64  # embedding dim
 
-# picked seeds per (appId, sf_dir): (seed_rank, vec_id, d2_covered, emb)
-_KCG_PICKS_CACHE: dict = {}
+
+@session_artifact
+def _kcg_picks(spark: SparkSession, sf_dir: str) -> list:
+    """The farthest-first seeds as (seed_rank, vec_id, d2_covered, emb)
+    tuples, picked once per session (k driver actions)."""
+    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    first = emb.orderBy("vec_id").limit(1).collect()[0]
+    picks = [
+        (1, int(first["vec_id"]), 0.0,
+         [float(x) for x in first["embedding"]])
+    ]
+    for t in range(2, _KCG_K + 1):
+        dcols = [
+            F.expr(_kcg_dist_spark("embedding", p[3])).alias(f"d_{j}")
+            for j, p in enumerate(picks)
+        ]
+        scored = emb.select("vec_id", "embedding", *dcols)
+        dmin = (
+            "least(" + ", ".join(f"d_{j}" for j in range(len(picks))) + ")"
+            if len(picks) > 1
+            else "d_0"
+        )
+        row = (
+            scored.selectExpr(
+                "vec_id", "embedding", f"round({dmin}, 6) AS dmin"
+            )
+            .orderBy(F.col("dmin").desc(), F.col("vec_id"))
+            .limit(1)
+            .collect()[0]
+        )
+        picks.append(
+            (t, int(row["vec_id"]), float(row["dmin"]),
+             [float(x) for x in row["embedding"]])
+        )
+    return picks
 
 
 def _kcg_dist_duck(erow: str, srow: str) -> str:
@@ -1263,42 +1284,7 @@ def sample_kcenter_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sample a candidate pool per round); documented, not needed at
     k=8. Picks are session-cached so warm rebuilds are pure
     plan-build."""
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _KCG_PICKS_CACHE:
-        first = emb.orderBy("vec_id").limit(1).collect()[0]
-        picks = [
-            (1, int(first["vec_id"]), 0.0,
-             [float(x) for x in first["embedding"]])
-        ]
-        for t in range(2, _KCG_K + 1):
-            dcols = [
-                F.expr(_kcg_dist_spark("embedding", p[3])).alias(
-                    f"d_{j}"
-                )
-                for j, p in enumerate(picks)
-            ]
-            scored = emb.select("vec_id", "embedding", *dcols)
-            dmin = (
-                "least(" + ", ".join(f"d_{j}" for j in range(len(picks)))
-                + ")"
-                if len(picks) > 1
-                else "d_0"
-            )
-            row = (
-                scored.selectExpr(
-                    "vec_id", "embedding", f"round({dmin}, 6) AS dmin"
-                )
-                .orderBy(F.col("dmin").desc(), F.col("vec_id"))
-                .limit(1)
-                .collect()[0]
-            )
-            picks.append(
-                (t, int(row["vec_id"]), float(row["dmin"]),
-                 [float(x) for x in row["embedding"]])
-            )
-        _KCG_PICKS_CACHE[key] = picks
-    picks = _KCG_PICKS_CACHE[key]
+    picks = _kcg_picks(spark, sf_dir)
     return spark.createDataFrame(
         [(r, v, d) for r, v, d, _ in picks],
         schema="seed_rank bigint, vec_id bigint, d2_covered double",

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import table
+from ..tables import session_artifact, table
 from .dedup import P_CODE, P_HASH
 
 # ---------------------------------------------------------------------------
@@ -565,11 +565,11 @@ def rag_rbo_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _COSUPPLY_MIN_SUPPORT = 3  # orders two suppliers must share
-_COSUPPLY_EDGES_CACHE: dict = {}
 
 
+@session_artifact
 def _cosupply_edges(
-    spark: SparkSession, sf_dir: str, min_support: int = _COSUPPLY_MIN_SUPPORT
+    spark: SparkSession, sf_dir: str, min_support: int
 ) -> DataFrame:
     """Distinct (u < v) supplier co-supply edges, materialized once per
     (application, sf_dir) via localCheckpoint — the triangle query
@@ -578,32 +578,27 @@ def _cosupply_edges(
     and re-joins the fact table (measured: 14 parquet scans in the
     naive plan). The edge list is bounded by |S| choose 2 (supplier
     pairs), orders of magnitude below the fact table, so checkpointing
-    it is the 100 TB play. Keyed by applicationId, not id(spark)
-    (CPython id-recycling hazard — dedup.py:915 pins the same rule)."""
-    key = (spark.sparkContext.applicationId, sf_dir, min_support)
-    if key not in _COSUPPLY_EDGES_CACHE:
-        li = (
-            table(spark, sf_dir, "lineitem")
-            .select("l_orderkey", "l_suppkey")
-            .distinct()
-        )
-        a = li.select(
-            F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("u")
-        )
-        b = li.select(
-            F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("v")
-        )
-        e = (
-            a.join(b, "ok")
-            .where(F.col("u") < F.col("v"))
-            .groupBy("u", "v")
-            .agg(F.count("*").alias("n_shared"))
-            .where(F.col("n_shared") >= min_support)
-            .select("u", "v")
-            .localCheckpoint()
-        )
-        _COSUPPLY_EDGES_CACHE[key] = e
-    return _COSUPPLY_EDGES_CACHE[key]
+    it is the 100 TB play."""
+    li = (
+        table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_suppkey")
+        .distinct()
+    )
+    a = li.select(
+        F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("u")
+    )
+    b = li.select(
+        F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("v")
+    )
+    return (
+        a.join(b, "ok")
+        .where(F.col("u") < F.col("v"))
+        .groupBy("u", "v")
+        .agg(F.count("*").alias("n_shared"))
+        .where(F.col("n_shared") >= min_support)
+        .select("u", "v")
+        .localCheckpoint()
+    )
 
 
 
@@ -630,9 +625,7 @@ _TRI_PN_CTES = """
 """
 
 
-_TRI_PER_NODE_CACHE: dict = {}
-
-
+@session_artifact
 def _tri_per_node(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node triangle counts (node, tri_count) on the support-3
     co-supply graph — the degree-oriented wedge listing shared by
@@ -647,13 +640,7 @@ def _tri_per_node(spark: SparkSession, sf_dir: str) -> DataFrame:
     each of which was re-running the full wedge-mass pass (184M wedges
     at sf0.1 support-3) per DataFrame build — OPS_BENCH r14 before:
     9.2 s clustering_coefficient + 6.9 s triangle_cosupply per call."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _TRI_PER_NODE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    hit = _tri_per_node_plan(spark, sf_dir).localCheckpoint()
-    _TRI_PER_NODE_CACHE[key] = hit
-    return hit
+    return _tri_per_node_plan(spark, sf_dir).localCheckpoint()
 
 
 def _tri_per_node_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2031,47 +2018,42 @@ def agg_cusum_arl_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _WEDGE_CAP = 32  # per-pivot out-adjacency cap (smallest (deg, id) kept)
-_ORIENTED_EDGES_CACHE: dict = {}
 
 
+@session_artifact
 def _oriented_cosupply_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree-oriented co-supply edges (s, t, dt), localCheckpointed
     ONCE per (applicationId, sf_dir) — the checkpoint is otherwise
     re-derived eagerly on EVERY DataFrame build (measured 9.7 s warm
     in OPS_BENCH vs 0.7 s prepared-plan before caching; the
     _cosupply_edges rule, one level up)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ORIENTED_EDGES_CACHE:
-        e = _cosupply_edges(spark, sf_dir)
-        deg = (
-            e.select(F.col("u").alias("n"))
-            .unionAll(e.select(F.col("v").alias("n")))
-            .groupBy("n")
-            .agg(F.count("*").alias("d"))
+    e = _cosupply_edges(spark, sf_dir, _COSUPPLY_MIN_SUPPORT)
+    deg = (
+        e.select(F.col("u").alias("n"))
+        .unionAll(e.select(F.col("v").alias("n")))
+        .groupBy("n")
+        .agg(F.count("*").alias("d"))
+    )
+    lo_first = F.struct(F.col("du"), F.col("u")) < F.struct(
+        F.col("dv"), F.col("v")
+    )
+    return (
+        e.join(
+            deg.select(F.col("n").alias("u"), F.col("d").alias("du")),
+            "u",
         )
-        lo_first = F.struct(F.col("du"), F.col("u")) < F.struct(
-            F.col("dv"), F.col("v")
+        .join(
+            deg.select(F.col("n").alias("v"), F.col("d").alias("dv")),
+            "v",
         )
-        _ORIENTED_EDGES_CACHE[key] = (
-            e.join(
-                deg.select(F.col("n").alias("u"), F.col("d").alias("du")),
-                "u",
-            )
-            .join(
-                deg.select(F.col("n").alias("v"), F.col("d").alias("dv")),
-                "v",
-            )
-            .select(
-                F.when(lo_first, F.col("u")).otherwise(F.col("v")).alias("s"),
-                F.when(lo_first, F.col("v")).otherwise(F.col("u")).alias("t"),
-                F.when(lo_first, F.col("dv"))
-                .otherwise(F.col("du"))
-                .alias("dt"),
-            )
-            .localCheckpoint()  # bounded by |S| choose 2; referenced
-            # by the rank window AND the closure probe
+        .select(
+            F.when(lo_first, F.col("u")).otherwise(F.col("v")).alias("s"),
+            F.when(lo_first, F.col("v")).otherwise(F.col("u")).alias("t"),
+            F.when(lo_first, F.col("dv")).otherwise(F.col("du")).alias("dt"),
         )
-    return _ORIENTED_EDGES_CACHE[key]
+        .localCheckpoint()  # bounded by |S| choose 2; referenced
+        # by the rank window AND the closure probe
+    )
 
 
 @query(

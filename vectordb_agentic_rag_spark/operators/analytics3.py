@@ -21,7 +21,12 @@ from ..functions.domain import dist_exclusive_prefix
 from ..registry import query
 from ..tables import table
 from .analytics import _KM_D, _km_asg_ctes, _km_assignments
-from .analytics2 import _TRI_PN_CTES, _cosupply_edges, _tri_per_node
+from .analytics2 import (
+    _COSUPPLY_MIN_SUPPORT,
+    _TRI_PN_CTES,
+    _cosupply_edges,
+    _tri_per_node,
+)
 from .text import _bpe_duck_ctes, _bpe_train
 
 # ---------------------------------------------------------------------------
@@ -165,7 +170,7 @@ def _purge_assignments(spark: SparkSession, sf_dir: str):
     k = _purge_k(sf_dir)
     emb = table(spark, sf_dir, "embeddings")
     dims = range(1, _KM_D + 1)
-    sample = _corpus_sample(emb, sf_dir)[:, : _KM_D]
+    sample = _corpus_sample(spark, sf_dir)[:, : _KM_D]
     cents = _lloyd_multispace(sample[:, None, :], K=k, iters=8, seed=42)[0]
     pts = emb.select(
         "vec_id",
@@ -658,7 +663,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Parity: 2*tri and deg*(deg-1) are exact integers; one division,
     round(6); ties break on (cc DESC, s_suppkey)."""
-    e = _cosupply_edges(spark, sf_dir)
+    e = _cosupply_edges(spark, sf_dir, _COSUPPLY_MIN_SUPPORT)
     deg = (
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))
@@ -1162,7 +1167,7 @@ def vec_pairwise_cos_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vector import dot_fixed, norm_fixed
 
     emb = table(spark, sf_dir, "embeddings")
-    d = len(_query_vector_raw(sf_dir, 0))
+    d = len(_query_vector_raw(spark, sf_dir, 0))
     pan = (
         emb.select("vec_id", "embedding")
         .orderBy("vec_id")

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import table
+from ..tables import session_artifact, table
 
 # ---------------------------------------------------------------------------
 # agg_ols_regression
@@ -227,46 +227,38 @@ def agg_autocorr_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 # graph_adamic_adar
 # ---------------------------------------------------------------------------
 
-_COPURCHASE_EDGES_CACHE: dict = {}
 
-
-def _copurchase_edges(
-    spark: SparkSession, sf_dir: str, min_support: int = 2
-) -> DataFrame:
-    """Distinct (u < v) part co-purchase edges with >= min_support
-    shared orders, materialized once per (application, sf_dir) via
+@session_artifact
+def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct (u < v) part co-purchase edges with >= 2 shared orders,
+    materialized once per (application, sf_dir) via
     localCheckpoint — graph_adamic_adar references the edge list THREE
     times (two directed copies for the wedge join + the non-edge
     anti-join) and without materialization each reference re-derives
     the support join from the fact table (measured: 25 exchanges /
     6 lineitem scans in the naive plan). Bounded by |P| choose 2,
     orders of magnitude below the fact table — the same 100 TB play
-    as analytics2._cosupply_edges; keyed by applicationId (the
-    dedup.py:915 id-recycling rule)."""
-    key = (spark.sparkContext.applicationId, sf_dir, min_support)
-    if key not in _COPURCHASE_EDGES_CACHE:
-        li = (
-            table(spark, sf_dir, "lineitem")
-            .select("l_orderkey", "l_partkey")
-            .distinct()
-        )
-        a = li.select(
-            F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u")
-        )
-        b = li.select(
-            F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v")
-        )
-        e = (
-            a.join(b, "ok")
-            .where(F.col("u") < F.col("v"))
-            .groupBy("u", "v")
-            .agg(F.count("*").alias("ns"))
-            .where(F.col("ns") >= min_support)
-            .select("u", "v")
-            .localCheckpoint()
-        )
-        _COPURCHASE_EDGES_CACHE[key] = e
-    return _COPURCHASE_EDGES_CACHE[key]
+    as analytics2._cosupply_edges."""
+    li = (
+        table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_partkey")
+        .distinct()
+    )
+    a = li.select(
+        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u")
+    )
+    b = li.select(
+        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v")
+    )
+    return (
+        a.join(b, "ok")
+        .where(F.col("u") < F.col("v"))
+        .groupBy("u", "v")
+        .agg(F.count("*").alias("ns"))
+        .where(F.col("ns") >= 2)
+        .select("u", "v")
+        .localCheckpoint()
+    )
 
 
 @query(

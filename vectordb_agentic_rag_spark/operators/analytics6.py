@@ -580,7 +580,7 @@ def vec_topk_margin_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = emb.where(F.col("vec_id") >= 10).select(
         F.col("vec_id").alias("neighbor_id"), "embedding"
     )
-    d = len(_query_vector_raw(sf_dir, 0))
+    d = len(_query_vector_raw(spark, sf_dir, 0))
     sims = corpus.crossJoin(F.broadcast(q)).select(
         "query_id",
         F.col("neighbor_id"),

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import table
+from ..tables import session_artifact, table
 
 # ---------------------------------------------------------------------------
 # agg_median_polish_grid
@@ -189,15 +189,9 @@ def agg_median_polish_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
 # loop per build cost ~2.7 s/call in the per-op audit (the r13
 # ckpt-inside-op-body lesson). The polished quadruple is bounded (the
 # ~150-cell day x type grid), so it session-caches like the other
-# stored-artifact frames; swept by tables.clear_session_caches.
-_POLISH_FRAMES_CACHE: dict = {}
-
-
+# stored-artifact frames.
+@session_artifact
 def _polish_frames(spark: SparkSession, sf_dir: str):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _POLISH_FRAMES_CACHE.get(key)
-    if hit is not None:
-        return hit
     ev = table(spark, sf_dir, "events")
     cell = ev.groupBy(
         F.col("ts").cast("date").alias("day"),
@@ -263,7 +257,6 @@ def _polish_frames(spark: SparkSession, sf_dir: str):
         ce = ce.localCheckpoint()
         t = t.localCheckpoint()
 
-    _POLISH_FRAMES_CACHE[key] = (cell, z, re, ce, t)
     return cell, z, re, ce, t
 
 

@@ -40,16 +40,15 @@ from pyspark.sql import functions as F
 
 from ..functions.domain import dist_exclusive_prefix
 from ..registry import query
-from ..tables import table
+from ..tables import session_artifact, table
 
 # ---------------------------------------------------------------------------
-# shared bounded-domain frames (applicationId-keyed caches — the
-# _cosupply_edges rule: materialize once per app/sf, reference many)
+# shared bounded-domain frames (session artifacts — the _cosupply_edges
+# rule: materialize once per app/sf, reference many)
 # ---------------------------------------------------------------------------
 
-_DAY_TOTALS_CACHE: dict = {}
 
-
+@session_artifact
 def _day_cent_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 30-row (day, tot) frame of exact integer-cent daily totals
     over ALL events, localCheckpoint-ed once per (application,
@@ -58,24 +57,19 @@ def _day_cent_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference it more than once internally (median + signs; moments
     + residuals) — the cache removes both the per-op fact rescan and
     the copy-pasted money-cast parity pair (round-9 self-review)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _DAY_TOTALS_CACHE:
-        ev = table(spark, sf_dir, "events")
-        _DAY_TOTALS_CACHE[key] = (
-            ev.select(
-                F.expr("CAST(ts AS DATE)").alias("day"),
-                F.expr("CAST(value * 100 + 0.5 AS BIGINT)").alias("c"),
-            )
-            .groupBy("day")
-            .agg(F.sum("c").cast("bigint").alias("tot"))
-            .localCheckpoint()
+    ev = table(spark, sf_dir, "events")
+    return (
+        ev.select(
+            F.expr("CAST(ts AS DATE)").alias("day"),
+            F.expr("CAST(value * 100 + 0.5 AS BIGINT)").alias("c"),
         )
-    return _DAY_TOTALS_CACHE[key]
+        .groupBy("day")
+        .agg(F.sum("c").cast("bigint").alias("tot"))
+        .localCheckpoint()
+    )
 
 
-_PURCHASE_DAY_TOTALS_CACHE: dict = {}
-
-
+@session_artifact
 def _purchase_day_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 30-row (day, tot) frame of exact integer-cent PURCHASE
     revenue per day, localCheckpoint-ed once per (application,
@@ -83,98 +77,79 @@ def _purchase_day_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg_cvar_expected_shortfall, and agg_sample_entropy (the round-10
     self-review found three verbatim copies of the filter + money-cast
     + groupBy; one helper removes the rescans and the drift risk)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PURCHASE_DAY_TOTALS_CACHE:
-        ev = table(spark, sf_dir, "events")
-        _PURCHASE_DAY_TOTALS_CACHE[key] = (
-            ev.where(F.col("event_type") == "purchase")
-            .groupBy(F.expr("CAST(ts AS DATE)").alias("day"))
-            .agg(
-                F.expr(
-                    "CAST(sum(CAST(value * 100 + 0.5 AS BIGINT))"
-                    " AS BIGINT)"
-                ).alias("tot")
-            )
-            .localCheckpoint()
+    ev = table(spark, sf_dir, "events")
+    return (
+        ev.where(F.col("event_type") == "purchase")
+        .groupBy(F.expr("CAST(ts AS DATE)").alias("day"))
+        .agg(
+            F.expr(
+                "CAST(sum(CAST(value * 100 + 0.5 AS BIGINT))"
+                " AS BIGINT)"
+            ).alias("tot")
         )
-    return _PURCHASE_DAY_TOTALS_CACHE[key]
+        .localCheckpoint()
+    )
 
 
-_DAY_TYPE_CELLS_CACHE: dict = {}
-
-
+@session_artifact
 def _day_type_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DENSIFIED (day, event_type, c) integer-cent grid — missing
     cells are true zeros (the blocked-cells rule) — checkpointed once
     per (application, sf_dir); shared by agg_cronbach_alpha and
     agg_borda_copeland_ranks (round-10 self-review: two verbatim
     ~20-line grid constructions)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _DAY_TYPE_CELLS_CACHE:
-        ev = table(spark, sf_dir, "events")
-        cell0 = (
-            ev.groupBy(
-                F.expr("CAST(ts AS DATE)").alias("day"), "event_type"
-            )
-            .agg(
-                F.expr(
-                    "CAST(sum(CAST(value * 100 + 0.5 AS BIGINT))"
-                    " AS BIGINT)"
-                ).alias("c")
-            )
-            .localCheckpoint()
+    ev = table(spark, sf_dir, "events")
+    cell0 = (
+        ev.groupBy(F.expr("CAST(ts AS DATE)").alias("day"), "event_type")
+        .agg(
+            F.expr(
+                "CAST(sum(CAST(value * 100 + 0.5 AS BIGINT))"
+                " AS BIGINT)"
+            ).alias("c")
         )
-        days = cell0.select("day").distinct()
-        types = cell0.select("event_type").distinct()
-        _DAY_TYPE_CELLS_CACHE[key] = (
-            days.crossJoin(F.broadcast(types))
-            .join(cell0, ["day", "event_type"], "left")
-            .select(
-                "day",
-                "event_type",
-                F.coalesce("c", F.lit(0)).alias("c"),
-            )
-            .localCheckpoint()
+        .localCheckpoint()
+    )
+    days = cell0.select("day").distinct()
+    types = cell0.select("event_type").distinct()
+    return (
+        days.crossJoin(F.broadcast(types))
+        .join(cell0, ["day", "event_type"], "left")
+        .select(
+            "day",
+            "event_type",
+            F.coalesce("c", F.lit(0)).alias("c"),
         )
-    return _DAY_TYPE_CELLS_CACHE[key]
+        .localCheckpoint()
+    )
 
 
-_CV_BLOCKS_CACHE: dict = {}
-
-
+@session_artifact
 def _cv_value_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The distinct-cents (c, f1, f2) click/view frequency blocks —
     the shared substrate of the two-sample rank family (CvM,
     Ansari-Bradley, Brunner-Munzel), localCheckpoint-ed once per
     (application, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CV_BLOCKS_CACHE:
-        ev = table(spark, sf_dir, "events")
-        r = ev.where(F.col("event_type").isin("click", "view")).select(
-            "event_type",
-            F.expr("CAST(value * 100 + 0.5 AS BIGINT)").alias("c"),
-        )
-        _CV_BLOCKS_CACHE[key] = (
-            r.groupBy("c")
-            .agg(
-                F.sum(
-                    F.expr(
-                        "CASE WHEN event_type = 'click' THEN 1 ELSE 0 END"
-                    )
-                )
-                .cast("bigint")
-                .alias("f1"),
-                F.sum(
-                    F.expr(
-                        "CASE WHEN event_type = 'view' THEN 1 ELSE 0 END"
-                    )
-                )
-                .cast("bigint")
-                .alias("f2"),
+    ev = table(spark, sf_dir, "events")
+    r = ev.where(F.col("event_type").isin("click", "view")).select(
+        "event_type",
+        F.expr("CAST(value * 100 + 0.5 AS BIGINT)").alias("c"),
+    )
+    return (
+        r.groupBy("c")
+        .agg(
+            F.sum(
+                F.expr("CASE WHEN event_type = 'click' THEN 1 ELSE 0 END")
             )
-            .localCheckpoint()
+            .cast("bigint")
+            .alias("f1"),
+            F.sum(
+                F.expr("CASE WHEN event_type = 'view' THEN 1 ELSE 0 END")
+            )
+            .cast("bigint")
+            .alias("f2"),
         )
-    return _CV_BLOCKS_CACHE[key]
+        .localCheckpoint()
+    )
 
 
 

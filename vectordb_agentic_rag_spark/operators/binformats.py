@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import table
+from ..tables import SCRATCH, session_artifact, table
 
 # --- RIFF / WAVE ---------------------------------------------------------
 
@@ -3429,32 +3429,27 @@ def _pqf_int64_stat(stats: dict, new_id: int, old_id: int) -> int:
 
 _PQF_GROUPS = 8
 
-# layouts written once per (session, sf_dir)
-_pqf_written: set = set()
 
-
+@session_artifact
 def _pqf_layout_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write-once one-file-per-group documents layout (shared by the
     footer-parse and page-decode ops) and return the binaryFile scan
     of its files (path, content)."""
     from ..tables import sf_tag
 
-    base = f"/root/repo/_scratch/sources/pqfooter_{sf_tag(sf_dir)}"
-    key = (id(spark), sf_dir)
-    if key not in _pqf_written:
-        (
-            table(spark, sf_dir, "documents")
-            .selectExpr(
-                "CAST(doc_id AS BIGINT) AS doc_id",
-                "CAST(length(text) AS BIGINT) AS text_len",
-                f"CAST(doc_id % {_PQF_GROUPS} AS BIGINT) AS grp",
-            )
-            .repartition("grp")  # one task -> one file per group
-            .write.mode("overwrite")
-            .partitionBy("grp")
-            .parquet(base)
+    base = f"{SCRATCH}/sources/pqfooter_{sf_tag(sf_dir)}"
+    (
+        table(spark, sf_dir, "documents")
+        .selectExpr(
+            "CAST(doc_id AS BIGINT) AS doc_id",
+            "CAST(length(text) AS BIGINT) AS text_len",
+            f"CAST(doc_id % {_PQF_GROUPS} AS BIGINT) AS grp",
         )
-        _pqf_written.add(key)
+        .repartition("grp")  # one task -> one file per group
+        .write.mode("overwrite")
+        .partitionBy("grp")
+        .parquet(base)
+    )
     return (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.parquet")
@@ -3947,10 +3942,8 @@ def multimodal_parquet_page_decode(
 
 _PQD_CARD = 50  # low cardinality forces Spark's dictionary encoding
 
-# layouts written once per (session, sf_dir)
-_pqd_written: set = set()
 
-
+@session_artifact
 def _pqd_layout_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write-once one-file-per-group layout whose `v` column has
     cardinality 50 — low enough that Spark's parquet writer
@@ -3958,22 +3951,19 @@ def _pqd_layout_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     the binaryFile scan."""
     from ..tables import sf_tag
 
-    base = f"/root/repo/_scratch/sources/pqdict_{sf_tag(sf_dir)}"
-    key = (id(spark), sf_dir)
-    if key not in _pqd_written:
-        (
-            table(spark, sf_dir, "documents")
-            .selectExpr(
-                "CAST(doc_id AS BIGINT) AS doc_id",
-                f"CAST(doc_id % {_PQD_CARD} AS BIGINT) AS v",
-                f"CAST(doc_id % {_PQF_GROUPS} AS BIGINT) AS grp",
-            )
-            .repartition("grp")
-            .write.mode("overwrite")
-            .partitionBy("grp")
-            .parquet(base)
+    base = f"{SCRATCH}/sources/pqdict_{sf_tag(sf_dir)}"
+    (
+        table(spark, sf_dir, "documents")
+        .selectExpr(
+            "CAST(doc_id AS BIGINT) AS doc_id",
+            f"CAST(doc_id % {_PQD_CARD} AS BIGINT) AS v",
+            f"CAST(doc_id % {_PQF_GROUPS} AS BIGINT) AS grp",
         )
-        _pqd_written.add(key)
+        .repartition("grp")
+        .write.mode("overwrite")
+        .partitionBy("grp")
+        .parquet(base)
+    )
     return (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.parquet")

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import sf_tag, table
+from ..tables import SCRATCH, session_artifact, sf_tag, table
 
 # --- shared integer-hash machinery (identical Spark SQL / DuckDB) ---
 
@@ -227,7 +227,7 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
       worker-resident to ~100M docs, and beyond that the ship="join"
       path runs the verify as shuffle/bucketed joins
       (see _verify_pairs_jaccard)."""
-    return _minhash_verified_pairs(spark, sf_dir, threshold=0.7)
+    return _minhash_verified_pairs(spark, sf_dir, 0.7)
 
 
 # Session cache for the VERIFIED pair table (VERDICT r13 item 2): the
@@ -239,9 +239,7 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the pair table ONCE and persists it; the keyed ckpt is that
 # artifact. Keyed by threshold because the verify kernel filters on
 # RAW jac before the round(6) output column.
-_MINHASH_PAIRS_CACHE: dict = {}
-
-
+@session_artifact
 def _minhash_verified_pairs(
     spark: SparkSession, sf_dir: str, threshold: float
 ) -> DataFrame:
@@ -251,17 +249,14 @@ def _minhash_verified_pairs(
     dedup_near_minhash, pipeline_dedup_cascade_audit,
     pipeline_dedup_threshold_sensitivity, and
     dedup_signature_similarity_histogram."""
-    key = (spark.sparkContext.applicationId, sf_dir, threshold)
-    if key not in _MINHASH_PAIRS_CACHE:
-        codes, cand = _minhash_codes_and_candidates(spark, sf_dir)
-        _MINHASH_PAIRS_CACHE[key] = _verify_pairs_jaccard(
-            spark,
-            codes,
-            cand,
-            threshold=threshold,
-            tag=f"minhash_{sf_tag(sf_dir)}",
-        ).localCheckpoint()
-    return _MINHASH_PAIRS_CACHE[key]
+    codes, cand = _minhash_codes_and_candidates(spark, sf_dir)
+    return _verify_pairs_jaccard(
+        spark,
+        codes,
+        cand,
+        threshold=threshold,
+        tag=f"minhash_{sf_tag(sf_dir)}",
+    ).localCheckpoint()
 
 
 @query(
@@ -632,7 +627,7 @@ def _verify_pairs_jaccard(
             verify_join, "doc_a bigint, doc_b bigint, jac_raw double"
         )
     else:
-        path = f"/root/repo/_scratch/jacverify/{tag}"
+        path = f"{SCRATCH}/jacverify/{tag}"
         codes.select(
             F.col("doc_id").cast("bigint").alias("doc_id"), "cs"
         ).coalesce(8).write.mode("overwrite").parquet(path)
@@ -789,11 +784,8 @@ def _ngram_code_sets(d: DataFrame) -> DataFrame:
 # session-cached shingle frame: the _ngram_code_sets derivation (one
 # groupBy-free scan, but ~1-2 s of HOF tokenization per build) is shared
 # by six operators across four modules — re-deriving it per DataFrame
-# build was r14's deferred item 5. Keyed (applicationId, sf_dir) like
-# every cache in this family; swept by tables.clear_session_caches.
-_NGRAM_SETS_CACHE: dict = {}
-
-
+# build was r14's deferred item 5.
+@session_artifact
 def _ngram_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-checkpointed (doc_id, lang, len_bucket, cs) shingle frame
     — the materialized form of _ngram_code_sets(documents), built once
@@ -801,12 +793,9 @@ def _ngram_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-shingle int64 array (~100s of codes), far below worker
     memory at any audited sf. Tests that need the lazy derivation keep
     calling _ngram_code_sets directly."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _NGRAM_SETS_CACHE:
-        _NGRAM_SETS_CACHE[key] = _ngram_code_sets(
-            table(spark, sf_dir, "documents")
-        ).localCheckpoint()
-    return _NGRAM_SETS_CACHE[key]
+    return _ngram_code_sets(
+        table(spark, sf_dir, "documents")
+    ).localCheckpoint()
 
 
 def _prefix_filter_candidates(
@@ -1171,26 +1160,18 @@ _DUCK_CC_CTES = f"""sh AS ({_DUCK_SHINGLES}),
       SELECT r.node, e.b FROM reach r JOIN edges e ON r.anc = e.a)"""
 
 
-# (session id, sf_dir) -> (checkpointed symmetric edge DF, |E|).
-# Deterministic content, so sharing across consumers in a session is a
-# materialized view, not a semantics change.
-_NGRAM_EDGES_CACHE: dict = {}
-
-
+@session_artifact
 def _ngram_edges_materialized(spark: SparkSession, sf_dir: str):
-    # keyed by applicationId, NOT id(spark): CPython recycles id() after
-    # a session is garbage-collected, which could hand a new session a
-    # checkpointed DataFrame bound to a dead SparkContext
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _NGRAM_EDGES_CACHE:
-        pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-        edges = pairs.unionByName(
-            pairs.select(
-                F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-            )
-        ).localCheckpoint()
-        _NGRAM_EDGES_CACHE[key] = (edges, edges.count())
-    return _NGRAM_EDGES_CACHE[key]
+    """(checkpointed symmetric edge DF, |E|). Deterministic content, so
+    sharing across consumers in a session is a materialized view, not
+    a semantics change."""
+    pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
+    edges = pairs.unionByName(
+        pairs.select(
+            F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
+        )
+    ).localCheckpoint()
+    return edges, edges.count()
 
 
 @query(

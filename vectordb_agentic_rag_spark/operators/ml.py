@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from ..functions.vector import cosine_fixed, mmr_picks
 from ..registry import query
-from ..tables import table
+from ..tables import session_artifact, table
 
 # fixed 32-token vocabulary for the oracle-checkable TF embedding
 _VOCAB = [
@@ -123,29 +123,24 @@ def _queries_and_corpus(spark: SparkSession, sf_dir: str, n_q: int = 10):
     return q, corpus
 
 
-# Driver-side sample cache, keyed by sf_dir. The bounded 4096-vector
-# sample is DETERMINISTIC (orderBy vec_id, limit); analytics3's
-# semantic-purge coarse quantizer still trains on it. The old
-# _IVF_CENTS_CACHE/_PQ_BOOKS_CACHE numpy models were retired in round
-# 14 when the whole ANN family moved to the SQL-exact quantizers.
-_SAMPLE_CACHE: dict = {}
-
-
-def _corpus_sample(corpus, sf_dir: str):
+@session_artifact
+def _corpus_sample(spark: SparkSession, sf_dir: str):
+    """The first 4096 embeddings by vec_id as a float64 matrix — a
+    DETERMINISTIC bounded sample that analytics3's semantic-purge
+    coarse quantizer trains on, collected once per session."""
     import numpy as np
 
-    if sf_dir not in _SAMPLE_CACHE:
-        _SAMPLE_CACHE[sf_dir] = np.array(
-            [
-                r["embedding"]
-                for r in corpus.select("embedding")
-                .orderBy("vec_id")
-                .limit(4096)
-                .collect()
-            ],
-            dtype=np.float64,
-        )
-    return _SAMPLE_CACHE[sf_dir]
+    return np.array(
+        [
+            r["embedding"]
+            for r in table(spark, sf_dir, "embeddings")
+            .select("embedding")
+            .orderBy("vec_id")
+            .limit(4096)
+            .collect()
+        ],
+        dtype=np.float64,
+    )
 
 
 def _lloyd_multispace(xs, K: int, iters: int, seed: int):
@@ -211,7 +206,7 @@ def _with_recall_guard(
     from .vector import _query_vector_raw
     from pyspark.sql import Window
 
-    d = len(_query_vector_raw(sf_dir, 0))
+    d = len(_query_vector_raw(ann.sparkSession, sf_dir, 0))
     w_x = Window.partitionBy("query_id").orderBy(
         F.col("xsim").desc(), "neighbor_id"
     )
@@ -387,18 +382,16 @@ def vec_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _with_recall_guard(top, q, corpus, sf_dir, floor=0.7)
 
 
-# Session-scoped STORED-ARTIFACT caches, keyed by (applicationId,
-# sf_dir): the exact-top-3 ground truth, the IVF probed candidate
-# lists, and the LSH candidate pairs are shared index artifacts —
-# materialized ONCE per session via localCheckpoint and reused by
-# vec_lsh_ann / vec_ann_recall_sweep / vec_ann_latency_recall_pareto
-# (the _cosupply_edges rule: provably bounded intermediates referenced
-# by several consumers get checkpointed, never re-derived).
-_EXACT3_CACHE: dict = {}
-_IVF_PANEL_CACHE: dict = {}
-_LSH_PAIRS_CACHE: dict = {}
+# Session-scoped STORED-ARTIFACT frames: the exact-top-3 ground truth,
+# the IVF probed candidate lists, and the LSH candidate pairs are
+# shared index artifacts — materialized ONCE per session via
+# localCheckpoint and reused by vec_lsh_ann / vec_ann_recall_sweep /
+# vec_ann_latency_recall_pareto (the _cosupply_edges rule: provably
+# bounded intermediates referenced by several consumers get
+# checkpointed, never re-derived).
 
 
+@session_artifact
 def _exact3_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-3 of the 10-query panel as (query_id,
     neighbor_id, xhit=1) — the ground truth every ANN recall join
@@ -407,29 +400,27 @@ def _exact3_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .vector import _query_vector_raw
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EXACT3_CACHE:
-        q, corpus = _queries_and_corpus(spark, sf_dir)
-        d = len(_query_vector_raw(sf_dir, 0))
-        w_x = Window.partitionBy("query_id").orderBy(
-            F.col("xsim").desc(), "neighbor_id"
+    q, corpus = _queries_and_corpus(spark, sf_dir)
+    d = len(_query_vector_raw(spark, sf_dir, 0))
+    w_x = Window.partitionBy("query_id").orderBy(
+        F.col("xsim").desc(), "neighbor_id"
+    )
+    return (
+        corpus.select("vec_id", "embedding")
+        .crossJoin(F.broadcast(q.select("query_id", "qv")))
+        .select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            cosine_fixed("embedding", "qv", d).alias("xsim"),
         )
-        _EXACT3_CACHE[key] = (
-            corpus.select("vec_id", "embedding")
-            .crossJoin(F.broadcast(q.select("query_id", "qv")))
-            .select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                cosine_fixed("embedding", "qv", d).alias("xsim"),
-            )
-            .withColumn("xrn", F.row_number().over(w_x))
-            .where(F.col("xrn") <= 3)
-            .select("query_id", "neighbor_id", F.lit(1).alias("xhit"))
-            .localCheckpoint()
-        )
-    return _EXACT3_CACHE[key]
+        .withColumn("xrn", F.row_number().over(w_x))
+        .where(F.col("xrn") <= 3)
+        .select("query_id", "neighbor_id", F.lit(1).alias("xhit"))
+        .localCheckpoint()
+    )
 
 
+@session_artifact
 def _ivf_panel_cands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The IVF probed candidate LISTS of the query panel, scored:
     (query_id, neighbor_id, r, sim) where r is the probe rank of the
@@ -442,32 +433,28 @@ def _ivf_panel_cands(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumer of this panel reads the SAME stored index."""
     from .vector import _query_vector_raw
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _IVF_PANEL_CACHE:
-        q, corpus = _queries_and_corpus(spark, sf_dir)
-        d = len(_query_vector_raw(sf_dir, 0))
-        asg, probesall = _ivf16_assignments(spark, sf_dir)
-        max_p = max(_SWEEP_PROBES)
-        probes = probesall.where(F.col("pr") <= max_p).select(
-            "query_id", "cl", F.col("pr").alias("r")
+    q, corpus = _queries_and_corpus(spark, sf_dir)
+    d = len(_query_vector_raw(spark, sf_dir, 0))
+    asg, probesall = _ivf16_assignments(spark, sf_dir)
+    max_p = max(_SWEEP_PROBES)
+    probes = probesall.where(F.col("pr") <= max_p).select(
+        "query_id", "cl", F.col("pr").alias("r")
+    )
+    return (
+        asg.join(F.broadcast(probes), "cl")
+        .join(corpus.select("vec_id", "embedding"), "vec_id")
+        .join(F.broadcast(q), "query_id")
+        .select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            "r",
+            cosine_fixed("embedding", "qv", d).alias("sim"),
         )
-        _IVF_PANEL_CACHE[key] = (
-            asg.join(F.broadcast(probes), "cl")
-            .join(
-                corpus.select("vec_id", "embedding"), "vec_id"
-            )
-            .join(F.broadcast(q), "query_id")
-            .select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                "r",
-                cosine_fixed("embedding", "qv", d).alias("sim"),
-            )
-            .localCheckpoint()
-        )
-    return _IVF_PANEL_CACHE[key]
+        .localCheckpoint()
+    )
 
 
+@session_artifact
 def _lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deduped LSH candidate pairs of the query panel as (query_id,
     neighbor_id, r, dist): r is the FIRST table index (1-based) where
@@ -475,71 +462,68 @@ def _lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the first t tables (nested level sets) — and dist the euclidean
     distance (identical for every collision of a pair, so min ==
     value).  The probed bucket index, materialized once per session."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _LSH_PAIRS_CACHE:
-        q, corpus = _queries_and_corpus(spark, sf_dir)
-        planes = _lsh_planes()
-        qx = q.select(
-            "query_id",
-            "qv",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(t).alias("t"),
-                            F.expr(
-                                _lsh_bucket_sql("qv", planes[t], duck=False)
-                            ).alias("bk"),
-                        )
-                        for t in range(_LSH_TABLES)
-                    ]
-                )
-            ).alias("tb"),
-        ).select(
-            "query_id",
-            "qv",
-            F.col("tb.t").alias("t"),
-            F.col("tb.bk").alias("bk"),
-        )
-        cx = corpus.select(
-            F.col("vec_id").alias("neighbor_id"),
-            "embedding",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(t).alias("t"),
-                            F.expr(
-                                _lsh_bucket_sql(
-                                    "embedding", planes[t], duck=False
-                                )
-                            ).alias("bk"),
-                        )
-                        for t in range(_LSH_TABLES)
-                    ]
-                )
-            ).alias("tb"),
-        ).select(
-            "neighbor_id",
-            "embedding",
-            F.col("tb.t").alias("t"),
-            F.col("tb.bk").alias("bk"),
-        )
-        _LSH_PAIRS_CACHE[key] = (
-            cx.join(F.broadcast(qx), ["t", "bk"])
-            .select(
-                "query_id",
-                "neighbor_id",
-                (F.col("t") + 1).alias("t1"),
-                F.expr(_lsh_dist_sql("embedding", "qv", duck=False)).alias(
-                    "dist"
-                ),
+    q, corpus = _queries_and_corpus(spark, sf_dir)
+    planes = _lsh_planes()
+    qx = q.select(
+        "query_id",
+        "qv",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(t).alias("t"),
+                        F.expr(
+                            _lsh_bucket_sql("qv", planes[t], duck=False)
+                        ).alias("bk"),
+                    )
+                    for t in range(_LSH_TABLES)
+                ]
             )
-            .groupBy("query_id", "neighbor_id")
-            .agg(F.min("t1").alias("r"), F.min("dist").alias("dist"))
-            .localCheckpoint()
+        ).alias("tb"),
+    ).select(
+        "query_id",
+        "qv",
+        F.col("tb.t").alias("t"),
+        F.col("tb.bk").alias("bk"),
+    )
+    cx = corpus.select(
+        F.col("vec_id").alias("neighbor_id"),
+        "embedding",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(t).alias("t"),
+                        F.expr(
+                            _lsh_bucket_sql(
+                                "embedding", planes[t], duck=False
+                            )
+                        ).alias("bk"),
+                    )
+                    for t in range(_LSH_TABLES)
+                ]
+            )
+        ).alias("tb"),
+    ).select(
+        "neighbor_id",
+        "embedding",
+        F.col("tb.t").alias("t"),
+        F.col("tb.bk").alias("bk"),
+    )
+    return (
+        cx.join(F.broadcast(qx), ["t", "bk"])
+        .select(
+            "query_id",
+            "neighbor_id",
+            (F.col("t") + 1).alias("t1"),
+            F.expr(_lsh_dist_sql("embedding", "qv", duck=False)).alias(
+                "dist"
+            ),
         )
-    return _LSH_PAIRS_CACHE[key]
+        .groupBy("query_id", "neighbor_id")
+        .agg(F.min("t1").alias("r"), F.min("dist").alias("dist"))
+        .localCheckpoint()
+    )
 
 
 _DD_COS_ML = (
@@ -601,9 +585,7 @@ def _ivf16_newdim(i: int) -> str:
     )
 
 
-_IVF16_ASG_CACHE: dict = {}
-
-
+@session_artifact
 def _ivf16_assignments(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -612,7 +594,7 @@ def _ivf16_assignments(
     _ivf16_oracle_ctes, expression text shared verbatim.
 
     Session-cached as localCheckpointed frames (round-14 optimization,
-    the _cosupply_edges / _IVF_PANEL_CACHE rule): the T+1 unrolled
+    the _cosupply_edges / _ivf_panel_cands rule): the T+1 unrolled
     Lloyd rounds are the STORED-INDEX build a serving system pays once
     — four consumers (vec_ivf_ann, vec_ivfpq_ann,
     vec_ivf_list_balance_audit, the IVF candidate panel) were each
@@ -620,10 +602,6 @@ def _ivf16_assignments(
     (OPS_BENCH r14 before: 11.0 / 18.8 / 12.4 s per call). Both frames
     are corpus-bounded: asg = one (vec_id, cl) row per corpus vector,
     probes = 10 queries x 16 lists."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _IVF16_ASG_CACHE.get(key)
-    if hit is not None:
-        return hit
     emb = table(spark, sf_dir, "embeddings")
     dims = range(1, _IVF16_D + 1)
     K, T = _IVF16_K, _IVF16_T
@@ -698,12 +676,10 @@ def _ivf16_assignments(
     )
     # ALL 16 ranked lists are returned (vec_ann_recall_sweep reads the
     # full frontier); point lookups filter pr <= _IVF16_NPROBE
-    hit = (
+    return (
         asg.select("vec_id", "cl").localCheckpoint(),
         probes.localCheckpoint(),
     )
-    _IVF16_ASG_CACHE[key] = hit
-    return hit
 
 
 def _ivf16_oracle_ctes() -> list[str]:
@@ -856,7 +832,7 @@ def vec_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     q, corpus = _queries_and_corpus(spark, sf_dir)
     asg, probes = _ivf16_assignments(spark, sf_dir)
-    d = len(_query_vector_raw(sf_dir, 0))
+    d = len(_query_vector_raw(spark, sf_dir, 0))
     probed = probes.where(F.col("pr") <= _IVF16_NPROBE).select(
         "query_id", "cl"
     )
@@ -1040,11 +1016,9 @@ def _pq16_lut_expr() -> str:
     return f"CAST(round({dot}, 9) AS DECIMAL(18,9))"
 
 
-_PQ16_FRAMES_CACHE: dict = {}
-
-
+@session_artifact
 def _pq16_frames(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, lut_expr: str
 ) -> tuple[DataFrame, DataFrame]:
     """(codes (vec_id, m, code), lut (query_id, m, code, lutv)) of the
     SQL-exact PQ — Spark twin of _pq16_oracle_ctes.
@@ -1054,13 +1028,10 @@ def _pq16_frames(
     build; vec_pq_ann and vec_ivfpq_ann were re-deriving the T-round
     encode/refine DAG per call (OPS_BENCH r14 before: 8.3 / 18.8 s).
     codes = M rows per corpus vector, lut = 10 queries x M x K — both
-    corpus-bounded. The LUT expression text is part of the cache key
-    so the recall-collapse pytests (which monkeypatch _pq16_lut_expr
-    to zero) still build — and fail — their own frames."""
-    key = (spark.sparkContext.applicationId, sf_dir, _pq16_lut_expr())
-    hit = _PQ16_FRAMES_CACHE.get(key)
-    if hit is not None:
-        return hit
+    corpus-bounded. Callers pass _pq16_lut_expr() as ``lut_expr``,
+    so the LUT text is part of the session key and the recall-collapse
+    pytests (which monkeypatch _pq16_lut_expr to zero) still build —
+    and fail — their own frames."""
     emb = table(spark, sf_dir, "embeddings")
     D = _PQ16_M * _PQ16_SUB
     dims = range(1, D + 1)
@@ -1132,11 +1103,9 @@ def _pq16_frames(
         "vec_id", "query_id"
     )
     lut = qsub.join(F.broadcast(cb), "m").select(
-        "query_id", "m", "code", F.expr(_pq16_lut_expr()).alias("lutv")
+        "query_id", "m", "code", F.expr(lut_expr).alias("lutv")
     )
-    hit = (codes.localCheckpoint(), lut.localCheckpoint())
-    _PQ16_FRAMES_CACHE[key] = hit
-    return hit
+    return codes.localCheckpoint(), lut.localCheckpoint()
 
 
 def _pq16_oracle_ctes() -> list[str]:
@@ -1295,8 +1264,8 @@ def vec_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .vector import _query_vector_raw
 
     q, corpus = _queries_and_corpus(spark, sf_dir)
-    codes, lut = _pq16_frames(spark, sf_dir)
-    d = len(_query_vector_raw(sf_dir, 0))
+    codes, lut = _pq16_frames(spark, sf_dir, _pq16_lut_expr())
+    d = len(_query_vector_raw(spark, sf_dir, 0))
     adc = (
         codes.join(F.broadcast(lut), ["m", "code"])
         .groupBy("query_id", "vec_id")
@@ -1395,8 +1364,8 @@ def vec_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     q, corpus = _queries_and_corpus(spark, sf_dir)
     asg, probes = _ivf16_assignments(spark, sf_dir)
-    codes, lut = _pq16_frames(spark, sf_dir)
-    d = len(_query_vector_raw(sf_dir, 0))
+    codes, lut = _pq16_frames(spark, sf_dir, _pq16_lut_expr())
+    d = len(_query_vector_raw(spark, sf_dir, 0))
     probed = probes.where(F.col("pr") <= _IVF16_NPROBE).select(
         "query_id", "cl"
     )

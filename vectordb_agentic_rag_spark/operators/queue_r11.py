@@ -1,13 +1,8 @@
-"""Round-11 queued operators (implemented in round 10, registration
-deferred): the driver verifies only ``ordered_queries()[:50]`` and both
-ops carry priority prefixes (dedup_/text_), so registering them while
-the round-9 backlog drains would displace backlog ops from the window.
-``registry._DEFERRED_OPERATOR_MODULES`` keeps this module OUT of
-``load_all_operators``; tests and tools/selfcheck.py import it via
-``load_deferred_operators``.  To ship: move the module entry into
-``_OPERATOR_MODULES`` at round-11 start.
+"""LLM-training-data curation operators: the duplicate-span purge,
+minhash band tuning, the dedup cascade audit and DSIR importance
+weights.
 
-Reference scope: both ops extend the LLM-training-data pipeline surface
+Reference scope: the dedup ops extend the LLM-training-data pipeline surface
 (SURVEY.md §2C) — the reference app re-ingests documents verbatim
 (app.py:453-484), which is exactly the repeated-span / near-dup corpus
 shape these stages clean.
@@ -19,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import table
+from ..tables import session_artifact, table
 from .dedup import (
     _A,
     _B,
@@ -609,7 +604,29 @@ def _cascade_oracle() -> str:
     """
 
 
-_CASCADE_SURVIVORS_CACHE: dict = {}
+@session_artifact
+def _cascade_survivors(spark: SparkSession, sf_dir: str, *, t0: DataFrame):
+    """(stage-1, stage-2) survivor corpora of ``t0`` (the documents as
+    doc_id, text, ntok), checkpointed once per session (VERDICT r13
+    item 2: the eager ckpts re-derived on every DataFrame build)."""
+    w_h = Window.partitionBy(F.sha2("text", 256))
+    s1 = (
+        t0.withColumn("keeper", F.min("doc_id").over(w_h))
+        .where(F.col("doc_id") == F.col("keeper"))
+        .select("doc_id", "text", "ntok")
+        .localCheckpoint()  # stage-1 survivor corpus: referenced
+        # by the pair filter, stage-2 stats, and s2 — the snapshot
+        # a production cascade writes between stages
+    )
+    pairs = dedup_near_minhash(spark, sf_dir).select("doc_a", "doc_b")
+    ids1 = s1.select("doc_id")
+    pairs1 = pairs.join(
+        ids1.withColumnRenamed("doc_id", "doc_a"), "doc_a", "left_semi"
+    ).join(
+        ids1.withColumnRenamed("doc_id", "doc_b"), "doc_b", "left_semi"
+    )
+    rem2 = pairs1.select(F.col("doc_b").alias("doc_id")).distinct()
+    return s1, s1.join(rem2, "doc_id", "left_anti").localCheckpoint()
 
 
 @query("pipeline_dedup_cascade_audit", oracle=_cascade_oracle())
@@ -669,30 +686,7 @@ def pipeline_dedup_cascade_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         F.expr("CAST(size(split(text, ' ')) AS BIGINT)").alias("ntok"),
     )
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CASCADE_SURVIVORS_CACHE:
-        w_h = Window.partitionBy(F.sha2("text", 256))
-        s1 = (
-            t0.withColumn("keeper", F.min("doc_id").over(w_h))
-            .where(F.col("doc_id") == F.col("keeper"))
-            .select("doc_id", "text", "ntok")
-            .localCheckpoint()  # stage-1 survivor corpus: referenced
-            # by the pair filter, stage-2 stats, and s2 — the snapshot
-            # a production cascade writes between stages
-        )
-        pairs = dedup_near_minhash(spark, sf_dir).select("doc_a", "doc_b")
-        ids1 = s1.select("doc_id")
-        pairs1 = pairs.join(
-            ids1.withColumnRenamed("doc_id", "doc_a"), "doc_a", "left_semi"
-        ).join(
-            ids1.withColumnRenamed("doc_id", "doc_b"), "doc_b", "left_semi"
-        )
-        rem2 = pairs1.select(F.col("doc_b").alias("doc_id")).distinct()
-        s2 = s1.join(rem2, "doc_id", "left_anti").localCheckpoint()
-        # survivor snapshots cached per session (VERDICT r13 item 2:
-        # the eager ckpts re-derived on every DataFrame build)
-        _CASCADE_SURVIVORS_CACHE[key] = (s1, s2)
-    s1, s2 = _CASCADE_SURVIVORS_CACHE[key]
+    s1, s2 = _cascade_survivors(spark, sf_dir, t0=t0)
     spans = _purge_spans(s2.select("doc_id", F.split("text", " ").alias("tk")))
     st3 = spans.agg(
         F.expr(

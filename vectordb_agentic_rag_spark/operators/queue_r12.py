@@ -858,9 +858,9 @@ def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docstring's contract is interchange, not analytics; the read
     plan is a full scan by design and real pipelines convert to
     parquet on ingest (this op IS that converter's two halves)."""
-    from ..tables import sf_tag, table as t
+    from ..tables import SCRATCH, sf_tag, table as t
 
-    out = f"/root/repo/_scratch/sources/nation_xml_{sf_tag(sf_dir)}"
+    out = f"{SCRATCH}/sources/nation_xml_{sf_tag(sf_dir)}"
     (
         t(spark, sf_dir, "nation")
         .selectExpr(
@@ -1284,7 +1284,7 @@ def dedup_minhash_estimate_error(
     codes, _ = _minhash_codes_and_candidates(spark, sf_dir)
     # session-cached ckpt pair table at 0.5 (shared with the threshold
     # sweep — threshold is a kernel post-filter, same codes side-file)
-    pairs = _minhash_verified_pairs(spark, sf_dir, threshold=0.5).select(
+    pairs = _minhash_verified_pairs(spark, sf_dir, 0.5).select(
         "doc_a", "doc_b", "jac"
     )
     sigs = codes.withColumnRenamed("cs", "codes").select(
@@ -1704,7 +1704,7 @@ def vec_matryoshka_recall_sweep(
     corpus = emb.where(F.col("vec_id") >= _MRS_QUERIES).select(
         F.col("vec_id").alias("neighbor_id"), "embedding"
     )
-    full_d = len(_query_vector_raw(sf_dir, 0))
+    full_d = len(_query_vector_raw(spark, sf_dir, 0))
     sims = corpus.crossJoin(F.broadcast(q)).select(
         "query_id",
         "neighbor_id",

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ..functions.money import cents, cents_to_dollars
 from ..registry import query
-from ..tables import sf_tag, table
+from ..tables import SCRATCH, sf_tag, table
 
 # ---------------------------------------------------------------- scans
 
@@ -99,7 +99,7 @@ def sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     CAST(… AS BIGINT) (cost one driver hash_match=false to learn)."""
     from .text import chunk_documents
 
-    out = f"/root/repo/_scratch/chunks_{sf_tag(sf_dir)}.parquet"
+    out = f"{SCRATCH}/chunks_{sf_tag(sf_dir)}.parquet"
     docs = table(spark, sf_dir, "documents")
     chunks = chunk_documents(docs, keep_cols=("lang",))
     chunks.write.mode("overwrite").partitionBy("lang").parquet(out)

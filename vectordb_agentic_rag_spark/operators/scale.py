@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ..functions.money import cents, cents_to_dollars
 from ..registry import query
-from ..tables import sf_tag, table
+from ..tables import session_artifact, sf_tag, table
 
 N_SALT = 8
 
@@ -98,13 +98,8 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_bucketed_for: set[tuple[int, str]] = set()
-
-
+@session_artifact
 def _ensure_bucketed(spark: SparkSession, sf_dir: str) -> None:
-    key = (id(spark), sf_dir)
-    if key in _bucketed_for:
-        return
     # table names are sf-keyed (dots are illegal in identifiers): a fixed
     # name + per-(session, sf) memo would serve stale buckets when one
     # session alternates between scale factors
@@ -133,7 +128,6 @@ def _ensure_bucketed(spark: SparkSession, sf_dir: str) -> None:
             .sortBy(bucket_col)
             .saveAsTable(f"{name}_b_{tag}")
         )
-    _bucketed_for.add(key)
 
 
 def _zorder_terms(a: str, b: str, bits: int, shift_fn: bool) -> str:

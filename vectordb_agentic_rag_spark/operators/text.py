@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import table
+from ..tables import session_artifact, table
 
 CHUNK_SIZE = 1000  # reference chunk_size, app.py:182
 CHUNK_OVERLAP = 200  # reference chunk_overlap, app.py:183
@@ -1710,19 +1710,13 @@ def _bpe_duck_oracle(k: int) -> str:
     return _bpe_duck_ctes(k) + "\n    " + finals
 
 
-_BPE_TRAIN_CACHE: dict = {}
-
-
-def _bpe_train(spark: SparkSession, sf_dir: str, k: int = 5):
-    """Run the k-merge BPE training loop once per (application, sf_dir)
-    and cache (merge records, final folded word table) — the word
+@session_artifact
+def _bpe_train(spark: SparkSession, sf_dir: str, k: int):
+    """Run the k-merge BPE training loop once per (application, sf_dir,
+    k) and cache (merge records, final folded word table) — the word
     table is localCheckpointed inside the loop, so reuse is free.
     pipeline_bpe_merges reports the records; pipeline_tokenizer_
-    fertility re-tokenizes the corpus with the final vocab. Keyed by
-    applicationId (the dedup._NGRAM_EDGES_CACHE rule)."""
-    key = (spark.sparkContext.applicationId, sf_dir, k)
-    if key in _BPE_TRAIN_CACHE:
-        return _BPE_TRAIN_CACHE[key]
+    fertility re-tokenizes the corpus with the final vocab."""
     d = table(spark, sf_dir, "documents")
     words = (
         d.select(F.explode(F.split("text", " ")).alias("t"))
@@ -1753,7 +1747,6 @@ def _bpe_train(spark: SparkSession, sf_dir: str, k: int = 5):
             "ELSE concat(acc, array(x)) END)"
         )
         words = words.select("t", "cnt", merge.alias("syms")).localCheckpoint()
-    _BPE_TRAIN_CACHE[key] = (records, words)
     return records, words
 
 

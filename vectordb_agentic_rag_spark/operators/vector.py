@@ -36,7 +36,7 @@ from ..functions.vector import (
     seq_norm,
 )
 from ..registry import query
-from ..tables import sf_tag, table
+from ..tables import SCRATCH, session_artifact, sf_tag, table
 
 # DuckDB fragment: cosine similarity between two DOUBLE[] lists, with the
 # same sequential-fold arithmetic as functions.vector.cosine.
@@ -56,35 +56,18 @@ def _query_vectors(spark: SparkSession, sf_dir: str, n: int = 10) -> DataFrame:
     )
 
 
-_qvec_cache: dict[tuple[str, int], list] = {}
-
-
-def _query_vector_raw(sf_dir: str, vec_id: int = 0) -> list:
+@session_artifact
+def _query_vector_raw(spark: SparkSession, sf_dir: str, vec_id: int) -> list:
     """One query vector via a driver-side pyarrow point read (~ms),
-    memoized per (sf_dir, vec_id)."""
-    key = (sf_dir, vec_id)
-    if key not in _qvec_cache:
-        import pyarrow.parquet as pq
+    memoized per session."""
+    import pyarrow.parquet as pq
 
-        t = pq.read_table(
-            f"{sf_dir}/embeddings.parquet",
-            columns=["vec_id", "embedding"],
-            filters=[("vec_id", "==", vec_id)],
-        )
-        _qvec_cache[key] = t.column("embedding")[0].as_py()
-    return _qvec_cache[key]
-
-
-def _query_vector_literal(sf_dir: str, vec_id: int = 0):
-    """Fetch one query vector as a plan literal. A single query vector is
-    a query *parameter*, not data: inlining it keeps the whole kNN a
-    one-job, zero-shuffle scan even on a 100 TB corpus (a broadcast of a
-    1-row DataFrame costs an extra Spark job just to build the broadcast
-    relation)."""
-    vec = _query_vector_raw(sf_dir, vec_id)
-    # one F.expr call, not 64 F.lit py4j roundtrips (plan build was the
-    # bottleneck at bench time); repr() round-trips doubles exactly
-    return F.expr("array(" + ", ".join(f"{float(x)!r}D" for x in vec) + ")")
+    t = pq.read_table(
+        f"{sf_dir}/embeddings.parquet",
+        columns=["vec_id", "embedding"],
+        filters=[("vec_id", "==", vec_id)],
+    )
+    return t.column("embedding")[0].as_py()
 
 
 @query(
@@ -127,13 +110,14 @@ def vec_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     app.py:264; cosine metric app.py:87).
 
     Plan shape at scale: parquet scan -> codegen'd cosine column against
-    the *inlined* query vector (see _query_vector_literal) ->
+    the *inlined* query vector (a query parameter, not data: a broadcast
+    1-row DataFrame would cost an extra job) ->
     TakeOrderedAndProject(limit=5). One job, zero shuffles, zero
     broadcasts; each partition emits <=5 candidates. Ties broken on
     vec_id for determinism.
     """
     emb = table(spark, sf_dir, "embeddings")
-    qvec = _query_vector_raw(sf_dir, 0)
+    qvec = _query_vector_raw(spark, sf_dir, 0)
     qnorm = seq_norm(qvec)
     return (
         emb.where(F.col("vec_id") != 0)
@@ -176,7 +160,7 @@ def vec_cosine_topk_per_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = emb.where(F.col("vec_id") >= 10).select(
         F.col("vec_id").alias("neighbor_id"), "embedding"
     )
-    d = len(_query_vector_raw(sf_dir, 0))
+    d = len(_query_vector_raw(spark, sf_dir, 0))
     sims = corpus.crossJoin(F.broadcast(q)).select(
         "query_id",
         "neighbor_id",
@@ -214,7 +198,7 @@ def vec_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     q = _query_vectors(spark, sf_dir, 10)
     corpus = emb.where(F.col("vec_id") >= 10)
-    d = len(_query_vector_raw(sf_dir, 0))
+    d = len(_query_vector_raw(spark, sf_dir, 0))
     sims = corpus.crossJoin(F.broadcast(q)).select(
         "query_id",
         "vec_id",
@@ -350,7 +334,28 @@ _DD_UNIT = (
     "sqrt(list_dot_product({a}::DOUBLE[], {a}::DOUBLE[])))"
 )
 
-_prenorm_written: set[tuple[int, str]] = set()
+
+@session_artifact
+def _unit_embeddings(spark: SparkSession, sf_dir: str) -> str:
+    """Write the unit-normalized corpus once per session; return its
+    path."""
+    out = f"{SCRATCH}/unit_embeddings_{sf_tag(sf_dir)}.parquet"
+    emb = table(spark, sf_dir, "embeddings")
+    # divide, don't multiply by a reciprocal: x/n rounds once, while
+    # x*(1/n) rounds twice — the oracle divides, so we must too for
+    # bit parity at round(…,6)
+    n_col = norm(F.col("embedding"))
+    (
+        emb.select(
+            "vec_id",
+            F.transform(
+                "embedding", lambda x: x.cast("double") / n_col
+            ).alias("u"),
+        )
+        .write.mode("overwrite")
+        .parquet(out)
+    )
+    return out
 
 
 @query(
@@ -380,26 +385,7 @@ def vec_prenormalized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     not query properties, so they belong in the stored layout (here a
     materialized parquet table in scratch, memoized per session).
     Top-3 per query via partitioned window, ties on neighbor_id."""
-    out = f"/root/repo/_scratch/unit_embeddings_{sf_tag(sf_dir)}.parquet"
-    key = (id(spark), sf_dir)
-    if key not in _prenorm_written:
-        emb = table(spark, sf_dir, "embeddings")
-        # divide, don't multiply by a reciprocal: x/n rounds once, while
-        # x*(1/n) rounds twice — the oracle divides, so we must too for
-        # bit parity at round(…,6)
-        n_col = norm(F.col("embedding"))
-        (
-            emb.select(
-                "vec_id",
-                F.transform(
-                    "embedding", lambda x: x.cast("double") / n_col
-                ).alias("u"),
-            )
-            .write.mode("overwrite")
-            .parquet(out)
-        )
-        _prenorm_written.add(key)
-    unit = spark.read.parquet(out)
+    unit = spark.read.parquet(_unit_embeddings(spark, sf_dir))
     q = unit.where(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("u").alias("qv")
     )
@@ -407,7 +393,7 @@ def vec_prenormalized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("neighbor_id"), "u"
     )
     sim = F.round(
-        dot_fixed("u", "qv", len(_query_vector_raw(sf_dir, 0))), 6
+        dot_fixed("u", "qv", len(_query_vector_raw(spark, sf_dir, 0))), 6
     )
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), "neighbor_id")
     return (
@@ -559,7 +545,7 @@ def vec_matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate set ever touches full vectors. Both phases stay
     JVM-side; ties pinned on vec_id."""
     emb = table(spark, sf_dir, "embeddings")
-    qvec = _query_vector_raw(sf_dir, 0)
+    qvec = _query_vector_raw(spark, sf_dir, 0)
     qnorm16 = seq_norm(qvec[:16])
     qnorm = seq_norm(qvec)
     # prefix cosine == unrolled chain over elements 1..16 of the full
@@ -611,7 +597,7 @@ def vec_radius_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     but also no shuffle: each corpus partition emits its own matches
     independently at any scale."""
     emb = table(spark, sf_dir, "embeddings")
-    d = len(_query_vector_raw(sf_dir, 0))
+    d = len(_query_vector_raw(spark, sf_dir, 0))
     # Norms are per-ROW quantities: compute each side's norm BEFORE the
     # crossJoin so the post-join expression is only the d-term dot,
     # evaluated ONCE (alias + filter-on-alias). The earlier shape
@@ -662,7 +648,7 @@ def udf_registered_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.pyudf import make_cosine_to_const_udf
 
     spark.udf.register(
-        "cos_to_q", make_cosine_to_const_udf(_query_vector_raw(sf_dir, 0))
+        "cos_to_q", make_cosine_to_const_udf(_query_vector_raw(spark, sf_dir, 0))
     )
     table(spark, sf_dir, "embeddings").createOrReplaceTempView("_udf_emb")
     return spark.sql(
@@ -712,7 +698,7 @@ def vec_signbit_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     is vec_pq_ann's refine pattern and is omitted here to keep the op
     a pure hamming ranker with an exact oracle."""
     emb = table(spark, sf_dir, "embeddings")
-    d = len(_query_vector_raw(sf_dir, 0))
+    d = len(_query_vector_raw(spark, sf_dir, 0))
     if d > 64:  # pragma: no cover - fixture dim is 64
         raise ValueError("sign-bit packing beyond 64 dims needs 2+ words")
     # pack: bit i set iff embedding[i] > 0 (0-indexed); the 2-arg
@@ -773,7 +759,7 @@ def vec_filtered_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = emb.where(
         (F.col("vec_id") >= 10) & F.col("label").isin(1, 2)
     ).select(F.col("vec_id").alias("neighbor_id"), "embedding", "label")
-    d = len(_query_vector_raw(sf_dir, 0))
+    d = len(_query_vector_raw(spark, sf_dir, 0))
     sims = corpus.crossJoin(F.broadcast(q)).select(
         "query_id",
         "neighbor_id",
@@ -802,7 +788,7 @@ def eval_rankings_topk(spark: SparkSession, sf_dir: str):
     from ..functions.vector import cosine_fixed
 
     emb = table(spark, sf_dir, "embeddings")
-    d = len(_query_vector_raw(sf_dir, 0))
+    d = len(_query_vector_raw(spark, sf_dir, 0))
     qs = _query_vectors(spark, sf_dir, 10)
     corpus = emb.where(F.col("vec_id") >= 10).select(
         F.col("vec_id").alias("neighbor_id"), "embedding"
@@ -908,7 +894,7 @@ def vec_topk_scatter_gather(spark: SparkSession, sf_dir: str) -> DataFrame:
     streams the corpus once."""
     emb = table(spark, sf_dir, "embeddings")
     q = _query_vectors(spark, sf_dir, 10)
-    d = len(_query_vector_raw(sf_dir, 0))
+    d = len(_query_vector_raw(spark, sf_dir, 0))
     corpus = emb.where(F.col("vec_id") >= 10).select(
         F.col("vec_id").alias("neighbor_id"),
         "embedding",

@@ -47,43 +47,11 @@ _OPERATOR_MODULES = [
     "vectordb_agentic_rag_spark.operators.streaming_batch",
     "vectordb_agentic_rag_spark.streaming.core",
     "vectordb_agentic_rag_spark.sources.readers",
-    # round-11 window: the two round-10 deferred priority ops
-    # (dedup_substring_span_purge, text_minhash_band_tuning) flip in
-    # per the registry's deferred-registration contract.
     "vectordb_agentic_rag_spark.operators.queue_r11",
-    # round-12 window: the fifteen round-11-implemented queue ops flip
-    # in (the round-11 window closed at exactly 50 never-checked, so
-    # these waited behind _DEFERRED_OPERATOR_MODULES until now).
     "vectordb_agentic_rag_spark.operators.queue_r12",
-    # round 13: every registered op had been driver-verified at least
-    # once entering the round (window = 50 free rotation slots), so
-    # new ops register directly.
     "vectordb_agentic_rag_spark.operators.analytics13",
-    # round 14: window again entered with every op verified — new ops
-    # register directly.
     "vectordb_agentic_rag_spark.operators.analytics14",
 ]
-
-# Operators implemented EARLY but registered in a LATER round: the
-# driver verifies only ordered_queries()[:50], and priority-prefix
-# names (dedup_/text_/...) jump the never-checked queue — registering
-# them while a verification backlog exists would displace backlog ops.
-# Modules here are NOT imported by load_all_operators (so the driver
-# window never sees them) but ARE imported by tests and selfcheck via
-# load_deferred_operators. To ship them: move the entry into
-# _OPERATOR_MODULES at the start of the round whose window has room.
-_DEFERRED_OPERATOR_MODULES: list[str] = []
-
-
-def load_deferred_operators() -> None:
-    """Import round-queued operator modules (see
-    _DEFERRED_OPERATOR_MODULES) so their @query decorators run —
-    called by tests/selfcheck, never by the driver contract."""
-    for mod in _DEFERRED_OPERATOR_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError:
-            pass
 
 
 def query(name: str, oracle: str | None = None):
@@ -158,10 +126,12 @@ def _verification_history() -> tuple[set[str], set[str], set[str]]:
     import glob
     import json
 
+    from .tables import REPO_ROOT
+
     hash_verified: set[str] = set()
     rows_only: set[str] = set()
     failed: set[str] = set()
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(f"{REPO_ROOT}/CORRECTNESS_r*.json")):
         try:
             results = json.load(open(path))
         except (OSError, ValueError):

@@ -15,9 +15,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import sf_tag, table
+from ..tables import SCRATCH, session_artifact, sf_tag, table
 
-_SCRATCH = "/root/repo/_scratch/sources"
+_SCRATCH = f"{SCRATCH}/sources"
 
 
 @query(
@@ -206,7 +206,7 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     as parquet apply (Spark's OrcFileFormat is also vectorized)."""
     from ..tables import table as t
 
-    out = "/root/repo/_scratch/sources/region.orc"
+    out = f"{_SCRATCH}/region.orc"
     t(spark, sf_dir, "region").write.mode("overwrite").orc(out)
     return spark.read.orc(out).select("r_regionkey", "r_name")
 
@@ -224,27 +224,26 @@ def sink_partitioned_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan only the click/ directory — the layout that turns a 100 TB
     full scan into a 100 GB one for per-type pipelines
     (tests/test_plans.py asserts the pruning fires)."""
-    from ..tables import table as t
-
-    out = f"/root/repo/_scratch/sources/events_by_type_{sf_tag(sf_dir)}.parquet"
-    key = (id(spark), sf_dir)
-    if key not in _partitioned_written:
-        (
-            t(spark, sf_dir, "events")
-            .select("event_id", "user_id", "event_type", "value")
-            .write.mode("overwrite")
-            .partitionBy("event_type")
-            .parquet(out)
-        )
-        _partitioned_written.add(key)
     return (
-        spark.read.parquet(out)
+        spark.read.parquet(_events_by_type(spark, sf_dir))
         .where(F.col("event_type") == "click")
         .select("event_id", "user_id", "event_type", "value")
     )
 
 
-_partitioned_written: set[tuple[int, str]] = set()
+@session_artifact
+def _events_by_type(spark: SparkSession, sf_dir: str) -> str:
+    """Write events partitioned by event_type once per session; return
+    the path."""
+    out = f"{_SCRATCH}/events_by_type_{sf_tag(sf_dir)}.parquet"
+    (
+        table(spark, sf_dir, "events")
+        .select("event_id", "user_id", "event_type", "value")
+        .write.mode("overwrite")
+        .partitionBy("event_type")
+        .parquet(out)
+    )
+    return out
 
 
 @query(
@@ -262,7 +261,7 @@ def source_corrupt_json_permissive(spark: SparkSession, sf_dir: str) -> DataFram
     some records are ALWAYS malformed, and a pipeline that dies on one
     bad line doesn't ship. 8 valid + 2 broken lines; the declared
     result counts both streams and checksums the good ids."""
-    out = "/root/repo/_scratch/sources/corrupt.jsonl"
+    out = f"{_SCRATCH}/corrupt.jsonl"
     good = [f'{{"id": {i}, "v": "row{i}"}}' for i in range(10, 90, 10)]
     bad = ['{"id": 999, "v": unquoted}', "{not json at all"]
     import os
@@ -300,25 +299,26 @@ def maintenance_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFra
     100 TB the same pass runs per partition-directory with
     repartitionByRange on the sort key to keep files clustered AND
     evenly sized."""
-    frag = f"/root/repo/_scratch/sources/docs_fragmented_{sf_tag(sf_dir)}.parquet"
-    compact = f"/root/repo/_scratch/sources/docs_compacted_{sf_tag(sf_dir)}.parquet"
-    key = (id(spark), sf_dir)
-    if key not in _compacted:
-        d = table(spark, sf_dir, "documents")
-        d.repartition(64).write.mode("overwrite").parquet(frag)
-        # compact: read the fragments, coalesce to ~4 size-targeted files
-        spark.read.parquet(frag).coalesce(4).write.mode("overwrite").parquet(
-            compact
-        )
-        _compacted.add(key)
-    back = spark.read.parquet(compact)
+    back = spark.read.parquet(_compacted_docs(spark, sf_dir))
     return back.agg(
         F.count("*").alias("n_docs"),
         F.sum("n_chars").cast("bigint").alias("total_chars"),
     )
 
 
-_compacted: set[tuple[int, str]] = set()
+@session_artifact
+def _compacted_docs(spark: SparkSession, sf_dir: str) -> str:
+    """Write documents as 64 fragments, compact them into ~4 files,
+    once per session; return the compacted copy's path."""
+    frag = f"{_SCRATCH}/docs_fragmented_{sf_tag(sf_dir)}.parquet"
+    compact = f"{_SCRATCH}/docs_compacted_{sf_tag(sf_dir)}.parquet"
+    d = table(spark, sf_dir, "documents")
+    d.repartition(64).write.mode("overwrite").parquet(frag)
+    # compact: read the fragments, coalesce to ~4 size-targeted files
+    spark.read.parquet(frag).coalesce(4).write.mode("overwrite").parquet(
+        compact
+    )
+    return compact
 
 
 @query(
@@ -349,23 +349,7 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Gen-2's quality is derived deterministically (n_chars % 100) so
     the DuckDB oracle can replay both generations exactly."""
-    out = f"/root/repo/_scratch/sources/docs_evolving_{sf_tag(sf_dir)}.parquet"
-    key = (id(spark), sf_dir)
-    if key not in _evolution_written:
-        d = table(spark, sf_dir, "documents")
-        (
-            d.where(F.col("doc_id") % 2 == 0)
-            .select("doc_id", "lang")
-            .write.mode("overwrite")
-            .parquet(f"{out}/gen=1")
-        )
-        (
-            d.where(F.col("doc_id") % 2 == 1)
-            .select("doc_id", "lang", (F.col("n_chars") % 100).alias("quality"))
-            .write.mode("overwrite")
-            .parquet(f"{out}/gen=2")
-        )
-        _evolution_written.add(key)
+    out = _evolving_docs(spark, sf_dir)
     merged = spark.read.option("mergeSchema", "true").parquet(
         f"{out}/gen=1", f"{out}/gen=2"
     )
@@ -376,7 +360,25 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_evolution_written: set[tuple[int, str]] = set()
+@session_artifact
+def _evolving_docs(spark: SparkSession, sf_dir: str) -> str:
+    """Write the two documents generations once per session; return
+    the dataset path."""
+    out = f"{_SCRATCH}/docs_evolving_{sf_tag(sf_dir)}.parquet"
+    d = table(spark, sf_dir, "documents")
+    (
+        d.where(F.col("doc_id") % 2 == 0)
+        .select("doc_id", "lang")
+        .write.mode("overwrite")
+        .parquet(f"{out}/gen=1")
+    )
+    (
+        d.where(F.col("doc_id") % 2 == 1)
+        .select("doc_id", "lang", (F.col("n_chars") % 100).alias("quality"))
+        .write.mode("overwrite")
+        .parquet(f"{out}/gen=2")
+    )
+    return out
 
 
 @query(

@@ -21,9 +21,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import table
+from ..tables import SCRATCH, table
 
-_SCRATCH = "/root/repo/_scratch/stream"
+_SCRATCH = f"{SCRATCH}/stream"
 
 
 def _batch_slice(pdf_iter, sort_cols):

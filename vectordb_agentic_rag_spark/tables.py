@@ -1,4 +1,5 @@
-"""Fixture-table access (TESTDATA.md / FIXTURES.md).
+"""Fixture-table access (TESTDATA.md / FIXTURES.md) and the session
+artifact memo every operator shares.
 
 Ten driver-generated parquet tables per scale factor. Reading via
 ``spark.read.parquet`` keeps Catalyst in charge: column pruning and
@@ -8,9 +9,17 @@ predicate pushdown reach the parquet scan (verify with
 
 from __future__ import annotations
 
+import functools
+import inspect
 import os
+import weakref
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
+
+# the checkout this package lives in; write-once layouts go under SCRATCH
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SCRATCH = os.path.join(REPO_ROOT, "_scratch")
 
 TABLES = [
     "region",
@@ -37,22 +46,110 @@ def sf_tag(sf_dir: str) -> str:
     return sf_dir.rstrip("/").rsplit("/", 1)[-1]
 
 
-# memoized logical plans: DataFrames are immutable, so handing the same
-# scan plan to every query is safe and skips repeated parquet-footer
-# schema reads (a py4j + filesystem roundtrip per call). Catalyst still
-# prunes columns/filters per query — this caches the *plan root*, not data.
-_scan_cache: dict[tuple[int, str, str], DataFrame] = {}
+# One dict per @session_artifact function: (applicationId, *args) ->
+# (value, first RDD id, end RDD id). The ids bracket every RDD the build
+# created, so a clear also unpersists the intermediate checkpoints a
+# build took on the way to its value.
+_MEMOS: list[dict] = []
+# SparkContext -> (applicationId, JVM SparkContext), resolved once per
+# context: applicationId costs two py4j hops and table() runs on every
+# plan build, so a memo hit must make no py4j call
+_CONTEXTS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
+def _context(spark: SparkSession) -> tuple:
+    sc = spark.sparkContext
+    ctx = _CONTEXTS.get(sc)
+    if ctx is None:
+        ctx = _CONTEXTS[sc] = (sc.applicationId, sc._jsc.sc())
+    return ctx
+
+
+def session_artifact(build):
+    """Run ``build(spark, *args)`` once per Spark application and hand
+    every later call the same object.
+
+    The key is the application id plus the positional arguments, so
+    they must be hashable and must name every input the value depends
+    on — expression text a caller may vary included (``ml._pq16_frames``
+    takes its LUT text as an argument). Keyword-only parameters of
+    ``build`` are unkeyed inputs: pass through them only what the key
+    already determines. The value is whatever ``build`` returns:
+    checkpointed frames, collected rows, the path of a write-once
+    layout. ``clear_session_caches`` releases and forgets them all.
+    """
+    memo: dict = {}
+    _MEMOS.append(memo)
+    unkeyed = frozenset(
+        name
+        for name, p in inspect.signature(build).parameters.items()
+        if p.kind is p.KEYWORD_ONLY
+    )
+
+    @functools.wraps(build)
+    def artifact(spark: SparkSession, *args, **inputs):
+        app_id, jsc = _context(spark)
+        key = (app_id, *args)
+        hit = memo.get(key)
+        if hit is None:
+            if not unkeyed.issuperset(inputs):
+                raise TypeError(
+                    f"{build.__name__}: pass keyed arguments positionally"
+                )
+            first = jsc.newRddId()
+            value = build(spark, *args, **inputs)
+            hit = memo[key] = (value, first, jsc.newRddId())
+        return hit[0]
+
+    def put(spark: SparkSession, *args, value) -> None:
+        """Make ``value`` what later calls with ``args`` return."""
+        memo[(_context(spark)[0], *args)] = (value, 0, 0)
+
+    artifact.put = put
+    return artifact
+
+
+def clear_session_caches() -> None:
+    """Release every session artifact and forget it.
+
+    Unpersists every RDD an artifact build persisted — the checkpoints
+    it returned and the intermediate ones — and un-caches pinned hot
+    tables; write-once layouts are forgotten, so the next call rewrites
+    them. Artifacts of a stopped application are only forgotten (their
+    RDDs went with it). A long-lived session sweeping many sf dirs
+    would otherwise hold every checkpoint it ever built (ADVICE r10).
+
+    A frame derived from an artifact before the clear fails afterwards
+    with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND: call the operator again for
+    a fresh one.
+    """
+    sc = SparkContext._active_spark_context
+    ctx = _CONTEXTS.get(sc) if sc is not None else None
+    persistent = sc._jsc.getPersistentRDDs() if ctx else {}
+    rdd_ids = list(persistent.keys())
+    doomed = set()
+    for memo in _MEMOS:
+        for (app_id, *_), (value, first, end) in memo.items():
+            if ctx is None or app_id != ctx[0]:
+                continue
+            if isinstance(value, DataFrame) and value.is_cached:
+                value.unpersist()
+            doomed.update(i for i in rdd_ids if first <= i < end)
+        memo.clear()
+    for i in doomed:
+        persistent[i].unpersist(True)
+
+
+@session_artifact
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one fixture table (memoized per session)."""
-    key = (id(spark), sf_dir, name)
-    cached = _scan_cache.get(key)
-    if cached is not None:
-        return cached
-    df = _read_table(spark, sf_dir, name)
-    _scan_cache[key] = df
-    return df
+    """Scan one fixture table.
+
+    Memoized per session: DataFrames are immutable, so handing the same
+    scan plan to every query is safe and skips repeated parquet-footer
+    schema reads (a py4j + filesystem roundtrip per call). Catalyst
+    still prunes columns/filters per query — this caches the *plan
+    root*, not data."""
+    return _read_table(spark, sf_dir, name)
 
 
 def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -95,9 +192,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-_hot_cached: set[tuple[int, str]] = set()
-
-
 def cache_hot_tables(spark: SparkSession, sf_dir: str, names=None) -> None:
     """Pin fixture tables into Spark's in-memory columnar cache.
 
@@ -109,92 +203,49 @@ def cache_hot_tables(spark: SparkSession, sf_dir: str, names=None) -> None:
     pass ``names`` accordingly; storage level MEMORY_AND_DISK spills
     instead of OOMing when the set is mis-sized.
     """
-    key = (id(spark), sf_dir)
-    if key in _hot_cached:
-        return
+    for name in names or TABLES:
+        table.put(spark, sf_dir, name, value=_hot_table(spark, sf_dir, name))
+
+
+@session_artifact
+def _hot_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     import math
 
     import pyarrow.parquet as pq
 
-    for name in names or TABLES:
-        df = table(spark, sf_dir, name)
-        # Right-size the cached relation: the parquet scan is planned at
-        # leaf-node default parallelism (32 slices here) even for a 1 MB
-        # file, and an InMemoryRelation keeps its builder's partitioning
-        # — so every later query would schedule 32 near-empty tasks.
-        #
-        # Partition count tracks COMPUTE, not compressed bytes (the old
-        # bytes/2MB rule put 100k events rows in ONE partition and made
-        # every window sort single-threaded — measured 0.12 s vs 0.07 s
-        # for the headline window query). Cost model: one array element
-        # costs about one plain row (higher-order functions are
-        # interpreted, not codegen'd), long text a few rows — so the
-        # embeddings/documents tables get proportionally more slices.
-        # Grid-measured at sf0.1: rows/2000 with these weights is the
-        # flat-bottom optimum; at cluster scale the same rule lands at
-        # the usual 10-50M weighted rows per 128 MB-ish partition.
-        # Layout-agnostic row count: fixture tables are single files,
-        # but Spark-written datasets are directories of part files.
-        path = f"{sf_dir}/{name}.parquet"
-        if os.path.isdir(path):
-            rows = sum(
-                pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-                for root, _, files in os.walk(path)
-                for f in files
-                if f.endswith(".parquet")
-            )
-        else:
-            rows = pq.ParquetFile(path).metadata.num_rows
-        weight = {"embeddings": 8, "documents": 2}.get(name, 1)
-        k = max(1, min(16, math.ceil(rows * weight / 2000)))
-        # repartition (round-robin), not coalesce: even slices matter
-        # more than the one-time shuffle when the relation is reused by
-        # every subsequent query
-        cached = (df.coalesce(1) if k == 1 else df.repartition(k)).cache()
-        cached.count()
-        _scan_cache[(id(spark), sf_dir, name)] = cached
-    _hot_cached.add(key)
-
-
-# non-operator modules that hold _*_CACHE session caches (operator
-# modules are enumerated from the registry lists)
-_EXTRA_CACHE_MODULES = [
-    "vectordb_agentic_rag_spark.functions.domain",
-]
-
-
-def clear_session_caches() -> None:
-    """Evict every module-level session cache (checkpointed artifact
-    frames keyed by (applicationId, sf_dir) plus the scan memo).
-
-    The caches deliberately have no TTL — the bench/driver lifecycle
-    is one session over one or two sf dirs — but a long-lived session
-    sweeping many sf dirs retains every localCheckpoint RDD it ever
-    built (ADVICE r10).  Call this between sweeps to release them.
-
-    Caches are discovered by convention, not by a hand-maintained
-    list: every module-level dict named ``_*_CACHE`` in an operator
-    module is a session cache (the r14 verdict found five caches the
-    old explicit list had missed).  Only modules already imported are
-    swept — loading one here would run its @query registrations as a
-    side effect.
-    """
-    import re
-    import sys
-
-    from .registry import _DEFERRED_OPERATOR_MODULES, _OPERATOR_MODULES
-
-    _scan_cache.clear()
-    _hot_cached.clear()
-    pat = re.compile(r"_[A-Z0-9_]*_CACHE\Z")
-    for mod_name in (
-        list(_OPERATOR_MODULES)
-        + list(_DEFERRED_OPERATOR_MODULES)
-        + list(_EXTRA_CACHE_MODULES)
-    ):
-        mod = sys.modules.get(mod_name)
-        if mod is None:
-            continue
-        for attr, val in vars(mod).items():
-            if pat.fullmatch(attr) and isinstance(val, dict):
-                val.clear()
+    df = table(spark, sf_dir, name)
+    # Right-size the cached relation: the parquet scan is planned at
+    # leaf-node default parallelism (32 slices here) even for a 1 MB
+    # file, and an InMemoryRelation keeps its input's partitioning
+    # — so every later query would schedule 32 near-empty tasks.
+    #
+    # Partition count tracks COMPUTE, not compressed bytes (the old
+    # bytes/2MB rule put 100k events rows in ONE partition and made
+    # every window sort single-threaded — measured 0.12 s vs 0.07 s
+    # for the headline window query). Cost model: one array element
+    # costs about one plain row (higher-order functions are
+    # interpreted, not codegen'd), long text a few rows — so the
+    # embeddings/documents tables get proportionally more slices.
+    # Grid-measured at sf0.1: rows/2000 with these weights is the
+    # flat-bottom optimum; at cluster scale the same rule lands at
+    # the usual 10-50M weighted rows per 128 MB-ish partition.
+    # Layout-agnostic row count: fixture tables are single files,
+    # but Spark-written datasets are directories of part files.
+    path = f"{sf_dir}/{name}.parquet"
+    if os.path.isdir(path):
+        rows = sum(
+            pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
+            for root, _, files in os.walk(path)
+            for f in files
+            if f.endswith(".parquet")
+        )
+    else:
+        rows = pq.ParquetFile(path).metadata.num_rows
+    weight = {"embeddings": 8, "documents": 2}.get(name, 1)
+    k = max(1, min(16, math.ceil(rows * weight / 2000)))
+    # repartition (round-robin), not coalesce: even slices matter
+    # more than the one-time shuffle when the relation is reused by
+    # every subsequent query
+    cached = (df.coalesce(1) if k == 1 else df.repartition(k)).cache()
+    cached.count()
+    return cached
