@@ -11,12 +11,13 @@ this file only adapts the registry to the driver's shape.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from vectordb_agentic_rag_spark import registry  # noqa: E402
 

@@ -6,6 +6,7 @@ import zlib
 
 import pytest
 
+from vectordb_agentic_rag_spark.tables import REPO_ROOT
 from vectordb_agentic_rag_spark.operators.binformats import (
     _PNG_SIG,
     _png_chunk,
@@ -1006,7 +1007,7 @@ def test_inflate_dynamic_huffman_decodes_real_zlib_output():
         b"the quick brown fox jumps over the lazy dog " * 50,
         bytes(range(256)) * 20,
         b"aabbccdd" * 1000,
-        open("/root/repo/README.md", "rb").read()[:8000],
+        open(f"{REPO_ROOT}/README.md", "rb").read()[:8000],
     ]
     import random
 

@@ -105,6 +105,21 @@ def test_reingest_overwrites(pipe, spark, sf_dir):
     assert chunks.select("doc_id").distinct().count() == 5
 
 
+def test_ingest_rejects_modes_other_than_overwrite(spark, tmp_path):
+    """An append would add a second idf row that the read path
+    cross-joins, returning every chunk twice: refused before any job."""
+    p = RagPipeline(spark, str(tmp_path / "idx"), dim=32)
+    docs = spark.createDataFrame([(1, "alpha beta")], "doc_id long, text string")
+
+    def refuse():
+        for mode in ("append", "ignore", "error"):
+            with pytest.raises(ValueError, match="overwrite"):
+                p.ingest(docs, mode=mode)
+
+    assert _count_jobs(spark, refuse)[1] == 0
+    assert not (tmp_path / "idx").exists()
+
+
 def test_clear_removes_index(spark, sf_dir, tmp_path):
     p = RagPipeline(spark, str(tmp_path / "idx"), dim=32)
     docs = table(spark, sf_dir, "documents").select("doc_id", "text").limit(3)
@@ -296,7 +311,7 @@ def test_ingest_job_count(spark, sf_dir, tmp_path):
 
 
 def test_query_job_count(pipe, spark):
-    """query() runs scan -> window -> MMR once: at most 2 jobs beyond
+    """query() runs scan -> window -> MMR once: no more jobs than
     retrieve(), and none while its plan is built (the index tables are
     read with explicit schemas)."""
     q = _queries(spark)
@@ -304,11 +319,48 @@ def test_query_job_count(pipe, spark):
     df, build_jobs = _count_jobs(spark, lambda: pipe.query(q))
     _, exec_jobs = _count_jobs(spark, df.collect)
     assert build_jobs == 0
-    assert exec_jobs <= retrieve_jobs + 2
+    assert exec_jobs <= retrieve_jobs
+
+
+def test_query_scans_its_queries_once(pipe, spark):
+    """A Python-list query DataFrame is read by a Python worker: query()
+    reads it in exactly one scan, not once for the embedding and once
+    more to join the answers back."""
+    df = pipe.query(_queries(spark))
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("Scan ExistingRDD") == 1
+
+
+def test_query_row_contract(pipe, spark):
+    """One output row per input row, each answered on its own text:
+    rows sharing a query_id, and rows with a null query_id, get the
+    answer their text gets alone, with the id passed through."""
+    rows = [
+        (7, "spark table merge window batch"),
+        (7, "latest news about streaming data"),
+        (None, "current hash join order"),
+        (None, "vector query group column small"),
+    ]
+    q = spark.createDataFrame(rows, "query_id long, query_text string")
+    got = sorted(
+        ((r.query_id, r.query_text, r.plan_type, r.sources)
+         for r in pipe.query(q).collect()),
+        key=lambda r: r[1],
+    )
+    alone = []
+    for qid, text in rows:
+        one = spark.createDataFrame([(1, text)], "query_id long, query_text string")
+        (r,) = pipe.query(one).collect()
+        assert r.sources  # every text has candidates, so sources to compare
+        alone.append((qid, text, r.plan_type, r.sources))
+    assert got == sorted(alone, key=lambda r: r[1])
 
 
 def test_read_path_runs_no_python_worker(pipe, spark):
-    """Neither retrieve() nor query() hands rows to a Python worker."""
+    """Neither retrieve() nor query() adds a Python-worker node; only
+    the scan of a caller's Python-list query DataFrame runs in one."""
     q = _queries(spark)
     for df in (pipe.retrieve(q), pipe.query(q)):
         df.collect()

@@ -26,8 +26,9 @@ Scale design (the part the reference outsources to Qdrant/Cohere):
 - retrieval is batch top-k: cosine as a higher-order-function
   expression, fetch_k via a window top-k partitioned by query, and
   greedy MMR as one Catalyst expression over each query's <= fetch_k
-  candidates (the reference's own bound, app.py:264-266). No row goes
-  through a Python worker;
+  candidates (the reference's own bound, app.py:264-266). No index row
+  goes through a Python worker; a caller's query DataFrame built from a
+  Python list is read by one Python-worker stage, its only scan;
 - queries are a DataFrame, not a string: ``retrieve`` takes a whole
   table of queries and resolves them in ONE pass over the corpus
   (query-side broadcast), because at 100 TB per-query scans are the
@@ -35,7 +36,8 @@ Scale design (the part the reference outsources to Qdrant/Cohere):
 - each call derives its data once: ``ingest`` takes the chunk count
   from the IDF fit instead of recounting its output, and ``query``
   builds relevance and sources from the per-query pick array that
-  ``retrieve`` explodes.
+  ``retrieve`` explodes, with each query's text and keywords carried
+  along from the one scan of the queries.
 """
 
 from __future__ import annotations
@@ -124,13 +126,18 @@ class RagPipeline:
         """SURVEY §3.1: documents -> 1000/200 chunks -> TF-IDF embed ->
         partitioned parquet index. ``mode="overwrite"`` reproduces the
         reference's new-file cache invalidation (app.py:455-461): a
-        re-ingest atomically replaces the collection.
+        re-ingest atomically replaces the collection. It is the only
+        mode: any other raises ``ValueError`` before any Spark work.
 
         The only cross-node boundaries are the IDF document-frequency
         reduce and the final write — same shape at any scale. The chunk
         count comes from that IDF fit (one document per chunk), so the
         chunks are derived once.
         """
+        if mode != "overwrite":
+            # an append would leave a second idf row that every read
+            # cross-joins, returning each chunk twice (ROADMAP item 2)
+            raise ValueError(f"ingest supports mode='overwrite' only, not {mode!r}")
         import pyarrow as pa
         from pyspark.ml.feature import IDF, HashingTF, Tokenizer
         from pyspark.ml.functions import vector_to_array
@@ -177,12 +184,12 @@ class RagPipeline:
         )
 
     def _embed_queries(
-        self, queries: DataFrame, text_col: str, id_col: str
+        self, queries: DataFrame, text_col: str, id_col: str, *carry
     ) -> DataFrame:
-        """(query_id, qv): query rows embedded with the stored idf
+        """(query_id, *carry, qv): query rows embedded with the stored idf
         weights — murmur3 HashingTF is deterministic, so query and corpus
         land in the same space with zero model state beyond the idf
-        vector."""
+        vector. ``carry`` are further columns of the same scan."""
         from pyspark.ml.feature import HashingTF, Tokenizer
         from pyspark.ml.functions import vector_to_array
 
@@ -193,25 +200,26 @@ class RagPipeline:
         idf = self.spark.read.schema(IDF_SCHEMA).parquet(f"{self.index_dir}/idf")
         return tf.crossJoin(F.broadcast(idf)).select(
             F.col(id_col).alias("query_id"),
+            *carry,
             F.zip_with(vector_to_array("tf"), "idf", lambda a, b: a * b).alias("qv"),
         )
 
     def _candidates(
-        self, queries: DataFrame, text_col: str, id_col: str, n: int
+        self, q: DataFrame, n: int, key: str = "query_id", carry: tuple = ()
     ) -> DataFrame:
-        """Each query's ``n`` best chunks by 6-decimal cosine, ties to the
-        lowest chunk_id: one corpus pass against the broadcast query
-        vectors, then a window top-n partitioned by query. A query whose
+        """Each ``key`` group's ``n`` best chunks by 6-decimal cosine, ties
+        to the lowest chunk_id: one corpus pass against the broadcast
+        embedded queries ``q``, then a window top-n partitioned by
+        ``key``. ``carry`` columns of ``q`` ride along. A query whose
         vector is all zero scores 0 against every chunk."""
-        q = self._embed_queries(queries, text_col, id_col)
         sim = F.round(cosine("embedding", "qv"), 6)
-        w = Window.partitionBy("query_id").orderBy(
+        w = Window.partitionBy(key).orderBy(
             F.col("sim").desc(), F.col("chunk_id")
         )
         return (
             self._chunks()
             .crossJoin(F.broadcast(q))
-            .select("query_id", "chunk_id", "doc_id", "page_content",
+            .select(key, *carry, "chunk_id", "doc_id", "page_content",
                     "embedding", sim.alias("sim"))
             .withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") <= n)
@@ -219,26 +227,28 @@ class RagPipeline:
         )
 
     def _picks(
-        self, queries: DataFrame, text_col: str, id_col: str,
-        k: int, fetch_k: int, lambda_mult: float,
+        self, q: DataFrame, k: int, fetch_k: int, lambda_mult: float,
+        key: str = "query_id", carry: tuple = (),
     ) -> DataFrame:
-        """One row per query with candidates: ``query_id`` and ``picks``,
-        its greedy-MMR selection in rank order as array<struct<chunk_id,
-        doc_id, page_content, sim, mmr_score, mmr_rank>>. The groupBy
-        reuses the window's query_id partitioning (no extra exchange)
-        and MMR is one Catalyst expression over <= fetch_k candidates."""
-        cands = self._candidates(queries, text_col, id_col, fetch_k)
-        grouped = cands.groupBy("query_id").agg(
+        """One row per ``key`` group with candidates: ``key``, ``carry``
+        (each group's first value) and ``picks``, its greedy-MMR selection
+        in rank order as array<struct<chunk_id, doc_id, page_content,
+        sim, mmr_score, mmr_rank>>. The groupBy reuses the window's
+        ``key`` partitioning (no extra exchange) and MMR is one Catalyst
+        expression over <= fetch_k candidates."""
+        cands = self._candidates(q, fetch_k, key, carry)
+        grouped = cands.groupBy(key).agg(
             F.collect_list(
                 F.struct("chunk_id", "doc_id", "page_content", "embedding", "sim")
-            ).alias("c")
+            ).alias("c"),
+            *(F.first(c).alias(c) for c in carry),
         )
         picked = grouped.select(
-            "query_id", "c",
+            key, *carry, "c",
             mmr_picks("c", k, lambda_mult, id_field="chunk_id").alias("p"),
         )
         return picked.select(
-            "query_id",
+            key, *carry,
             F.expr(
                 "transform(p, (x, r) -> named_struct("
                 "'chunk_id', c[x.idx].chunk_id, 'doc_id', c[x.idx].doc_id, "
@@ -267,11 +277,12 @@ class RagPipeline:
         corpus, and no Python worker. ``mmr=False`` reproduces the
         reference's second, default-settings retriever (app.py:401).
         """
+        q = self._embed_queries(queries, text_col, id_col)
         if not mmr:
-            return self._candidates(queries, text_col, id_col, k).select(
+            return self._candidates(q, k).select(
                 "query_id", "chunk_id", "doc_id", "page_content", "sim"
             )
-        picks = self._picks(queries, text_col, id_col, k, fetch_k, lambda_mult)
+        picks = self._picks(q, k, fetch_k, lambda_mult)
         return picks.select(
             F.col("query_id").cast("long").alias("query_id"), F.inline("picks")
         )
@@ -325,24 +336,33 @@ class RagPipeline:
     ) -> DataFrame:
         """The full read path (SURVEY §3.2): retrieve -> gate -> route ->
         assemble context. Output mirrors the reference's plan dict
-        (app.py:405-417): one row per query with plan_type and the
+        (app.py:405-417): query_id, the query text, plan_type and the
         top-3 source previews (app.py:359 `[:3]`, app.py:544 `[:300]`).
 
+        Row contract: one output row per input row, each answered on its
+        own text, with ``query_id`` passed through as given: two rows
+        that share a query_id, or have a null one, are two independent
+        questions, not one merged candidate set.
+
         The same gate and route as ``assess_relevance`` + ``route``, but
-        computed from each query's one pick array (broadcast into a
-        left join with the queries), so scan -> window -> MMR runs once.
+        computed from each row's one pick array: the queries are read
+        once, embedded together with their text and keywords, and those
+        ride through the window top-k and the MMR groupBy (keyed by a
+        per-row id), so scan -> window -> MMR runs once and nothing joins
+        back to the queries.
         """
-        picks = self._picks(
-            queries, text_col, id_col, k, DEFAULT_FETCH_K, DEFAULT_LAMBDA
-        )
         text = f"`{text_col}`"
-        q = queries.select(
-            F.col(id_col).alias("query_id"), F.col(text_col),
+        q = self._embed_queries(
+            queries, text_col, id_col,
+            F.monotonically_increasing_id().alias("q_row"),
+            F.col(text_col).alias("q_text"),
             F.expr(_keywords_sql(text)).alias("keywords"),
         )
-        j = q.join(F.broadcast(picks), "query_id", "left")
-        # a query without picks has no relevance row: not relevant
-        n_docs = "coalesce(size(picks), 0)"
+        picks = self._picks(
+            q, k, DEFAULT_FETCH_K, DEFAULT_LAMBDA,
+            key="q_row", carry=("query_id", "q_text", "keywords"),
+        )
+        n_docs = "size(picks)"
         matches = (
             "aggregate(picks, 0, (acc, p) -> "
             f"greatest(acc, {_hits_sql('keywords', 'p.page_content')}))"
@@ -352,9 +372,9 @@ class RagPipeline:
             f"CASE WHEN {n_docs} > 0 THEN "
             "transform(slice(picks, 1, 3), p -> substring(p.page_content, 1, 300)) END"
         )
-        return j.select(
-            "query_id", text_col,
-            F.expr(_plan_type_sql(text, relevant)).alias("plan_type"),
+        return picks.select(
+            "query_id", F.col("q_text").alias(text_col),
+            F.expr(_plan_type_sql("q_text", relevant)).alias("plan_type"),
             F.expr(sources).alias("sources"),
         )
 
