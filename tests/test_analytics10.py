@@ -12,7 +12,7 @@ def test_markov_first_passage_matches_fraction_solve(spark, sf_dir):
     system by Gaussian elimination over Q, compare at round(6)."""
     from fractions import Fraction
 
-    from vectordb_agentic_rag_spark.operators.analytics10 import (
+    from vectordb_agentic_rag_spark.operators.stats.kpis import (
         _FP_STATES,
         _FP_TARGET,
         agg_markov_first_passage,
@@ -78,7 +78,7 @@ def test_woe_information_value_matches_python_recompute(spark, sf_dir):
 
     import numpy as np
 
-    from vectordb_agentic_rag_spark.operators.analytics10 import (
+    from vectordb_agentic_rag_spark.operators.stats.models import (
         agg_woe_information_value,
     )
 
@@ -140,7 +140,7 @@ def test_xbar_r_control_matches_python_recompute(spark, sf_dir):
     first-5-per-day subgroups, exact integer limit compares."""
     import numpy as np
 
-    from vectordb_agentic_rag_spark.operators.analytics10 import (
+    from vectordb_agentic_rag_spark.operators.windows import (
         _SPC_A2_MILLI,
         _SPC_D4_MILLI,
         _SPC_N,
@@ -175,7 +175,7 @@ def test_xbar_r_control_matches_python_recompute(spark, sf_dir):
 
 
 def test_join_key_skew_matches_pandas(spark, sf_dir):
-    from vectordb_agentic_rag_spark.operators.analytics10 import (
+    from vectordb_agentic_rag_spark.operators.maintenance import (
         _SKEW_KEYS,
         maintenance_join_key_skew,
     )
@@ -199,7 +199,7 @@ def test_join_key_skew_matches_pandas(spark, sf_dir):
 def test_dim_variance_profile_matches_numpy(spark, sf_dir):
     import numpy as np
 
-    from vectordb_agentic_rag_spark.operators.analytics10 import (
+    from vectordb_agentic_rag_spark.operators.vector import (
         vec_dim_variance_profile,
     )
 
@@ -235,7 +235,7 @@ def test_dedup_threshold_sensitivity_monotone_and_anchored(spark, sf_dir):
     """The sweep must be monotone nonincreasing in tau, and its
     tau = 0.7 row must agree with dedup_near_minhash's verified pair
     table (same banding, same verify)."""
-    from vectordb_agentic_rag_spark.operators.analytics10 import (
+    from vectordb_agentic_rag_spark.operators.pipelines import (
         pipeline_dedup_threshold_sensitivity,
     )
     from vectordb_agentic_rag_spark.operators.dedup import (
@@ -296,7 +296,7 @@ def test_holm_matches_python_stepdown(spark, sf_dir):
 
     import numpy as np
 
-    from vectordb_agentic_rag_spark.operators.analytics10 import (
+    from vectordb_agentic_rag_spark.operators.stats.tests import (
         agg_holm_bonferroni,
     )
 
@@ -337,7 +337,7 @@ def test_cumulative_gains_matches_python(spark, sf_dir):
     deciles (DESC)."""
     import numpy as np
 
-    from vectordb_agentic_rag_spark.operators.analytics10 import (
+    from vectordb_agentic_rag_spark.operators.stats.models import (
         agg_cumulative_gains_curve,
     )
 
@@ -393,7 +393,7 @@ def test_cumulative_gains_matches_python(spark, sf_dir):
 def test_vocab_coverage_matches_python(spark, sf_dir):
     from collections import Counter
 
-    from vectordb_agentic_rag_spark.operators.analytics10 import (
+    from vectordb_agentic_rag_spark.operators.text import (
         _VC_NS,
         text_vocab_coverage_topn,
     )

@@ -8,7 +8,7 @@ import pandas as pd
 
 
 def test_join_cardinality_estimate_matches_pandas(spark, sf_dir):
-    from vectordb_agentic_rag_spark.operators.analytics11 import (
+    from vectordb_agentic_rag_spark.operators.maintenance import (
         _CARD_JOINS,
         maintenance_join_cardinality_estimate,
     )
@@ -35,7 +35,7 @@ def test_join_cardinality_estimate_matches_pandas(spark, sf_dir):
 
 
 def test_freshness_lag_matches_pandas(spark, sf_dir):
-    from vectordb_agentic_rag_spark.operators.analytics11 import (
+    from vectordb_agentic_rag_spark.operators.maintenance import (
         maintenance_freshness_lag_report,
     )
 
@@ -65,7 +65,7 @@ def test_freshness_lag_matches_pandas(spark, sf_dir):
 
 
 def test_fulfillment_latency_profile_matches_numpy(spark, sf_dir):
-    from vectordb_agentic_rag_spark.operators.analytics11 import (
+    from vectordb_agentic_rag_spark.operators.stats.kpis import (
         agg_fulfillment_latency_profile,
     )
 
@@ -100,7 +100,7 @@ def test_fulfillment_latency_profile_matches_numpy(spark, sf_dir):
 
 
 def test_dedup_line_level_matches_python(spark, sf_dir):
-    from vectordb_agentic_rag_spark.operators.analytics11 import (
+    from vectordb_agentic_rag_spark.operators.dedup import (
         _LINE_TOKENS,
         dedup_line_level,
     )
@@ -159,7 +159,7 @@ def _panel_sims(sf_dir, n_queries):
 
 
 def test_nn_distance_ratio_matches_numpy(spark, sf_dir):
-    from vectordb_agentic_rag_spark.operators.analytics11 import (
+    from vectordb_agentic_rag_spark.operators.vector import (
         vec_nn_distance_ratio,
     )
 
@@ -180,7 +180,7 @@ def test_nn_distance_ratio_matches_numpy(spark, sf_dir):
 
 
 def test_hubness_topk_counts_matches_numpy(spark, sf_dir):
-    from vectordb_agentic_rag_spark.operators.analytics11 import (
+    from vectordb_agentic_rag_spark.operators.vector import (
         _HUB_K,
         _HUB_QUERIES,
         vec_hubness_topk_counts,
@@ -213,7 +213,7 @@ def _daily(sf_dir):
 
 
 def test_croston_matches_python_fold(spark, sf_dir):
-    from vectordb_agentic_rag_spark.operators.analytics11 import (
+    from vectordb_agentic_rag_spark.operators.windows import (
         _CROSTON_A,
         _CROSTON_THR,
         win_croston_intermittent,
@@ -264,7 +264,7 @@ def test_croston_matches_python_fold(spark, sf_dir):
 
 
 def test_peak_prominence_matches_python(spark, sf_dir):
-    from vectordb_agentic_rag_spark.operators.analytics11 import (
+    from vectordb_agentic_rag_spark.operators.windows import (
         win_peak_prominence_daily,
     )
 
@@ -296,7 +296,7 @@ def test_peak_prominence_matches_python(spark, sf_dir):
 
 
 def test_ratio_metric_delta_ci_matches_numpy(spark, sf_dir):
-    from vectordb_agentic_rag_spark.operators.analytics11 import (
+    from vectordb_agentic_rag_spark.operators.stats.models import (
         agg_ratio_metric_delta_ci,
     )
 
@@ -331,7 +331,7 @@ def test_ratio_metric_delta_ci_matches_numpy(spark, sf_dir):
 
 
 def test_tukey_hsd_matches_numpy(spark, sf_dir):
-    from vectordb_agentic_rag_spark.operators.analytics11 import (
+    from vectordb_agentic_rag_spark.operators.stats.tests import (
         agg_tukey_hsd_qstat,
     )
 
@@ -365,7 +365,7 @@ def test_tukey_hsd_matches_numpy(spark, sf_dir):
 
 
 def test_metadata_filter_matches_python(spark, sf_dir):
-    from vectordb_agentic_rag_spark.operators.analytics11 import (
+    from vectordb_agentic_rag_spark.operators.multimodal import (
         _IMG_MAX_ASPECT,
         _IMG_MIN_SIDE,
         multimodal_metadata_filter,
@@ -396,7 +396,7 @@ def test_metadata_filter_matches_python(spark, sf_dir):
 
 
 def test_audio_frames_matches_python(spark, sf_dir):
-    from vectordb_agentic_rag_spark.operators.analytics11 import (
+    from vectordb_agentic_rag_spark.operators.multimodal import (
         _PCM_FRAME,
         _PCM_HOP,
         _PCM_SR,
@@ -425,7 +425,7 @@ def test_betweenness_seeds_matches_python_brandes(spark, sf_dir):
     import collections
     from decimal import Decimal
 
-    from vectordb_agentic_rag_spark.operators.analytics11 import (
+    from vectordb_agentic_rag_spark.operators.graph import (
         _BT_DEPTH,
         _BT_SEEDS,
         _BT_TOPK,

@@ -9,7 +9,7 @@ import pandas as pd
 
 
 def test_random_walk_matches_python_walk(spark, sf_dir):
-    from vectordb_agentic_rag_spark.operators.analytics12 import (
+    from vectordb_agentic_rag_spark.operators.graph import (
         _RW_SEEDS,
         _RW_STEPS,
         graph_random_walk_sample,
@@ -50,7 +50,7 @@ def test_random_walk_matches_python_walk(spark, sf_dir):
 
 
 def test_hard_negatives_match_python_bm25(spark, sf_dir):
-    from vectordb_agentic_rag_spark.operators.analytics12 import (
+    from vectordb_agentic_rag_spark.operators.rag import (
         _HN_TOPK,
         rag_hard_negative_mining,
     )
@@ -104,7 +104,7 @@ def test_hard_negatives_match_python_bm25(spark, sf_dir):
 
 
 def test_personalized_pagerank_matches_python_iteration(spark, sf_dir):
-    from vectordb_agentic_rag_spark.operators.analytics12 import (
+    from vectordb_agentic_rag_spark.operators.graph import (
         _PPR_ITERS,
         _PPR_TOPK,
         graph_personalized_pagerank,
@@ -177,7 +177,7 @@ def test_zip_archive_roundtrip_and_crc_guard():
 def test_parquet_footer_stats_match_pyarrow_recompute(spark, sf_dir):
     import pyarrow.parquet as pq
 
-    from vectordb_agentic_rag_spark.operators.analytics12 import (
+    from vectordb_agentic_rag_spark.operators.maintenance import (
         _FOOTER_COLS,
         maintenance_parquet_footer_stats,
     )
@@ -202,7 +202,7 @@ def test_parquet_footer_stats_match_pyarrow_recompute(spark, sf_dir):
 
 
 def test_stats_merge_equals_direct_and_pandas(spark, sf_dir):
-    from vectordb_agentic_rag_spark.operators.analytics12 import (
+    from vectordb_agentic_rag_spark.operators.maintenance import (
         maintenance_incremental_stats_merge,
     )
 
@@ -222,7 +222,7 @@ def test_stats_merge_equals_direct_and_pandas(spark, sf_dir):
 
 
 def test_node2vec_walks_match_python_second_order(spark, sf_dir):
-    from vectordb_agentic_rag_spark.operators.analytics12 import (
+    from vectordb_agentic_rag_spark.operators.graph import (
         _N2V_SEEDS,
         _N2V_STEPS,
         graph_node2vec_biased_walks,

@@ -97,9 +97,7 @@ def test_maxsim_oracle_matches_numpy_recompute():
     recompute (4 x 16-dim slices, per-slice max sub-cosine, sum)."""
     import numpy as np
 
-    from vectordb_agentic_rag_spark.operators.analytics13 import (
-        _maxsim_oracle,
-    )
+    from vectordb_agentic_rag_spark.operators.rag import _maxsim_oracle
 
     con = duckdb.connect()
     con.execute(

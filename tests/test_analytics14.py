@@ -49,7 +49,7 @@ def _plain_python_pruning(sf_dir: str):
 
 
 def test_rowgroup_pruning_sim_matches_plain_python(spark):
-    from vectordb_agentic_rag_spark.operators.analytics14 import (
+    from vectordb_agentic_rag_spark.operators.maintenance import (
         maintenance_rowgroup_pruning_sim,
     )
 
@@ -66,7 +66,7 @@ def test_rowgroup_pruning_sim_matches_plain_python(spark):
 def test_rowgroup_pruning_advisory_shape(spark):
     """The point of the op: clustered layout prunes most buckets for a
     narrow range predicate, scattered prunes none."""
-    from vectordb_agentic_rag_spark.operators.analytics14 import (
+    from vectordb_agentic_rag_spark.operators.maintenance import (
         maintenance_rowgroup_pruning_sim,
     )
 
@@ -84,7 +84,7 @@ def test_rowgroup_pruning_advisory_shape(spark):
 
 
 def test_bloom_rowgroup_advisor_matches_plain_python(spark):
-    from vectordb_agentic_rag_spark.operators.analytics14 import (
+    from vectordb_agentic_rag_spark.operators.maintenance import (
         _BLF_P,
         _BLF_WORDS,
         maintenance_bloom_rowgroup_advisor,
@@ -141,7 +141,7 @@ def test_bloom_rowgroup_advisor_matches_plain_python(spark):
 
 
 def test_hll_dense_registers_matches_plain_python(spark):
-    from vectordb_agentic_rag_spark.operators.analytics14 import (
+    from vectordb_agentic_rag_spark.operators.stats.sketches import (
         _HLL_M,
         agg_hll_dense_registers,
     )
@@ -189,7 +189,7 @@ def test_hll_dense_registers_matches_plain_python(spark):
 
 
 def test_zorder_pruning_2d_matches_plain_python(spark):
-    from vectordb_agentic_rag_spark.operators.analytics14 import (
+    from vectordb_agentic_rag_spark.operators.maintenance import (
         maintenance_zorder_pruning_2d,
     )
 
@@ -256,7 +256,7 @@ def test_zorder_2d_morton_beats_linear_on_rows_skipped(spark):
     """The advisory's point: for every 2-D box, the Morton layout
     skips at least as many rows as the linear-x layout (it bounds
     both dimensions per bucket)."""
-    from vectordb_agentic_rag_spark.operators.analytics14 import (
+    from vectordb_agentic_rag_spark.operators.maintenance import (
         maintenance_zorder_pruning_2d,
     )
 
@@ -285,7 +285,7 @@ def test_logistic_newton_matches_plain_python(spark, sf_dir):
     import duckdb
     from decimal import Decimal
 
-    from vectordb_agentic_rag_spark.operators.analytics14 import (
+    from vectordb_agentic_rag_spark.operators.stats.models import (
         _LGN_T,
         agg_logistic_newton,
     )
@@ -355,7 +355,7 @@ def test_kcenter_greedy_picks_match_plain_python(spark, sf_dir):
     the covering-radius monotonicity invariant."""
     import duckdb
 
-    from vectordb_agentic_rag_spark.operators.analytics14 import (
+    from vectordb_agentic_rag_spark.operators.relational import (
         _KCG_K,
         sample_kcenter_greedy,
     )
@@ -412,7 +412,7 @@ def test_decision_stump_matches_plain_python(spark, sf_dir):
     import duckdb
     from fractions import Fraction
 
-    from vectordb_agentic_rag_spark.operators.analytics14 import (
+    from vectordb_agentic_rag_spark.operators.stats.models import (
         agg_decision_stump,
     )
 
@@ -465,7 +465,7 @@ def test_model_auc_matches_sklearn_free_recompute(spark, sf_dir):
     """Recompute AUC two independent ways — the midrank U identity
     on collapsed score groups AND a direct pairwise count — from the
     op's own fitted betas; all three must agree exactly."""
-    from vectordb_agentic_rag_spark.operators.analytics14 import (
+    from vectordb_agentic_rag_spark.operators.stats.models import (
         _lgn_fit,
         agg_model_auc_exact,
     )
@@ -509,7 +509,7 @@ def test_calibration_bins_matches_plain_python(spark, sf_dir):
     import duckdb
     from decimal import Decimal
 
-    from vectordb_agentic_rag_spark.operators.analytics14 import (
+    from vectordb_agentic_rag_spark.operators.stats.models import (
         _lgn_fit,
         agg_calibration_bins,
     )
@@ -549,9 +549,7 @@ def test_citation_grounding_invariants(spark, sf_dir):
     """Structural invariants of the attribution algebra: per-doc
     support bounds, exclusivity vs coverage accounting, and rank
     monotonicity within each query."""
-    from vectordb_agentic_rag_spark.operators.analytics14 import (
-        rag_citation_grounding,
-    )
+    from vectordb_agentic_rag_spark.operators.rag import rag_citation_grounding
 
     rows = rag_citation_grounding(spark, sf_dir).collect()
     assert rows, "no grounding rows — retrieval went vacuous"

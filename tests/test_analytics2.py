@@ -110,9 +110,7 @@ def test_triangle_closure_is_semi_join(spark):
     # checkpointed, shared with graph_clustering_coefficient); the
     # closure shape is pinned on the LAZY derivation, the op plan on
     # its own tail
-    from vectordb_agentic_rag_spark.operators.analytics2 import (
-        _tri_per_node_plan,
-    )
+    from vectordb_agentic_rag_spark.operators.graph import _tri_per_node_plan
 
     tri_plan = plan_of(_tri_per_node_plan(spark, SF))
     assert "LeftSemi" in tri_plan  # wedges close via semi-join
@@ -358,9 +356,7 @@ def test_neighbor_jaccard_bounds_and_triangle_consistency(spark):
     # recompute |N(u) ∩ N(v)| brute-force in pandas on the SAME
     # support-5 graph (the round-7 advisory fix — this property was
     # named but never asserted before)
-    from vectordb_agentic_rag_spark.operators.analytics2 import (
-        _JACCARD_MIN_SUPPORT,
-    )
+    from vectordb_agentic_rag_spark.operators.graph import _JACCARD_MIN_SUPPORT
 
     li = pd.read_parquet(f"{SF}/lineitem.parquet")[
         ["l_orderkey", "l_suppkey"]

@@ -132,7 +132,7 @@ def test_map_bounds_and_numpy_recompute(spark):
 
 # -------------------------------------------------------- token bucket
 
-from vectordb_agentic_rag_spark.operators.analytics4 import (  # noqa: E402
+from vectordb_agentic_rag_spark.operators.windows import (  # noqa: E402
     _TB_CAP as _CAP,
     _TB_COST as _COST,
 )

@@ -132,7 +132,9 @@ def test_cohort_overlap_matches_pandas(spark):
 
 def test_split_leakage_pairs_cross_split_and_sorted(spark):
     pdf = QUERIES["pipeline_split_leakage_pairs"](spark, SF).toPandas()
-    from vectordb_agentic_rag_spark.operators.analytics import _ROLL_SPARK  # noqa: F401
+    from vectordb_agentic_rag_spark.operators.pipelines import (  # noqa: F401
+        _ROLL_SPARK,
+    )
 
     # every reported pair really straddles the split: recompute the
     # rolling-hash split in python
@@ -264,7 +266,7 @@ def test_wilcoxon_matches_scipy_style_recompute(spark):
 
 
 def test_page_hinkley_matches_python_replay(spark):
-    from vectordb_agentic_rag_spark.operators.analytics5 import (
+    from vectordb_agentic_rag_spark.operators.windows import (
         _PH_DELTA,
         _PH_LAMBDA,
         _PH_MU,
@@ -506,9 +508,7 @@ def test_truss_number_helper_on_deep_synthetic_hierarchy(spark):
     it (truss 4), a triangle chain (truss 3), and pendant tree edges
     (truss 2) — every label from 2 to 6 must come out exactly as the
     python reference computes, through multiple genuine stages."""
-    from vectordb_agentic_rag_spark.operators.analytics5 import (
-        _truss_number_map,
-    )
+    from vectordb_agentic_rag_spark.operators.graph import _truss_number_map
 
     edges = set()
     clique6 = range(0, 6)

@@ -27,7 +27,7 @@ def _daily_cents(spark, sf_dir, types=None):
 def test_cramer_von_mises_matches_bruteforce(spark, sf_dir):
     """T from the closed-form block machinery equals the textbook
     midrank computation over the raw per-event cent values."""
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.tests import (
         agg_cramer_von_mises_2samp,
     )
     from vectordb_agentic_rag_spark.tables import table
@@ -67,7 +67,7 @@ def test_cramer_von_mises_matches_bruteforce(spark, sf_dir):
 def test_chow_test_matches_python_ols(spark, sf_dir):
     """The three RSS values and the F statistic equal a direct Python
     least-squares recompute on the daily series."""
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.timeseries import (
         _CHOW_SPLIT_DAY,
         agg_chow_test,
     )
@@ -103,7 +103,7 @@ def test_chow_test_matches_python_ols(spark, sf_dir):
 def test_benjamini_hochberg_matches_python(spark, sf_dir):
     """Exact sign-test p-values (math.comb) and the BH step-up front
     re-derived in Python must match every output row."""
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.tests import (
         agg_benjamini_hochberg,
     )
 
@@ -147,7 +147,7 @@ def test_benjamini_hochberg_matches_python(spark, sf_dir):
 def test_hits_matches_python_power_iteration(spark, sf_dir):
     """4 quantized HITS iterations in plain Python over the same edge
     list reproduce both top-10 rankings and scores."""
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.graph import (
         _HITS_ITERS,
         graph_hits_bipartite,
     )
@@ -197,7 +197,7 @@ def test_hits_matches_python_power_iteration(spark, sf_dir):
 def test_siegel_matches_python(spark, sf_dir):
     """Repeated-median slope/intercept with LOW-median picks equals
     the Python re-derivation."""
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.windows import (
         win_siegel_repeated_median,
     )
 
@@ -228,7 +228,7 @@ def test_siegel_matches_python(spark, sf_dir):
 def test_cochran_armitage_matches_python(spark, sf_dir):
     """z from the moment formula equals the direct Python computation
     of T/sqrt(Var(T)) on per-day purchase proportions."""
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.tests import (
         agg_cochran_armitage_trend,
     )
     from vectordb_agentic_rag_spark.tables import table
@@ -267,9 +267,7 @@ def test_cochran_armitage_matches_python(spark, sf_dir):
 def test_sen_slope_ci_matches_python(spark, sf_dir):
     """The CI rank picks and the point estimate equal a Python
     re-derivation with the same floor/ceil index convention."""
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
-        win_sen_slope_ci,
-    )
+    from vectordb_agentic_rag_spark.operators.windows import win_sen_slope_ci
     from vectordb_agentic_rag_spark.tables import table
     from pyspark.sql import functions as F
     import datetime
@@ -323,7 +321,7 @@ def test_lorenz_deciles_match_sorted_cumsum(spark, sf_dir):
     """Decile revenue shares equal the plain sorted-list cumulative
     sums, and the curve is convex (shares increase, marginal shares
     increase)."""
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.distribution import (
         agg_lorenz_curve_deciles,
     )
     from vectordb_agentic_rag_spark.tables import table
@@ -360,9 +358,7 @@ def test_lorenz_deciles_match_sorted_cumsum(spark, sf_dir):
 def test_quade_matches_python(spark, sf_dir):
     """The quadrupled-integer Quade F equals a plain Python
     computation with float midranks."""
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
-        agg_quade_test,
-    )
+    from vectordb_agentic_rag_spark.operators.stats.tests import agg_quade_test
 
     grid = {}
     for r in _daily_cents(spark, sf_dir):
@@ -403,7 +399,7 @@ def test_mantel_haenszel_matches_python(spark, sf_dir):
     """CMH chi2 (with continuity correction) and the MH common OR
     equal the direct Python computation from the day-stratified 2x2
     tables."""
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.tests import (
         _MH_CUT,
         agg_mantel_haenszel,
     )
@@ -453,7 +449,7 @@ def test_mantel_haenszel_matches_python(spark, sf_dir):
 def test_ansari_bradley_matches_python(spark, sf_dir):
     """The doubled-score AB statistic and z equal a brute-force
     midrank computation over the raw cent values."""
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.tests import (
         agg_ansari_bradley,
     )
     from vectordb_agentic_rag_spark.tables import table
@@ -497,7 +493,7 @@ def test_ansari_bradley_matches_python(spark, sf_dir):
 def test_oaxaca_matches_python(spark, sf_dir):
     """Gap decomposition equals a per-group least-squares recompute,
     and explained + unexplained sum to the raw gap."""
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.models import (
         agg_oaxaca_blinder_gap,
     )
     from vectordb_agentic_rag_spark.tables import table
@@ -558,7 +554,7 @@ def _day_totals(spark, sf_dir):
 def test_runs_test_matches_python(spark, sf_dir):
     """Runs count, sign counts, and z match the direct recompute over
     the daily totals."""
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.timeseries import (
         agg_runs_test,
     )
 
@@ -582,7 +578,7 @@ def test_runs_test_matches_python(spark, sf_dir):
 
 def test_durbin_watson_matches_python(spark, sf_dir):
     """DW and the slope match an OLS residual recompute."""
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.timeseries import (
         agg_durbin_watson,
     )
 
@@ -608,9 +604,7 @@ def test_durbin_watson_matches_python(spark, sf_dir):
 def test_kendall_w_matches_python(spark, sf_dir):
     """W and chi2 match the direct rank recompute over the day x type
     grid."""
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
-        agg_kendall_w,
-    )
+    from vectordb_agentic_rag_spark.operators.stats.tests import agg_kendall_w
 
     rows = _daily_cents(spark, sf_dir)
     cells = {(r.event_type, r.day): r.tot for r in rows}
@@ -646,7 +640,7 @@ def test_kendall_w_matches_python(spark, sf_dir):
 def test_hodges_lehmann_matches_python(spark, sf_dir):
     """The pseudo-median matches the brute-force Walsh-average
     median."""
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.tests import (
         agg_hodges_lehmann_paired,
     )
 
@@ -671,7 +665,7 @@ def test_hodges_lehmann_matches_python(spark, sf_dir):
 def test_grubbs_matches_python(spark, sf_dir):
     """G, the outlier day, and its deviation match the direct
     computation."""
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.timeseries import (
         agg_grubbs_outlier,
     )
 
@@ -693,7 +687,7 @@ def test_grubbs_matches_python(spark, sf_dir):
 def test_brunner_munzel_matches_python(spark, sf_dir):
     """W, p_hat, and df match the scipy-formula recompute with
     midranks over the raw cent values."""
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.tests import (
         agg_brunner_munzel,
     )
     from vectordb_agentic_rag_spark.tables import table
@@ -752,7 +746,7 @@ def test_brunner_munzel_matches_python(spark, sf_dir):
 def test_fisher_exact_matches_python(spark, sf_dir):
     """The exact hypergeometric p-values match a math.comb
     recompute."""
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.tests import (
         agg_fisher_exact,
     )
     from vectordb_agentic_rag_spark.tables import table
@@ -796,7 +790,7 @@ def test_fisher_exact_matches_python(spark, sf_dir):
 
 def test_cohens_kappa_matches_python(spark, sf_dir):
     """kappa matches the direct tercile-agreement recompute."""
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.tests import (
         agg_cohens_kappa_daily,
     )
 
@@ -837,7 +831,7 @@ def test_cohens_kappa_matches_python(spark, sf_dir):
 
 def test_column_profile_matches_python(spark, sf_dir):
     """The profile rows match direct per-column recomputes."""
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.maintenance import (
         maintenance_column_profile,
     )
     from vectordb_agentic_rag_spark.tables import table
@@ -877,7 +871,7 @@ def test_column_profile_matches_python(spark, sf_dir):
 def test_dow_anova_matches_python(spark, sf_dir):
     """F and eta_sq match the textbook one-way ANOVA recompute, and
     the fixture's 30-day span satisfies the lcm-60 precondition."""
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.timeseries import (
         agg_dow_anova,
     )
 
@@ -907,7 +901,7 @@ def test_dow_anova_matches_python(spark, sf_dir):
 def test_poisson_dispersion_matches_python(spark, sf_dir):
     """chi2 and the dispersion ratio match the direct recompute over
     daily click counts."""
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.distribution import (
         agg_poisson_dispersion,
     )
     from vectordb_agentic_rag_spark.tables import table
@@ -933,7 +927,7 @@ def test_poisson_dispersion_matches_python(spark, sf_dir):
 def test_constraint_audit_matches_python(spark, sf_dir):
     """Every constraint row matches a direct recompute, and the
     healthy fixture passes all checks with real counts."""
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.maintenance import (
         maintenance_constraint_audit,
     )
     from vectordb_agentic_rag_spark.tables import table
@@ -1002,7 +996,7 @@ def test_constraint_audit_matches_python(spark, sf_dir):
 
 def test_ab_srm_matches_python(spark, sf_dir):
     """Arm counts and chi2 match the multiplicative-hash recompute."""
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.models import (
         agg_ab_srm_check,
     )
     from vectordb_agentic_rag_spark.tables import table
@@ -1030,7 +1024,7 @@ def test_ab_srm_matches_python(spark, sf_dir):
 
 def test_rfm_segments_matches_python(spark, sf_dir):
     """Segment cells match a direct quintile recompute."""
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.kpis import (
         agg_rfm_segments,
     )
     from vectordb_agentic_rag_spark.tables import table
@@ -1074,7 +1068,7 @@ def test_rfm_segments_matches_python(spark, sf_dir):
 
 def test_hhi_matches_python(spark, sf_dir):
     """Per-nation HHI matches the direct share-square recompute."""
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.distribution import (
         agg_hhi_concentration,
     )
     from vectordb_agentic_rag_spark.tables import table
@@ -1110,7 +1104,7 @@ def test_hhi_matches_python(spark, sf_dir):
 def test_cuped_matches_python(spark, sf_dir):
     """theta, rho^2, and the adjusted diff match a direct recompute
     over per-user pre/post purchase cents."""
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.models import (
         agg_cuped_adjustment,
     )
     from vectordb_agentic_rag_spark.tables import table
@@ -1168,9 +1162,7 @@ def test_cuped_matches_python(spark, sf_dir):
 
 def test_power_mde_matches_python(spark, sf_dir):
     """MDE matches the textbook two-proportion sizing formula."""
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
-        agg_power_mde,
-    )
+    from vectordb_agentic_rag_spark.operators.stats.models import agg_power_mde
     from vectordb_agentic_rag_spark.tables import table
 
     ev = table(spark, sf_dir, "events").collect()
@@ -1204,7 +1196,7 @@ def test_did_estimator_matches_python_recompute(spark, sf_dir):
 
     import pandas as pd
 
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.models import (
         agg_did_estimator,
     )
 
@@ -1244,7 +1236,7 @@ def test_iv_wald_weak_instrument_gate_and_strong_path(spark, tmp_path):
     so the op must flag weak_instrument and NULL the LATE.  Synthetic
     run: a fixture where the instrument genuinely moves adoption must
     emit the Wald ratio matching the Python recompute."""
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.models import (
         agg_iv_wald_estimator,
     )
 
@@ -1354,7 +1346,7 @@ def test_qini_uplift_matches_python_recompute(spark, sf_dir):
         else:
             c[1] += 1
             c[3] += resp[u]
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.models import (
         agg_qini_uplift_curve,
     )
 
@@ -1390,7 +1382,7 @@ def test_matthews_phi_matches_python_recompute(spark, sf_dir):
 
     import pandas as pd
 
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.distribution import (
         agg_matthews_phi,
     )
 
@@ -1427,7 +1419,7 @@ def test_last_digit_uniformity_matches_python_recompute(spark, sf_dir):
     digit of o_totalprice."""
     import pandas as pd
 
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.distribution import (
         agg_last_digit_uniformity,
     )
 
@@ -1450,7 +1442,7 @@ def test_revenue_up_streaks_matches_python_recompute(spark, sf_dir):
     runs, and the 30-day fixture span precondition."""
     import pandas as pd
 
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.windows import (
         win_revenue_up_streaks,
     )
 
@@ -1492,7 +1484,7 @@ def test_laspeyres_paasche_matches_python_recompute(spark, sf_dir):
     import numpy as np
     import pandas as pd
 
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.kpis import (
         agg_laspeyres_paasche_index,
     )
 
@@ -1542,7 +1534,7 @@ def test_shapley_attribution_matches_python_recompute(spark, sf_dir):
 
     import pandas as pd
 
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.kpis import (
         agg_shapley_attribution,
     )
 
@@ -1598,9 +1590,7 @@ def test_local_bridges_matches_python_recompute(spark, sf_dir):
 
     import pandas as pd
 
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
-        graph_local_bridges,
-    )
+    from vectordb_agentic_rag_spark.operators.graph import graph_local_bridges
 
     li = pd.read_parquet(f"{sf_dir}/lineitem.parquet")[
         ["l_orderkey", "l_partkey"]
@@ -1635,7 +1625,7 @@ def test_cronbach_alpha_matches_python_recompute(spark, sf_dir):
     k/(k-1) assembly."""
     import pandas as pd
 
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.tests import (
         agg_cronbach_alpha,
     )
 
@@ -1664,7 +1654,7 @@ def test_cvar_matches_python_recompute(spark, sf_dir):
     purchase revenue changes."""
     import pandas as pd
 
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.distribution import (
         agg_cvar_expected_shortfall,
     )
 
@@ -1693,7 +1683,7 @@ def test_neyman_allocation_matches_python_recompute(spark, sf_dir):
 
     import pandas as pd
 
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.relational import (
         _NEYMAN_N,
         sample_neyman_allocation,
     )
@@ -1735,7 +1725,7 @@ def test_borda_copeland_matches_python_recompute(spark, sf_dir):
     day x type revenue grid."""
     import pandas as pd
 
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.kpis import (
         agg_borda_copeland_ranks,
     )
 
@@ -1778,7 +1768,7 @@ def test_hoeffding_d_matches_python_recompute(spark, sf_dir):
     scaled D1/D2/D3 assembly."""
     import pandas as pd
 
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.distribution import (
         agg_hoeffding_d_independence,
     )
 
@@ -1836,7 +1826,7 @@ def test_sample_entropy_matches_python_recompute(spark, sf_dir):
 
     import pandas as pd
 
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.timeseries import (
         agg_sample_entropy,
     )
 
@@ -1872,7 +1862,7 @@ def test_newsvendor_matches_python_recompute(spark, sf_dir):
     recompute over daily purchase counts."""
     import pandas as pd
 
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.models import (
         agg_newsvendor_quantile,
     )
 
@@ -1899,7 +1889,7 @@ def test_churn_lifetable_matches_python_recompute(spark, sf_dir):
     exact hazard ratios and the quantized survival fold."""
     import pandas as pd
 
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.models import (
         agg_churn_lifetable_weeks,
     )
 
@@ -1940,7 +1930,7 @@ def test_markov_removal_attribution_matches_python_recompute(spark, sf_dir):
     and shares — the whole pipeline, independent of both engines."""
     import pandas as pd
 
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.kpis import (
         _MRA_CHANNELS,
         _MRA_STATES,
         _MRA_STEPS,
@@ -2036,7 +2026,7 @@ def test_taylor_power_law_matches_python_recompute(spark, sf_dir):
 
     import pandas as pd
 
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.distribution import (
         agg_taylor_power_law,
     )
 

@@ -9,6 +9,7 @@ import pytest
 from vectordb_agentic_rag_spark.tables import REPO_ROOT
 from vectordb_agentic_rag_spark.operators.binformats import (
     _PNG_SIG,
+    _lzw_enc_base,
     _png_chunk,
     build_png_gray8,
     build_wav,
@@ -228,6 +229,59 @@ def test_bmp_rejects_non_bmp_and_truncation():
         decode_bmp_gray8(full[:-10])
 
 
+def _lzw_encode_gif_bytewise(data: bytes, min_size: int = 8) -> bytes:
+    """Reference GIF-variant LZW encode (LSB-first variable-width
+    codes, CLEAR/EOI, code width grows at 2^cs + 1 table entries,
+    dictionary reset at 4096). The package decoder grows at 2^cs
+    because it runs one table entry behind — the classic encoder/decoder
+    offset. Kept as the plain bytes-keyed formulation the trie encoder
+    is pinned byte-identical against
+    (test_lzw_trie_encoder_matches_bytewise_reference)."""
+    clear = 1 << min_size
+    eoi = clear + 1
+    out = bytearray()
+    acc = 0
+    nbits = 0
+
+    def put(code: int, size: int) -> None:
+        nonlocal acc, nbits
+        acc |= code << nbits
+        nbits += size
+        while nbits >= 8:
+            out.append(acc & 0xFF)
+            acc >>= 8
+            nbits -= 8
+
+    table = dict(_lzw_enc_base(min_size))
+    next_code = eoi + 1
+    code_size = min_size + 1
+    put(clear, code_size)
+    w = b""
+    for ch in data:
+        wc = w + bytes([ch])
+        if wc in table:
+            w = wc
+            continue
+        put(table[w], code_size)
+        if next_code < 4096:
+            table[wc] = next_code
+            next_code += 1
+            if next_code == (1 << code_size) + 1 and code_size < 12:
+                code_size += 1
+        else:
+            put(clear, code_size)
+            table = dict(_lzw_enc_base(min_size))
+            next_code = eoi + 1
+            code_size = min_size + 1
+        w = bytes([ch])
+    if w:
+        put(table[w], code_size)
+    put(eoi, code_size)
+    if nbits:
+        out.append(acc & 0xFF)
+    return bytes(out)
+
+
 def test_lzw_trie_encoder_matches_bytewise_reference():
     """The int-keyed trie encoder must emit byte-identical streams to
     the kept bytes-keyed reference over every adversarial shape: empty,
@@ -235,10 +289,7 @@ def test_lzw_trie_encoder_matches_bytewise_reference():
     random data (the r14 keep-the-reference-and-pin pattern)."""
     import random
 
-    from vectordb_agentic_rag_spark.operators.binformats import (
-        _lzw_encode_gif,
-        _lzw_encode_gif_bytewise,
-    )
+    from vectordb_agentic_rag_spark.operators.binformats import _lzw_encode_gif
 
     random.seed(11)
     cases = [
@@ -1094,6 +1145,33 @@ def test_inflate_literal_only_dynamic_block_with_zero_dist_codes():
     assert inflate(w2.flush()) == b"AAA"
 
 
+def _rice_decode_bitwise(data: bytes, k: int, n: int) -> list:
+    """Reference per-bit decoder (the pre-optimization shape) — kept
+    as the equivalence witness for rice_decode's window scan; pinned
+    against it by pytest on random streams and every truncation."""
+    out = []
+    pos = 0
+    total_bits = 8 * len(data)
+
+    def read_bit() -> int:
+        nonlocal pos
+        if pos >= total_bits:
+            raise ValueError("truncated Rice bitstream")
+        b = (data[pos >> 3] >> (7 - (pos & 7))) & 1
+        pos += 1
+        return b
+
+    for _ in range(n):
+        q = 0
+        while read_bit():  # read_bit raises at exhaustion, bounding q
+            q += 1
+        r = 0
+        for _ in range(k):
+            r = (r << 1) | read_bit()
+        out.append((q << k) | r)
+    return out
+
+
 def test_rice_window_decoder_matches_bitwise_reference():
     """Round-14 optimization pin: rice_decode's 64-bit-window unary
     scan must agree with the per-bit reference decoder on values AND
@@ -1101,7 +1179,6 @@ def test_rice_window_decoder_matches_bitwise_reference():
     import random
 
     from vectordb_agentic_rag_spark.operators.binformats import (
-        _rice_decode_bitwise,
         rice_decode,
         rice_encode,
     )

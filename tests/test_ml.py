@@ -162,13 +162,13 @@ def test_semantic_purge_scaled_k_path(spark, sf_dir, monkeypatch):
     cell the keep-first purge set matches exactly."""
     import numpy as np
     import pandas as pd
-    from vectordb_agentic_rag_spark.operators import analytics3 as a3
+    from vectordb_agentic_rag_spark.operators import dedup
 
-    monkeypatch.setattr(a3, "_PURGE_CELL_TARGET", 64)  # 500 vecs -> k=7
-    assert a3._purge_k(sf_dir) > 4
-    asg = a3._purge_assignments(spark, sf_dir).toPandas()
+    monkeypatch.setattr(dedup, "_PURGE_CELL_TARGET", 64)  # 500 vecs -> k=7
+    assert dedup._purge_k(sf_dir) > 4
+    asg = dedup._purge_assignments(spark, sf_dir).toPandas()
     assert asg["vec_id"].nunique() == len(asg)  # partition, no dup/drop
-    got = a3.dedup_semantic_cluster_purge(spark, sf_dir).toPandas()
+    got = dedup.dedup_semantic_cluster_purge(spark, sf_dir).toPandas()
 
     e_cols = [f"e{i}" for i in range(1, 9)]
     x = asg[e_cols].to_numpy()

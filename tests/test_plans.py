@@ -588,9 +588,7 @@ def test_clustering_coef_composes_triangle_shape(spark, sf_dir):
     # (round-14: _tri_per_node is checkpointed, shared with
     # graph_triangle_cosupply); its semi-join closure shape is pinned
     # on the LAZY derivation
-    from vectordb_agentic_rag_spark.operators.analytics2 import (
-        _tri_per_node_plan,
-    )
+    from vectordb_agentic_rag_spark.operators.graph import _tri_per_node_plan
 
     tri_plan = plan_of(_tri_per_node_plan(spark, sf_dir))
     assert "LeftSemi" in tri_plan
@@ -1348,8 +1346,10 @@ def test_queue_r12_bounded_intermediates_checkpointed(spark, sf_dir):
     # cents-domain frame are each referenced twice — the ckpt rule
     # pins both plans at 0 parquet scans (derivation runs eagerly at
     # checkpoint time)
-    from vectordb_agentic_rag_spark.operators.queue_r12 import (
+    from vectordb_agentic_rag_spark.operators.stats.distribution import (
         agg_dkw_cdf_bands,
+    )
+    from vectordb_agentic_rag_spark.operators.stats.timeseries import (
         agg_forecast_mase,
     )
 
@@ -1368,7 +1368,7 @@ def test_wedge_cap_checkpointed_edges_partitioned_rank(spark, sf_dir):
     # the world
     import re
 
-    from vectordb_agentic_rag_spark.operators.analytics2 import (
+    from vectordb_agentic_rag_spark.operators.graph import (
         graph_triangle_wedge_cap,
     )
 

@@ -10,7 +10,7 @@ def test_substring_span_purge_matches_exact_string_recompute(spark, sf_dir):
     at all): any rolling-hash collision or prefix-hash indexing bug in
     the operator would desynchronize from this ground truth.  Also
     verifies the char offsets by slicing the original text."""
-    from vectordb_agentic_rag_spark.operators.queue_r11 import (
+    from vectordb_agentic_rag_spark.operators.dedup import (
         _PURGE_K,
         dedup_substring_span_purge,
     )
@@ -76,7 +76,7 @@ def test_band_tuning_matches_python_recompute(spark, sf_dir):
         P_CODE,
         P_HASH,
     )
-    from vectordb_agentic_rag_spark.operators.queue_r11 import (
+    from vectordb_agentic_rag_spark.operators.text import (
         _TUNE_PCTS,
         _TUNE_SCHEMES,
         _TUNE_STRIDE,
@@ -176,8 +176,8 @@ def test_dedup_cascade_audit_matches_python_recompute(spark, sf_dir):
         P_CODE,
         P_HASH,
     )
-    from vectordb_agentic_rag_spark.operators.queue_r11 import (
-        _PURGE_K,
+    from vectordb_agentic_rag_spark.operators.dedup import _PURGE_K
+    from vectordb_agentic_rag_spark.operators.pipelines import (
         pipeline_dedup_cascade_audit,
     )
 
@@ -287,7 +287,7 @@ def test_dsir_importance_weights_matches_python_recompute(spark, sf_dir):
     from decimal import Decimal
 
     from vectordb_agentic_rag_spark.operators.dedup import P_CODE
-    from vectordb_agentic_rag_spark.operators.queue_r11 import (
+    from vectordb_agentic_rag_spark.operators.text import (
         _DSIR_B,
         _DSIR_DIV,
         _DSIR_TARGET,

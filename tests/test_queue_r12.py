@@ -9,7 +9,7 @@ import pandas as pd
 
 
 def test_lindley_backlog_matches_python_fold(spark, sf_dir):
-    from vectordb_agentic_rag_spark.operators.queue_r12 import (
+    from vectordb_agentic_rag_spark.operators.windows import (
         win_lindley_queue_backlog,
     )
 
@@ -33,7 +33,7 @@ def test_lindley_backlog_matches_python_fold(spark, sf_dir):
 
 
 def test_filter_ablation_matches_python(spark, sf_dir):
-    from vectordb_agentic_rag_spark.operators.analytics2 import (
+    from vectordb_agentic_rag_spark.operators.text import (
         _GOPHER_MAX_DUPF,
         _GOPHER_MAX_MWL,
         _GOPHER_MAX_TOPR,
@@ -42,7 +42,7 @@ def test_filter_ablation_matches_python(spark, sf_dir):
         _GOPHER_MIN_STOP,
         _GOPHER_MIN_WORDS,
     )
-    from vectordb_agentic_rag_spark.operators.queue_r12 import (
+    from vectordb_agentic_rag_spark.operators.pipelines import (
         pipeline_filter_ablation,
     )
 
@@ -88,7 +88,7 @@ def test_filter_ablation_matches_python(spark, sf_dir):
 
 
 def test_dkw_bands_match_numpy(spark, sf_dir):
-    from vectordb_agentic_rag_spark.operators.queue_r12 import (
+    from vectordb_agentic_rag_spark.operators.stats.distribution import (
         agg_dkw_cdf_bands,
     )
 
@@ -114,10 +114,10 @@ def test_survival_rmst_matches_km_integral(spark, sf_dir):
     Python with the same round(9) term quantization."""
     from decimal import Decimal
 
-    from vectordb_agentic_rag_spark.operators.analytics4 import (
+    from vectordb_agentic_rag_spark.operators.stats.models import (
         agg_kaplan_meier,
     )
-    from vectordb_agentic_rag_spark.operators.queue_r12 import (
+    from vectordb_agentic_rag_spark.operators.stats.models import (
         _RMST_TAUS,
         agg_survival_rmst,
     )
@@ -150,7 +150,7 @@ def test_survival_rmst_matches_km_integral(spark, sf_dir):
 
 
 def test_forecast_mase_matches_numpy(spark, sf_dir):
-    from vectordb_agentic_rag_spark.operators.queue_r12 import (
+    from vectordb_agentic_rag_spark.operators.stats.timeseries import (
         agg_forecast_mase,
     )
 
@@ -181,7 +181,7 @@ def test_forecast_mase_matches_numpy(spark, sf_dir):
 def test_diameter_double_sweep_matches_python_bfs(spark, sf_dir):
     import collections
 
-    from vectordb_agentic_rag_spark.operators.queue_r12 import (
+    from vectordb_agentic_rag_spark.operators.graph import (
         graph_diameter_double_sweep,
     )
 
@@ -231,7 +231,7 @@ def test_diameter_double_sweep_matches_python_bfs(spark, sf_dir):
 def test_lindley_live_matches_batch_minus_last_day(spark, sf_dir):
     """Drained live table == the batch recursion at day-1 capacity,
     minus the never-closed last day (close-on-rollover identity)."""
-    from vectordb_agentic_rag_spark.operators.queue_r12 import (
+    from vectordb_agentic_rag_spark.streaming.core import (
         stream_lindley_backlog_live,
     )
 
@@ -299,9 +299,7 @@ def test_lindley_live_skips_gap_days(spark, tmp_path):
 
 
 def test_xml_roundtrip_lossless(spark, sf_dir):
-    from vectordb_agentic_rag_spark.operators.queue_r12 import (
-        source_xml_roundtrip,
-    )
+    from vectordb_agentic_rag_spark.sources.readers import source_xml_roundtrip
 
     out = source_xml_roundtrip(spark, sf_dir).toPandas()
     nat = pd.read_parquet(f"{sf_dir}/nation.parquet").sort_values(
@@ -315,7 +313,7 @@ def test_xml_roundtrip_lossless(spark, sf_dir):
 def test_alpha_sampling_weights_match_numpy(spark, sf_dir):
     from decimal import Decimal
 
-    from vectordb_agentic_rag_spark.operators.queue_r12 import (
+    from vectordb_agentic_rag_spark.operators.pipelines import (
         pipeline_alpha_sampling_weights,
     )
 
@@ -350,7 +348,7 @@ def test_alpha_sampling_weights_match_numpy(spark, sf_dir):
 
 
 def test_mediation_product_identity_and_numpy(spark, sf_dir):
-    from vectordb_agentic_rag_spark.operators.queue_r12 import (
+    from vectordb_agentic_rag_spark.operators.stats.models import (
         agg_mediation_product,
     )
 
@@ -383,7 +381,7 @@ def test_mediation_product_identity_and_numpy(spark, sf_dir):
 
 
 def test_ewma_control_chart_matches_python(spark, sf_dir):
-    from vectordb_agentic_rag_spark.operators.queue_r12 import (
+    from vectordb_agentic_rag_spark.operators.windows import (
         _EWMA_CC_LAM,
         win_ewma_control_chart,
     )
@@ -429,7 +427,7 @@ def test_minhash_estimate_error_matches_python(spark, sf_dir):
         _A,
         _B,
     )
-    from vectordb_agentic_rag_spark.operators.queue_r12 import (
+    from vectordb_agentic_rag_spark.operators.dedup import (
         dedup_minhash_estimate_error,
     )
 
@@ -498,7 +496,7 @@ def test_context_dedup_pack_matches_python_sim(spark, sf_dir):
         _A,
         _B,
     )
-    from vectordb_agentic_rag_spark.operators.queue_r12 import (
+    from vectordb_agentic_rag_spark.operators.rag import (
         _CDP_BUDGET,
         _CDP_FETCH,
         rag_context_dedup_pack,
@@ -581,7 +579,7 @@ def test_context_dedup_pack_matches_python_sim(spark, sf_dir):
 
 
 def test_matryoshka_recall_sweep_matches_numpy(spark, sf_dir):
-    from vectordb_agentic_rag_spark.operators.queue_r12 import (
+    from vectordb_agentic_rag_spark.operators.vector import (
         _MRS_DIMS,
         _MRS_K,
         _MRS_QUERIES,
@@ -627,7 +625,7 @@ def test_matryoshka_recall_sweep_matches_numpy(spark, sf_dir):
 
 
 def test_tail_dependence_matches_numpy(spark, sf_dir):
-    from vectordb_agentic_rag_spark.operators.queue_r12 import (
+    from vectordb_agentic_rag_spark.operators.stats.distribution import (
         agg_tail_dependence_lambda,
     )
 

@@ -59,10 +59,10 @@ def _persistent_rdds(spark) -> set[int]:
 
 
 def test_hit_returns_same_object_without_jobs(spark, sf_dir):
-    from vectordb_agentic_rag_spark.operators import analytics9
+    from vectordb_agentic_rag_spark.operators.stats import timeseries
     from vectordb_agentic_rag_spark.sources import readers
 
-    for build in (analytics9._day_cent_totals, readers._events_by_type):
+    for build in (timeseries._day_cent_totals, readers._events_by_type):
         first = build(spark, sf_dir)
         again, jobs = _count_jobs(spark, lambda: build(spark, sf_dir))
         assert again is first and jobs == 0, build.__name__
@@ -109,12 +109,15 @@ def test_clear_session_caches_empties_every_cache(spark, sf_dir):
     returned checkpoints, intermediate ones (_day_type_cells,
     _polish_frames) and pinned hot tables — then forgets every entry,
     so the next call rebuilds, and rewrites write-once layouts."""
-    from vectordb_agentic_rag_spark.operators import analytics8, analytics9
+    from vectordb_agentic_rag_spark.operators.stats import (
+        distribution,
+        timeseries,
+    )
 
     tables.clear_session_caches()
     before = _persistent_rdds(spark)
-    analytics9._day_type_cells(spark, sf_dir)
-    analytics8._polish_frames(spark, sf_dir)
+    distribution._day_type_cells(spark, sf_dir)
+    timeseries._polish_frames(spark, sf_dir)
     tables.cache_hot_tables(spark, sf_dir, ["region"])
     assert _persistent_rdds(spark) - before, "builds persisted nothing?"
 
@@ -122,7 +125,7 @@ def test_clear_session_caches_empties_every_cache(spark, sf_dir):
     assert _persistent_rdds(spark) <= before
     assert not any(tables._MEMOS)
     assert not tables.table(spark, sf_dir, "region").is_cached
-    assert analytics9._day_type_cells(spark, sf_dir).count() > 0
+    assert distribution._day_type_cells(spark, sf_dir).count() > 0
 
     from vectordb_agentic_rag_spark.sources import readers
 
@@ -148,3 +151,10 @@ def test_every_cache_module_is_sweepable():
             if (str(rel), name) == ("tables.py", "_MEMOS"):
                 continue
             assert name in _WORKER_MEMOS, f"{rel}: hand-rolled memo {name}"
+
+
+def test_no_tool_hard_codes_the_checkout_path():
+    """Tools derive the checkout from ``__file__``, so a second checkout
+    runs its own code and writes its own reports."""
+    for py in (PKG_ROOT.parent / "tools").glob("*.py"):
+        assert str(PKG_ROOT.parent) not in py.read_text(), py.name

@@ -47,7 +47,7 @@ def test_kll_compactor_weight_conservation_and_rank_error():
     given, settings = hypothesis.given, hypothesis.settings
     st = pytest.importorskip("hypothesis.strategies")
 
-    from vectordb_agentic_rag_spark.operators.analytics5 import (
+    from vectordb_agentic_rag_spark.operators.stats.sketches import (
         _kll_partition_summary,
     )
 

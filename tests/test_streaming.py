@@ -312,9 +312,7 @@ def test_page_hinkley_live_matches_batch_op(spark, sf_dir):
     """The drained live Page-Hinkley equals win_page_hinkley's batch
     fold row-for-row (same columns, same full series, identical
     left-assoc float ops)."""
-    from vectordb_agentic_rag_spark.operators.analytics5 import (
-        win_page_hinkley,
-    )
+    from vectordb_agentic_rag_spark.operators.windows import win_page_hinkley
     from vectordb_agentic_rag_spark.streaming.core import (
         stream_page_hinkley_live,
     )
@@ -332,7 +330,7 @@ def test_tost_monitor_live_matches_batch_op(spark, sf_dir):
     purchases) is monotone, so the per-batch 0/1 increments sum to the
     batch cohort counts regardless of where the replay cuts batches,
     and the final arithmetic is the shared expression text."""
-    from vectordb_agentic_rag_spark.operators.analytics7 import (
+    from vectordb_agentic_rag_spark.operators.stats.tests import (
         agg_tost_equivalence,
     )
     from vectordb_agentic_rag_spark.streaming.core import (
@@ -408,7 +406,7 @@ def test_srm_guardrail_live_equals_batch_check(spark, sf_dir):
     """Live first-arrival SRM table == the batch agg_ab_srm_check row,
     column for column: the state-store dedup emits exactly one row
     per distinct user, so both paths aggregate the same arm counts."""
-    from vectordb_agentic_rag_spark.operators.analytics9 import (
+    from vectordb_agentic_rag_spark.operators.stats.models import (
         agg_ab_srm_check,
     )
     from vectordb_agentic_rag_spark.streaming.core import (

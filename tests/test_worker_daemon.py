@@ -1,7 +1,7 @@
 """The Python-worker daemon (vectordb_agentic_rag_spark.worker_daemon):
 zip archives are re-read only when they change, every task runs with the
 patch, files shipped with ``addPyFile`` still import, and the daemon
-starts whatever the driver's working directory is."""
+starts whatever the driver's working directory holds."""
 
 from __future__ import annotations
 
@@ -99,7 +99,11 @@ def test_add_py_file_after_first_task_still_imports(spark, tmp_path):
 
 def test_session_started_from_another_directory_runs_python_tasks(tmp_path):
     """The daemon module is found through spark.executorEnv.PYTHONPATH,
-    not the driver's working directory or environment."""
+    not the driver's working directory or environment: a stub package of
+    the same name in the working directory does not shadow it."""
+    stub = tmp_path / "vectordb_agentic_rag_spark"
+    stub.mkdir()
+    (stub / "__init__.py").write_text("")
     script = textwrap.dedent(f"""
         import sys
         sys.path.insert(0, {REPO_ROOT!r})

@@ -10,11 +10,13 @@ catches a quietly-regressed operator.
 
 from __future__ import annotations
 
+import os
 import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main(only: list[str] | None = None) -> None:
@@ -79,7 +81,7 @@ def main(only: list[str] | None = None) -> None:
     for name, med, n, runs in rows:
         kind = "sql" if name in ORACLES else "rows-only"
         out.append(f"| {name} | {med*1000:.0f} | {n} | {runs} | {kind} |")
-    with open("/root/repo/OPS_BENCH.md", "w") as f:
+    with open(os.path.join(REPO, "OPS_BENCH.md"), "w") as f:
         f.write("\n".join(out) + "\n")
     print(f"wrote OPS_BENCH.md ({len(rows)} ops, {total:.1f} s total)")
 

@@ -8,9 +8,11 @@ Spark.  Run after changing any of the listed operators:
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SHOWCASE = [
     ("agg_hash_group", "partial+final hash agg, pushdown, integer cents"),
@@ -155,7 +157,7 @@ def main() -> None:
         )
         out += [f"## {name}", "", f"*{why}*", "", "```", plan.rstrip(), "```", ""]
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md with {len(SHOWCASE)} plans")
 

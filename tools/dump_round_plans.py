@@ -1,11 +1,11 @@
-"""Capture .explain('formatted') output for the round-14 optimization
-round into plans/r15/<name>_<tag>.txt (tag = before|after).
+"""Capture .explain('formatted') output for one optimisation round into
+plans/<round>/<name>_<tag>.txt (tag = before|after).
 
-    python tools/dump_plans_r15.py before [names...]
-    python tools/dump_plans_r15.py after  [names...]
+    python tools/dump_round_plans.py r15 before [names...]
+    python tools/dump_round_plans.py r15 after  [names...]
 
 Default names = the five headline bench queries (bench.py HEADLINE
-values). The judge checks plan claims in OPTIMIZATION_r15.md against
+values). Plan claims in OPTIMIZATION_<round>.md are checked against
 these files.
 """
 
@@ -14,25 +14,30 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    rnd = sys.argv[1]
+    tag = sys.argv[2] if len(sys.argv) > 2 else "before"
     # default = the five headline bench ops, imported from bench.py so
     # this tool cannot drift from what the bench actually times
     from bench import HEADLINE
 
-    names = sys.argv[2:] or list(HEADLINE.values())
+    names = sys.argv[3:] or list(HEADLINE.values())
 
     from vectordb_agentic_rag_spark import QUERIES, load_all_operators
     from vectordb_agentic_rag_spark.session import get_spark
 
     load_all_operators()
-    spark = get_spark("dump-plans-r15")
+    spark = get_spark(f"dump-plans-{rnd}")
     spark.sparkContext.setLogLevel("ERROR")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    out_dir = os.path.join("/root/repo", "plans", "r15")
+    out_dir = os.path.join(REPO, "plans", rnd)
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         df = QUERIES[name](spark, sf_dir)

@@ -15,11 +15,13 @@ data-proportional cost left to optimize at this scale.
 from __future__ import annotations
 
 import json
+import os
 import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def _median_ms(fn, warm: int = 5, runs: int = 11) -> float:

@@ -7,9 +7,11 @@ GENERATED OPERATOR INVENTORY markers in place."""
 from __future__ import annotations
 
 import collections
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 BEGIN = "<!-- BEGIN GENERATED OPERATOR INVENTORY (tools/gen_survey_inventory.py) -->"
 END = "<!-- END GENERATED OPERATOR INVENTORY -->"
@@ -47,7 +49,7 @@ def render() -> str:
 
 
 def main() -> None:
-    path = "/root/repo/SURVEY.md"
+    path = os.path.join(REPO, "SURVEY.md")
     text = open(path).read()
     block = render()
     if BEGIN in text:

@@ -23,9 +23,10 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-SYNTH = "/root/repo/_scratch/sf1x"
+SYNTH = os.path.join(REPO, "_scratch", "sf1x")
 SRC = "/root/testdata/sf0.1"
 COPIES = 10
 
@@ -645,7 +646,7 @@ def main() -> None:
         ),
         "",
     ]
-    with open("/root/repo/SCALE.md", "w") as f:
+    with open(os.path.join(REPO, "SCALE.md"), "w") as f:
         f.write("\n".join(lines))
     print(f"wrote SCALE.md ({len(OPS)} ops x {len(labels)} scales)")
 

@@ -17,11 +17,13 @@ Writes WINDOW_AUDIT.json at the repo root.
 from __future__ import annotations
 
 import json
+import os
 import re
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from vectordb_agentic_rag_spark.registry import (  # noqa: E402
     QUERIES,
@@ -68,7 +70,7 @@ def main() -> None:
         print(f"[{i + 1}/{len(names)}] {name}: "
               f"{len(results.get(name, {}).get('unpartitioned', []))} hits",
               flush=True)
-    out_path = "/root/repo/WINDOW_AUDIT.json"
+    out_path = os.path.join(REPO, "WINDOW_AUDIT.json")
     if len(sys.argv) > 1:  # subset run: MERGE into the full audit,
         # never clobber it (cost one restore in round 11)
         try:

@@ -72,19 +72,6 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     )
 
 
-def cosine_to_const(a: Column, b: Column, b_norm: float) -> Column:
-    """Cosine against a *literal* query vector whose norm is precomputed.
-
-    Catalyst cannot constant-fold an ``aggregate`` over a literal array
-    (higher-order functions are non-foldable), so ``cosine(col, lit_vec)``
-    re-evaluates the query-side norm for every corpus row — measurable
-    even at bench scale and pure waste at 100 TB. The caller computes
-    ``b_norm`` once on the driver with the same sequential left-fold the
-    HOF would use, keeping the result bit-identical to ``cosine``.
-    """
-    return dot(a, b) / (norm(a) * F.lit(float(b_norm)))
-
-
 # Spark's higher-order functions (aggregate / zip_with) are
 # CodegenFallback: they evaluate INTERPRETED, one lambda frame per
 # element, even inside a WholeStageCodegen span. For a KNOWN embedding

@@ -824,59 +824,6 @@ def _lzw_dec_base(min_size: int) -> list:
     return base
 
 
-def _lzw_encode_gif_bytewise(data: bytes, min_size: int = 8) -> bytes:
-    """Reference GIF-variant LZW encode (LSB-first variable-width
-    codes, CLEAR/EOI, code width grows at 2^cs + 1 table entries,
-    dictionary reset at 4096). The decoder below grows at 2^cs because
-    it runs one table entry behind — the classic encoder/decoder
-    offset. Kept as the plain bytes-keyed formulation the trie encoder
-    is pinned byte-identical against
-    (test_lzw_trie_encoder_matches_bytewise_reference)."""
-    clear = 1 << min_size
-    eoi = clear + 1
-    out = bytearray()
-    acc = 0
-    nbits = 0
-
-    def put(code: int, size: int) -> None:
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += size
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    table = dict(_lzw_enc_base(min_size))
-    next_code = eoi + 1
-    code_size = min_size + 1
-    put(clear, code_size)
-    w = b""
-    for ch in data:
-        wc = w + bytes([ch])
-        if wc in table:
-            w = wc
-            continue
-        put(table[w], code_size)
-        if next_code < 4096:
-            table[wc] = next_code
-            next_code += 1
-            if next_code == (1 << code_size) + 1 and code_size < 12:
-                code_size += 1
-        else:
-            put(clear, code_size)
-            table = dict(_lzw_enc_base(min_size))
-            next_code = eoi + 1
-            code_size = min_size + 1
-        w = bytes([ch])
-    if w:
-        put(table[w], code_size)
-    put(eoi, code_size)
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
 def _lzw_encode_gif(data: bytes, min_size: int = 8) -> bytes:
     """Trie-form GIF LZW encode, byte-identical to the bytewise
     reference above: the dictionary keys on (prefix_code << 8) | byte
@@ -2651,33 +2598,6 @@ def rice_decode(data: bytes, k: int, n: int) -> list:
         else:
             rem = 0
         out.append((q << k) | rem)
-    return out
-
-
-def _rice_decode_bitwise(data: bytes, k: int, n: int) -> list:
-    """Reference per-bit decoder (the pre-optimization shape) — kept
-    as the equivalence witness for rice_decode's window scan; pinned
-    against it by pytest on random streams and every truncation."""
-    out = []
-    pos = 0
-    total_bits = 8 * len(data)
-
-    def read_bit() -> int:
-        nonlocal pos
-        if pos >= total_bits:
-            raise ValueError("truncated Rice bitstream")
-        b = (data[pos >> 3] >> (7 - (pos & 7))) & 1
-        pos += 1
-        return b
-
-    for _ in range(n):
-        q = 0
-        while read_bit():  # read_bit raises at exhaustion, bounding q
-            q += 1
-        r = 0
-        for _ in range(k):
-            r = (r << 1) | read_bit()
-        out.append((q << k) | r)
     return out
 
 

@@ -1909,3 +1909,1113 @@ def text_dedup_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("pct_cross_source"),
     )
+
+
+# ---------------------------------------------------------------------------
+# vec_kmeans_lloyd
+# ---------------------------------------------------------------------------
+
+_KM_K = 4  # clusters (seeded from vec_id 0..3 — deterministic)
+_KM_D = 8  # dim prefix used (vec_matryoshka_topk's prefix trick)
+_KM_ITERS = 3  # fixed Lloyd iterations, unrolled on both engines
+
+
+def _km_dist(j: int) -> str:
+    """Squared L2 distance of point dims e1..eD to centroid j's pivoted
+    dims cj_1..cj_D — dialect-neutral arithmetic, identical text on
+    both engines so the doubles agree bit-wise."""
+    return " + ".join(
+        f"(e{i} - c{j}_{i}) * (e{i} - c{j}_{i})" for i in range(1, _KM_D + 1)
+    )
+
+
+_KM_ARGMIN = (
+    "CASE WHEN d0 <= d1 AND d0 <= d2 AND d0 <= d3 THEN 0 "
+    "WHEN d1 <= d2 AND d1 <= d3 THEN 1 "
+    "WHEN d2 <= d3 THEN 2 ELSE 3 END"
+)
+
+
+def _km_newdim(i: int) -> str:
+    """Per-cluster mean of dim i: DECIMAL-accumulated (order-independent
+    across engines), divided once, re-quantized to the round(9) grid so
+    the next iteration's comparisons see identical doubles."""
+    return (
+        f"round(CAST(sum(CAST(e{i} AS DECIMAL(18,9))) AS DOUBLE)"
+        f" / count(*), 9)"
+    )
+
+
+def _km_asg_ctes() -> list[str]:
+    """The shared CTE chain through asg{_KM_ITERS} (points, unrolled
+    Lloyd iterations, final assignments) — vec_kmeans_lloyd and
+    dedup_semantic_cluster_purge both build on it, so the two oracles
+    pin the SAME cluster cells."""
+    D, K, T = _KM_D, _KM_K, _KM_ITERS
+    dims = range(1, D + 1)
+    e_cols = ", ".join(f"e{i}" for i in dims)
+    parts = [
+        "WITH pts AS (SELECT vec_id, "
+        + ", ".join(
+            f"CAST(list_extract(embedding, {i}) AS DOUBLE) AS e{i}" for i in dims
+        )
+        + " FROM embeddings)",
+        "cent0 AS (SELECT CAST(vec_id AS INTEGER) AS cl, "
+        + ", ".join(f"round(e{i}, 9) AS c{i}" for i in dims)
+        + f" FROM pts WHERE vec_id < {K})",
+    ]
+    for t in range(T + 1):
+        parts.append(
+            f"cw{t} AS (SELECT "
+            + ", ".join(
+                f"max(CASE WHEN cl = {j} THEN c{i} END) AS c{j}_{i}"
+                for j in range(K)
+                for i in dims
+            )
+            + f" FROM cent{t})"
+        )
+        parts.append(
+            f"dist{t} AS (SELECT p.vec_id, {e_cols}, "
+            + ", ".join(f"{_km_dist(j)} AS d{j}" for j in range(K))
+            + f" FROM pts p CROSS JOIN cw{t})"
+        )
+        parts.append(
+            f"asg{t} AS (SELECT *, {_KM_ARGMIN} AS cl FROM dist{t})"
+        )
+        if t < T:
+            parts.append(
+                f"cent{t + 1} AS (SELECT cl, "
+                + ", ".join(f"{_km_newdim(i)} AS c{i}" for i in dims)
+                + f" FROM asg{t} GROUP BY cl)"
+            )
+    return parts
+
+
+@session_artifact
+def _km_assignments(spark: SparkSession, sf_dir: str):
+    """Spark twin of _km_asg_ctes: the final Lloyd assignment frame
+    (vec_id, e1..eD, d0..d{K-1}, cl) plus the final centroid frame —
+    the exact plan vec_kmeans_lloyd aggregates over.
+
+    Session-cached as localCheckpointed frames (round-14, the
+    _ivf16_assignments rule): two registered ops (vec_kmeans_lloyd,
+    dedup_semantic_cluster_purge) were each re-running the 3-iteration
+    unrolled Lloyd chain per DataFrame build. Both frames are
+    corpus-bounded: asg = one row per embedding, cent = k rows."""
+    emb = table(spark, sf_dir, "embeddings")
+    dims = range(1, _KM_D + 1)
+    pts = emb.select(
+        "vec_id",
+        *[
+            F.expr(f"CAST(element_at(embedding, {i}) AS DOUBLE)").alias(f"e{i}")
+            for i in dims
+        ],
+    )
+    cent = pts.where(F.col("vec_id") < _KM_K).select(
+        F.col("vec_id").cast("int").alias("cl"),
+        *[F.round(F.col(f"e{i}"), 9).alias(f"c{i}") for i in dims],
+    )
+    asg = None
+    for t in range(_KM_ITERS + 1):
+        cw = cent.groupBy().agg(
+            *[
+                F.max(F.when(F.col("cl") == j, F.col(f"c{i}"))).alias(
+                    f"c{j}_{i}"
+                )
+                for j in range(_KM_K)
+                for i in dims
+            ]
+        )
+        dist = pts.crossJoin(F.broadcast(cw)).select(
+            "vec_id",
+            *[F.col(f"e{i}") for i in dims],
+            *[F.expr(_km_dist(j)).alias(f"d{j}") for j in range(_KM_K)],
+        )
+        asg = dist.select("*", F.expr(_KM_ARGMIN).alias("cl"))
+        if t < _KM_ITERS:
+            cent = asg.groupBy("cl").agg(
+                *[F.expr(_km_newdim(i)).alias(f"c{i}") for i in dims]
+            )
+    return asg.localCheckpoint(), cent.localCheckpoint()
+
+
+# ---------------------------------------------------------------------------
+# scalar_url_suite / dedup_url_canonical
+# ---------------------------------------------------------------------------
+
+# Deterministic synthetic URL per document (the fixture has no URL
+# column; web-corpus curation is URL-heavy, so the suite synthesizes
+# the same URL on both engines from (source, lang, doc_id) — including
+# tracking params on every third doc and a shared path bucket so
+# canonicalization produces real duplicates).
+_URL_DUCK = (
+    "'https://' || source || '.example.com/' || lang || '/doc-' "
+    "|| CAST(doc_id % 50 AS VARCHAR) "
+    "|| CASE WHEN doc_id % 3 = 0 THEN '?utm_source=feed&ref=' || source "
+    "WHEN doc_id % 3 = 1 THEN '?q=' || lang ELSE '' END"
+)
+_URL_SPARK = (
+    "concat('https://', source, '.example.com/', lang, '/doc-', "
+    "CAST(doc_id % 50 AS STRING), "
+    "CASE WHEN doc_id % 3 = 0 THEN concat('?utm_source=feed&ref=', source) "
+    "WHEN doc_id % 3 = 1 THEN concat('?q=', lang) ELSE '' END)"
+)
+
+_RE_HOST = "^https?://([^/?]+)"
+_RE_PATH = "^https?://[^/?]+([^?]*)"
+_RE_Q = "[?&]q=([^&]*)"
+
+
+@query(
+    "dedup_url_canonical",
+    oracle=f"""
+    WITH u AS (SELECT doc_id, {_URL_DUCK} AS url FROM documents),
+    c AS (
+      SELECT doc_id,
+             lower(regexp_extract(url, '{_RE_HOST}', 1))
+               || regexp_extract(url, '{_RE_PATH}', 1)
+               || CASE WHEN regexp_extract(url, '{_RE_Q}', 1) <> ''
+                       THEN '?q=' || regexp_extract(url, '{_RE_Q}', 1)
+                       ELSE '' END AS canonical
+      FROM u)
+    SELECT canonical,
+           count(*) AS n_docs,
+           min(doc_id) AS keeper_doc_id
+    FROM c GROUP BY canonical
+    HAVING count(*) >= 2
+    ORDER BY n_docs DESC, canonical
+    LIMIT 50
+    """,
+)
+def dedup_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """URL-CANONICAL dedup — the cheapest web-corpus dedup pass, run
+    BEFORE any content hashing (same page fetched via different
+    tracking links / host casing): group by the canonical URL
+    (scalar_url_suite's normalization), keep the lowest doc_id, report
+    duplicate groups. One map pass + one hash aggregate on the
+    canonical key — at 100 TB this is the same shape as dedup_exact
+    with a cheaper key (no content digest needed). Top-50 groups plan
+    as TakeOrderedAndProject; keeper = min(doc_id) is the
+    deterministic keep-first rule shared with dedup_near_embedding."""
+    d = table(spark, sf_dir, "documents")
+    u = d.select("doc_id", F.expr(_URL_SPARK).alias("url"))
+    host = F.regexp_extract("url", _RE_HOST, 1)
+    path = F.regexp_extract("url", _RE_PATH, 1)
+    q = F.regexp_extract("url", _RE_Q, 1)
+    canonical = F.concat(
+        F.lower(host),
+        path,
+        F.when(q != "", F.concat(F.lit("?q="), q)).otherwise(""),
+    )
+    return (
+        u.select("doc_id", canonical.alias("canonical"))
+        .groupBy("canonical")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.min("doc_id").alias("keeper_doc_id"),
+        )
+        .where(F.col("n_docs") >= 2)
+        .orderBy(F.col("n_docs").desc(), "canonical")
+        .limit(50)
+    )
+
+
+# ---------------------------------------------------------------------------
+# dedup_span_ngram
+# ---------------------------------------------------------------------------
+
+_SPAN_K = 8  # tokens per span
+_SPAN_STRIDE = 4  # span start stride
+
+
+@query(
+    "dedup_span_ngram",
+    oracle=f"""
+    WITH tc AS (
+      SELECT doc_id, list_transform(string_split(text, ' '),
+               tok -> list_reduce(list_prepend(CAST(0 AS BIGINT),
+                        list_transform(string_split(tok, ''),
+                                       c -> CAST(ascii(c) AS BIGINT))),
+                      (h, c) -> (h * 31 + c) % {P_CODE})) AS tc
+      FROM documents),
+    sp AS (
+      SELECT doc_id,
+             unnest(list_transform(
+               generate_series(1, len(tc) - {_SPAN_K} + 1, {_SPAN_STRIDE}),
+               i -> list_reduce(list_prepend(CAST(0 AS BIGINT),
+                      list_slice(tc, i, i + {_SPAN_K} - 1)),
+                    (h, c) -> (h * 131 + c) % {P_HASH}))) AS h
+      FROM tc WHERE len(tc) >= {_SPAN_K}),
+    hc AS (SELECT h, count(*) AS c FROM sp GROUP BY h)
+    SELECT sp.doc_id,
+           CAST(count(*) AS BIGINT) AS n_spans,
+           CAST(sum(CASE WHEN hc.c >= 2 THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_dup_spans,
+           round(sum(CASE WHEN hc.c >= 2 THEN 1 ELSE 0 END)
+                 / (count(*) * 1.0), 6) AS dup_ratio
+    FROM sp JOIN hc USING (h)
+    GROUP BY sp.doc_id
+    """,
+)
+def dedup_span_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DUPLICATED-SPAN DETECTION (Lee et al. 2021, "Deduplicating
+    Training Data Makes Language Models Better"): flag every
+    {_SPAN_K}-token span whose fingerprint occurs more than once in
+    the corpus (across documents OR repeated inside one), and report
+    the per-document duplicated-span ratio — the signal ExactSubstr
+    dedup cuts on. The paper builds a suffix array; the distributed
+    equivalent fingerprints strided spans (stride {_SPAN_STRIDE}
+    keeps volume at n_tokens/{_SPAN_STRIDE} rows per doc) and
+    hash-aggregates, which is the join-friendly shape at 100 TB —
+    a suffix array over 100 TB does not shard, span hashes do.
+
+    Shape at scale: one map pass computes per-token codes and rolls
+    span fingerprints with a COMBINED-code fold ((h*131+code)%P per
+    token, the repo's round-5 HOF-cost rule: combine per-token codes,
+    never re-fold characters per span); explode emits len/{_SPAN_STRIDE}
+    rows per doc; the span-hash aggregate map-side-combines before one
+    shuffle on hash; the count joins back to the span stream on the
+    same hash key (co-partitioned, AQE-planned) and re-aggregates by
+    doc_id. Everything is integers until the final ratio.
+
+    Parity: fingerprint arithmetic is the exact int64 modular fold the
+    shingle ops pin (dedup.py:_ngram_code_sets twin); counts exact;
+    the single double is round(6) of an integer ratio."""
+    d = table(spark, sf_dir, "documents")
+    tc = (
+        "transform(split(text, ' '), "
+        "tok -> aggregate(split(tok, ''), CAST(0 AS BIGINT), "
+        f"(h, c) -> (h * 31 + ascii(c)) % {P_CODE}))"
+    )
+    spans = (
+        d.where(F.size(F.split("text", " ")) >= _SPAN_K)
+        .select("doc_id", F.expr(tc).alias("tc"))
+        .select(
+            "doc_id",
+            F.explode(
+                F.expr(
+                    f"transform(sequence(1, size(tc) - {_SPAN_K} + 1, "
+                    f"{_SPAN_STRIDE}), "
+                    f"i -> aggregate(slice(tc, i, {_SPAN_K}), "
+                    f"CAST(0 AS BIGINT), (h, c) -> (h * 131 + c) % {P_HASH}))"
+                )
+            ).alias("h"),
+        )
+    )
+    hc = spans.groupBy("h").agg(F.count("*").alias("c"))
+    return (
+        spans.join(hc, "h")
+        .groupBy("doc_id")
+        .agg(
+            F.count("*").cast("bigint").alias("n_spans"),
+            F.sum(F.when(F.col("c") >= 2, 1).otherwise(0))
+            .cast("bigint")
+            .alias("n_dup_spans"),
+            F.round(
+                F.sum(F.when(F.col("c") >= 2, 1).otherwise(0))
+                / (F.count("*") * F.lit(1.0)),
+                6,
+            ).alias("dup_ratio"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# dedup_semantic_cluster_purge
+# ---------------------------------------------------------------------------
+
+_PURGE_TAU = 0.8  # cosine threshold on the 8-dim matryoshka prefix
+
+
+_PURGE_CELL_TARGET = 512  # target cell population for the coarse quantizer
+
+
+def _purge_k(sf_dir: str) -> int:
+    """k for the purge's coarse quantizer, deterministic from parquet
+    metadata (driver-side ms): k = max(4, n_vectors // 512), so cell
+    population — and with it the in-cell pairwise work — stays bounded
+    as the corpus grows. At the driver-verified fixtures (<= 2000
+    vectors) this is exactly 4, matching the SQL-unrolled Lloyd oracle;
+    the scaled path kicks in on larger corpora (SCALE.md's sf1x blow-up
+    measured ratio 1.42 super-linear at fixed k=4 — this is the fix)."""
+    import pyarrow.dataset as ds
+
+    # dataset() handles both the single-file driver fixtures and
+    # Spark-written directory tables (the sf1x blow-up); count_rows
+    # reads footer metadata only
+    n = ds.dataset(f"{sf_dir}/embeddings.parquet", format="parquet").count_rows()
+    return max(4, n // _PURGE_CELL_TARGET)
+
+
+def _purge_assignments(spark: SparkSession, sf_dir: str):
+    """(vec_id, e1..e8, cl) cell assignments for the semantic purge.
+    k == 4: the shared SQL-expressible Lloyd chain (oracle parity).
+    k > 4: numpy Lloyd (seed 42, 8 iters) on the bounded 4096-vector
+    deterministic sample's 8-dim prefix (the vec_ivf_ann training
+    recipe), centroids inlined as plan literals, assignment = aliased
+    per-centroid squared distances + an array_min(struct(d, j)) argmin
+    — all JVM-side, one scan, no Python in the corpus path."""
+    if _purge_k(sf_dir) == 4:
+        asg, _ = _km_assignments(spark, sf_dir)
+        return asg
+    import numpy as np
+
+    from .ml import _corpus_sample, _lloyd_multispace
+
+    k = _purge_k(sf_dir)
+    emb = table(spark, sf_dir, "embeddings")
+    dims = range(1, _KM_D + 1)
+    sample = _corpus_sample(spark, sf_dir)[:, : _KM_D]
+    cents = _lloyd_multispace(sample[:, None, :], K=k, iters=8, seed=42)[0]
+    pts = emb.select(
+        "vec_id",
+        *[
+            F.expr(f"CAST(element_at(embedding, {i}) AS DOUBLE)").alias(f"e{i}")
+            for i in dims
+        ],
+    )
+    d_cols = [
+        F.expr(
+            " + ".join(
+                f"(e{i} - {float(cents[j][i - 1])!r}) * "
+                f"(e{i} - {float(cents[j][i - 1])!r})"
+                for i in dims
+            )
+        ).alias(f"d{j}")
+        for j in range(len(cents))
+    ]
+    argmin = (
+        "array_min(array("
+        + ", ".join(
+            f"named_struct('d', d{j}, 'j', {j})" for j in range(len(cents))
+        )
+        + ")).j"
+    )
+    return pts.select("*", *d_cols).select(
+        "vec_id", *[f"e{i}" for i in dims], F.expr(argmin).alias("cl")
+    )
+
+
+def _purge_oracle() -> str:
+    dims = range(1, _KM_D + 1)
+    n8 = " + ".join(f"e{i} * e{i}" for i in dims)
+    dot = " + ".join(f"a.e{i} * b.e{i}" for i in dims)
+    parts = _km_asg_ctes()
+    parts.append(
+        f"pts8 AS (SELECT vec_id, cl, "
+        + ", ".join(f"e{i}" for i in dims)
+        + f", {n8} AS n8 FROM asg3)"
+    )
+    parts.append(
+        f"""pr AS (
+      SELECT a.cl AS cluster_id, b.vec_id AS vec_id, a.vec_id AS a_id,
+             round(({dot}) / (sqrt(a.n8) * sqrt(b.n8)), 6) AS cos
+      FROM pts8 a JOIN pts8 b
+        ON a.cl = b.cl AND a.vec_id < b.vec_id)"""
+    )
+    return (
+        ",\n    ".join(parts)
+        + f"""
+    SELECT cluster_id, vec_id, CAST(min(a_id) AS BIGINT) AS dup_of,
+           arg_min(cos, a_id) AS cos_dup
+    FROM pr WHERE cos >= {_PURGE_TAU} GROUP BY cluster_id, vec_id
+    """
+    )
+
+
+@query("dedup_semantic_cluster_purge", oracle=_purge_oracle())
+def dedup_semantic_cluster_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SEMANTIC near-duplicate purge, cluster-scoped: assign every
+    embedding to its vec_kmeans_lloyd cell (k=4, 3 Lloyd iterations,
+    8-dim matryoshka prefix — the SAME cells that op reports, CTE-
+    shared oracle), then within each cell mark every vector that has a
+    lower-id neighbor at cosine >= 0.8 as a duplicate of its LOWEST
+    such neighbor (keep-first, the dedup_near_minhash rule). This is
+    the semantic-dedup stage of a pretraining pipeline (SemDeDup,
+    Abbas et al. 2023): k-means cells scope the pairwise check, so the
+    corpus-wide O(n^2) becomes sum over cells of |cell|^2 — at 100 TB,
+    k scales with corpus size to hold |cell| at the ~10k vectors where
+    exact in-cell cosine is cheap, and cross-cell near-dups are
+    accepted misses BY CONSTRUCTION (the SemDeDup tradeoff; the
+    recall-bounded alternative is dedup_near_embedding's LSH). k DOES
+    scale here: _purge_k = max(4, n//512) from parquet metadata — at
+    the driver-verified fixtures that is exactly the oracle's k=4
+    Lloyd chain; beyond it the coarse quantizer switches to the
+    vec_ivf_ann training recipe (bounded numpy sample, literal
+    centroids, JVM argmin) so in-cell pair work stays ~n*512 instead
+    of n^2/k (SCALE.md measured 1.42x super-linear at fixed k — the
+    scaled path is the fix).
+
+    Scale shape: the Lloyd assignment is linear scan + broadcast
+    centroids (vec_kmeans_lloyd's plan); the in-cell self-join is an
+    equi-join on cl; per-row norms are computed BEFORE the join so the
+    post-join expression stays inside one codegen method (the Janino
+    lesson of vec_radius_search); the keep-first reduction is one
+    map-side-combinable min/min_by aggregate, never a window.
+
+    Parity: e-dims and cells come from the shared kmeans CTE chain;
+    the cosine is the identical left-assoc dot / (sqrt*sqrt) text,
+    round(6)-quantized before the threshold compare on BOTH engines,
+    so the >= 0.8 gate sees identical doubles."""
+    dims = range(1, _KM_D + 1)
+    asg = _purge_assignments(spark, sf_dir)
+    n8 = " + ".join(f"e{i} * e{i}" for i in dims)
+    pts = asg.select(
+        "vec_id", "cl", *[f"e{i}" for i in dims], F.expr(n8).alias("n8")
+    )
+    a = pts.select(
+        F.col("cl"),
+        F.col("vec_id").alias("a_id"),
+        *[F.col(f"e{i}").alias(f"a{i}") for i in dims],
+        F.col("n8").alias("na"),
+    )
+    b = pts.select(
+        F.col("cl"),
+        F.col("vec_id").alias("b_id"),
+        *[F.col(f"e{i}").alias(f"b{i}") for i in dims],
+        F.col("n8").alias("nb"),
+    )
+    dot = " + ".join(f"a{i} * b{i}" for i in dims)
+    cos = F.expr(f"round(({dot}) / (sqrt(na) * sqrt(nb)), 6)")
+    pr = (
+        a.join(b, "cl")
+        .where(F.col("a_id") < F.col("b_id"))
+        .select(
+            F.col("cl").alias("cluster_id"),
+            F.col("b_id").alias("vec_id"),
+            "a_id",
+            cos.alias("cos"),
+        )
+        .where(F.col("cos") >= _PURGE_TAU)
+    )
+    return pr.groupBy("cluster_id", "vec_id").agg(
+        F.min("a_id").cast("bigint").alias("dup_of"),
+        F.min_by("cos", "a_id").alias("cos_dup"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# dedup_weighted_jaccard_rescore
+# ---------------------------------------------------------------------------
+
+
+def _weighted_jac_oracle() -> str:
+
+    return f"""
+    WITH sh AS ({_DUCK_SHINGLES}),
+    pairs AS ({_DUCK_NGRAM_PAIRS}),
+    nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM sh),
+    df AS (
+      SELECT t.code, CAST(count(*) AS BIGINT) AS d
+      FROM sh, unnest(sh.g) AS t(code) GROUP BY t.code),
+    w AS (
+      SELECT df.code,
+             CAST(round(ln(CAST(nn.n AS DOUBLE) / df.d), 9)
+                  AS DECIMAL(28,9)) AS wt
+      FROM df CROSS JOIN nn),
+    pu AS (
+      SELECT p.doc_a, p.doc_b, p.jac, t.code,
+             CASE WHEN list_contains(a.g, t.code)
+                   AND list_contains(b.g, t.code)
+                  THEN 1 ELSE 0 END AS both
+      FROM pairs p
+      JOIN sh a ON p.doc_a = a.doc_id
+      JOIN sh b ON p.doc_b = b.doc_id,
+      unnest(list_distinct(a.g || b.g)) AS t(code)),
+    sc AS (
+      SELECT pu.doc_a, pu.doc_b, max(pu.jac) AS jac,
+             sum(CASE WHEN pu.both = 1 THEN w.wt
+                      ELSE CAST(0 AS DECIMAL(28,9)) END) AS wi,
+             sum(w.wt) AS wu
+      FROM pu JOIN w ON pu.code = w.code
+      GROUP BY pu.doc_a, pu.doc_b)
+    SELECT doc_a, doc_b, jac AS jaccard_unweighted,
+           round(CAST(wi AS DOUBLE) / CAST(wu AS DOUBLE), 6)
+             AS jaccard_weighted
+    FROM sc
+    ORDER BY CAST(wi AS DOUBLE) / CAST(wu AS DOUBLE) DESC, doc_a, doc_b
+    LIMIT 50
+    """
+
+
+@query("dedup_weighted_jaccard_rescore", oracle=_weighted_jac_oracle())
+def dedup_weighted_jaccard_rescore(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """IDF-WEIGHTED JACCARD re-scoring of near-dup candidates: every
+    dedup_ngram_jaccard pair re-scored as sum(idf of shared shingles)
+    / sum(idf of all shingles), top-50 — unweighted Jaccard treats a
+    stopword shingle ("a the a") and a rare content shingle as equal
+    evidence; idf weighting is how production near-dup scoring
+    separates boilerplate overlap from genuinely copied content
+    (the same rarity principle the candidate generator already
+    exploits via rarity-ordered prefixes). Reported next to the
+    unweighted score so the re-ranking is visible.
+
+    Scale shape: candidates come from the prefix-filtered pipeline
+    (never all-pairs); shingle document frequencies are one
+    vocabulary-keyed aggregate; each pair explodes its bounded
+    (<= 2 x doc shingles) union and joins weights BY CODE KEY — a
+    keyed shuffle, not a broadcast, because a real corpus's shingle
+    vocabulary outgrows any executor. Top-50 via orderBy+limit on the
+    exact ratio.
+
+    Parity: idf quantizes round(9) into DECIMAL before the
+    order-independent pair sums; both engines then divide the same
+    exact decimals (cast to DOUBLE with identical text) and order by
+    that ratio with id tiebreaks."""
+
+    pairs = dedup_ngram_jaccard(spark, sf_dir)
+    cs = _ngram_sets(spark, sf_dir).select("doc_id", "cs")
+    nn = cs.count()  # bounded scalar: one count of the doc dimension
+    df = (
+        cs.select(F.explode("cs").alias("code"))
+        .groupBy("code")
+        .agg(F.count("*").alias("d"))
+    )
+    w = df.select(
+        "code",
+        F.expr(
+            f"CAST(round(ln(CAST({nn} AS DOUBLE) / d), 9) AS DECIMAL(28,9))"
+        ).alias("wt"),
+    )
+    pu = (
+        pairs.join(
+            cs.select(F.col("doc_id").alias("doc_a"), F.col("cs").alias("ca")),
+            "doc_a",
+        )
+        .join(
+            cs.select(F.col("doc_id").alias("doc_b"), F.col("cs").alias("cb")),
+            "doc_b",
+        )
+        .select(
+            "doc_a",
+            "doc_b",
+            "jac",
+            F.explode(F.array_union("ca", "cb")).alias("code"),
+            F.expr(
+                "CAST(array_contains(ca, code) AND array_contains(cb, code)"
+                " AS INT)"
+            ).alias("both"),
+        )
+    )
+    sc = (
+        pu.join(w, "code")
+        .groupBy("doc_a", "doc_b")
+        .agg(
+            F.max("jac").alias("jac"),
+            F.sum(
+                F.when(F.col("both") == 1, F.col("wt")).otherwise(
+                    F.expr("CAST(0 AS DECIMAL(28,9))")
+                )
+            ).alias("wi"),
+            F.sum("wt").alias("wu"),
+        )
+    )
+    ratio = F.expr("CAST(wi AS DOUBLE) / CAST(wu AS DOUBLE)")
+    return (
+        sc.orderBy(ratio.desc(), "doc_a", "doc_b")
+        .limit(50)
+        .select(
+            "doc_a",
+            "doc_b",
+            F.col("jac").alias("jaccard_unweighted"),
+            F.round(ratio, 6).alias("jaccard_weighted"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# dedup_line_level
+# ---------------------------------------------------------------------------
+
+_LINE_TOKENS = 5  # segmentation convention: fixed 5-token "lines"
+
+
+@query(
+    "dedup_line_level",
+    oracle=f"""
+    WITH toks AS (
+      SELECT doc_id, source, string_split(text, ' ') AS t
+      FROM documents),
+    lines AS (
+      SELECT doc_id, source,
+             unnest(list_transform(
+               generate_series(0,
+                 CAST((len(t) + {_LINE_TOKENS} - 1) // {_LINE_TOKENS}
+                      AS BIGINT) - 1),
+               i -> array_to_string(
+                      list_slice(t, i * {_LINE_TOKENS} + 1,
+                                 i * {_LINE_TOKENS} + {_LINE_TOKENS}),
+                      ' '))) AS line
+      FROM toks),
+    g AS (
+      SELECT line, count(DISTINCT doc_id) AS docs
+      FROM lines GROUP BY line),
+    fl AS (
+      SELECT l.doc_id, l.source,
+             CASE WHEN g.docs >= 2 THEN 1 ELSE 0 END AS dup
+      FROM lines l JOIN g ON l.line = g.line),
+    per_src AS (
+      SELECT source,
+             CAST(count(*) AS BIGINT) AS n_lines,
+             CAST(sum(dup) AS BIGINT) AS n_dup_lines,
+             CAST(count(DISTINCT CASE WHEN dup = 1 THEN doc_id END)
+                  AS BIGINT) AS n_docs_affected
+      FROM fl GROUP BY source)
+    SELECT source, n_lines, n_dup_lines, n_docs_affected,
+           round(CAST(n_dup_lines AS DOUBLE) / n_lines, 6) AS dup_rate
+    FROM per_src
+    UNION ALL
+    SELECT '_ALL_' AS source,
+           CAST(sum(n_lines) AS BIGINT),
+           CAST(sum(n_dup_lines) AS BIGINT),
+           CAST(sum(n_docs_affected) AS BIGINT),
+           round(CAST(sum(n_dup_lines) AS DOUBLE) / sum(n_lines), 6)
+    FROM per_src
+    ORDER BY source
+    """,
+)
+def dedup_line_level(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CROSS-DOCUMENT LINE-LEVEL DEDUP PROFILE (CCNet-style): segment
+    every document into lines, count each line's distinct-document
+    frequency corpus-wide, and report per source the share of line
+    INSTANCES whose text recurs in >= 2 documents — the boilerplate
+    mass a CCNet-style line dedup pass would delete.  Granularity
+    completes the dedup family: dedup_exact removes whole-doc copies,
+    dedup_substring_span_purge removes repeated 50-gram SPANS, this op
+    profiles repeated LINES (the unit real web pipelines — CCNet,
+    RefinedWeb — dedup first, since nav/footer boilerplate repeats at
+    line grain).  The fixture corpus is single-line synthetic text
+    (no newlines), so the documented segmentation convention is fixed
+    5-token lines — the same everywhere-deterministic split on both
+    engines; a real corpus swaps the segmenter for split(text, '\\n').
+
+    Parity: lines are exact strings built by identical slice
+    arithmetic (Spark slice/array_join, DuckDB list_slice/
+    array_to_string — both clamp the final short line); counts exact
+    BIGINT; dup_rate divides exact integers, round(6).
+
+    Shape at 100 TB: one explode to line grain, one line-keyed
+    aggregate (map-side combined; production hashes the line to a
+    64-bit key first — xxhash64(line) — to shrink the shuffle, same
+    plan shape), one join back on the line key, one |sources|-row
+    rollup.  No windows, no driver collection."""
+    d = table(spark, sf_dir, "documents").select(
+        "doc_id", "source", F.split("text", " ").alias("t")
+    )
+    lines = d.select(
+        "doc_id",
+        "source",
+        F.explode(
+            F.expr(
+                f"transform(sequence(0, CAST((size(t) + {_LINE_TOKENS} - 1)"
+                f" div {_LINE_TOKENS} AS INT) - 1),"
+                f" i -> array_join(slice(t, i * {_LINE_TOKENS} + 1,"
+                f" {_LINE_TOKENS}), ' '))"
+            )
+        ).alias("line"),
+    )
+    g = lines.groupBy("line").agg(
+        F.countDistinct("doc_id").alias("docs")
+    )
+    fl = lines.join(g, "line").select(
+        "doc_id",
+        "source",
+        F.when(F.col("docs") >= 2, F.lit(1)).otherwise(F.lit(0)).alias("dup"),
+    )
+    per_src = fl.groupBy("source").agg(
+        F.count("*").cast("bigint").alias("n_lines"),
+        F.sum("dup").cast("bigint").alias("n_dup_lines"),
+        F.expr(
+            "CAST(count(DISTINCT CASE WHEN dup = 1 THEN doc_id END)"
+            " AS BIGINT)"
+        ).alias("n_docs_affected"),
+    )
+    total = per_src.agg(
+        F.lit("_ALL_").alias("source"),
+        F.sum("n_lines").cast("bigint").alias("n_lines"),
+        F.sum("n_dup_lines").cast("bigint").alias("n_dup_lines"),
+        F.sum("n_docs_affected").cast("bigint").alias("n_docs_affected"),
+    ).select("source", "n_lines", "n_dup_lines", "n_docs_affected")
+    rate = F.expr(
+        "round(CAST(n_dup_lines AS DOUBLE) / n_lines, 6)"
+    ).alias("dup_rate")
+    return (
+        per_src.select(
+            "source", "n_lines", "n_dup_lines", "n_docs_affected", rate
+        )
+        .unionByName(
+            total.select(
+                "source", "n_lines", "n_dup_lines", "n_docs_affected", rate
+            )
+        )
+        .orderBy("source")
+    )
+
+
+# ---------------------------------------------------------------------------
+# dedup_substring_span_purge
+# ---------------------------------------------------------------------------
+
+_PURGE_K = 50  # tokens per window — the BigCode/Dolma substring-dedup length
+_P1, _M1 = 1_000_000_007, 131  # primary rolling hash (repo convention)
+_P2, _M2 = 998_244_353, 137  # independent second hash: the pair keys
+# collisions at ~1e-9 * 1e-9 scale, so a hash-equal window pair IS a
+# text-equal window pair for any feasible corpus shard
+_POW1_K = 629313585  # 131^50 mod P1 (precomputed exact constant)
+_POW2_K = 140343980  # 137^50 mod P2
+
+
+def _purge_spans(t: DataFrame) -> DataFrame:
+    """Merged duplicate-window PURGE RUNS for a (doc_id, tk) corpus
+    frame: every 50-token window whose 2-hash fingerprint occurs >= 2
+    times in THIS corpus marks its tokens; overlapping/adjacent marked
+    windows merge into maximal runs (doc_id, run_no, start_tok,
+    end_tok).  Factored so cascade consumers
+    (pipeline_dedup_cascade_audit) can run the stage over an upstream
+    SURVIVOR corpus — window multiplicities then count survivors only,
+    which is what staged-marginality semantics require."""
+    tc = t.select(
+        "doc_id",
+        "tk",
+        F.expr(
+            "transform(tk, tok -> aggregate(split(tok, ''), "
+            f"CAST(0 AS BIGINT), (h, c) -> (h * 31 + ascii(c)) % {P_CODE}))"
+        ).alias("tc"),
+    )
+
+    def pre(mult: int, prime: int) -> str:
+        # prefix-hash array: pre[1] = 0, pre[j+1] = fold of codes 1..j
+        return (
+            "aggregate(tc, array(CAST(0 AS BIGINT)), "
+            f"(acc, c) -> concat(acc, array((element_at(acc, -1) * {mult} "
+            f"+ c) % {prime})))"
+        )
+
+    def win(pre_col: str, powk: int, prime: int) -> str:
+        # h(i..i+K-1) = (pre[i+K] - pre[i] * M^K) mod P, kept non-negative
+        return (
+            f"((element_at({pre_col}, i + {_PURGE_K}) "
+            f"- element_at({pre_col}, i) * {powk}) % {prime} + {prime}) "
+            f"% {prime}"
+        )
+
+    wins = (
+        tc.where(F.size("tc") >= _PURGE_K)
+        .select(
+            "doc_id",
+            F.expr(pre(_M1, _P1)).alias("p1"),
+            F.expr(pre(_M2, _P2)).alias("p2"),
+            F.expr(f"sequence(1, size(tc) - {_PURGE_K} + 1)").alias("ii"),
+        )
+        .select("doc_id", "p1", "p2", F.explode("ii").alias("i"))
+        .select(
+            "doc_id",
+            "i",
+            F.expr(win("p1", _POW1_K, _P1)).alias("h1"),
+            F.expr(win("p2", _POW2_K, _P2)).alias("h2"),
+        )
+    )
+    hc = wins.groupBy("h1", "h2").agg(F.count("*").alias("c"))
+    w_doc = Window.partitionBy("doc_id").orderBy("i")
+    dup = (
+        wins.join(hc.where(F.col("c") >= 2), ["h1", "h2"], "left_semi")
+        .withColumn("lag_i", F.lag("i").over(w_doc))
+        .withColumn(
+            "new_run",
+            F.when(
+                F.col("lag_i").isNull()
+                | (F.col("i") - F.col("lag_i") > _PURGE_K),
+                1,
+            ).otherwise(0),
+        )
+        .withColumn(
+            "run_no",
+            F.sum("new_run").over(
+                w_doc.rowsBetween(Window.unboundedPreceding, 0)
+            ),
+        )
+    )
+    return dup.groupBy("doc_id", "run_no").agg(
+        F.min("i").cast("bigint").alias("start_tok"),
+        (F.max("i") + _PURGE_K - 1).cast("bigint").alias("end_tok"),
+    )
+
+
+def _duck_win_hash(mult: int, prime: int) -> str:
+    """DuckDB window fingerprint: direct left fold of the K token codes
+    starting at i (O(K) per window — fine for the oracle at sf0.01)."""
+    return (
+        f"list_reduce(list_prepend(CAST(0 AS BIGINT), "
+        f"list_slice(tc, i, i + {_PURGE_K} - 1)), "
+        f"(h, c) -> (h * {mult} + c) % {prime})"
+    )
+
+
+@query(
+    "dedup_substring_span_purge",
+    oracle=f"""
+    WITH t AS (
+      SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
+    tc AS (
+      SELECT doc_id, tk,
+             list_transform(tk, tok -> list_reduce(
+               list_prepend(CAST(0 AS BIGINT),
+                 list_transform(string_split(tok, ''),
+                                c -> CAST(ascii(c) AS BIGINT))),
+               (h, c) -> (h * 31 + c) % {P_CODE})) AS tc
+      FROM t),
+    wins AS (
+      SELECT doc_id, i,
+             {_duck_win_hash(_M1, _P1)} AS h1,
+             {_duck_win_hash(_M2, _P2)} AS h2
+      FROM (SELECT doc_id, tc,
+                   unnest(generate_series(1, len(tc) - {_PURGE_K} + 1)) AS i
+            FROM tc WHERE len(tc) >= {_PURGE_K}) z),
+    hc AS (SELECT h1, h2, count(*) AS c FROM wins GROUP BY h1, h2),
+    dup AS (
+      SELECT w.doc_id, w.i,
+             CASE WHEN lag(w.i) OVER (PARTITION BY w.doc_id ORDER BY w.i)
+                       IS NULL
+                   OR w.i - lag(w.i) OVER (PARTITION BY w.doc_id
+                                           ORDER BY w.i) > {_PURGE_K}
+                  THEN 1 ELSE 0 END AS new_run
+      FROM wins w JOIN hc USING (h1, h2) WHERE hc.c >= 2),
+    runs AS (
+      SELECT doc_id, i,
+             sum(new_run) OVER (PARTITION BY doc_id ORDER BY i
+                                ROWS UNBOUNDED PRECEDING) AS run_no
+      FROM dup),
+    spans AS (
+      SELECT doc_id, run_no,
+             CAST(min(i) AS BIGINT) AS start_tok,
+             CAST(max(i) + {_PURGE_K} - 1 AS BIGINT) AS end_tok
+      FROM runs GROUP BY doc_id, run_no),
+    out AS (
+      SELECT s.doc_id,
+             CAST(row_number() OVER (PARTITION BY s.doc_id
+                                     ORDER BY s.start_tok) AS BIGINT)
+               AS run_idx,
+             s.start_tok, s.end_tok,
+             CAST(s.end_tok - s.start_tok + 1 AS BIGINT) AS run_tokens,
+             CASE WHEN s.start_tok = 1 THEN CAST(1 AS BIGINT)
+                  ELSE CAST(length(array_to_string(
+                         list_slice(t.tk, 1, s.start_tok - 1), ' '))
+                       + 2 AS BIGINT) END AS start_char,
+             CAST(length(array_to_string(
+                    list_slice(t.tk, 1, s.end_tok), ' ')) AS BIGINT)
+               AS end_char,
+             CAST(len(t.tk) AS BIGINT) AS doc_tokens
+      FROM spans s JOIN t ON s.doc_id = t.doc_id)
+    SELECT doc_id, run_idx, start_tok, end_tok, run_tokens,
+           start_char, end_char, doc_tokens,
+           CAST(sum(run_tokens) OVER (PARTITION BY doc_id) AS BIGINT)
+             AS doc_purged_tokens
+    FROM out
+    """,
+)
+def dedup_substring_span_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXACT-SUBSTRING SPAN PURGE — the BigCode/Dolma substring-dedup
+    stage (Lee et al. 2021 ExactSubstr; the reference's verbatim
+    re-ingest, app.py:453-484, is exactly what creates these spans):
+    every 50-token window whose fingerprint occurs >= 2 times in the
+    corpus (across documents OR repeated within one) marks its tokens
+    for removal; overlapping/adjacent marked windows merge into
+    maximal PURGE RUNS, emitted one row per run with exact token AND
+    character offsets (1-based, inclusive) so a downstream writer can
+    cut the bytes without retokenizing — plus per-doc purged-token
+    totals.  dedup_span_ngram is the strided DETECTOR (dup-ratio
+    signal); this op emits the actionable spans.
+
+    Scale shape (the suffix array the paper builds does not shard;
+    rolling fingerprints do): one map pass computes per-token codes,
+    a PREFIX-HASH array per doc (aggregate building the running fold
+    — O(n) lambda frames), and every stride-1 window hash in O(1)
+    from the prefix array: h(i..i+K-1) = (pre[i+K] - pre[i]*M^K) mod P
+    — never the O(n*K) per-window refold (round-5 HOF-cost rule).
+    Two independent moduli (1e9+7/131, 998244353/137) make the join
+    key an effective 60-bit fingerprint, so hash-equal == text-equal
+    at any feasible scale.  One shuffle counts (h1, h2) multiplicity
+    (map-side combined), one per-doc window merges runs, and the
+    bounded run rows join back to documents for char offsets via
+    array_join prefix lengths (fixture texts are single-space joined —
+    pinned by the recompute pytest).
+
+    Parity: everything is exact BIGINT arithmetic — fingerprint folds,
+    run bounds, char offsets ((x % P + P) % P keeps the subtraction
+    non-negative on both engines; the DuckDB twin folds each window
+    directly, which is the same polynomial).  No floats anywhere."""
+    d = table(spark, sf_dir, "documents")
+    t = d.select("doc_id", F.split("text", " ").alias("tk"))
+    spans = _purge_spans(t)
+    w_idx = Window.partitionBy("doc_id").orderBy("start_tok")
+    out = (
+        spans.join(t, "doc_id")
+        .select(
+            "doc_id",
+            F.row_number().over(w_idx).cast("bigint").alias("run_idx"),
+            "start_tok",
+            "end_tok",
+            (F.col("end_tok") - F.col("start_tok") + 1)
+            .cast("bigint")
+            .alias("run_tokens"),
+            F.expr(
+                "CASE WHEN start_tok = 1 THEN CAST(1 AS BIGINT) "
+                "ELSE CAST(length(array_join(slice(tk, 1, "
+                "CAST(start_tok AS INT) - 1), ' ')) + 2 AS BIGINT) END"
+            ).alias("start_char"),
+            F.expr(
+                "CAST(length(array_join(slice(tk, 1, "
+                "CAST(end_tok AS INT)), ' ')) AS BIGINT)"
+            ).alias("end_char"),
+            F.size("tk").cast("bigint").alias("doc_tokens"),
+        )
+    )
+    w_tot = Window.partitionBy("doc_id")
+    return out.withColumn(
+        "doc_purged_tokens",
+        F.sum("run_tokens").over(w_tot).cast("bigint"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# dedup_minhash_estimate_error
+# ---------------------------------------------------------------------------
+
+
+def _mh_err_oracle() -> str:
+
+    matches = " + ".join(
+        f"(CASE WHEN sa.s{i} = sb.s{i} THEN 1 ELSE 0 END)"
+        for i in range(N_HASH)
+    )
+    return f"""
+    WITH toks AS (
+      SELECT doc_id, list_distinct(string_split(text, ' ')) AS t
+      FROM documents),
+    codes AS MATERIALIZED (
+      SELECT doc_id, list_distinct({_DUCK_CODES}) AS cs
+      FROM (SELECT doc_id, array_to_string(t, ' ') AS text FROM toks) z),
+    sigs AS MATERIALIZED (
+      SELECT doc_id, {_SIG_ORACLE} FROM codes),
+    bands AS (
+      {_DUCK_BANDS_RANKED}),
+    cand AS (
+      SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
+      FROM bands x JOIN bands y
+        ON x.band_no = y.band_no AND x.band_key = y.band_key
+       AND x.doc_id < y.doc_id
+      {_DUCK_CAND_WHERE}),
+    pairs AS MATERIALIZED (
+      SELECT c.doc_a, c.doc_b,
+             CAST(len(list_intersect(ta.cs, tb.cs)) AS DOUBLE)
+             / len(list_distinct(ta.cs || tb.cs)) AS jac
+      FROM cand c JOIN codes ta ON c.doc_a = ta.doc_id
+                  JOIN codes tb ON c.doc_b = tb.doc_id
+      WHERE CAST(len(list_intersect(ta.cs, tb.cs)) AS DOUBLE)
+            / len(list_distinct(ta.cs || tb.cs)) >= 0.5),
+    e AS MATERIALIZED (
+      SELECT p.jac,
+             CAST(({matches}) AS DOUBLE) / {N_HASH} AS est
+      FROM pairs p JOIN sigs sa ON p.doc_a = sa.doc_id
+                   JOIN sigs sb ON p.doc_b = sb.doc_id),
+    s AS (
+      SELECT CAST(count(*) AS BIGINT) AS n,
+             CAST(sum(CAST(round(abs(est - jac), 9) AS DECIMAL(28,9)))
+                  AS DECIMAL(38,9)) AS sae
+      FROM e)
+    SELECT CAST(floor((est - jac) * 20) AS BIGINT) AS err_bin,
+           CAST(count(*) AS BIGINT) AS n_pairs,
+           round(CAST(count(*) AS DOUBLE) / max(s.n), 6) AS share,
+           round(CAST(max(s.sae) AS DOUBLE) / max(s.n), 6) AS mae_overall
+    FROM e, s
+    GROUP BY 1
+    ORDER BY err_bin
+    """
+
+
+@query("dedup_minhash_estimate_error", oracle=_mh_err_oracle())
+def dedup_minhash_estimate_error(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """MINHASH ESTIMATOR ERROR PROFILE: for every verified near-dup
+    pair (exact Jaccard >= 0.5 over dedup_near_minhash's OWN banding
+    candidates), the signature estimate (matching components / 8)
+    minus the exact Jaccard, histogrammed in 0.05-wide bins, with the
+    overall MAE — the table that justifies the 8-hash/4-band budget
+    empirically (E[est] = jac, sd = sqrt(jac(1-jac)/8) ~ 0.17 at
+    jac = 0.5: a WIDE estimator, which is exactly why the pipeline
+    verifies exactly instead of trusting signatures, and why
+    text_minhash_band_tuning's S-curve is about RECALL not precision).
+    Completes the dedup-methodology trio: band tuning (candidate
+    recall), threshold sensitivity (purge volume), this op (estimator
+    quality).
+
+    Parity: signatures and match counts are exact int64; est is a
+    dyadic-exact /8 double; jac = intersection/union divides exact
+    ints (the numpy verify kernel and the SQL twin produce the
+    identical correctly-rounded double); bins use floor (never
+    round-half — the round-8 half-even trap) on identical doubles;
+    the MAE quantizes each |est - jac| round(9) into DECIMAL before
+    the order-independent sum.
+
+    Shape at 100 TB: candidates from the banded equi-join, verify via
+    the side-file kernel, signatures join back on doc_id; the
+    histogram is a bounded (<= 41-bin) aggregate over the ckpt'd pair
+    frame."""
+
+    codes, _ = _minhash_codes_and_candidates(spark, sf_dir)
+    # session-cached ckpt pair table at 0.5 (shared with the threshold
+    # sweep — threshold is a kernel post-filter, same codes side-file)
+    pairs = _minhash_verified_pairs(spark, sf_dir, 0.5).select(
+        "doc_a", "doc_b", "jac"
+    )
+    sigs = codes.withColumnRenamed("cs", "codes").select(
+        "doc_id",
+        *[F.expr(_spark_sig(i)).alias(f"s{i}") for i in range(N_HASH)],
+    )
+    sa = sigs.select(
+        F.col("doc_id").alias("da"),
+        *[F.col(f"s{i}").alias(f"sa{i}") for i in range(N_HASH)],
+    )
+    sb = sigs.select(
+        F.col("doc_id").alias("db"),
+        *[F.col(f"s{i}").alias(f"sb{i}") for i in range(N_HASH)],
+    )
+    matches = " + ".join(
+        f"(CASE WHEN sa{i} = sb{i} THEN 1 ELSE 0 END)"
+        for i in range(N_HASH)
+    )
+    e = (
+        pairs.join(sa, pairs.doc_a == sa.da)
+        .join(sb, pairs.doc_b == sb.db)
+        .selectExpr(
+            "jac",
+            f"CAST(({matches}) AS DOUBLE) / {N_HASH} AS est",
+        )
+        .localCheckpoint()  # bounded pair frame referenced twice
+    )
+    s = e.agg(
+        F.count("*").cast("bigint").alias("n"),
+        F.expr(
+            "CAST(sum(CAST(round(abs(est - jac), 9) AS DECIMAL(28,9)))"
+            " AS DECIMAL(38,9))"
+        ).alias("sae"),
+    )
+    return (
+        e.groupBy(
+            F.expr("CAST(floor((est - jac) * 20) AS BIGINT)").alias(
+                "err_bin"
+            )
+        )
+        .agg(F.count("*").cast("bigint").alias("n_pairs"))
+        .crossJoin(F.broadcast(s))
+        .selectExpr(
+            "err_bin",
+            "n_pairs",
+            "round(CAST(n_pairs AS DOUBLE) / n, 6) AS share",
+            "round(CAST(sae AS DOUBLE) / n, 6) AS mae_overall",
+        )
+        .orderBy("err_bin")
+    )

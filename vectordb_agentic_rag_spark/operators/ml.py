@@ -1581,19 +1581,6 @@ _PARETO_LSH_LEVELS = (1, 2, 4)  # probed-table grid over the 4 LSH tables
 _PARETO_TIMED_RUNS = 1
 
 
-def _pareto_mark(label: str, t0: float) -> float:
-    """Env-gated phase profiler (SPARK_GRAFT_PROFILE=1): prints the
-    elapsed seconds since t0 and returns a fresh t0 — keeps the pareto
-    op's OPS_BENCH cost accountable phase by phase."""
-    import os
-    import time
-
-    t1 = time.perf_counter()
-    if os.environ.get("SPARK_GRAFT_PROFILE"):
-        print(f"  [pareto] {label}: {t1 - t0:.2f}s", flush=True)
-    return t1
-
-
 @query("vec_ann_latency_recall_pareto")  # rows-only BY DESIGN: the
 # operating points carry MEASURED wall-clock latency (not SQL-
 # reproducible) and trained-model recalls; the op self-checks instead —
@@ -1669,15 +1656,11 @@ def vec_ann_latency_recall_pareto(spark: SparkSession, sf_dir: str) -> DataFrame
             ts.append(time.perf_counter() - t0)
         return round(sorted(ts)[len(ts) // 2] * 1000.0, 1)
 
-    import time as _time
-
-    _t = _time.perf_counter()
     points: list[tuple[str, int, float, float, float]] = []
 
     # exact top-3 twin (one definition for every family's recall join;
     # session-cached — the recall sweep warms it)
     exact3 = _exact3_twin(spark, sf_dir)
-    _t = _pareto_mark("exact3", _t)
 
     # ---- IVF nprobe grid ------------------------------------------------
     max_p = max(_SWEEP_PROBES)
@@ -1685,7 +1668,6 @@ def vec_ann_latency_recall_pareto(spark: SparkSession, sf_dir: str) -> DataFrame
     # per session (what a serving node actually scans); every per-point
     # timed plan is filter + top-k over this shared warmed frame
     cands_ivf = _ivf_panel_cands(spark, sf_dir)
-    _t = _pareto_mark("ivf_cands_ckpt", _t)
     w_s = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), "neighbor_id"
     )
@@ -1736,7 +1718,6 @@ def vec_ann_latency_recall_pareto(spark: SparkSession, sf_dir: str) -> DataFrame
             F.round(F.sum("c").over(w_rc) / F.lit(ntot), 6).alias("frac"),
         ).collect()
     }
-    _t = _pareto_mark("ivf_recall_frac", _t)
     for p in _SWEEP_PROBES:
         points.append(
             (
@@ -1751,8 +1732,6 @@ def vec_ann_latency_recall_pareto(spark: SparkSession, sf_dir: str) -> DataFrame
             )
         )
 
-    _t = _pareto_mark("ivf_timed_points", _t)
-
     # ---- LSH probed-tables grid ----------------------------------------
     w_d = Window.partitionBy("query_id").orderBy("dist", "neighbor_id")
     # the deduped candidate pairs of the 10-query panel with their
@@ -1760,7 +1739,6 @@ def vec_ann_latency_recall_pareto(spark: SparkSession, sf_dir: str) -> DataFrame
     # session-cached — vec_lsh_ann warms it): level sets are nested, so
     # every per-point timed plan is filter + top-k over this frame
     lsh_cand = _lsh_pairs(spark, sf_dir)
-    _t = _pareto_mark("lsh_cand_ckpt", _t)
 
     def lsh_point(t_probe: int) -> DataFrame:
         return (
@@ -1811,7 +1789,6 @@ def vec_ann_latency_recall_pareto(spark: SparkSession, sf_dir: str) -> DataFrame
             F.round(F.sum("c").over(w_r) / F.lit(ntot), 6).alias("frac"),
         ).collect()
     }
-    _t = _pareto_mark("lsh_recall_frac", _t)
     for t_probe in _PARETO_LSH_LEVELS:
         points.append(
             (
@@ -1825,8 +1802,6 @@ def vec_ann_latency_recall_pareto(spark: SparkSession, sf_dir: str) -> DataFrame
                 timed_ms(lsh_point(t_probe)),
             )
         )
-
-    _t = _pareto_mark("lsh_timed_points", _t)
 
     # ---- PQ (full ADC scan) and IVFPQ (probe 8) -------------------------
     pq_df = vec_pq_ann(spark, sf_dir)
@@ -1855,8 +1830,6 @@ def vec_ann_latency_recall_pareto(spark: SparkSession, sf_dir: str) -> DataFrame
             timed_ms(ivfpq_df, warmed=True),
         )
     )
-
-    _t = _pareto_mark("pq_ivfpq", _t)
 
     # ---- assemble + in-plan self-checks ---------------------------------
     out = spark.createDataFrame(

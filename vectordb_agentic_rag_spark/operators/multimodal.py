@@ -529,3 +529,230 @@ def multimodal_payload_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         "round(ln(CAST(n AS DOUBLE)) - CAST(slc AS DOUBLE) / n, 6)"
         " AS entropy_nats",
     )
+
+
+# ---------------------------------------------------------------------------
+# multimodal_metadata_filter
+# ---------------------------------------------------------------------------
+
+_IMG_MIN_SIDE = 64
+_IMG_MAX_ASPECT = 3  # keep if 3*min_side >= max_side
+
+
+@query(
+    "multimodal_metadata_filter",
+    oracle=f"""
+    WITH meta AS (
+      SELECT doc_id,
+             octet_length(encode(text)) AS n_bytes,
+             ascii(substring(text, 1, 1)) AS first_b,
+             ascii(substring(text, length(text), 1)) AS last_b
+      FROM documents),
+    dims AS (
+      SELECT doc_id,
+             16 + (n_bytes * 7 + first_b) % 1009 AS width,
+             16 + (n_bytes * 13 + last_b) % 1009 AS height,
+             CASE n_bytes % 3 WHEN 0 THEN 'jpeg' WHEN 1 THEN 'png'
+                  ELSE 'webp' END AS fmt
+      FROM meta),
+    flags AS (
+      SELECT doc_id,
+             CASE WHEN least(width, height) >= {_IMG_MIN_SIDE}
+                  THEN 1 ELSE 0 END AS pass_min_dim,
+             CASE WHEN {_IMG_MAX_ASPECT} * least(width, height)
+                       >= greatest(width, height)
+                  THEN 1 ELSE 0 END AS pass_aspect,
+             CASE WHEN fmt <> 'webp' THEN 1 ELSE 0 END AS pass_format
+      FROM dims),
+    agg AS (
+      SELECT CAST(count(*) AS BIGINT) AS n_total,
+             CAST(sum(pass_min_dim) AS BIGINT) AS p1,
+             CAST(sum(pass_min_dim * pass_aspect) AS BIGINT) AS p2,
+             CAST(sum(pass_min_dim * pass_aspect * pass_format) AS BIGINT)
+               AS p3
+      FROM flags)
+    SELECT stage, n_pass, n_total,
+           round(CAST(n_pass AS DOUBLE) / n_total, 6) AS pass_rate
+    FROM (
+      SELECT '1_min_dim' AS stage, p1 AS n_pass, n_total FROM agg
+      UNION ALL
+      SELECT '2_aspect', p2, n_total FROM agg
+      UNION ALL
+      SELECT '3_format', p3, n_total FROM agg) u
+    ORDER BY stage
+    """,
+)
+def multimodal_metadata_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LAION-STYLE IMAGE-METADATA CURATION FUNNEL: sequential gates on
+    decoded image metadata — minimum side >= 64 px, aspect ratio
+    within 3:1, non-webp container — with per-stage survivor counts
+    and rates, the standard pre-CLIP image-corpus screen.  The
+    container ships no image codec (multimodal contract,
+    multimodal.py:130), so the "decode" extracts DETERMINISTIC fake
+    dimensions from the payload bytes (hash-like integer formulas on
+    length and boundary bytes) inside the REAL mapInPandas plumbing a
+    production decode uses — schema, Arrow batching, and the funnel
+    plan downstream are exactly the production shape.
+
+    Parity: the fake metadata is pure integer arithmetic mirrored in
+    SQL (octet_length/ascii on the ASCII fixture text == the byte
+    values Python sees); gates and counts are exact integers;
+    pass_rate divides once, round(6).
+
+    Shape at 100 TB: payloads stream through one Arrow pass
+    (mapInPandas — the only Python stage, per-row O(1)); the funnel
+    is a 1-row conditional aggregate fanned to 3 stage rows."""
+    import pandas as pd
+
+    d = table(spark, sf_dir, "documents").select(
+        "doc_id", F.encode("text", "utf-8").alias("payload")
+    )
+
+    def parse_meta(batches):
+        for pdf in batches:
+            ids, ws, hs, fs = [], [], [], []
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+                p = bytes(payload)
+                n, first, last = len(p), p[0], p[-1]
+                ids.append(doc_id)
+                ws.append(16 + (n * 7 + first) % 1009)
+                hs.append(16 + (n * 13 + last) % 1009)
+                fs.append(["jpeg", "png", "webp"][n % 3])
+            yield pd.DataFrame(
+                {"doc_id": ids, "width": ws, "height": hs, "fmt": fs}
+            )
+
+    dims = d.mapInPandas(
+        parse_meta, "doc_id bigint, width int, height int, fmt string"
+    )
+    flags = dims.selectExpr(
+        "doc_id",
+        f"CASE WHEN least(width, height) >= {_IMG_MIN_SIDE}"
+        " THEN 1 ELSE 0 END AS pass_min_dim",
+        f"CASE WHEN {_IMG_MAX_ASPECT} * least(width, height)"
+        " >= greatest(width, height) THEN 1 ELSE 0 END AS pass_aspect",
+        "CASE WHEN fmt <> 'webp' THEN 1 ELSE 0 END AS pass_format",
+    )
+    agg = flags.agg(
+        F.count("*").cast("bigint").alias("n_total"),
+        F.sum("pass_min_dim").cast("bigint").alias("p1"),
+        F.expr(
+            "CAST(sum(pass_min_dim * pass_aspect) AS BIGINT)"
+        ).alias("p2"),
+        F.expr(
+            "CAST(sum(pass_min_dim * pass_aspect * pass_format) AS BIGINT)"
+        ).alias("p3"),
+    )
+    stages = None
+    for stage, col in (
+        ("1_min_dim", "p1"),
+        ("2_aspect", "p2"),
+        ("3_format", "p3"),
+    ):
+        row = agg.selectExpr(
+            f"'{stage}' AS stage",
+            f"{col} AS n_pass",
+            "n_total",
+            f"round(CAST({col} AS DOUBLE) / n_total, 6) AS pass_rate",
+        )
+        stages = row if stages is None else stages.unionByName(row)
+    return stages.orderBy("stage")
+
+
+# ---------------------------------------------------------------------------
+# multimodal_audio_frames
+# ---------------------------------------------------------------------------
+
+_PCM_SR = 16000  # fake-decode contract: PCM16 mono @ 16 kHz
+_PCM_FRAME = 400  # 25 ms analysis window
+_PCM_HOP = 160  # 10 ms hop
+
+
+@query(
+    "multimodal_audio_frames",
+    oracle=f"""
+    WITH meta AS (
+      SELECT doc_id,
+             CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
+             ascii(substring(text, 1, 1)) AS b0,
+             ascii(substring(text, 2, 1)) AS b1
+      FROM documents)
+    SELECT doc_id, n_bytes,
+           n_bytes // 2 AS n_samples,
+           (n_bytes // 2) * 1000 // {_PCM_SR} AS duration_ms,
+           CASE WHEN n_bytes // 2 >= {_PCM_FRAME}
+                THEN 1 + (n_bytes // 2 - {_PCM_FRAME}) // {_PCM_HOP}
+                ELSE 0 END AS n_frames,
+           CAST(b0 + 256 * b1 AS BIGINT) AS first_sample_u16
+    FROM meta ORDER BY doc_id
+    """,
+)
+def multimodal_audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """AUDIO FRAMING PLAN over opaque binary payloads — the windowing
+    arithmetic every speech/audio feature extractor (MFCC, wav2vec
+    chunking) runs first: treat each payload as PCM16 mono @ 16 kHz
+    and emit sample count, duration, and the 25 ms / 10 ms-hop
+    analysis-frame count, plus the first u16 sample as the
+    deterministic "decoded" probe value.  The AUDIO sibling of
+    multimodal_frame_sample (video keyframe explode): that op changes
+    cardinality 1->N; this one validates the framing arithmetic and
+    byte-order plumbing a real librosa/ffmpeg decode would feed.
+    Since round 14 the sample count comes from a REAL container
+    roundtrip: each payload is wrapped in a genuine RIFF/WAVE file
+    (build_wav, PCM16 mono @ 16 kHz) and parse_wav's chunk walk
+    supplies n_frames/block_align/sample_rate — the framing
+    arithmetic consumes PARSED metadata, not raw byte length, and a
+    rate/shape mismatch raises. Compressed-codec decode stays the
+    documented extension point (multimodal.py decode_image note).
+
+    Parity: all outputs are integer arithmetic on payload length and
+    the first two bytes, mirrored exactly by octet_length/ascii on
+    the ASCII fixture text (bytes == chars); integer division is
+    Spark `div` / DuckDB `//`.
+
+    Shape at 100 TB: one Arrow mapInPandas pass, per-row O(1), no
+    shuffle at all."""
+    import pandas as pd
+
+    d = table(spark, sf_dir, "documents").select(
+        "doc_id", F.encode("text", "utf-8").alias("payload")
+    )
+
+    from .binformats import build_wav, parse_wav
+
+    def frame_meta(batches):
+        for pdf in batches:
+            ids, nb, ns, fs = [], [], [], []
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+                p = bytes(payload)
+                wav = parse_wav(build_wav(p, _PCM_SR, 1))
+                if wav["sample_rate"] != _PCM_SR or wav["block_align"] != 2:
+                    raise ValueError("WAV container roundtrip mismatch")
+                ids.append(doc_id)
+                nb.append(len(p))
+                ns.append(wav["n_frames"])  # parsed, not len(p) // 2
+                fs.append(p[0] + 256 * p[1])
+            yield pd.DataFrame(
+                {
+                    "doc_id": ids,
+                    "n_bytes": nb,
+                    "n_samples": ns,
+                    "first_sample_u16": fs,
+                }
+            )
+
+    meta = d.mapInPandas(
+        frame_meta,
+        "doc_id bigint, n_bytes bigint, n_samples bigint,"
+        " first_sample_u16 bigint",
+    )
+    return meta.selectExpr(
+        "doc_id",
+        "n_bytes",
+        "n_samples",
+        f"n_samples * 1000 div {_PCM_SR} AS duration_ms",
+        f"CASE WHEN n_samples >= {_PCM_FRAME}"
+        f" THEN 1 + (n_samples - {_PCM_FRAME}) div {_PCM_HOP}"
+        " ELSE 0 END AS n_frames",
+        "first_sample_u16",
+    ).orderBy("doc_id")

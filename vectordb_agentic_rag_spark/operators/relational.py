@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ..functions.money import cents, cents_to_dollars
 from ..registry import query
-from ..tables import SCRATCH, sf_tag, table
+from ..tables import SCRATCH, session_artifact, sf_tag, table
 
 # ---------------------------------------------------------------- scans
 
@@ -2485,3 +2485,364 @@ def maintenance_snapshot_log_replay(
         F.sum("dn").over(wc).cast("bigint").alias("n_live_files"),
         F.sum("db").over(wc).cast("bigint").alias("live_bytes"),
     )
+
+
+# ---------------------------------------------------------------------------
+# join_bloom_prefilter
+# ---------------------------------------------------------------------------
+
+_BLOOM_BITS = 4096  # m: 64 int64 words
+_BLOOM_WORDS = _BLOOM_BITS // 64
+# two independent integer hash lanes (Knuth multiplicative + affine)
+_BLOOM_H1 = "(s * 2654435761) % 4096"
+_BLOOM_H2 = "(s * 40503 + 17) % 4096"
+
+
+@query(
+    "join_bloom_prefilter",
+    # the bloom is a PREFILTER, not a semantics change: the exact join
+    # still runs, so the oracle is the plain join+aggregate
+    oracle="""
+    SELECT l.l_suppkey,
+           count(*) AS n_items,
+           round(CAST(sum(CAST(round(l.l_extendedprice * 100) AS BIGINT)
+                          * (100 - CAST(round(l.l_discount * 100) AS BIGINT)))
+                      AS DOUBLE) / 10000, 2) AS revenue
+    FROM lineitem l JOIN supplier s ON l.l_suppkey = s.s_suppkey
+    WHERE s.s_nationkey < 5
+    GROUP BY l.l_suppkey
+    """,
+)
+def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BLOOM-PREFILTERED dimension join — the hand-rolled runtime row
+    filter (Spark's own bloom_filter_agg is internal-only on this
+    build, CLAUDE.md round-5): qualifying supplier keys fold into a
+    4096-bit / 2-hash bloom bitmap (64 int64 words, ONE row) in a tiny
+    aggregate; the fact scan probes the broadcast bitmap with pure
+    integer bit math BEFORE the exact join, so non-qualifying rows
+    never reach the join's shuffle or build side. False positives are
+    removed by the exact join that follows — output is bit-identical
+    to the plain join (the oracle), only the plan differs.
+
+    Why it matters at 100 TB: when the filtered dimension is too big
+    to broadcast, the JOIN must shuffle both sides — but the BLOOM of
+    the dimension is 512 bytes regardless of dimension size, and a
+    ~1% selective prefilter cuts the fact-side shuffle by ~99%. Probe
+    cost is two multiplies + two shifts per row inside whole-stage
+    codegen. Money sums in exact integer cents (functions/money.py)."""
+    from ..functions.money import cents
+
+    li = table(spark, sf_dir, "lineitem")
+    sup = table(spark, sf_dir, "supplier")
+    dim = sup.where(F.col("s_nationkey") < 5).select("s_suppkey")
+    h1 = _BLOOM_H1.replace("s", "s_suppkey")
+    h2 = _BLOOM_H2.replace("s", "s_suppkey")
+    bloom = dim.agg(
+        *[
+            F.expr(
+                f"bit_or(CASE WHEN ({h1}) div 64 = {j} "
+                f"THEN shiftleft(1L, CAST(({h1}) % 64 AS INT)) ELSE 0L END | "
+                f"CASE WHEN ({h2}) div 64 = {j} "
+                f"THEN shiftleft(1L, CAST(({h2}) % 64 AS INT)) ELSE 0L END)"
+            ).alias(f"w{j}")
+            for j in range(_BLOOM_WORDS)
+        ]
+    ).select(
+        F.array(*[F.col(f"w{j}") for j in range(_BLOOM_WORDS)]).alias("words")
+    )
+    p1 = _BLOOM_H1.replace("s", "l_suppkey")
+    p2 = _BLOOM_H2.replace("s", "l_suppkey")
+    probe = (
+        f"((element_at(words, CAST(({p1}) div 64 AS INT) + 1) "
+        f">> CAST(({p1}) % 64 AS INT)) & 1L) = 1L AND "
+        f"((element_at(words, CAST(({p2}) div 64 AS INT) + 1) "
+        f">> CAST(({p2}) % 64 AS INT)) & 1L) = 1L"
+    )
+    prefiltered = (
+        li.select("l_suppkey", "l_extendedprice", "l_discount")
+        .crossJoin(F.broadcast(bloom))
+        .where(F.expr(probe))
+    )
+    return (
+        prefiltered.join(F.broadcast(dim), prefiltered.l_suppkey == dim.s_suppkey)
+        .groupBy("l_suppkey")
+        .agg(
+            F.count("*").alias("n_items"),
+            # exact integer cents x basis points (operators/tpch.py
+            # discipline — never round a PRODUCT of doubles to cents:
+            # 4-decimal products sit exactly on .5 boundaries where
+            # Spark's floor(+0.5) and DuckDB's half-even cast disagree)
+            F.round(
+                F.sum(
+                    cents("l_extendedprice") * (100 - cents("l_discount"))
+                ).cast("double")
+                / 10000,
+                2,
+            ).alias("revenue"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# sample_neyman_allocation
+# ---------------------------------------------------------------------------
+
+_NEYMAN_N = 1000  # target total sample size
+
+
+@query(
+    "sample_neyman_allocation",
+    oracle=f"""
+    WITH j AS (
+      SELECT c.c_nationkey AS nk,
+             CAST(round(o.o_totalprice * 100, 0) AS BIGINT) AS cents
+      FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey),
+    st AS (
+      SELECT nk, CAST(count(*) AS BIGINT) AS n_pop,
+             CAST(sum(cents) AS BIGINT) AS s,
+             sum(CAST(cents AS HUGEINT) * cents) AS ss
+      FROM j GROUP BY nk),
+    wt AS (
+      SELECT nk, n_pop,
+             sqrt(CAST(n_pop * ss - CAST(s AS HUGEINT) * s AS DOUBLE))
+               AS nsd
+      FROM st),
+    tw AS (SELECT sum(nsd) AS tot FROM wt),
+    base AS (
+      SELECT w.nk, w.n_pop,
+             CASE WHEN t.tot = 0 THEN NULL ELSE w.nsd / t.tot END AS wgt,
+             CASE WHEN t.tot = 0 THEN NULL
+                  ELSE CAST(floor({_NEYMAN_N} * w.nsd / t.tot) AS BIGINT)
+             END AS fl,
+             CASE WHEN t.tot = 0 THEN NULL
+                  ELSE {_NEYMAN_N} * w.nsd / t.tot
+                       - floor({_NEYMAN_N} * w.nsd / t.tot)
+             END AS rem
+      FROM wt w CROSS JOIN tw t),
+    topup AS (
+      SELECT nk, n_pop, wgt, fl, rem,
+             row_number() OVER (ORDER BY rem DESC, nk) AS rr,
+             CAST({_NEYMAN_N} - sum(fl) OVER () AS BIGINT) AS short
+      FROM base)
+    SELECT nk AS nationkey, n_pop,
+           round(wgt, 6) AS neyman_weight,
+           CAST(fl + CASE WHEN rr <= short THEN 1 ELSE 0 END AS BIGINT)
+             AS alloc
+    FROM topup ORDER BY nationkey
+    """,
+)
+def sample_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """NEYMAN OPTIMAL ALLOCATION of a 1000-row sample across customer-
+    nation strata of the orders table — the survey-sampling design
+    that minimizes the estimator variance for a fixed budget:
+    allocation_h proportional to N_h * S_h.  The algebra collapses
+    exactly: N_h * S_h(population) = sqrt(N_h*Sxx_h - Sx_h^2), the
+    square root of the n-scaled INTEGER central moment, so the weights
+    need no per-stratum division at all.  Fractional allocations
+    resolve to integers by the largest-remainder (Hamilton) method
+    with the nationkey tie-break — deterministic, sums to exactly
+    1000.  Companion to sample_stratified_hash (which DRAWS a
+    hash-gated sample): this op decides HOW MANY to draw per stratum.
+
+    Parity: the scaled moments are exact HUGEINT/DECIMAL integers;
+    sqrt is IEEE-correctly-rounded on both engines, so weights,
+    floors, and remainders are bit-identical doubles; the top-up rank
+    orders (remainder DESC, nationkey) — exact same order both sides.
+
+    Shape at 100 TB: one fact scan with a broadcast customer-dim
+    join, a 25-row stratum aggregate, constant-size apportionment."""
+    o = table(spark, sf_dir, "orders").select(
+        "o_custkey",
+        F.expr("CAST(o_totalprice * 100 + 0.5 AS BIGINT)").alias("cents"),
+    )
+    cst = table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_nationkey"
+    )
+    st = (
+        o.join(F.broadcast(cst), o["o_custkey"] == cst["c_custkey"])
+        .groupBy(F.col("c_nationkey").alias("nk"))
+        .agg(
+            F.count("*").cast("bigint").alias("n_pop"),
+            F.sum("cents").cast("bigint").alias("s"),
+            F.expr("sum(CAST(cents AS DECIMAL(19,0)) * cents)").alias("ss"),
+        )
+    )
+    wt = st.localCheckpoint().selectExpr(
+        # 25-row stratum moments feed both the weight total and the
+        # apportionment — checkpoint or each re-derives the fact join
+        "nk",
+        "n_pop",
+        "sqrt(CAST(n_pop * ss - CAST(s AS DECIMAL(38,0)) * s AS DOUBLE))"
+        " AS nsd",
+    )
+    tw = wt.agg(F.sum("nsd").alias("tot"))
+    base = wt.crossJoin(F.broadcast(tw)).selectExpr(
+        "nk",
+        "n_pop",
+        # tot = 0 iff every stratum is within-stratum constant — gate
+        # to NULL instead of an ANSI divide-by-zero (round-10 rule)
+        "CASE WHEN tot = 0 THEN NULL ELSE nsd / tot END AS wgt",
+        f"CASE WHEN tot = 0 THEN NULL"
+        f" ELSE CAST(floor({_NEYMAN_N} * nsd / tot) AS BIGINT) END AS fl",
+        f"CASE WHEN tot = 0 THEN NULL"
+        f" ELSE {_NEYMAN_N} * nsd / tot"
+        f" - floor({_NEYMAN_N} * nsd / tot) END AS rem",
+    )
+    w_r = Window.orderBy(F.col("rem").desc(), "nk")
+    w_all = Window.partitionBy()
+    return (
+        base.withColumn("rr", F.row_number().over(w_r))
+        .withColumn(
+            "short",
+            (F.lit(_NEYMAN_N) - F.sum("fl").over(w_all)).cast("bigint"),
+        )
+        .selectExpr(
+            "nk AS nationkey",
+            "n_pop",
+            "round(wgt, 6) AS neyman_weight",
+            "CAST(fl + CASE WHEN rr <= short THEN 1 ELSE 0 END AS BIGINT)"
+            " AS alloc",
+        )
+        .orderBy("nationkey")
+    )
+
+
+# ---------------------------------------------------------------------------
+# sample_kcenter_greedy
+# ---------------------------------------------------------------------------
+
+_KCG_K = 8  # seeds
+_KCG_D = 64  # embedding dim
+
+
+@session_artifact
+def _kcg_picks(spark: SparkSession, sf_dir: str) -> list:
+    """The farthest-first seeds as (seed_rank, vec_id, d2_covered, emb)
+    tuples, picked once per session (k driver actions)."""
+    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    first = emb.orderBy("vec_id").limit(1).collect()[0]
+    picks = [
+        (1, int(first["vec_id"]), 0.0,
+         [float(x) for x in first["embedding"]])
+    ]
+    for t in range(2, _KCG_K + 1):
+        dcols = [
+            F.expr(_kcg_dist_spark("embedding", p[3])).alias(f"d_{j}")
+            for j, p in enumerate(picks)
+        ]
+        scored = emb.select("vec_id", "embedding", *dcols)
+        dmin = (
+            "least(" + ", ".join(f"d_{j}" for j in range(len(picks))) + ")"
+            if len(picks) > 1
+            else "d_0"
+        )
+        row = (
+            scored.selectExpr(
+                "vec_id", "embedding", f"round({dmin}, 6) AS dmin"
+            )
+            .orderBy(F.col("dmin").desc(), F.col("vec_id"))
+            .limit(1)
+            .collect()[0]
+        )
+        picks.append(
+            (t, int(row["vec_id"]), float(row["dmin"]),
+             [float(x) for x in row["embedding"]])
+        )
+    return picks
+
+
+def _kcg_dist_duck(erow: str, srow: str) -> str:
+    """Unrolled 64-term squared-L2 chain (DuckDB side): per-element
+    CAST to DOUBLE then one left-assoc sum — the identical shape the
+    Spark side renders with seed LITERALS, so every distance is
+    bit-exact across engines."""
+    terms = [
+        f"(CAST(list_extract({erow}, {i + 1}) AS DOUBLE)"
+        f" - CAST(list_extract({srow}, {i + 1}) AS DOUBLE))"
+        f" * (CAST(list_extract({erow}, {i + 1}) AS DOUBLE)"
+        f" - CAST(list_extract({srow}, {i + 1}) AS DOUBLE))"
+        for i in range(_KCG_D)
+    ]
+    return "(" + " + ".join(terms) + ")"
+
+
+def _kcg_dist_spark(col: str, seed: list) -> str:
+    terms = []
+    for i, x in enumerate(seed):
+        lit = f"{float(x)!r}D"
+        terms.append(
+            f"(CAST(element_at({col}, {i + 1}) AS DOUBLE) - {lit})"
+            f" * (CAST(element_at({col}, {i + 1}) AS DOUBLE) - {lit})"
+        )
+    return "(" + " + ".join(terms) + ")"
+
+
+def _kcg_oracle() -> str:
+    dist = _kcg_dist_duck("e.embedding", "s.embedding")
+    parts = [
+        "WITH emb AS MATERIALIZED"
+        " (SELECT vec_id, embedding FROM embeddings)",
+        "seeds1 AS MATERIALIZED (SELECT CAST(1 AS BIGINT) AS seed_rank,"
+        " vec_id, embedding, CAST(0.0 AS DOUBLE) AS d2_covered"
+        " FROM emb ORDER BY vec_id LIMIT 1)",
+    ]
+    for t in range(2, _KCG_K + 1):
+        parts.append(
+            f"d{t - 1} AS (SELECT e.vec_id,"
+            f" round(min({dist}), 6) AS dmin"
+            f" FROM emb e, seeds{t - 1} s GROUP BY e.vec_id)"
+        )
+        parts.append(
+            f"pick{t} AS MATERIALIZED (SELECT CAST({t} AS BIGINT)"
+            " AS seed_rank, e.vec_id, e.embedding, d.dmin AS d2_covered"
+            f" FROM emb e JOIN d{t - 1} d ON e.vec_id = d.vec_id"
+            " ORDER BY d.dmin DESC, e.vec_id LIMIT 1)"
+        )
+        parts.append(
+            f"seeds{t} AS MATERIALIZED (SELECT * FROM seeds{t - 1}"
+            f" UNION ALL SELECT * FROM pick{t})"
+        )
+    return (
+        ",\n".join(parts)
+        + f"\nSELECT seed_rank, vec_id, d2_covered FROM seeds{_KCG_K}"
+        + "\nORDER BY seed_rank"
+    )
+
+
+@query("sample_kcenter_greedy", oracle=_kcg_oracle())
+def sample_kcenter_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """K-CENTER GREEDY (farthest-first traversal) CORESET SEEDING —
+    the deterministic 2-approximation to the k-center cover and the
+    standard coreset/active-learning selector, filling the sampling
+    family's diversity gap (sample_* ops draw by hash/weight/strata;
+    nothing selected points to COVER the embedding space, and
+    vec_kmeans_lloyd REFINES pivoted centroids rather than seeding
+    them). Seed 1 is the min vec_id; each of the 7 further rounds
+    picks the point FARTHEST from its nearest chosen seed (squared
+    L2), i.e. argmax_i min_s ||x_i - x_s||^2 — whose selection value
+    is exactly the covering radius the next seed removes.
+
+    Parity is the ANN-family recipe end-to-end: every distance is an
+    unrolled 64-term squared-diff chain in IDENTICAL text (seed
+    vectors embedded as exact float literals on the Spark side,
+    list_extract casts on the DuckDB side — float->double promotion
+    is exact, the chains are left-assoc both engines, so distances
+    are bit-identical); the argmax ranks on round(dmin, 6) with
+    vec_id as tie-break (TakeOrderedAndProject, never a global
+    window); the oracle replays the same 8 rounds as chained
+    MATERIALIZED CTEs, so the driver hash match proves pick-by-pick
+    agreement of the whole traversal.
+
+    Shape at 100 TB: k scans, each a map-only projection (<= k
+    distance columns + least()) feeding a TakeOrdered(1) — no
+    shuffle beyond the k-row reduce; seed vectors broadcast as plan
+    literals (they are k x 64 floats). For k beyond ~32 the
+    per-round plan-literal growth argues for the mini-batch variant
+    (sample a candidate pool per round); documented, not needed at
+    k=8. Picks are session-cached so warm rebuilds are pure
+    plan-build."""
+    picks = _kcg_picks(spark, sf_dir)
+    return spark.createDataFrame(
+        [(r, v, d) for r, v, d, _ in picks],
+        schema="seed_rank bigint, vec_id bigint, d2_covered double",
+    ).orderBy("seed_rank")

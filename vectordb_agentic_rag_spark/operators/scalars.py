@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..tables import table
+from .dedup import _RE_HOST, _RE_PATH, _RE_Q, _URL_DUCK, _URL_SPARK
 
 
 @query(
@@ -329,4 +330,59 @@ def scalar_regexp_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(size(split(text, ' +')) AS BIGINT)").alias(
             "n_ws_tokens"
         ),
+    )
+
+
+@query(
+    "scalar_url_suite",
+    oracle=f"""
+    WITH u AS (SELECT doc_id, {_URL_DUCK} AS url FROM documents)
+    SELECT doc_id, url,
+           regexp_extract(url, '{_RE_HOST}', 1) AS host,
+           regexp_extract(regexp_extract(url, '{_RE_HOST}', 1),
+                          '([^.]+)$', 1) AS tld,
+           regexp_extract(url, '{_RE_PATH}', 1) AS path,
+           regexp_extract(url, '{_RE_Q}', 1) AS q_param,
+           lower(regexp_extract(url, '{_RE_HOST}', 1))
+             || regexp_extract(url, '{_RE_PATH}', 1)
+             || CASE WHEN regexp_extract(url, '{_RE_Q}', 1) <> ''
+                     THEN '?q=' || regexp_extract(url, '{_RE_Q}', 1)
+                     ELSE '' END AS canonical
+    FROM u
+    WHERE doc_id < 100
+    """,
+)
+def scalar_url_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """URL parsing + canonicalization scalar suite — the string surface
+    of web-corpus curation (CommonCrawl-style pipelines spend a pass
+    on exactly this): host / TLD / path / query-param extraction via
+    anchored regexes, and a canonical form that lowercases the host
+    and STRIPS tracking parameters (utm_*, ref) while keeping
+    semantic ones (q). Synthetic URLs are derived deterministically
+    from fixture columns on both engines (no URL column in the
+    fixture; the derivation IS part of the parity surface).
+
+    Pure map-side regexp — scan throughput at any scale. The same
+    regex text runs on both engines (RE2-class patterns only: no
+    lookahead, anchored where it matters)."""
+    d = table(spark, sf_dir, "documents")
+    u = d.where(F.col("doc_id") < 100).select(
+        "doc_id", F.expr(_URL_SPARK).alias("url")
+    )
+    host = F.regexp_extract("url", _RE_HOST, 1)
+    path = F.regexp_extract("url", _RE_PATH, 1)
+    q = F.regexp_extract("url", _RE_Q, 1)
+    canonical = F.concat(
+        F.lower(host),
+        path,
+        F.when(q != "", F.concat(F.lit("?q="), q)).otherwise(""),
+    )
+    return u.select(
+        "doc_id",
+        "url",
+        host.alias("host"),
+        F.regexp_extract(host, "([^.]+)$", 1).alias("tld"),
+        path.alias("path"),
+        q.alias("q_param"),
+        canonical.alias("canonical"),
     )

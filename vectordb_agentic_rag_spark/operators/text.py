@@ -1554,6 +1554,15 @@ def pipeline_quality_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFram
 from .dedup import _DUCK_CODES as _MANIFEST_DUCK_CODES  # noqa: E402
 from .dedup import _SPARK_CODES as _MANIFEST_SPARK_CODES  # noqa: E402
 from .dedup import _simhash_expr as _manifest_simhash_expr  # noqa: E402
+from .dedup import (  # noqa: E402
+    N_HASH,
+    P_CODE,
+    P_HASH,
+    _A,
+    _B,
+    _DUCK_CODES,
+    _SPARK_CODES,
+)
 
 
 @query(
@@ -1975,4 +1984,1386 @@ def text_doc_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("novelty"),
         )
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_pmi_collocations
+# ---------------------------------------------------------------------------
+
+_PMI_MIN_COUNT = 5
+
+
+@query(
+    "text_pmi_collocations",
+    oracle=f"""
+    WITH toks AS (SELECT string_split(text, ' ') AS tk FROM documents),
+    uni AS (
+      SELECT w, count(*) AS cw
+      FROM (SELECT unnest(tk) AS w FROM toks) z GROUP BY w),
+    bg AS (
+      SELECT list_extract(tk, i) AS w1, list_extract(tk, i + 1) AS w2
+      FROM toks, LATERAL unnest(generate_series(1, len(tk) - 1)) AS t(i)
+      WHERE len(tk) >= 2),
+    pc AS (SELECT w1, w2, count(*) AS pair_count FROM bg GROUP BY 1, 2),
+    tot AS (
+      SELECT CAST((SELECT sum(len(tk)) FROM toks) AS BIGINT) AS n_tok,
+             CAST((SELECT sum(len(tk) - 1) FROM toks WHERE len(tk) >= 2)
+                  AS BIGINT) AS n_bg)
+    SELECT w1, w2, pair_count,
+           round(ln((pair_count / n_bg)
+                    / ((u1.cw / n_tok) * (u2.cw / n_tok))), 6) AS pmi
+    FROM pc
+    JOIN uni u1 ON pc.w1 = u1.w
+    JOIN uni u2 ON pc.w2 = u2.w
+    CROSS JOIN tot
+    WHERE pair_count >= {_PMI_MIN_COUNT}
+    ORDER BY pmi DESC, w1, w2
+    LIMIT 50
+    """,
+)
+def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """POINTWISE-MUTUAL-INFORMATION collocation mining over adjacent
+    token pairs — the standard phrase detector (word2vec's phrase pass,
+    Mikolov et al. 2013 §4) a corpus pipeline runs before tokenizer
+    training: PMI = ln(p(w1,w2) / (p(w1) p(w2))) with a min-count
+    support gate against low-frequency noise.
+
+    Shape at scale: one map pass emits unigrams and bigrams, two
+    vocabulary-sized hash aggregates (map-side partial combine does
+    the heavy lifting — corpus rows collapse to vocab rows before the
+    shuffle), then the pair table joins the unigram table twice. The
+    unigram side is broadcast (a vocabulary fits an executor even for
+    web-scale corpora; the PAIR table is the big side and never
+    shuffles again). Top-50 plans as TakeOrderedAndProject.
+
+    Parity: counts are exact integers; the single PMI expression has
+    the identical nesting on both engines so the doubles agree bit-wise
+    before the one round(6)."""
+    d = table(spark, sf_dir, "documents")
+    toks = d.select(F.split("text", " ").alias("tk"))
+    uni = (
+        toks.select(F.explode("tk").alias("w"))
+        .groupBy("w")
+        .agg(F.count("*").alias("cw"))
+    )
+    bg = (
+        toks.where(F.size("tk") >= 2)
+        .select(
+            F.explode(
+                F.expr(
+                    "transform(sequence(1, size(tk) - 1), "
+                    "i -> struct(element_at(tk, i) AS w1, "
+                    "element_at(tk, i + 1) AS w2))"
+                )
+            ).alias("p")
+        )
+        .select("p.w1", "p.w2")
+    )
+    pc = bg.groupBy("w1", "w2").agg(F.count("*").alias("pair_count"))
+    tot = toks.agg(
+        F.sum(F.size("tk")).cast("bigint").alias("n_tok"),
+        F.sum(
+            F.when(F.size("tk") >= 2, F.size("tk") - 1)
+        ).cast("bigint").alias("n_bg"),
+    )
+    u1 = uni.select(F.col("w").alias("w1"), F.col("cw").alias("cw1"))
+    u2 = uni.select(F.col("w").alias("w2"), F.col("cw").alias("cw2"))
+    pmi = F.round(
+        F.log(
+            (F.col("pair_count") / F.col("n_bg"))
+            / ((F.col("cw1") / F.col("n_tok")) * (F.col("cw2") / F.col("n_tok")))
+        ),
+        6,
+    )
+    return (
+        pc.where(F.col("pair_count") >= _PMI_MIN_COUNT)
+        .join(F.broadcast(u1), "w1")
+        .join(F.broadcast(u2), "w2")
+        .crossJoin(F.broadcast(tot))
+        .select("w1", "w2", "pair_count", pmi.alias("pmi"))
+        .orderBy(F.col("pmi").desc(), "w1", "w2")
+        .limit(50)
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_zipf_slope
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "text_zipf_slope",
+    oracle="""
+    WITH cnt AS (
+      SELECT lang, w, count(*) AS c
+      FROM (SELECT lang, unnest(string_split(text, ' ')) AS w
+            FROM documents) z
+      GROUP BY lang, w),
+    ranked AS (
+      SELECT lang, c,
+             row_number() OVER (PARTITION BY lang
+                                ORDER BY c DESC, w) AS rnk
+      FROM cnt),
+    xy AS (
+      SELECT lang,
+             CAST(round(ln(CAST(rnk AS DOUBLE)), 9) AS DECIMAL(18,9)) AS x,
+             CAST(round(ln(CAST(c AS DOUBLE)), 9) AS DECIMAL(18,9)) AS y
+      FROM ranked WHERE rnk <= 1000),
+    s AS (
+      SELECT lang, count(*) AS n,
+             CAST(sum(x) AS DOUBLE) AS sx, CAST(sum(y) AS DOUBLE) AS sy,
+             CAST(sum(x * y) AS DOUBLE) AS sxy,
+             CAST(sum(x * x) AS DOUBLE) AS sxx
+      FROM xy GROUP BY lang)
+    SELECT lang, n AS n_terms,
+           round((n * sxy - sx * sy) / (n * sxx - sx * sx), 6) AS zipf_slope
+    FROM s
+    """,
+)
+def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ZIPF-LAW fit per language: OLS slope of ln(frequency) on
+    ln(rank) over the top-1000 vocabulary — the classic corpus sanity
+    check (natural text slopes ~ -1; generated/boilerplate corpora
+    drift far off, making this a cheap synthetic-data detector next to
+    text_entropy_per_lang).
+
+    One vocabulary aggregate (map-side combined — corpus tokens
+    collapse to vocab rows before the shuffle), a per-lang top-1000
+    window over the *vocabulary* (bounded rows, never the corpus),
+    then five frame sums. Parity discipline: ln values are quantized
+    round(9) then accumulated as DECIMAL(18,9) so the group sums are
+    order-independent (the win_rolling_slope discipline — a 1-ulp libm
+    difference is 1e-6 of the quantization grid and cannot flip the
+    final round(6) through the slope division)."""
+    d = table(spark, sf_dir, "documents")
+    cnt = (
+        d.select("lang", F.explode(F.split("text", " ")).alias("w"))
+        .groupBy("lang", "w")
+        .agg(F.count("*").alias("c"))
+    )
+    wr = Window.partitionBy("lang").orderBy(F.col("c").desc(), "w")
+    xy = (
+        cnt.withColumn("rnk", F.row_number().over(wr))
+        .where(F.col("rnk") <= 1000)
+        .select(
+            "lang",
+            F.round(F.log(F.col("rnk").cast("double")), 9)
+            .cast("decimal(18,9)")
+            .alias("x"),
+            F.round(F.log(F.col("c").cast("double")), 9)
+            .cast("decimal(18,9)")
+            .alias("y"),
+        )
+    )
+    s = xy.groupBy("lang").agg(
+        F.count("*").alias("n"),
+        F.sum("x").cast("double").alias("sx"),
+        F.sum("y").cast("double").alias("sy"),
+        F.sum(F.col("x") * F.col("y")).cast("double").alias("sxy"),
+        F.sum(F.col("x") * F.col("x")).cast("double").alias("sxx"),
+    )
+    slope = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
+        F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
+    )
+    return s.select(
+        "lang", F.col("n").alias("n_terms"), F.round(slope, 6).alias("zipf_slope")
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_top_tfidf_terms
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "text_top_tfidf_terms",
+    oracle="""
+    WITH tf AS (
+      SELECT doc_id, w AS term, count(*) AS tf
+      FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w
+            FROM documents) z
+      GROUP BY doc_id, w),
+    df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
+    n AS (SELECT count(*) AS n_docs FROM documents),
+    scored AS (
+      SELECT tf.doc_id, tf.term, tf.tf,
+             round(tf.tf * ln(CAST(n_docs AS DOUBLE) / df.df), 6) AS score
+      FROM tf JOIN df ON tf.term = df.term CROSS JOIN n)
+    SELECT doc_id, term, tf, score, rn
+    FROM (SELECT *, CAST(row_number() OVER (PARTITION BY doc_id
+                         ORDER BY score DESC, term) AS INTEGER) AS rn
+          FROM scored) t
+    WHERE rn <= 5
+    """,
+)
+def text_top_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TOP-5 TF-IDF terms per document — explicit-vocabulary keyword
+    extraction (the exact-join twin of the hashed text_tfidf_embed,
+    which trades the join for murmur buckets): score = tf * ln(N/df),
+    per-doc top-5 with deterministic (score, term) ties.
+
+    One explode collapses to a (doc, term) aggregate (map-side
+    combined); document frequency is a vocabulary-sized aggregate
+    BROADCAST back over the big side (a vocabulary fits an executor at
+    any corpus size — the (doc,term) table is the one that doesn't);
+    the per-doc top-5 is a window over each doc's own terms, bounded
+    by document length, riding the same doc_id partitioning. Exact
+    integer tf/df; one identically-shaped log expression, round(6)."""
+    d = table(spark, sf_dir, "documents")
+    tf = (
+        d.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
+        .groupBy("doc_id", "term")
+        .agg(F.count("*").alias("tf"))
+    )
+    df = tf.groupBy("term").agg(F.count("*").alias("df"))
+    n = d.agg(F.count("*").alias("n_docs"))
+    scored = (
+        tf.join(F.broadcast(df), "term")
+        .crossJoin(F.broadcast(n))
+        .select(
+            "doc_id",
+            "term",
+            "tf",
+            F.round(
+                F.col("tf")
+                * F.log(F.col("n_docs").cast("double") / F.col("df")),
+                6,
+            ).alias("score"),
+        )
+    )
+    w = Window.partitionBy("doc_id").orderBy(F.col("score").desc(), "term")
+    return (
+        scored.withColumn("rn", F.row_number().over(w).cast("int"))
+        .where(F.col("rn") <= 5)
+        .select("doc_id", "term", "tf", "score", "rn")
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_kl_drift
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "text_kl_drift",
+    oracle="""
+    WITH tok AS (
+      SELECT source, unnest(string_split(text, ' ')) AS w FROM documents),
+    vocab AS (SELECT w, count(*) AS cw FROM tok GROUP BY w),
+    srcs AS (SELECT source, count(*) AS ts FROM tok GROUP BY source),
+    sw AS (SELECT source, w, count(*) AS csw FROM tok GROUP BY source, w),
+    tot AS (
+      SELECT CAST((SELECT sum(cw) FROM vocab) AS BIGINT) AS t,
+             CAST((SELECT count(*) FROM vocab) AS BIGINT) AS v),
+    grid AS (
+      SELECT s.source, s.ts, vb.w, vb.cw, coalesce(x.csw, 0) AS csw
+      FROM srcs s CROSS JOIN vocab vb
+      LEFT JOIN sw x ON x.source = s.source AND x.w = vb.w),
+    terms AS (
+      SELECT source,
+             CAST(CASE WHEN csw > 0 THEN 1 ELSE 0 END AS BIGINT) AS present,
+             CAST(round(
+               ((csw + 1e0) / (ts + v))
+               * ln(((csw + 1e0) / (ts + v)) / ((cw + 1e0) / (t + v))),
+               12) AS DECIMAL(20,12)) AS term
+      FROM grid CROSS JOIN tot)
+    SELECT source,
+           CAST(sum(present) AS BIGINT) AS n_terms_present,
+           round(CAST(sum(term) AS DOUBLE), 6) AS kl_divergence
+    FROM terms GROUP BY source
+    """,
+)
+def text_kl_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DISTRIBUTION-DRIFT detector: KL(P_source || P_corpus) of
+    add-one-smoothed unigram distributions, per source — the monitor a
+    corpus pipeline runs per ingest batch to catch a source going off
+    the rails (scraper drift, language flips, spam floods) before it
+    pollutes training data. Smoothing covers vocabulary the source
+    never emits (those terms still contribute mass).
+
+    The corpus collapses to vocabulary-sized aggregates in one pass
+    (map-side combined); the per-(source, term) grid is
+    |sources| x |vocab| — built from the VOCAB side, never the corpus,
+    and joined to per-source counts riding the term key. Parity: the
+    KL integrand is one identically-shaped expression, each term
+    round(12)-quantized then summed as DECIMAL(20,12) (order-
+    independent; a 1-ulp libm wobble is 1e-4 of the grid and vanishes
+    in the round(6) total)."""
+    d = table(spark, sf_dir, "documents")
+    tok = d.select("source", F.explode(F.split("text", " ")).alias("w"))
+    vocab = tok.groupBy("w").agg(F.count("*").alias("cw"))
+    srcs = tok.groupBy("source").agg(F.count("*").alias("ts"))
+    sw = tok.groupBy("source", "w").agg(F.count("*").alias("csw"))
+    tot = vocab.agg(
+        F.sum("cw").cast("bigint").alias("t"),
+        F.count("*").cast("bigint").alias("v"),
+    )
+    grid = (
+        srcs.crossJoin(vocab)
+        .join(F.broadcast(sw), ["source", "w"], "left")
+        .select(
+            "source", "ts", "w", "cw", F.coalesce("csw", F.lit(0)).alias("csw")
+        )
+    )
+    # 1e0, not 1.0: a bare 1.0 literal parses as DECIMAL(2,1) in Spark
+    # SQL (and DuckDB), dragging the whole quotient through low-scale
+    # decimal division (~1e-6 relative error); 1e0 is a DOUBLE literal
+    # in both dialects, keeping the integrand in float64 end to end.
+    term = F.expr(
+        "CAST(round(((csw + 1e0) / (ts + v)) "
+        "* ln(((csw + 1e0) / (ts + v)) / ((cw + 1e0) / (t + v))), 12) "
+        "AS DECIMAL(20,12))"
+    )
+    return (
+        grid.crossJoin(F.broadcast(tot))
+        .select(
+            "source",
+            (F.col("csw") > 0).cast("bigint").alias("present"),
+            term.alias("term"),
+        )
+        .groupBy("source")
+        .agg(
+            F.sum("present").cast("bigint").alias("n_terms_present"),
+            F.round(F.sum("term").cast("double"), 6).alias("kl_divergence"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_lang_confusion
+# ---------------------------------------------------------------------------
+
+
+def _lang_confusion_oracle() -> str:
+
+    def hits(lang: str) -> str:
+        return (
+            f"len(list_filter({_LANG_MARKERS[lang]}, "
+            "m -> list_contains(string_split(text, ' '), m)))"
+        )
+
+    return f"""
+    WITH pred AS (
+      SELECT lang,
+             CASE
+               WHEN {hits('de')} > {hits('en')} AND {hits('de')} >= {hits('fr')}
+               THEN 'de'
+               WHEN {hits('fr')} > {hits('en')} THEN 'fr'
+               ELSE 'en'
+             END AS pred_lang
+      FROM documents),
+    m AS (SELECT lang, pred_lang, count(*) AS n_docs
+          FROM pred GROUP BY lang, pred_lang),
+    tot AS (SELECT lang, sum(n_docs) AS row_total FROM m GROUP BY lang)
+    SELECT m.lang, m.pred_lang, m.n_docs,
+           round(CAST(m.n_docs AS DOUBLE) / CAST(t.row_total AS DOUBLE), 6)
+             AS share
+    FROM m JOIN tot t ON m.lang = t.lang
+    """
+
+
+@query("text_lang_confusion", oracle=_lang_confusion_oracle())
+def text_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CONFUSION MATRIX of the lexicon-vote language classifier
+    (text_langid) against the fixture's ground-truth lang column —
+    the eval every heuristic corpus gate needs before its output is
+    trusted to route documents (rag_eval_recall_mrr's counterpart for
+    the text side): per (actual, predicted) cell, document count and
+    row-normalized share (recall on the diagonal).
+
+    One codegen'd classification pass collapses straight to a
+    |langs|^2-row aggregate (map-side combined — the shuffle carries
+    at most k^2 rows per partition at any corpus size); exact integer
+    counts, one identically-shaped division, round(6)."""
+
+    d = table(spark, sf_dir, "documents")
+    toks = F.split("text", " ")
+
+    def hits(markers: list[str]):
+        arr = F.array(*[F.lit(m) for m in markers])
+        return F.size(F.filter(arr, lambda m: F.array_contains(toks, m)))
+
+    h_en, h_de, h_fr = (
+        hits(_LANG_MARKERS["en"]),
+        hits(_LANG_MARKERS["de"]),
+        hits(_LANG_MARKERS["fr"]),
+    )
+    pred = (
+        F.when((h_de > h_en) & (h_de >= h_fr), "de")
+        .when(h_fr > h_en, "fr")
+        .otherwise("en")
+    )
+    m = (
+        d.select("lang", pred.alias("pred_lang"))
+        .groupBy("lang", "pred_lang")
+        .agg(F.count("*").alias("n_docs"))
+    )
+    tot = m.groupBy("lang").agg(F.sum("n_docs").alias("row_total"))
+    return m.join(F.broadcast(tot), "lang").select(
+        "lang",
+        "pred_lang",
+        "n_docs",
+        F.round(
+            F.col("n_docs").cast("double") / F.col("row_total").cast("double"),
+            6,
+        ).alias("share"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_gopher_rules
+# ---------------------------------------------------------------------------
+
+_GOPHER_STOPWORDS = ("the", "a")
+_GOPHER_MIN_WORDS = 15
+_GOPHER_MAX_WORDS = 90
+_GOPHER_MIN_MWL = 3.0
+_GOPHER_MAX_MWL = 10.0
+_GOPHER_MIN_STOP = 1
+_GOPHER_MAX_DUPF = 0.25
+_GOPHER_MAX_TOPR = 0.12
+
+
+@query(
+    "text_gopher_rules",
+    oracle=f"""
+    WITH m AS (
+      SELECT doc_id, string_split(text, ' ') AS tk, n_chars
+      FROM documents),
+    s AS (
+      SELECT doc_id,
+             len(tk) AS n_words,
+             round((n_chars - len(tk) + 1.0) / len(tk), 6) AS mean_word_len,
+             len(list_filter(tk, w -> w IN ('the', 'a')))
+               AS stopword_hits,
+             CASE WHEN len(tk) >= 2 THEN
+               round(1.0 - len(list_distinct(list_transform(
+                       generate_series(1, len(tk) - 1),
+                       i -> list_extract(tk, i) || ' '
+                            || list_extract(tk, i + 1))))
+                     / (len(tk) - 1.0), 6)
+             ELSE 0.0 END AS dup_bigram_frac,
+             round(list_max(list_transform(list_distinct(tk),
+                     w -> len(list_filter(tk, x -> x = w))))
+                   / (len(tk) * 1.0), 6) AS top_word_ratio
+      FROM m)
+    SELECT doc_id, CAST(n_words AS BIGINT) AS n_words, mean_word_len,
+           CAST(stopword_hits AS BIGINT) AS stopword_hits,
+           dup_bigram_frac, top_word_ratio,
+           CAST(CASE WHEN n_words BETWEEN {_GOPHER_MIN_WORDS}
+                            AND {_GOPHER_MAX_WORDS}
+                      AND mean_word_len BETWEEN {_GOPHER_MIN_MWL}
+                            AND {_GOPHER_MAX_MWL}
+                      AND stopword_hits >= {_GOPHER_MIN_STOP}
+                      AND dup_bigram_frac <= {_GOPHER_MAX_DUPF}
+                      AND top_word_ratio <= {_GOPHER_MAX_TOPR}
+                THEN 1 ELSE 0 END AS BIGINT) AS keep_flag
+    FROM s
+    """,
+)
+def text_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """GOPHER QUALITY RULES (Rae et al. 2021, appendix A1.1) — the
+    published rule set modern pretraining pipelines apply before any
+    model-based filtering: word-count bounds, mean-word-length bounds,
+    a stopword-presence gate, a duplicate-bigram ceiling (boilerplate /
+    template text) and a most-frequent-word-ratio ceiling (keyword
+    stuffing). The reference ingests documents unfiltered
+    (app.py:160-212); this is the curation pass in front of it.
+
+    Shape at scale: a SINGLE narrow map pass — every metric is a
+    higher-order function over the token array (filter/transform/
+    list_distinct), entirely JVM-side inside whole-stage codegen. No
+    shuffle, no explode, no join: the per-doc top-word count scans the
+    distinct-token list against the token list (O(v*n) per doc with
+    v,n <= ~100), which beats an explode+groupBy+join-back at any
+    corpus size because it never leaves the row. Filters on keep_flag
+    push straight to the scan at 100 TB.
+
+    Parity: counts and flags are exact integers; ratio denominators
+    are the same integers, so the four doubles agree bit-wise before
+    their single round(6). On this fixture 347/500 docs pass; the
+    word-count, stopword and top-ratio rules each reject a non-trivial
+    slice (62/47/91 docs) while the mean-word-length and dup-bigram
+    rules pass everything (synthetic words are uniform ~4.5 chars) —
+    kept because the published rule set includes them."""
+    d = table(spark, sf_dir, "documents")
+    stop_list = ", ".join(f"'{w}'" for w in _GOPHER_STOPWORDS)
+    m = d.select(
+        "doc_id",
+        F.split("text", " ").alias("tk"),
+        "n_chars",
+    ).select(
+        "doc_id",
+        F.size("tk").cast("bigint").alias("n_words"),
+        F.round(
+            (F.col("n_chars") - F.size("tk") + F.lit(1.0)) / F.size("tk"), 6
+        ).alias("mean_word_len"),
+        F.expr(f"CAST(size(filter(tk, w -> w IN ({stop_list}))) AS BIGINT)")
+        .alias("stopword_hits"),
+        # guarded for 1-token docs: Spark's sequence(1, 0) infers step -1
+        # (giving [1, 0] and an ANSI INVALID_ARRAY_INDEX) where DuckDB's
+        # generate_series(1, 0) is empty, and ANSI double division by
+        # zero throws — the WHEN covers both engines' edge at once
+        F.when(
+            F.size("tk") >= 2,
+            F.round(
+                F.lit(1.0)
+                - F.expr(
+                    "size(array_distinct(transform(sequence(1, size(tk) - 1), "
+                    "i -> concat(element_at(tk, i), ' ', "
+                    "element_at(tk, i + 1)))))"
+                )
+                / (F.size("tk") - F.lit(1.0)),
+                6,
+            ),
+        ).otherwise(0.0).alias("dup_bigram_frac"),
+        F.round(
+            F.expr(
+                "array_max(transform(array_distinct(tk), "
+                "w -> size(filter(tk, x -> x = w))))"
+            )
+            / (F.size("tk") * F.lit(1.0)),
+            6,
+        ).alias("top_word_ratio"),
+    )
+    keep = (
+        F.col("n_words").between(_GOPHER_MIN_WORDS, _GOPHER_MAX_WORDS)
+        & F.col("mean_word_len").between(_GOPHER_MIN_MWL, _GOPHER_MAX_MWL)
+        & (F.col("stopword_hits") >= _GOPHER_MIN_STOP)
+        & (F.col("dup_bigram_frac") <= _GOPHER_MAX_DUPF)
+        & (F.col("top_word_ratio") <= _GOPHER_MAX_TOPR)
+    )
+    return m.select(
+        "doc_id",
+        "n_words",
+        "mean_word_len",
+        "stopword_hits",
+        "dup_bigram_frac",
+        "top_word_ratio",
+        keep.cast("bigint").alias("keep_flag"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_ccnet_ppl_bucket
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "text_ccnet_ppl_bucket",
+    oracle="""
+    WITH toks AS (
+      SELECT d.doc_id, d.lang, t.tok
+      FROM documents d, unnest(string_split(d.text, ' ')) AS t(tok)
+      WHERE t.tok <> ''),
+    lm AS (SELECT lang, tok, count(*) AS n FROM toks GROUP BY 1, 2),
+    tot AS (SELECT lang, sum(n) AS total FROM lm GROUP BY lang),
+    scored AS (
+      SELECT toks.doc_id, toks.lang,
+             count(*) AS n_toks,
+             sum(CAST(round(-ln(lm.n / tot.total), 9)
+                      AS DECIMAL(28, 9))) AS nll
+      FROM toks
+      JOIN lm ON toks.lang = lm.lang AND toks.tok = lm.tok
+      JOIN tot ON toks.lang = tot.lang
+      GROUP BY 1, 2)
+    SELECT doc_id, lang, CAST(n_toks AS BIGINT) AS n_toks,
+           round(CAST(nll AS DOUBLE) / n_toks, 6) AS avg_nll,
+           CAST(ntile(3) OVER (PARTITION BY lang
+                               ORDER BY round(CAST(nll AS DOUBLE) / n_toks, 6),
+                                        doc_id) AS BIGINT) AS ppl_bucket
+    FROM scored
+    """,
+)
+def text_ccnet_ppl_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CCNET PERPLEXITY BUCKETING (Wenzek et al. 2020 §4.3): score
+    every document with a per-language unigram LM trained on the
+    corpus itself, then split each language into head/middle/tail
+    terciles by average negative log-likelihood — the standard
+    "keep the head, audit the tail" curation signal. (CCNet uses a
+    5-gram KenLM; the unigram LM is the same pipeline shape with the
+    LM-training pass expressible as one aggregate.)
+
+    Shape at scale: tokens aggregate to a (lang, token) LM — map-side
+    partial combine collapses corpus rows to vocab rows before the
+    shuffle; the LM then joins back to the token stream. The join is
+    NOT hint-broadcast: the LM is corpus-DERIVED (vocabulary grows
+    with corpus size, unlike a dimension table), so forcing broadcast
+    would ship every language's vocab to all executors and blow the
+    driver/broadcast limit at 100 TB — the token stream is already
+    exploded and hash-partitionable on (lang, tok), so AQE picks
+    broadcast while the LM is small and a shuffle join once it isn't
+    (the round-7 advisory fix; the tiny per-lang TOTALS row stays
+    broadcast). Docs then re-aggregate by doc_id. The tercile split is
+    one window per lang partition over DOC-level rows (corpus
+    cardinality / ~500 chars), which AQE splits per language; ordering
+    is (avg_nll, doc_id) so ties are deterministic.
+
+    Parity: LM probabilities divide exact integers, so -ln(p) is the
+    same double on both engines; per-token NLL is round(9)-quantized
+    and summed as DECIMAL(28,9) (order-independent — the repo's group-
+    sum discipline), and the tercile orders by the ROUNDED score so no
+    sub-ulp drift can flip a bucket."""
+    d = table(spark, sf_dir, "documents")
+    toks = d.select(
+        "doc_id", "lang", F.explode(F.split("text", " ")).alias("tok")
+    ).where(F.col("tok") != "")
+    lm = toks.groupBy("lang", "tok").agg(F.count("*").alias("n"))
+    tot = lm.groupBy("lang").agg(F.sum("n").alias("total"))
+    scored = (
+        toks.join(lm, ["lang", "tok"])
+        .join(F.broadcast(tot), "lang")
+        .groupBy("doc_id", "lang")
+        .agg(
+            F.count("*").cast("bigint").alias("n_toks"),
+            F.sum(
+                F.round(-F.log(F.col("n") / F.col("total")), 9).cast(
+                    "decimal(28,9)"
+                )
+            ).alias("nll"),
+        )
+    )
+    avg_nll = F.round(F.col("nll").cast("double") / F.col("n_toks"), 6)
+    w = Window.partitionBy("lang").orderBy(avg_nll, "doc_id")
+    return scored.select(
+        "doc_id",
+        "lang",
+        "n_toks",
+        avg_nll.alias("avg_nll"),
+        F.ntile(3).over(w).cast("bigint").alias("ppl_bucket"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_burstiness
+# ---------------------------------------------------------------------------
+
+_BURST_MIN_DF = 20
+
+
+@query(
+    "text_burstiness",
+    oracle=f"""
+    WITH toks AS (
+      SELECT d.doc_id, t.tok
+      FROM documents d, unnest(string_split(d.text, ' ')) AS t(tok)
+      WHERE t.tok <> ''),
+    n AS (SELECT count(*) AS n_docs FROM documents),
+    per_doc AS (
+      SELECT tok, doc_id, count(*) AS c FROM toks GROUP BY 1, 2),
+    term AS (
+      SELECT tok, count(*) AS df, sum(c) AS cf, sum(c * c) AS cf2
+      FROM per_doc GROUP BY tok
+      HAVING count(*) >= {_BURST_MIN_DF})
+    SELECT tok, CAST(df AS BIGINT) AS df, CAST(cf AS BIGINT) AS cf,
+           round((CAST(cf2 AS DOUBLE) / n_docs
+                  - (CAST(cf AS DOUBLE) / n_docs)
+                    * (CAST(cf AS DOUBLE) / n_docs))
+                 / (CAST(cf AS DOUBLE) / n_docs), 6) AS burstiness
+    FROM term CROSS JOIN n
+    ORDER BY burstiness DESC, tok
+    LIMIT 20
+    """,
+)
+def text_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TERM BURSTINESS (Church & Gale 1995): variance-to-mean ratio of
+    per-document term counts (zeros included via the closed form
+    E[x^2] - E[x]^2 over all N docs) — separates topical terms, which
+    clump into few documents, from function words spread evenly
+    (burstiness ~= the overdispersion a Poisson model can't explain).
+    Content-word detection for stopword-list induction and keyword
+    extraction at corpus scale. Top-20 burstiest terms with df >=
+    {_BURST_MIN_DF} support.
+
+    Shape at scale: tokens collapse to (term, doc) counts (map-side
+    combine), then to per-term sufficient statistics (df, sum c, sum
+    c^2) — two vocabulary-bounded hash aggregates; docs that lack a
+    term contribute exactly zero to every sum, so the all-N moments
+    need NO join back to the corpus, just the scalar doc count
+    broadcast into the final projection. Top-20 is
+    TakeOrderedAndProject.
+
+    Parity: all sufficient statistics are exact integers; the
+    variance/mean algebra is the identical double expression shape on
+    both engines, one round(6); ties break on the term."""
+    d = table(spark, sf_dir, "documents")
+    toks = d.select(
+        "doc_id", F.explode(F.split("text", " ")).alias("tok")
+    ).where(F.col("tok") != "")
+    n = d.agg(F.count("*").alias("n_docs"))
+    per_doc = toks.groupBy("tok", "doc_id").agg(F.count("*").alias("c"))
+    term = (
+        per_doc.groupBy("tok")
+        .agg(
+            F.count("*").alias("df"),
+            F.sum("c").alias("cf"),
+            F.sum(F.col("c") * F.col("c")).alias("cf2"),
+        )
+        .where(F.col("df") >= _BURST_MIN_DF)
+    )
+    mean = F.col("cf").cast("double") / F.col("n_docs")
+    return (
+        term.crossJoin(F.broadcast(n))
+        .select(
+            "tok",
+            F.col("df").cast("bigint").alias("df"),
+            F.col("cf").cast("bigint").alias("cf"),
+            F.round(
+                (F.col("cf2").cast("double") / F.col("n_docs")
+                 - mean * mean)
+                / mean,
+                6,
+            ).alias("burstiness"),
+        )
+        .orderBy(F.col("burstiness").desc(), "tok")
+        .limit(20)
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_readability_score
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "text_readability_score",
+    oracle="""
+    WITH m AS (
+      SELECT doc_id, lang,
+             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
+             CAST(len(regexp_extract_all(text, '[aeiou]+')) AS BIGINT)
+               AS n_syllables
+      FROM documents)
+    SELECT doc_id, lang, n_words, n_syllables,
+           round(206.835 - 1.015 * n_words
+                 - 84.6 * (CAST(n_syllables AS DOUBLE) / n_words), 6)
+             AS flesch
+    FROM m WHERE n_words > 0
+    """,
+)
+def text_readability_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """FLESCH READING EASE per document — the classic readability gate
+    a curation pipeline uses next to the Gopher rules (too-hard and
+    too-easy tails both correlate with low-quality text). Syllables
+    are approximated by vowel-group counts (runs of [aeiou]+ — the
+    standard cheap proxy), and the fixture's documents carry no
+    sentence punctuation, so each document is one 'sentence' (the
+    words/sentences term becomes n_words — stated in the formula
+    rather than hidden).
+
+    One map-side pass: split + one regexp scan per document, zero
+    shuffles, scan throughput at any corpus size. Parity: counts are
+    exact integers on both regex engines (non-overlapping [aeiou]+
+    matches agree on ASCII); the score is one identically-shaped
+    double expression, round(6)."""
+    d = table(spark, sf_dir, "documents")
+    m = d.select(
+        "doc_id",
+        "lang",
+        F.size(F.split("text", " ")).cast("bigint").alias("n_words"),
+        F.expr("CAST(regexp_count(text, '[aeiou]+') AS BIGINT)").alias(
+            "n_syllables"
+        ),
+    ).where(F.col("n_words") > 0)
+    return m.select(
+        "doc_id",
+        "lang",
+        "n_words",
+        "n_syllables",
+        F.round(
+            206.835
+            - 1.015 * F.col("n_words")
+            - 84.6 * (F.col("n_syllables").cast("double") / F.col("n_words")),
+            6,
+        ).alias("flesch"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_mattr_diversity
+# ---------------------------------------------------------------------------
+
+_MATTR_W = 50  # window length (tokens); docs shorter than W fall back to TTR
+
+
+@query(
+    "text_mattr_diversity",
+    oracle=f"""
+    WITH tok AS (
+      SELECT doc_id, t.tok, t.pos FROM documents, LATERAL (
+        SELECT unnest(string_split(text, ' ')) AS tok,
+               generate_subscripts(string_split(text, ' '), 1) AS pos) t),
+    wn AS (
+      SELECT doc_id, pos,
+             CAST(len(list_distinct(list(tok) OVER (
+               PARTITION BY doc_id ORDER BY pos
+               ROWS BETWEEN {_MATTR_W - 1} PRECEDING AND CURRENT ROW)))
+               AS BIGINT) AS dw,
+             count(*) OVER (PARTITION BY doc_id ORDER BY pos
+               ROWS BETWEEN {_MATTR_W - 1} PRECEDING AND CURRENT ROW) AS fl
+      FROM tok),
+    agg AS (
+      SELECT doc_id, CAST(max(pos) AS BIGINT) AS n_tokens,
+             CAST(count(CASE WHEN fl = {_MATTR_W} THEN 1 END) AS BIGINT)
+               AS n_windows,
+             sum(CASE WHEN fl = {_MATTR_W}
+                      THEN CAST(dw AS DECIMAL(10,6)) / {_MATTR_W}
+                      ELSE CAST(0 AS DECIMAL(10,6)) END) AS sttr
+      FROM wn GROUP BY doc_id),
+    fullttr AS (
+      SELECT doc_id, CAST(count(DISTINCT tok) AS BIGINT) AS dfull
+      FROM tok GROUP BY doc_id)
+    SELECT a.doc_id, a.n_tokens, a.n_windows,
+           round(CASE WHEN a.n_windows > 0
+                      THEN CAST(a.sttr AS DOUBLE) / a.n_windows
+                      ELSE CAST(f.dfull AS DOUBLE) / a.n_tokens END, 6)
+             AS mattr_{_MATTR_W}
+    FROM agg a JOIN fullttr f ON a.doc_id = f.doc_id
+    """,
+)
+def text_mattr_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MATTR LEXICAL DIVERSITY (Covington & McFall 2010): the mean
+    type-token ratio over every complete 50-token sliding window —
+    the length-independent vocabulary-richness score that plain TTR
+    is not (TTR decays mechanically with document length, so
+    comparing docs of different lengths on TTR is a category error;
+    Gopher-style quality stacks use windowed diversity for exactly
+    this reason). Docs shorter than the window fall back to whole-doc
+    TTR, flagged by n_windows = 0.
+
+    Scale shape: one per-DOC ordered window (bounded by doc length)
+    materializes each 50-token frame; distinctness is a JVM
+    higher-order pass over the constant-size frame; the rollup is one
+    keyed aggregate. The whole-doc fallback is a second keyed
+    aggregate.
+
+    Parity: window TTRs are EXACT decimals (dw/50 with dw an integer
+    — scale 6 holds them exactly), summed order-independently; one
+    final division and round(6)."""
+    d = table(spark, sf_dir, "documents")
+    tok = d.select(
+        "doc_id", F.posexplode(F.split("text", " ")).alias("pos0", "tok")
+    ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "tok")
+    wf = (
+        Window.partitionBy("doc_id")
+        .orderBy("pos")
+        .rowsBetween(-(_MATTR_W - 1), Window.currentRow)
+    )
+    wn = tok.select(
+        "doc_id",
+        "pos",
+        F.size(F.array_distinct(F.collect_list("tok").over(wf)))
+        .cast("bigint")
+        .alias("dw"),
+        F.count("*").over(wf).alias("fl"),
+    )
+    agg = wn.groupBy("doc_id").agg(
+        F.max("pos").cast("bigint").alias("n_tokens"),
+        F.count(F.when(F.col("fl") == _MATTR_W, 1))
+        .cast("bigint")
+        .alias("n_windows"),
+        F.sum(
+            F.when(
+                F.col("fl") == _MATTR_W,
+                F.expr(f"CAST(dw AS DECIMAL(10,6)) / {_MATTR_W}"),
+            ).otherwise(F.expr("CAST(0 AS DECIMAL(10,6))"))
+        ).alias("sttr"),
+    )
+    fullttr = tok.groupBy("doc_id").agg(
+        F.countDistinct("tok").cast("bigint").alias("dfull")
+    )
+    return agg.join(fullttr, "doc_id").selectExpr(
+        "doc_id",
+        "n_tokens",
+        "n_windows",
+        "round(CASE WHEN n_windows > 0"
+        " THEN CAST(sttr AS DOUBLE) / n_windows"
+        f" ELSE CAST(dfull AS DOUBLE) / n_tokens END, 6) AS mattr_{_MATTR_W}",
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_vocab_coverage_topn
+# ---------------------------------------------------------------------------
+
+_VC_NS = [10, 50, 100, 500, 1000]
+
+
+def _vc_oracle() -> str:
+    rows = "\n    UNION ALL\n    ".join(
+        f"SELECT CAST({n} AS BIGINT) AS top_n, v.vocab_size,"
+        f" v.tokens_total,"
+        f" (SELECT CAST(coalesce(sum(c), 0) AS BIGINT) FROM ("
+        f"   SELECT c FROM tf ORDER BY c DESC, term LIMIT {n}) t)"
+        f" AS tokens_covered,"
+        f" round(CAST((SELECT coalesce(sum(c), 0) FROM ("
+        f"   SELECT c FROM tf ORDER BY c DESC, term LIMIT {n}) t)"
+        f" AS DOUBLE) / v.tokens_total, 6) AS coverage"
+        f" FROM v"
+        for n in _VC_NS
+    )
+    return f"""
+    WITH tf AS MATERIALIZED (
+      SELECT u.tok AS term, CAST(count(*) AS BIGINT) AS c
+      FROM documents, unnest(string_split(text, ' ')) AS u(tok)
+      WHERE u.tok <> ''
+      GROUP BY u.tok),
+    v AS (
+      SELECT CAST(count(*) AS BIGINT) AS vocab_size,
+             CAST(sum(c) AS BIGINT) AS tokens_total
+      FROM tf)
+    {rows}
+    ORDER BY top_n
+    """
+
+
+@query("text_vocab_coverage_topn", oracle=_vc_oracle())
+def text_vocab_coverage_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TOP-N VOCABULARY COVERAGE CURVE — what share of all token
+    OCCURRENCES the N most frequent types cover, for N = 10..1000:
+    the tokenizer-budget read (how small a vocab still covers 95% of
+    the stream decides the BPE budget pipeline_bpe_merges spends) and
+    the OOV-rate planner's table.  Family placement: agg_heaps_law_fit
+    models vocabulary GROWTH with corpus size, text_zipf_slope the
+    rank-frequency EXPONENT; this op is the operational integral of
+    the Zipf curve — cumulative mass at fixed rank cuts.  Tie note:
+    coverage is tie-insensitive (tied types at the cutoff contribute
+    the same count whichever enters), but the pick is still
+    deterministic via the (count DESC, term) order.
+
+    Parity: counts exact; one round(6) coverage division per row.
+
+    Shape at 100 TB: one explode + vocabulary-keyed count (the
+    reusable tf artifact), then each cut is a TakeOrderedAndProject
+    top-N heap merge over the vocabulary frame — never a global
+    row_number (round-6 rule); the five cuts reuse one checkpointed
+    tf frame."""
+    d = table(spark, sf_dir, "documents")
+    tf = (
+        d.select(F.explode(F.split("text", " ")).alias("term"))
+        .where(F.col("term") != "")
+        .groupBy("term")
+        .agg(F.count("*").cast("bigint").alias("c"))
+        .localCheckpoint()  # vocabulary frame read by 5 cuts + totals
+    )
+    v = tf.agg(
+        F.count("*").cast("bigint").alias("vocab_size"),
+        F.sum("c").cast("bigint").alias("tokens_total"),
+    )
+    out = None
+    for n in _VC_NS:
+        cov = (
+            tf.orderBy(F.col("c").desc(), "term")
+            .limit(n)
+            .agg(
+                F.expr("CAST(coalesce(sum(c), 0) AS BIGINT)").alias(
+                    "tokens_covered"
+                )
+            )
+        )
+        row = (
+            v.crossJoin(F.broadcast(cov))
+            .selectExpr(
+                f"CAST({n} AS BIGINT) AS top_n",
+                "vocab_size",
+                "tokens_total",
+                "tokens_covered",
+                "round(CAST(tokens_covered AS DOUBLE) / tokens_total, 6)"
+                " AS coverage",
+            )
+        )
+        out = row if out is None else out.unionByName(row)
+    return out.orderBy("top_n")
+
+
+# ---------------------------------------------------------------------------
+# text_minhash_band_tuning
+# ---------------------------------------------------------------------------
+
+_TUNE_SCHEMES = [(8, 1), (4, 2), (2, 4), (1, 8)]  # b x r over the 8 hashes
+_TUNE_PCTS = [10, 25, 50, 75, 90]
+_TUNE_STRIDE = 250  # deterministic pair sampling: doc i vs doc i+250
+
+
+def _band_key(comps: list[str], prime: int) -> str:
+    """Band key = left fold (h*131 + s) % P over the band's signature
+    components — identical text on both engines (components < P, so
+    products stay far inside int64)."""
+    expr = comps[0]
+    for c in comps[1:]:
+        expr = f"(({expr}) * 131 + {c}) % {prime}"
+    return expr
+
+
+def _p_collide(b: int, r: int) -> str:
+    """1 - (1 - j^r)^b as an UNROLLED multiplication chain (integer
+    exponents only) — bit-identical IEEE ops on both engines, never
+    pow() (cross-libm ulp drift, CLAUDE.md round-7)."""
+
+    def sq_chain(base: str, e: int) -> str:
+        # e is a power of two in every scheme here
+        expr = base
+        while e > 1:
+            expr = f"({expr}) * ({expr})"
+            e //= 2
+        return expr
+
+    jr = sq_chain("j", r)
+    if b == 1:
+        return jr
+    return f"1.0 - ({sq_chain(f'(1.0 - ({jr}))', b)})"
+
+
+def _tune_oracle() -> str:
+    sig_cols = ",\n             ".join(
+        f"list_min(list_transform(cs, c -> ({_A[i]} * c + {_B[i]}) "
+        f"% {P_HASH})) AS s{i}"
+        for i in range(N_HASH)
+    )
+    slot_ctes = []
+    for b, r in _TUNE_SCHEMES:
+        bands = "\n        UNION ALL\n        ".join(
+            f"SELECT {j} AS band_no, "
+            f"{_band_key([f's{j * r + k}' for k in range(r)], P_HASH)} AS bk "
+            "FROM sigs"
+            for j in range(b)
+        )
+        slot_ctes.append(
+            f"slots_{b}_{r} AS (\n"
+            f"      SELECT CAST(sum(c * (c - 1) // 2) AS BIGINT) AS cand\n"
+            f"      FROM (SELECT count(*) AS c FROM (\n        {bands}\n"
+            f"        ) bb GROUP BY band_no, bk) g)"
+        )
+    scheme_rows = "\n      UNION ALL\n      ".join(
+        f"SELECT CAST({b} AS BIGINT) AS bands, CAST({r} AS BIGINT) "
+        f"AS rows_per_band, cand FROM slots_{b}_{r}"
+        for b, r in _TUNE_SCHEMES
+    )
+    p_cases = "\n             ".join(
+        f"WHEN bands = {b} AND rows_per_band = {r} "
+        f"THEN round({_p_collide(b, r)}, 6)"
+        for b, r in _TUNE_SCHEMES
+    )
+    pct_rows = " UNION ALL ".join(
+        f"SELECT CAST({p} AS BIGINT) AS quantile_pct" for p in _TUNE_PCTS
+    )
+    slot_cte_block = ",\n    ".join(slot_ctes)
+    return f"""
+    WITH codes AS (
+      SELECT doc_id, {_DUCK_CODES} AS cs FROM documents),
+    sigs AS (
+      SELECT doc_id,
+             {sig_cols}
+      FROM codes),
+    csets AS (SELECT doc_id, list_distinct(cs) AS cset FROM codes),
+    pairs AS (
+      SELECT (CAST(len(list_filter(a.cset, x -> list_contains(b.cset, x)))
+                AS BIGINT) * 1000000)
+             // (len(a.cset) + len(b.cset)
+                 - len(list_filter(a.cset, x -> list_contains(b.cset, x))))
+               AS j_micro
+      FROM csets a JOIN csets b ON b.doc_id = a.doc_id + {_TUNE_STRIDE}),
+    jl AS (
+      SELECT list_sort(list(j_micro)) AS js,
+             CAST(count(*) AS BIGINT) AS n
+      FROM pairs),
+    quant AS (
+      SELECT p.quantile_pct,
+             list_extract(jl.js,
+               CAST((p.quantile_pct * jl.n + 99) // 100 AS INT)) AS j_micro
+      FROM ({pct_rows}) p CROSS JOIN jl),
+    {slot_cte_block},
+    schemes AS (
+      {scheme_rows})
+    SELECT s.bands, s.rows_per_band, q.quantile_pct, q.j_micro,
+           CASE {p_cases}
+           END AS p_collide,
+           s.cand AS candidate_slots
+    FROM schemes s CROSS JOIN
+         (SELECT quantile_pct, j_micro,
+                 CAST(j_micro AS DOUBLE) / 1000000.0 AS j FROM quant) q
+    ORDER BY s.bands DESC, q.quantile_pct
+    """
+
+
+@query("text_minhash_band_tuning", oracle=_tune_oracle())
+def text_minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash LSH (bands, rows) TUNING TABLE — the S-curve sheet an
+    engineer reads before picking dedup_near_minhash's operating point
+    (its production config is the (4, 2) row): for every banding of
+    the repo's 8 signature hashes — (8,1), (4,2), (2,4), (1,8) — emit
+    the analytic candidate probability 1-(1-j^r)^b at the corpus's
+    MEASURED code-set Jaccard quantiles (p10/p25/p50/p75/p90 over a
+    deterministic stride-250 pair sample) plus the DETERMINISTIC
+    candidate-slot count that banding produces on this corpus
+    (sum over band groups of C(size, 2) — the join volume the scheme
+    would feed the verifier; slots, not distinct pairs, because the
+    count is computable from group sizes alone with no pair
+    materialization at any scale).  The vec_ann_recall_sweep analogue
+    for the dedup side.
+
+    Scale shape: signatures are one map pass (shared expression text
+    with dedup_minhash_signatures); per-scheme candidate volume is a
+    groupBy count over band keys — never a pair join; the measured
+    Jaccard sample is one stride equi-join producing n_docs pairs, and
+    its exact quantiles are integer j_micro = (|inter|*1e6) div |union|
+    picks from one sorted bounded list (at 100 TB you'd hash-gate the
+    pair sample and swap the exact pick for approx_percentile — the
+    stride design keeps the list |docs|-bounded, stated here because
+    the collect_list row is the op's only single-node piece).
+
+    Parity: band keys and j_micro are exact BIGINT folds; p_collide is
+    an UNROLLED multiplication chain on j = j_micro/1e6 (integer
+    exponents, identical IEEE op sequence both engines — pow() would
+    drift cross-libm); quantile indexes are (pct*n + 99) div 100, all
+    integers.  The (4,2) candidate_slots column is cross-checked
+    against dedup_near_minhash's banding by the recompute pytest."""
+    d = table(spark, sf_dir, "documents")
+    codes = d.select("doc_id", F.expr(_SPARK_CODES).alias("cs"))
+    sigs = codes.select(
+        "doc_id",
+        *[
+            F.expr(
+                f"array_min(transform(cs, c -> ({_A[i]} * c + {_B[i]}) "
+                f"% {P_HASH}))"
+            ).alias(f"s{i}")
+            for i in range(N_HASH)
+        ],
+    ).localCheckpoint()  # bounded: one row per doc, 9 ints; referenced
+    # by all 4 scheme branches (round-8 rule: multi-referenced frames
+    # checkpoint, never re-derive the scan per branch)
+
+    scheme_frames = []
+    for b, r in _TUNE_SCHEMES:
+        bands = None
+        for j in range(b):
+            part = sigs.select(
+                F.lit(j).alias("band_no"),
+                F.expr(
+                    _band_key([f"s{j * r + k}" for k in range(r)], P_HASH)
+                ).alias("bk"),
+            )
+            bands = part if bands is None else bands.unionByName(part)
+        cand = (
+            bands.groupBy("band_no", "bk")
+            .agg(F.count("*").alias("c"))
+            .agg(
+                F.sum(F.expr("c * (c - 1) div 2"))
+                .cast("bigint")
+                .alias("cand")
+            )
+            .select(
+                F.lit(b).cast("bigint").alias("bands"),
+                F.lit(r).cast("bigint").alias("rows_per_band"),
+                "cand",
+            )
+        )
+        scheme_frames.append(cand)
+    schemes = scheme_frames[0]
+    for fr in scheme_frames[1:]:
+        schemes = schemes.unionByName(fr)
+
+    csets = codes.select("doc_id", F.array_distinct("cs").alias("cset"))
+    a = csets.alias("a")
+    bb = csets.alias("b")
+    inter = "size(array_intersect(a.cset, b.cset))"
+    pairs = a.join(
+        bb, F.col("b.doc_id") == F.col("a.doc_id") + _TUNE_STRIDE
+    ).select(
+        F.expr(
+            f"CAST({inter} AS BIGINT) * 1000000 div "
+            f"(size(a.cset) + size(b.cset) - {inter})"
+        ).alias("j_micro")
+    )
+    jl = pairs.agg(
+        F.sort_array(F.collect_list("j_micro")).alias("js"),
+        F.count("*").cast("bigint").alias("n"),
+    )
+    pcts = spark.createDataFrame(
+        [(p,) for p in _TUNE_PCTS], "quantile_pct bigint"
+    )
+    quant = (
+        pcts.crossJoin(F.broadcast(jl))
+        .select(
+            "quantile_pct",
+            F.expr(
+                "element_at(js, CAST((quantile_pct * n + 99) div 100 "
+                "AS INT))"
+            ).alias("j_micro"),
+        )
+        .withColumn("j", F.expr("CAST(j_micro AS DOUBLE) / 1000000.0"))
+    )
+    p_case = (
+        "CASE "
+        + " ".join(
+            f"WHEN bands = {b} AND rows_per_band = {r} "
+            f"THEN round({_p_collide(b, r)}, 6)"
+            for b, r in _TUNE_SCHEMES
+        )
+        + " END"
+    )
+    return (
+        schemes.crossJoin(F.broadcast(quant))
+        .select(
+            "bands",
+            "rows_per_band",
+            "quantile_pct",
+            "j_micro",
+            F.expr(p_case).alias("p_collide"),
+            F.col("cand").alias("candidate_slots"),
+        )
+        .orderBy(F.col("bands").desc(), "quantile_pct")
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_dsir_importance_weights
+# ---------------------------------------------------------------------------
+
+_DSIR_B = 128  # hashed-unigram feature buckets (2^7)
+_DSIR_DIV = 33554432  # 2^32 / 128 — HIGH 7 bits of the 32-bit mix
+_DSIR_TARGET = "en"  # target domain: English docs (fixture lang field)
+
+# token -> rolling char code (repo convention) -> Knuth 32-bit mix ->
+# high 7 bits.  The HIGH bits because the low bit of an odd-multiplier
+# product mod 2^32 is the input's own parity (round-9 rule).
+_DSIR_BUCKET_SPARK = (
+    "CAST(((aggregate(split(tok, ''), CAST(0 AS BIGINT), "
+    f"(h, c) -> (h * 31 + ascii(c)) % {P_CODE}) * 2654435761) "
+    f"% 4294967296) div {_DSIR_DIV} AS BIGINT)"
+)
+_DSIR_BUCKET_DUCK = (
+    "CAST(((list_reduce(list_prepend(CAST(0 AS BIGINT), "
+    "list_transform(string_split(tok, ''), "
+    "c -> CAST(ascii(c) AS BIGINT))), "
+    f"(h, c) -> (h * 31 + c) % {P_CODE}) * 2654435761) "
+    f"% 4294967296) // {_DSIR_DIV} AS BIGINT)"
+)
+
+
+@query(
+    "text_dsir_importance_weights",
+    oracle=f"""
+    WITH tk AS (
+      SELECT doc_id, lang, u.tok,
+             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
+      FROM documents, unnest(string_split(text, ' ')) AS u(tok)),
+    db AS (
+      SELECT doc_id, lang, n_tokens,
+             {_DSIR_BUCKET_DUCK} AS bucket,
+             CAST(count(*) AS BIGINT) AS tf
+      FROM tk GROUP BY 1, 2, 3, 4),
+    braw AS (
+      SELECT bucket, CAST(sum(tf) AS BIGINT) AS cr FROM db GROUP BY 1),
+    btgt AS (
+      SELECT bucket, CAST(sum(tf) AS BIGINT) AS ct FROM db
+      WHERE lang = '{_DSIR_TARGET}' GROUP BY 1),
+    tot AS (
+      SELECT CAST(sum(tf) AS BIGINT) AS rtot,
+             CAST(coalesce(sum(CASE WHEN lang = '{_DSIR_TARGET}'
+                                    THEN tf END), 0) AS BIGINT) AS ttot
+      FROM db),
+    llr AS (
+      SELECT r.bucket,
+             CAST(round(ln(
+               CAST((coalesce(g.ct, 0) + 1) * (t.rtot + {_DSIR_B})
+                    AS DOUBLE)
+               / CAST((r.cr + 1) * (t.ttot + {_DSIR_B}) AS DOUBLE)),
+               9) AS DECIMAL(19,9)) AS term
+      FROM braw r LEFT JOIN btgt g ON r.bucket = g.bucket
+      CROSS JOIN tot t)
+    SELECT d.doc_id, d.lang, d.n_tokens,
+           CAST(CASE WHEN d.lang = '{_DSIR_TARGET}' THEN 1 ELSE 0 END
+                AS BIGINT) AS is_target,
+           round(CAST(sum(CAST(d.tf AS DECIMAL(9,0)) * l.term) AS DOUBLE),
+                 6) AS llr_weight
+    FROM db d JOIN llr l ON d.bucket = l.bucket
+    GROUP BY d.doc_id, d.lang, d.n_tokens
+    ORDER BY d.doc_id
+    """,
+)
+def text_dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DSIR IMPORTANCE WEIGHTS for data selection (Xie et al. 2023,
+    "Data Selection for Language Models via Importance Resampling"):
+    per-document log importance weight ln p_target(x) - ln p_raw(x)
+    under hashed-unigram bag-of-words models — the selection-side
+    companion to pipeline_mixture_reweight (which reweights a GIVEN
+    mixture; this op scores each raw document's resemblance to a
+    target domain so the sampler can draw the mixture in the first
+    place).  Target = the fixture's English docs; raw = the whole
+    corpus; features = token char-codes mixed into 128 hash buckets
+    (Knuth high bits); both unigram models are Laplace-smoothed
+    (+1 / +B).  A positive weight reads "more target-like than the
+    corpus average" — DSIR then resamples proportional to exp(w).
+
+    Parity (the dynamic-BM25 rule, rag_prf_query_expansion): each
+    bucket's LLR term ln((ct+1)(R+B) / ((cr+1)(T+B))) is ONE double
+    division of exact BIGINT products, round(9) into DECIMAL(19,9);
+    per-doc sums multiply by tf as DECIMAL(9,0) so the product is
+    DECIMAL(29,9) — exact, order-independent — and round(6) touches
+    only the output.  (BIGINT * DECIMAL would silently truncate the
+    scale: BIGINT counts as precision 20, round-8 rule.)
+
+    Shape at 100 TB: one explode + (doc, bucket) aggregate — the same
+    reusable tf artifact every sparse-retrieval op builds; the bucket
+    model table is <= 128 rows (a CONSTANT: the feature-space size,
+    not data) and broadcasts; per-doc weights are one map-side join +
+    sum.  Raw-count products fit int64 through ~1e9 tokens per side;
+    a 100 TB corpus lifts them to DECIMAL first."""
+    d = table(spark, sf_dir, "documents")
+    tk = d.select(
+        "doc_id",
+        "lang",
+        F.expr("CAST(size(split(text, ' ')) AS BIGINT)").alias("n_tokens"),
+        F.explode(F.split("text", " ")).alias("tok"),
+    )
+    db = tk.groupBy(
+        "doc_id",
+        "lang",
+        "n_tokens",
+        F.expr(_DSIR_BUCKET_SPARK).alias("bucket"),
+    ).agg(F.count("*").cast("bigint").alias("tf"))
+    braw = db.groupBy("bucket").agg(F.sum("tf").cast("bigint").alias("cr"))
+    btgt = (
+        db.where(F.col("lang") == _DSIR_TARGET)
+        .groupBy("bucket")
+        .agg(F.sum("tf").cast("bigint").alias("ct"))
+    )
+    tot = db.agg(
+        F.sum("tf").cast("bigint").alias("rtot"),
+        F.expr(
+            f"CAST(coalesce(sum(CASE WHEN lang = '{_DSIR_TARGET}'"
+            " THEN tf END), 0) AS BIGINT)"
+        ).alias("ttot"),
+    )
+    llr = (
+        braw.join(btgt, "bucket", "left")
+        .crossJoin(F.broadcast(tot))
+        .selectExpr(
+            "bucket",
+            f"CAST(round(ln("
+            f"CAST((coalesce(ct, 0) + 1) * (rtot + {_DSIR_B}) AS DOUBLE)"
+            f" / CAST((cr + 1) * (ttot + {_DSIR_B}) AS DOUBLE)),"
+            f" 9) AS DECIMAL(19,9)) AS term",
+        )
+    )
+    return (
+        db.join(F.broadcast(llr), "bucket")  # <=128-row model table
+        .groupBy("doc_id", "lang", "n_tokens")
+        .agg(
+            F.expr(
+                "round(CAST(sum(CAST(tf AS DECIMAL(9,0)) * term)"
+                " AS DOUBLE), 6)"
+            ).alias("llr_weight")
+        )
+        .selectExpr(
+            "doc_id",
+            "lang",
+            "n_tokens",
+            f"CAST(CASE WHEN lang = '{_DSIR_TARGET}' THEN 1 ELSE 0 END"
+            " AS BIGINT) AS is_target",
+            "llr_weight",
+        )
+        .orderBy("doc_id")
     )

@@ -25,9 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.vector import (
-    cosine,
     cosine_fixed,
-    cosine_to_const,
     cosine_to_const_fixed,
     dot,
     dot_fixed,
@@ -37,6 +35,7 @@ from ..functions.vector import (
 )
 from ..registry import query
 from ..tables import SCRATCH, session_artifact, sf_tag, table
+from .dedup import _KM_D, _KM_ITERS, _km_asg_ctes, _km_assignments
 
 # DuckDB fragment: cosine similarity between two DOUBLE[] lists, with the
 # same sequential-fold arithmetic as functions.vector.cosine.
@@ -932,3 +931,951 @@ def vec_topk_scatter_gather(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("query_id", "rn")
     )
+
+
+_KM_DSEL = (
+    "CASE WHEN cl = 0 THEN d0 WHEN cl = 1 THEN d1 "
+    "WHEN cl = 2 THEN d2 ELSE d3 END"
+)
+
+
+def _km_oracle() -> str:
+    dims = range(1, _KM_D + 1)
+    T = _KM_ITERS
+    parts = _km_asg_ctes()
+    parts.append(
+        f"per AS (SELECT cl, count(*) AS n_points, "
+        f"sum(CAST(round({_KM_DSEL}, 9) AS DECIMAL(28,12))) AS inert "
+        f"FROM asg{T} GROUP BY cl)"
+    )
+    body = ",\n    ".join(parts)
+    return (
+        body
+        + f"""
+    SELECT p.cl AS cluster_id, p.n_points,
+           {', '.join(f'round(c.c{i}, 6) AS c{i}' for i in dims)},
+           round(CAST(p.inert AS DOUBLE), 4) AS inertia
+    FROM per p JOIN cent{_KM_ITERS} c ON p.cl = c.cl
+    """
+    )
+
+
+@query("vec_kmeans_lloyd", oracle=_km_oracle())
+def vec_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DISTRIBUTED K-MEANS (Lloyd, k=4, 3 unrolled iterations) over the
+    8-dim matryoshka prefix of the embedding corpus — the clustering
+    primitive under IVF coarse quantizers (vec_ivf_ann trains one on a
+    bounded sample; THIS op is the full-corpus variant), corpus
+    topic-bucketing, and diversity sampling.
+
+    Per iteration the corpus is scanned ONCE: centroids pivot to a
+    single broadcast row (k*d values — never a shuffled join), distance
+    + argmin are codegen'd scalar arithmetic (distances aliased so each
+    is evaluated once, the Janino-64KB lesson of vec_radius_search),
+    and the update is one map-side-combined aggregate producing k rows.
+    Linear in corpus size, k*d bytes of driver state, zero collects —
+    the exact shape that holds at 100 TB x 1000 executors.
+
+    Parity discipline (the PageRank recipe): dimension means accumulate
+    as DECIMAL(18,9) (order-independent sums), every centroid re-
+    quantizes to the round(9) grid each iteration so sub-ulp drift
+    cannot compound across iterations, and per-point inertia terms are
+    round(9)-quantized before the DECIMAL total. The oracle unrolls the
+    same three iterations as chained CTEs (a recursive CTE cannot
+    reference itself twice)."""
+    dims = range(1, _KM_D + 1)
+    asg, cent = _km_assignments(spark, sf_dir)
+    per = asg.groupBy("cl").agg(
+        F.count("*").alias("n_points"),
+        F.sum(
+            F.expr(f"CAST(round({_KM_DSEL}, 9) AS DECIMAL(28,12))")
+        ).alias("inert"),
+    )
+    return per.join(F.broadcast(cent), "cl").select(
+        F.col("cl").alias("cluster_id"),
+        "n_points",
+        *[F.round(F.col(f"c{i}"), 6).alias(f"c{i}") for i in dims],
+        F.round(F.col("inert").cast("double"), 4).alias("inertia"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# vec_pca_power_iter
+# ---------------------------------------------------------------------------
+
+_PCA_D = 8  # dim prefix (same matryoshka prefix as vec_kmeans_lloyd)
+_PCA_ITERS = 5  # fixed power iterations, unrolled on both engines
+
+
+def _pca_cov(i: int, j: int) -> str:
+    """cov(i,j) from the raw moment sums — identical expression text on
+    both engines; round(9)-quantized so iteration arithmetic starts
+    from the same grid."""
+    a, b = min(i, j), max(i, j)
+    return (
+        f"round(CAST(s{a}_{b} AS DOUBLE) / n "
+        f"- (CAST(s{a} AS DOUBLE) / n) * (CAST(s{b} AS DOUBLE) / n), 9)"
+    )
+
+
+def _pca_w(i: int) -> str:
+    """Row i of C*v — fixed left-to-right addition order on both
+    engines, so the fold is bit-identical."""
+    return " + ".join(f"c{i}_{j} * v{j}" for j in range(1, _PCA_D + 1))
+
+
+_PCA_NORM = " + ".join(f"w{i} * w{i}" for i in range(1, _PCA_D + 1))
+_PCA_LAMBDA = " + ".join(f"v{i} * w{i}" for i in range(1, _PCA_D + 1))
+_PCA_TRACE = " + ".join(f"c{i}_{i}" for i in range(1, _PCA_D + 1))
+
+
+def _pca_oracle() -> str:
+    D, T = _PCA_D, _PCA_ITERS
+    dims = range(1, D + 1)
+    ccols = ", ".join(f"c{i}_{j}" for i in dims for j in dims)
+    parts = [
+        "WITH pts AS (SELECT "
+        + ", ".join(
+            f"CAST(list_extract(embedding, {i}) AS DOUBLE) AS e{i}" for i in dims
+        )
+        + " FROM embeddings)",
+        "mom AS (SELECT count(*) AS n, "
+        + ", ".join(f"sum(CAST(e{i} AS DECIMAL(18,9))) AS s{i}" for i in dims)
+        + ", "
+        + ", ".join(
+            f"sum(CAST(e{i} AS DECIMAL(18,9)) * CAST(e{j} AS DECIMAL(18,9)))"
+            f" AS s{i}_{j}"
+            for i in dims
+            for j in dims
+            if i <= j
+        )
+        + " FROM pts)",
+        "cov AS (SELECT "
+        + ", ".join(f"{_pca_cov(i, j)} AS c{i}_{j}" for i in dims for j in dims)
+        + " FROM mom)",
+        f"v0 AS (SELECT {ccols}, "
+        + ", ".join(
+            f"{'1.0' if i == 1 else '0.0'} AS v{i}" for i in dims
+        )
+        + " FROM cov)",
+    ]
+    for t in range(1, T + 1):
+        parts.append(
+            f"w{t} AS (SELECT {ccols}, "
+            + ", ".join(f"{_pca_w(i)} AS w{i}" for i in dims)
+            + f" FROM v{t - 1})"
+        )
+        parts.append(
+            f"v{t} AS (SELECT {ccols}, "
+            + ", ".join(
+                f"round(w{i} / sqrt({_PCA_NORM}), 9) AS v{i}" for i in dims
+            )
+            + f" FROM w{t})"
+        )
+    parts.append(
+        f"wf AS (SELECT *, "
+        + ", ".join(f"{_pca_w(i)} AS w{i}" for i in dims)
+        + f" FROM v{T})"
+    )
+    body = ",\n    ".join(parts)
+    return (
+        body
+        + f"""
+    SELECT round({_PCA_LAMBDA}, 6) AS lambda1,
+           round(({_PCA_LAMBDA}) / ({_PCA_TRACE}), 6) AS explained_ratio,
+           {', '.join(f'round(CASE WHEN v1 < 0 THEN -v{i} ELSE v{i} END, 6) AS v{i}' for i in dims)}
+    FROM wf
+    """
+    )
+
+
+@query("vec_pca_power_iter", oracle=_pca_oracle())
+def vec_pca_power_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TOP PRINCIPAL COMPONENT of the embedding corpus (8-dim prefix)
+    via distributed covariance + power iteration — the dimensionality
+    probe behind OPQ rotations, embedding-drift monitors, and whitening
+    stages. The heavy part — the d*(d+1)/2 second-moment sums — is ONE
+    map-side-combined aggregate over the corpus (scan-shaped, linear,
+    no shuffle beyond the k=1-row combine); the 5 power iterations then
+    run on a single 1-row DataFrame entirely inside the plan (no
+    driver collect, no loop over actions — the iteration unrolls into
+    chained projections exactly like the oracle's CTEs).
+
+    Parity discipline: moment sums accumulate as DECIMAL(18,9)
+    products (exact, order-independent); the covariance and every
+    iterate re-quantize to the round(9) grid (the PageRank recipe) so
+    drift cannot compound; C*v rows and norms are fixed left-to-right
+    sums with identical text on both engines. The eigenvector sign is
+    canonicalized (v1 >= 0) — power iteration's sign is otherwise an
+    artifact of the start vector."""
+    emb = table(spark, sf_dir, "embeddings")
+    dims = range(1, _PCA_D + 1)
+    pts = emb.select(
+        *[
+            F.expr(f"CAST(element_at(embedding, {i}) AS DOUBLE)").alias(f"e{i}")
+            for i in dims
+        ]
+    )
+    mom = pts.agg(
+        F.count("*").alias("n"),
+        *[
+            F.sum(F.col(f"e{i}").cast("decimal(18,9)")).alias(f"s{i}")
+            for i in dims
+        ],
+        *[
+            F.sum(
+                F.col(f"e{i}").cast("decimal(18,9)")
+                * F.col(f"e{j}").cast("decimal(18,9)")
+            ).alias(f"s{i}_{j}")
+            for i in dims
+            for j in dims
+            if i <= j
+        ],
+    )
+    cov = mom.select(
+        *[F.expr(_pca_cov(i, j)).alias(f"c{i}_{j}") for i in dims for j in dims]
+    )
+    ccols = [f"c{i}_{j}" for i in dims for j in dims]
+    cur = cov.select(
+        *ccols,
+        *[F.lit(1.0 if i == 1 else 0.0).alias(f"v{i}") for i in dims],
+    )
+    for _ in range(_PCA_ITERS):
+        w = cur.select(*ccols, *[F.expr(_pca_w(i)).alias(f"w{i}") for i in dims])
+        cur = w.select(
+            *ccols,
+            *[
+                F.expr(f"round(w{i} / sqrt({_PCA_NORM}), 9)").alias(f"v{i}")
+                for i in dims
+            ],
+        )
+    wf = cur.select("*", *[F.expr(_pca_w(i)).alias(f"w{i}") for i in dims])
+    return wf.select(
+        F.expr(f"round({_PCA_LAMBDA}, 6)").alias("lambda1"),
+        F.expr(f"round(({_PCA_LAMBDA}) / ({_PCA_TRACE}), 6)").alias(
+            "explained_ratio"
+        ),
+        *[
+            F.expr(
+                f"round(CASE WHEN v1 < 0 THEN -v{i} ELSE v{i} END, 6)"
+            ).alias(f"v{i}")
+            for i in dims
+        ],
+    )
+
+
+# ---------------------------------------------------------------------------
+# vec_pairwise_cos_hist
+# ---------------------------------------------------------------------------
+
+_GEO_PANEL = 512  # deterministic probe panel size
+
+
+@query(
+    "vec_pairwise_cos_hist",
+    oracle=f"""
+    WITH pan AS (
+      SELECT vec_id, embedding FROM embeddings
+      ORDER BY vec_id LIMIT {_GEO_PANEL}),
+    n AS (
+      SELECT vec_id, embedding,
+             sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
+               AS nm
+      FROM pan),
+    p AS (
+      SELECT CAST(floor(
+               list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[])
+               / (a.nm * b.nm) * 10.0) AS BIGINT) AS bucket
+      FROM n a JOIN n b ON a.vec_id < b.vec_id)
+    SELECT bucket, CAST(count(*) AS BIGINT) AS n_pairs
+    FROM p GROUP BY bucket
+    """,
+)
+def vec_pairwise_cos_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CORPUS-GEOMETRY PROBE: the histogram of pairwise cosines over a
+    deterministic bounded panel (first 512 vectors by id) in 0.1-wide
+    buckets — the diagnostic that decides which ANN/dedup strategy can
+    work at all (this repo's round-6 finding that the fixture is
+    quasi-uniform on the sphere — median pairwise cos ~0, so LSH
+    pruning is geometry-limited — was exactly this measurement, now a
+    first-class operator a pipeline runs before choosing tau/k/bands).
+
+    Shape at 100 TB: the panel is orderBy+limit (TakeOrderedAndProject
+    — a FIXED-size sample regardless of corpus size), so the pairwise
+    stage is a constant ~131k pairs; norms are computed per-row BEFORE
+    the self-join (the Janino lesson); the histogram is one tiny
+    aggregate. Never an all-pairs join over the corpus.
+
+    Parity: both engines fold the same 64-dim double dots
+    (list_dot_product == the sequential-fold dot, the repo-wide
+    precedent), identical division shape, floor on identical doubles;
+    counts exact."""
+    from ..functions.vector import dot_fixed, norm_fixed
+
+    emb = table(spark, sf_dir, "embeddings")
+    d = len(_query_vector_raw(spark, sf_dir, 0))
+    pan = (
+        emb.select("vec_id", "embedding")
+        .orderBy("vec_id")
+        .limit(_GEO_PANEL)
+        .select("vec_id", "embedding", norm_fixed("embedding", d).alias("nm"))
+    )
+    a = pan.select(
+        F.col("vec_id").alias("a_id"),
+        F.col("embedding").alias("ea"),
+        F.col("nm").alias("na"),
+    )
+    b = pan.select(
+        F.col("vec_id").alias("b_id"),
+        F.col("embedding").alias("eb"),
+        F.col("nm").alias("nb"),
+    )
+    cos = dot_fixed("ea", "eb", d) / (F.col("na") * F.col("nb"))
+    return (
+        a.crossJoin(b)
+        .where(F.col("a_id") < F.col("b_id"))
+        .select(F.floor(cos * 10.0).cast("bigint").alias("bucket"))
+        .groupBy("bucket")
+        .agg(F.count("*").cast("bigint").alias("n_pairs"))
+    )
+
+
+# ---------------------------------------------------------------------------
+# vec_centroid_shift_drift
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "vec_centroid_shift_drift",
+    oracle="""
+    WITH dv AS (
+      SELECT vec_id % 2 AS half, t.dim, CAST(round(t.val, 6)
+             AS DECIMAL(16,6)) AS v
+      FROM embeddings, LATERAL (
+        SELECT unnest(embedding) AS val,
+               generate_subscripts(embedding, 1) AS dim) t),
+    m AS (
+      SELECT half, dim, CAST(sum(v) AS DOUBLE) / count(*) AS mu
+      FROM dv GROUP BY half, dim),
+    p AS (
+      SELECT a.dim, a.mu AS ma, b.mu AS mb
+      FROM m a JOIN m b ON a.dim = b.dim AND a.half = 0 AND b.half = 1),
+    s AS (
+      SELECT
+        CAST(sum(CAST(round((ma - mb) * (ma - mb), 9) AS DECIMAL(28,9)))
+             AS DOUBLE) AS d2,
+        CAST(sum(CAST(round(ma * mb, 9) AS DECIMAL(28,9))) AS DOUBLE) AS dot,
+        CAST(sum(CAST(round(ma * ma, 9) AS DECIMAL(28,9))) AS DOUBLE) AS na,
+        CAST(sum(CAST(round(mb * mb, 9) AS DECIMAL(28,9))) AS DOUBLE) AS nb
+      FROM p),
+    n AS (
+      SELECT CAST(sum(CASE WHEN vec_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_a,
+             CAST(sum(CASE WHEN vec_id % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_b
+      FROM embeddings)
+    SELECT n.n_a, n.n_b,
+           round(sqrt(s.d2), 6) AS centroid_l2_shift,
+           round(s.dot / (sqrt(s.na) * sqrt(s.nb)), 6) AS centroid_cosine
+    FROM s CROSS JOIN n
+    """,
+)
+def vec_centroid_shift_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EMBEDDING DRIFT between two corpus halves (vec_id parity as the
+    deterministic stand-in for "last ingest vs this ingest"): the L2
+    distance and cosine between the half centroids — the cheapest
+    always-on drift monitor for an embedding column (a centroid shift
+    means the upstream encoder or corpus mix changed, and every ANN
+    index/codebok trained on the old geometry needs revalidation —
+    the operational complement to vec_pairwise_cos_hist's geometry
+    probe).
+
+    Scale shape: one explode to (half, dim, value) and ONE keyed
+    aggregate to 2 x dims rows; everything after runs on the bounded
+    DIMENSION domain. Map-side partial sums make the fact pass one
+    shuffle of 128 partial rows per partition at any corpus size.
+
+    Parity: components quantize round(6) into exact DECIMAL sums;
+    per-dim means divide in shared text; the 64-term dim-domain
+    reductions quantize round(9) into DECIMAL; sqrt-only assembly,
+    round(6)."""
+    emb = table(spark, sf_dir, "embeddings")
+    dv = emb.select(
+        (F.col("vec_id") % 2).alias("half"),
+        F.posexplode("embedding").alias("dim0", "val"),
+    ).select(
+        "half",
+        (F.col("dim0") + 1).alias("dim"),
+        F.expr("CAST(round(val, 6) AS DECIMAL(16,6))").alias("v"),
+    )
+    m = dv.groupBy("half", "dim").agg(
+        F.expr("CAST(sum(v) AS DOUBLE) / count(*)").alias("mu")
+    )
+    p = (
+        m.where(F.col("half") == 0)
+        .select("dim", F.col("mu").alias("ma"))
+        .join(
+            m.where(F.col("half") == 1).select("dim", F.col("mu").alias("mb")),
+            "dim",
+        )
+    )
+    s = p.agg(
+        F.expr(
+            "CAST(sum(CAST(round((ma - mb) * (ma - mb), 9) AS DECIMAL(28,9)))"
+            " AS DOUBLE)"
+        ).alias("d2"),
+        F.expr(
+            "CAST(sum(CAST(round(ma * mb, 9) AS DECIMAL(28,9))) AS DOUBLE)"
+        ).alias("dot"),
+        F.expr(
+            "CAST(sum(CAST(round(ma * ma, 9) AS DECIMAL(28,9))) AS DOUBLE)"
+        ).alias("na"),
+        F.expr(
+            "CAST(sum(CAST(round(mb * mb, 9) AS DECIMAL(28,9))) AS DOUBLE)"
+        ).alias("nb"),
+    )
+    n = emb.agg(
+        F.sum((F.col("vec_id") % 2 == 0).cast("int")).cast("bigint").alias("n_a"),
+        F.sum((F.col("vec_id") % 2 == 1).cast("int")).cast("bigint").alias("n_b"),
+    )
+    return s.crossJoin(F.broadcast(n)).selectExpr(
+        "n_a",
+        "n_b",
+        "round(sqrt(d2), 6) AS centroid_l2_shift",
+        "round(dot / (sqrt(na) * sqrt(nb)), 6) AS centroid_cosine",
+    )
+
+
+# ---------------------------------------------------------------------------
+# vec_topk_margin_stats
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "vec_topk_margin_stats",
+    oracle=f"""
+    WITH q AS (SELECT vec_id AS query_id, embedding AS qv
+               FROM embeddings WHERE vec_id < 10),
+    c AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 10),
+    sims AS (
+      SELECT q.query_id, c.vec_id,
+             round({_DD_COS.format(a='c.embedding', b='q.qv')}, 6) AS sim
+      FROM c CROSS JOIN q),
+    top AS (
+      SELECT query_id, sim,
+             row_number() OVER (PARTITION BY query_id
+                                ORDER BY sim DESC, vec_id) AS rn
+      FROM sims)
+    SELECT query_id,
+           CAST(count(*) AS BIGINT) AS k,
+           round(max(CASE WHEN rn = 1 THEN sim END), 6) AS top1,
+           round(max(CASE WHEN rn = 2 THEN sim END), 6) AS top2,
+           round(max(CASE WHEN rn = 1 THEN sim END)
+                 - max(CASE WHEN rn = 2 THEN sim END), 6) AS margin,
+           round(CAST(sum(CAST(sim AS DECIMAL(18,6))) AS DOUBLE)
+                 / count(*), 6) AS mean_topk
+    FROM top WHERE rn <= 10 GROUP BY query_id
+    """,
+)
+def vec_topk_margin_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RETRIEVAL-CONFIDENCE MARGINS: for each query, the top-1/top-2
+    cosine gap and the mean of the top-10 — the abstention signal a
+    RAG router reads before trusting retrieval (a thin margin means
+    the nearest neighbor is not meaningfully nearer than the runner-up
+    and the answer should route to search or decline; the reference's
+    retrieval loop, app.py:256-278, gates on a keyword heuristic
+    because Qdrant's scores arrive without this context).
+
+    Shape at 100 TB: the query side is a broadcast working set; the
+    corpus streams through one codegen cosine stage; the per-query
+    window reduces to top-10 before any driver-visible data exists.
+    Same plan family as vec_cosine_topk_per_query, plus a 10-row-per-
+    query aggregate.
+
+    Parity: sims are the shared fixed-dim cosine, round(6) (identical
+    doubles both engines); top-k membership orders on (sim DESC,
+    vec_id); the mean accumulates the rounded sims as DECIMAL(18,6)
+    so the 10-term sum is order-independent, then one identical
+    division; margin subtracts two identical doubles."""
+    emb = table(spark, sf_dir, "embeddings")
+    q = _query_vectors(spark, sf_dir, 10)
+    corpus = emb.where(F.col("vec_id") >= 10).select(
+        F.col("vec_id").alias("neighbor_id"), "embedding"
+    )
+    d = len(_query_vector_raw(spark, sf_dir, 0))
+    sims = corpus.crossJoin(F.broadcast(q)).select(
+        "query_id",
+        F.col("neighbor_id"),
+        F.round(cosine_fixed("embedding", "qv", d), 6).alias("sim"),
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("sim").desc(), F.col("neighbor_id")
+    )
+    top = sims.withColumn("rn", F.row_number().over(w)).where(
+        F.col("rn") <= 10
+    )
+    return top.groupBy("query_id").agg(
+        F.count("*").cast("bigint").alias("k"),
+        F.round(F.max(F.when(F.col("rn") == 1, F.col("sim"))), 6).alias(
+            "top1"
+        ),
+        F.round(F.max(F.when(F.col("rn") == 2, F.col("sim"))), 6).alias(
+            "top2"
+        ),
+        F.round(
+            F.max(F.when(F.col("rn") == 1, F.col("sim")))
+            - F.max(F.when(F.col("rn") == 2, F.col("sim"))),
+            6,
+        ).alias("margin"),
+        F.round(
+            F.sum(F.col("sim").cast("decimal(18,6)")).cast("double")
+            / F.count("*"),
+            6,
+        ).alias("mean_topk"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# vec_dim_variance_profile
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "vec_dim_variance_profile",
+    oracle="""
+    WITH pos AS (
+      SELECT unnest(generate_series(1, len(embedding))) AS dim,
+             embedding
+      FROM embeddings),
+    ex AS (
+      SELECT CAST(dim AS BIGINT) AS dim,
+             CAST(round(CAST(list_extract(embedding, CAST(dim AS INT))
+                             AS DOUBLE) * 1000000, 0) AS BIGINT) AS vi
+      FROM pos),
+    mo AS (
+      SELECT dim,
+             CAST(count(*) AS BIGINT) AS n,
+             CAST(sum(vi) AS BIGINT) AS sx,
+             sum(CAST(vi AS HUGEINT) * vi) AS sxx
+      FROM ex GROUP BY dim),
+    v AS (
+      SELECT dim, n, sx,
+             CAST(n AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sx AS c
+      FROM mo)
+    SELECT dim, n,
+           round(CAST(sx AS DOUBLE) / n / 1e6, 6) AS mean,
+           round(CAST(c AS DOUBLE) / (CAST(n AS DOUBLE) * n) / 1e12, 6)
+             AS variance,
+           round(CAST(c AS DOUBLE)
+                 / CAST(sum(c) OVER () AS DOUBLE), 6) AS var_share
+    FROM v ORDER BY dim
+    """,
+)
+def vec_dim_variance_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PER-DIMENSION MOMENT PROFILE of the embedding corpus — the
+    whitening / anisotropy screen run before any vector-index design:
+    near-uniform per-dim variance (this fixture's quasi-uniform
+    sphere, the round-6 finding) says PCA/OPQ rotation buys little;
+    a skewed var_share says rotate first, and near-zero dims are
+    truncation candidates (the vec_matryoshka_topk decision).
+    Completes the vector-diagnostics family: vec_pca_power_iter
+    extracts ONE principal direction, vec_pairwise_cos_hist profiles
+    pair geometry; this is the per-COORDINATE table.
+
+    Parity: each float coordinate quantizes to integer MICRO-units —
+    CAST(round(CAST(v AS DOUBLE) * 1e6, 0) AS BIGINT); exact halves
+    k.5 are always representable doubles below 2^52, so Spark's
+    shortest-repr HALF_UP and DuckDB's binary half-away agree on
+    every input (no round-8 digit-7 trap) — then all moments are
+    exact BIGINT/HUGEINT integers: variance numerator c = n*Sxx -
+    Sx^2, displayed via shared-text double divisions, round(6).
+    var_share divides exact integers over the 64-row dim frame.
+
+    Shape at 100 TB: one explode + (dim)-keyed aggregate (map-side
+    combined, 64 output rows); the var_share window runs over the
+    CONSTANT-size dim frame."""
+    emb = table(spark, sf_dir, "embeddings")
+    ex = emb.select(
+        F.posexplode("embedding").alias("pos", "v")
+    ).selectExpr(
+        "CAST(pos + 1 AS BIGINT) AS dim",
+        "CAST(round(CAST(v AS DOUBLE) * 1000000, 0) AS BIGINT) AS vi",
+    )
+    mo = ex.groupBy("dim").agg(
+        F.count("*").cast("bigint").alias("n"),
+        F.sum("vi").cast("bigint").alias("sx"),
+        F.expr("sum(CAST(vi AS DECIMAL(19,0)) * vi)").alias("sxx"),
+    )
+    v = mo.selectExpr(
+        "dim",
+        "n",
+        "sx",
+        "CAST(n AS DECIMAL(38,0)) * sxx - CAST(sx AS DECIMAL(38,0)) * sx"
+        " AS c",
+    )
+    w_all = Window.partitionBy()
+    return (
+        v.select(
+            "dim",
+            "n",
+            F.expr("round(CAST(sx AS DOUBLE) / n / 1e6, 6)").alias("mean"),
+            F.expr(
+                "round(CAST(c AS DOUBLE) / (CAST(n AS DOUBLE) * n)"
+                " / 1e12, 6)"
+            ).alias("variance"),
+            F.round(
+                F.col("c").cast("double")
+                / F.sum("c").over(w_all).cast("double"),
+                6,
+            ).alias("var_share"),
+        )
+        .orderBy("dim")
+    )
+
+
+# ---------------------------------------------------------------------------
+# vec_nn_distance_ratio
+# ---------------------------------------------------------------------------
+
+
+def _nn_ratio_oracle() -> str:
+
+    cos = _DD_COS.format(a="c.embedding", b="q.qv")
+    return f"""
+    WITH q AS (SELECT vec_id AS query_id, embedding AS qv
+               FROM embeddings WHERE vec_id < 10),
+    c AS (SELECT vec_id AS neighbor_id, embedding
+          FROM embeddings WHERE vec_id >= 10),
+    sims AS (
+      SELECT q.query_id, c.neighbor_id, round({cos}, 6) AS sim
+      FROM c CROSS JOIN q),
+    nn AS (
+      SELECT query_id, neighbor_id, sim,
+             row_number() OVER (PARTITION BY query_id
+                                ORDER BY sim DESC, neighbor_id) AS rn
+      FROM sims),
+    piv AS (
+      SELECT query_id,
+             max(CASE WHEN rn = 1 THEN neighbor_id END) AS nn1_id,
+             max(CASE WHEN rn = 2 THEN neighbor_id END) AS nn2_id,
+             max(CASE WHEN rn = 1 THEN sim END) AS sim1,
+             max(CASE WHEN rn = 2 THEN sim END) AS sim2
+      FROM nn WHERE rn <= 2 GROUP BY query_id)
+    SELECT query_id, nn1_id, nn2_id, sim1, sim2,
+           CASE WHEN sim2 >= 1.0 THEN NULL
+                ELSE round((1.0 - sim1) / (1.0 - sim2), 6) END
+             AS dist_ratio,
+           CASE WHEN sim2 >= 1.0 THEN NULL
+                WHEN (1.0 - sim1) / (1.0 - sim2) < 0.8 THEN 1 ELSE 0 END
+             AS match_reliable
+    FROM piv ORDER BY query_id
+    """
+
+
+@query("vec_nn_distance_ratio", oracle=_nn_ratio_oracle())
+def vec_nn_distance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LOWE RATIO TEST over the 10-query panel: the cosine-DISTANCE
+    ratio of the nearest to the second-nearest corpus neighbor,
+    (1 - sim1) / (1 - sim2), with the classic < 0.8 reliability gate —
+    the standard screen for whether a nearest-neighbor match is
+    DISCRIMINATIVE (a near-tie between the top two neighbors means the
+    match carries little signal; feature-matching and retrieval
+    pipelines discard those).  Completes the retrieval-diagnostics
+    family: vec_topk_margin_stats profiles absolute top-k score gaps,
+    this op emits the per-query RELATIVE distance ratio and the
+    accept/reject bit a matcher would act on.
+
+    Parity: ranks order by the ROUND(6) sim with neighbor_id
+    tie-break (the vec_cosine_topk_per_query convention — rank parity
+    is then exact); the ratio divides doubles produced by identical
+    expression text on identical inputs (+,-,/ are IEEE-exact ops, no
+    libm), round(6).  sim2 >= 1 (an exact-duplicate corpus vector)
+    CASE-gates to NULL on both engines — the ANSI divide-by-zero rule.
+
+    Shape at 100 TB: broadcast query panel, one corpus scan, window
+    top-2 partitioned by query_id, 10-row pivot — the exact
+    per-query-kNN plan with k=2."""
+    from ..functions.vector import cosine_fixed
+
+    emb = table(spark, sf_dir, "embeddings")
+    q = _query_vectors(spark, sf_dir, 10)
+    corpus = emb.where(F.col("vec_id") >= 10).select(
+        F.col("vec_id").alias("neighbor_id"), "embedding"
+    )
+    d = len(_query_vector_raw(spark, sf_dir, 0))
+    sims = corpus.crossJoin(F.broadcast(q)).select(
+        "query_id",
+        "neighbor_id",
+        F.round(cosine_fixed("embedding", "qv", d), 6).alias("sim"),
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("sim").desc(), F.col("neighbor_id")
+    )
+    nn = sims.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= 2)
+    piv = nn.groupBy("query_id").agg(
+        F.expr("max(CASE WHEN rn = 1 THEN neighbor_id END)").alias("nn1_id"),
+        F.expr("max(CASE WHEN rn = 2 THEN neighbor_id END)").alias("nn2_id"),
+        F.expr("max(CASE WHEN rn = 1 THEN sim END)").alias("sim1"),
+        F.expr("max(CASE WHEN rn = 2 THEN sim END)").alias("sim2"),
+    )
+    return piv.selectExpr(
+        "query_id",
+        "nn1_id",
+        "nn2_id",
+        "sim1",
+        "sim2",
+        "CASE WHEN sim2 >= 1.0 THEN NULL"
+        " ELSE round((1.0 - sim1) / (1.0 - sim2), 6) END AS dist_ratio",
+        "CASE WHEN sim2 >= 1.0 THEN NULL"
+        " WHEN (1.0 - sim1) / (1.0 - sim2) < 0.8 THEN 1 ELSE 0 END"
+        " AS match_reliable",
+    ).orderBy("query_id")
+
+
+# ---------------------------------------------------------------------------
+# vec_hubness_topk_counts
+# ---------------------------------------------------------------------------
+
+_HUB_QUERIES = 50
+_HUB_K = 3
+
+
+def _hubness_oracle() -> str:
+
+    cos = _DD_COS.format(a="c.embedding", b="q.qv")
+    return f"""
+    WITH q AS (SELECT vec_id AS query_id, embedding AS qv
+               FROM embeddings WHERE vec_id < {_HUB_QUERIES}),
+    c AS (SELECT vec_id AS neighbor_id, embedding
+          FROM embeddings WHERE vec_id >= {_HUB_QUERIES}),
+    sims AS (
+      SELECT q.query_id, c.neighbor_id, round({cos}, 6) AS sim
+      FROM c CROSS JOIN q),
+    nn AS (
+      SELECT query_id, neighbor_id
+      FROM (SELECT query_id, neighbor_id,
+                   row_number() OVER (PARTITION BY query_id
+                                      ORDER BY sim DESC, neighbor_id) AS rn
+            FROM sims) t
+      WHERE rn <= {_HUB_K}),
+    occ AS (
+      SELECT neighbor_id, CAST(count(*) AS BIGINT) AS occurrences
+      FROM nn GROUP BY neighbor_id),
+    hist AS (
+      SELECT occurrences, CAST(count(*) AS BIGINT) AS n_neighbors
+      FROM occ GROUP BY occurrences),
+    z AS (
+      SELECT CAST(0 AS BIGINT) AS occurrences,
+             (SELECT count(*) FROM c) - (SELECT count(*) FROM occ)
+               AS n_neighbors)
+    SELECT occurrences, n_neighbors,
+           round(CAST(n_neighbors AS DOUBLE)
+                 / (SELECT count(*) FROM c), 6) AS corpus_share
+    FROM (SELECT * FROM hist UNION ALL SELECT * FROM z) u
+    ORDER BY occurrences
+    """
+
+
+@query("vec_hubness_topk_counts", oracle=_hubness_oracle())
+def vec_hubness_topk_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """K-OCCURRENCE (HUBNESS) DISTRIBUTION of the corpus under exact
+    top-3 retrieval from a 50-query panel: for each occurrence level
+    m, how many corpus vectors appear in exactly m result lists —
+    including the m = 0 ANTIHUB row (vectors no query retrieves).
+    High-dimensional similarity search concentrates results onto hub
+    points (Radovanovic et al., JMLR 2010); a heavy right tail here
+    says recall evaluation must stratify by hubness, and an oversized
+    antihub mass says the index wastes space on unreachable points.
+    Completes the vector-diagnostics family next to
+    vec_pairwise_cos_hist (pair geometry) and vec_dim_variance_profile
+    (coordinate anisotropy) with the RETRIEVAL-graph view.
+
+    Parity: ranks order by ROUND(6) sim + neighbor_id tie-break (rank
+    parity exact, the per-query-kNN convention); all counts exact
+    BIGINT; corpus_share divides exact integers, round(6).
+
+    Shape at 100 TB: broadcast panel, one corpus scan, per-query
+    window top-k, then two bounded aggregates (occurrence counts over
+    <= k*|panel| hit rows; histogram over <= |panel|*k levels) and a
+    1-row corpus count for the antihub row."""
+    from ..functions.vector import cosine_fixed
+
+    emb = table(spark, sf_dir, "embeddings")
+    q = _query_vectors(spark, sf_dir, _HUB_QUERIES)
+    corpus = emb.where(F.col("vec_id") >= _HUB_QUERIES).select(
+        F.col("vec_id").alias("neighbor_id"), "embedding"
+    )
+    d = len(_query_vector_raw(spark, sf_dir, 0))
+    sims = corpus.crossJoin(F.broadcast(q)).select(
+        "query_id",
+        "neighbor_id",
+        F.round(cosine_fixed("embedding", "qv", d), 6).alias("sim"),
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("sim").desc(), F.col("neighbor_id")
+    )
+    nn = (
+        sims.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") <= _HUB_K)
+        .select("query_id", "neighbor_id")
+    )
+    occ = nn.groupBy("neighbor_id").agg(
+        F.count("*").cast("bigint").alias("occurrences")
+    )
+    hist = occ.groupBy("occurrences").agg(
+        F.count("*").cast("bigint").alias("n_neighbors")
+    )
+    nc = corpus.agg(F.count("*").cast("bigint").alias("nc"))
+    nr = occ.agg(F.count("*").cast("bigint").alias("nret"))
+    zero = (
+        nc.crossJoin(F.broadcast(nr))
+        .selectExpr(
+            "CAST(0 AS BIGINT) AS occurrences",
+            "nc - nret AS n_neighbors",
+        )
+    )
+    return (
+        hist.unionByName(zero)
+        .crossJoin(F.broadcast(nc))
+        .selectExpr(
+            "occurrences",
+            "n_neighbors",
+            "round(CAST(n_neighbors AS DOUBLE) / nc, 6) AS corpus_share",
+        )
+        .orderBy("occurrences")
+    )
+
+
+# ---------------------------------------------------------------------------
+# vec_matryoshka_recall_sweep
+# ---------------------------------------------------------------------------
+
+_MRS_DIMS = [16, 32, 48, 64]
+_MRS_K = 3
+_MRS_QUERIES = 10
+
+
+def _mrs_oracle() -> str:
+    sims = ",\n             ".join(
+        f"round(list_dot_product(c.embedding[1:{d}]::DOUBLE[],"
+        f" q.qv[1:{d}]::DOUBLE[])"
+        f" / (sqrt(list_dot_product(c.embedding[1:{d}]::DOUBLE[],"
+        f" c.embedding[1:{d}]::DOUBLE[]))"
+        f" * sqrt(list_dot_product(q.qv[1:{d}]::DOUBLE[],"
+        f" q.qv[1:{d}]::DOUBLE[]))), 6) AS sim{d}"
+        for d in _MRS_DIMS
+    )
+    rns = ",\n             ".join(
+        f"row_number() OVER (PARTITION BY query_id"
+        f" ORDER BY sim{d} DESC, neighbor_id) AS rn{d}"
+        for d in _MRS_DIMS
+    )
+    hits = ",\n             ".join(
+        f"CAST(sum(CASE WHEN rn{d} <= {_MRS_K}"
+        f" AND rn{max(_MRS_DIMS)} <= {_MRS_K} THEN 1 ELSE 0 END)"
+        f" AS BIGINT) AS h{d}"
+        for d in _MRS_DIMS
+    )
+    denom = _MRS_K * _MRS_QUERIES
+    fan = "\n    UNION ALL ".join(
+        f"SELECT CAST({d} AS BIGINT) AS dim, h{d} AS n_hits,"
+        f" round(CAST(h{d} AS DOUBLE) / {denom}, 6) AS recall FROM agg"
+        for d in _MRS_DIMS
+    )
+    return f"""
+    WITH q AS (SELECT vec_id AS query_id, embedding AS qv
+               FROM embeddings WHERE vec_id < {_MRS_QUERIES}),
+    c AS (SELECT vec_id AS neighbor_id, embedding
+          FROM embeddings WHERE vec_id >= {_MRS_QUERIES}),
+    sims AS (
+      SELECT q.query_id, c.neighbor_id,
+             {sims}
+      FROM c CROSS JOIN q),
+    rk AS (
+      SELECT query_id, neighbor_id,
+             {rns}
+      FROM sims),
+    agg AS MATERIALIZED (
+      SELECT {hits}
+      FROM rk)
+    {fan}
+    ORDER BY dim
+    """
+
+
+@query("vec_matryoshka_recall_sweep", oracle=_mrs_oracle())
+def vec_matryoshka_recall_sweep(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """MATRYOSHKA TRUNCATION RECALL SWEEP: exact top-3 recall of
+    PREFIX-truncated embeddings (16/32/48/64 of 64 dims) against the
+    full-dimension ground truth over the 10-query panel — the table
+    that decides how far a matryoshka index (vec_matryoshka_topk's
+    two-stage retrieve) can truncate before recall pays, and the
+    operational companion to vec_dim_variance_profile (this fixture's
+    near-uniform per-dim variance predicts recall should degrade
+    smoothly; the sweep MEASURES it).  The dim=64 row is the built-in
+    self-check (recall = 1 by construction).
+
+    Parity: each truncated cosine is the same sequential-fold
+    arithmetic over the prefix dims (Spark cosine_fixed unrolled text
+    / DuckDB sliced-list dot), ROUND(6) before ranking with
+    neighbor_id tie-break (rank parity exact); hits and recalls are
+    exact integers over the fixed 3 x 10 denominator.
+
+    Shape at 100 TB: broadcast panel, ONE corpus scan computing all
+    four truncated sims, ONE shuffle (the four rank windows share the
+    query_id partitioning), a 1-row conditional aggregate fanned to
+    four rows — never a per-dim rescan."""
+    from ..functions.vector import cosine_fixed
+
+    emb = table(spark, sf_dir, "embeddings")
+    q = _query_vectors(spark, sf_dir, _MRS_QUERIES)
+    corpus = emb.where(F.col("vec_id") >= _MRS_QUERIES).select(
+        F.col("vec_id").alias("neighbor_id"), "embedding"
+    )
+    full_d = len(_query_vector_raw(spark, sf_dir, 0))
+    sims = corpus.crossJoin(F.broadcast(q)).select(
+        "query_id",
+        "neighbor_id",
+        *[
+            F.round(cosine_fixed("embedding", "qv", d), 6).alias(f"sim{d}")
+            for d in _MRS_DIMS
+        ],
+    )
+    rk = sims.select(
+        "query_id",
+        "neighbor_id",
+        *[
+            F.row_number()
+            .over(
+                Window.partitionBy("query_id").orderBy(
+                    F.col(f"sim{d}").desc(), "neighbor_id"
+                )
+            )
+            .alias(f"rn{d}")
+            for d in _MRS_DIMS
+        ],
+    )
+    full = max(_MRS_DIMS)
+    agg = rk.agg(
+        *[
+            F.expr(
+                f"CAST(sum(CASE WHEN rn{d} <= {_MRS_K}"
+                f" AND rn{full} <= {_MRS_K} THEN 1 ELSE 0 END) AS BIGINT)"
+            ).alias(f"h{d}")
+            for d in _MRS_DIMS
+        ]
+    )
+    denom = _MRS_K * _MRS_QUERIES
+    return agg.selectExpr(
+        f"stack({len(_MRS_DIMS)}, "
+        + ", ".join(
+            f"CAST({d} AS BIGINT), h{d}" for d in _MRS_DIMS
+        )
+        + ") AS (dim, n_hits)",
+    ).selectExpr(
+        "dim",
+        "n_hits",
+        f"round(CAST(n_hits AS DOUBLE) / {denom}, 6) AS recall",
+    ).orderBy("dim")

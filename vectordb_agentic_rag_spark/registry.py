@@ -29,28 +29,21 @@ _OPERATOR_MODULES = [
     "vectordb_agentic_rag_spark.operators.rag",
     "vectordb_agentic_rag_spark.operators.dedup",
     "vectordb_agentic_rag_spark.operators.ml",
-    "vectordb_agentic_rag_spark.operators.analytics",
-    "vectordb_agentic_rag_spark.operators.analytics2",
-    "vectordb_agentic_rag_spark.operators.analytics3",
-    "vectordb_agentic_rag_spark.operators.analytics4",
-    "vectordb_agentic_rag_spark.operators.analytics5",
-    "vectordb_agentic_rag_spark.operators.analytics6",
-    "vectordb_agentic_rag_spark.operators.analytics7",
-    "vectordb_agentic_rag_spark.operators.analytics8",
-    "vectordb_agentic_rag_spark.operators.analytics9",
-    "vectordb_agentic_rag_spark.operators.analytics10",
-    "vectordb_agentic_rag_spark.operators.analytics11",
-    "vectordb_agentic_rag_spark.operators.analytics12",
+    "vectordb_agentic_rag_spark.operators.graph",
+    "vectordb_agentic_rag_spark.operators.pipelines",
+    "vectordb_agentic_rag_spark.operators.maintenance",
+    "vectordb_agentic_rag_spark.operators.stats.tests",
+    "vectordb_agentic_rag_spark.operators.stats.timeseries",
+    "vectordb_agentic_rag_spark.operators.stats.models",
+    "vectordb_agentic_rag_spark.operators.stats.distribution",
+    "vectordb_agentic_rag_spark.operators.stats.kpis",
+    "vectordb_agentic_rag_spark.operators.stats.sketches",
     "vectordb_agentic_rag_spark.operators.multimodal",
     "vectordb_agentic_rag_spark.operators.docformats",
     "vectordb_agentic_rag_spark.operators.binformats",
     "vectordb_agentic_rag_spark.operators.streaming_batch",
     "vectordb_agentic_rag_spark.streaming.core",
     "vectordb_agentic_rag_spark.sources.readers",
-    "vectordb_agentic_rag_spark.operators.queue_r11",
-    "vectordb_agentic_rag_spark.operators.queue_r12",
-    "vectordb_agentic_rag_spark.operators.analytics13",
-    "vectordb_agentic_rag_spark.operators.analytics14",
 ]
 
 
@@ -73,11 +66,7 @@ def query(name: str, oracle: str | None = None):
 def load_all_operators() -> None:
     """Import every operator module so decorators run (idempotent)."""
     for mod in _OPERATOR_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError:
-            # module not written yet during incremental build-out
-            pass
+        importlib.import_module(mod)
 
 
 # The driver's correctness gate verifies the FIRST 50 entries of
@@ -149,13 +138,26 @@ def _verification_history() -> tuple[set[str], set[str], set[str]]:
     return hash_verified, rows_only, failed - hash_verified - rows_only
 
 
+def _snapshot_positions() -> dict[str, int]:
+    """Each op's position in ``registry_order.txt``: the registration
+    order ``queries()`` was verified in, frozen so that moving an op
+    between modules cannot move it in ``queries()``."""
+    import os
+
+    path = os.path.join(os.path.dirname(__file__), "registry_order.txt")
+    with open(path) as f:
+        return {name: i for i, name in enumerate(f.read().split())}
+
+
 def ordered_queries() -> dict[str, QueryFn]:
     """QUERIES reordered so the driver's 50-op verification window lands
     on previously-FAILED ops first (to prove their fixes), then
     never-checked ops — domain operators ahead of generic plumbing —
-    then already-verified ops (stable within groups)."""
+    then already-verified ops. Ties break on the op's position in the
+    committed snapshot (``_snapshot_positions``); ops missing from it
+    sort after it, by name. Registration order plays no part."""
     hash_verified, rows_only, failed = _verification_history()
-    names = list(QUERIES)
+    position = _snapshot_positions()
 
     def rank(name: str) -> tuple:
         if name in failed:
@@ -170,6 +172,6 @@ def ordered_queries() -> dict[str, QueryFn]:
             # op has since gained a full oracle — re-verify
             tier = 1
         domain = 0 if name.startswith(_PRIORITY_PREFIXES) else 1
-        return (tier, domain, names.index(name))
+        return (tier, domain, position.get(name, len(position)), name)
 
-    return {n: QUERIES[n] for n in sorted(names, key=rank)}
+    return {n: QUERIES[n] for n in sorted(QUERIES, key=rank)}

@@ -15,10 +15,14 @@ directory, 26,672 entries: 138-188 ms a task on a 4-vCPU VM, against
 0.1-0.2 ms when the daemon re-reads an archive only after its mtime or
 size changed. Collecting a 1-row Python-list DataFrame (2 task threads)
 took 258-299 ms before and 128-216 ms after, a JVM-only job 45-96 ms.
-``spark.executorEnv.PYTHONPATH`` carries this checkout, so the daemon
-imports whatever the driver's working directory is; if it could not, every
-Python task would fail. (The sessions here are local, so the executors see
-the driver's checkout.)
+``spark.executorEnv.PYTHONPATH`` carries this checkout. Spark starts the
+daemon with ``python -m``, which puts the driver's working directory first
+on ``sys.path``: a directory holding another copy of the package (a second
+checkout, or any ``vectordb_agentic_rag_spark/__init__.py``) would shadow
+this one, and every Python task would fail with "No module named
+vectordb_agentic_rag_spark.worker_daemon". ``spark.executorEnv.PYTHONSAFEPATH``
+keeps the working directory off the path (honoured from Python 3.11). (The
+sessions here are local, so the executors see the driver's checkout.)
 """
 
 from __future__ import annotations
@@ -60,5 +64,6 @@ def get_spark(app_name: str = "vectordb-rag-spark") -> SparkSession:
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "vectordb_agentic_rag_spark.worker_daemon")
         .config("spark.executorEnv.PYTHONPATH", REPO_ROOT)
+        .config("spark.executorEnv.PYTHONSAFEPATH", "1")
         .getOrCreate()
     )

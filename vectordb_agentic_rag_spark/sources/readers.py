@@ -433,3 +433,63 @@ def pipeline_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("appended"))
         .alias("status"),
     )
+
+
+# ---------------------------------------------------------------------------
+# source_xml_roundtrip
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "source_xml_roundtrip",
+    oracle="""
+    SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey,
+           n_name,
+           CAST(n_regionkey AS BIGINT) AS n_regionkey
+    FROM nation ORDER BY n_nationkey
+    """,
+)
+def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """XML write + read-back of the nation table via Spark 4's
+    BUILT-IN xml data source (rowTag records) — the last ubiquitous
+    interchange format missing from the source family (csv, jsonl,
+    json-props, orc, text, binary, corrupt-permissive all exist).
+    The oracle runs on the ORIGINAL parquet, so a value match proves
+    the XML round-trip is lossless for scalar columns.
+
+    Parity: XML inference types integers as BIGINT; both sides cast
+    the keys explicitly (fixture integer widths differ per sf — the
+    tables.py rule), and strings pass through verbatim (ASCII
+    fixture).
+
+    Shape at 100 TB: XML is a row format with no pushdown — the
+    docstring's contract is interchange, not analytics; the read
+    plan is a full scan by design and real pipelines convert to
+    parquet on ingest (this op IS that converter's two halves)."""
+    from ..tables import SCRATCH, sf_tag, table as t
+
+    out = f"{SCRATCH}/sources/nation_xml_{sf_tag(sf_dir)}"
+    (
+        t(spark, sf_dir, "nation")
+        .selectExpr(
+            "CAST(n_nationkey AS BIGINT) AS n_nationkey",
+            "n_name",
+            "CAST(n_regionkey AS BIGINT) AS n_regionkey",
+        )
+        .write.mode("overwrite")
+        .option("rootTag", "nations")
+        .option("rowTag", "nation")
+        .format("xml")
+        .save(out)
+    )
+    return (
+        spark.read.format("xml")
+        .option("rowTag", "nation")
+        .load(out)
+        .selectExpr(
+            "CAST(n_nationkey AS BIGINT) AS n_nationkey",
+            "n_name",
+            "CAST(n_regionkey AS BIGINT) AS n_regionkey",
+        )
+        .orderBy("n_nationkey")
+    )

@@ -1297,7 +1297,7 @@ def stream_gap_sessionize_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _tost_live_oracle() -> str:
-    from ..operators.analytics7 import _tost_oracle
+    from ..operators.stats.tests import _tost_oracle
 
     return _tost_oracle()
 
@@ -1333,7 +1333,7 @@ def stream_tost_monitor_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     negative, and the drained append-mode sums equal the batch
     cohort counts exactly — which is why this live op carries the
     FULL batch oracle. The final 1-row TOST arithmetic reuses the
-    batch op's shared expression text (analytics7._TOST_FINAL_EXPRS).
+    batch op's shared expression text (stats.tests._TOST_FINAL_EXPRS).
 
     Scale shape: state is 3 ints/user; per-batch work is the slice
     length; emitted rows are at most one per (user, batch) and only
@@ -1342,10 +1342,7 @@ def stream_tost_monitor_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from ..operators.analytics7 import (
-        _TOST_DIFF_SE_EXPRS,
-        _TOST_FINAL_EXPRS,
-    )
+    from ..operators.stats.tests import _TOST_DIFF_SE_EXPRS, _TOST_FINAL_EXPRS
 
     def fold(key, pdf_iter, state: GroupState):
         sv, sc, np_ = state.get if state.exists else (0, 0, 0)
@@ -2115,14 +2112,13 @@ def stream_heavy_hitters_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# stream_lindley_backlog_live (DEFERRED — registered via queue_r12)
+# stream_lindley_backlog_live: implementation (registered below)
 # ---------------------------------------------------------------------------
 
 
 def _lindley_live_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Implementation shared with the queue_r12 registration wrapper
-    (this module is imported by load_all_operators, so the @query
-    decorator must NOT live here — the op registers in round 12)."""
+    """Implementation behind stream_lindley_backlog_live (registered
+    at the end of this module)."""
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -2192,10 +2188,10 @@ def _lindley_live_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kmv_live_oracle() -> str:
-    """Per-set half of analytics13._kmv_oracle (purchase/click KMV
+    """Per-set half of stats.sketches._kmv_oracle (purchase/click KMV
     sketches over user-days) — the live op's drained final summaries
     equal the batch sketches exactly."""
-    from ..operators.analytics13 import _KMV_HASH
+    from ..operators.stats.sketches import _KMV_HASH
 
     h = _KMV_HASH.format(key="key")
     est = (
@@ -2257,7 +2253,7 @@ def stream_theta_sketch_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from ..operators.analytics13 import _KMV_K, _KMV_P
+    from ..operators.stats.sketches import _KMV_K, _KMV_P
 
     epoch_day = 19723  # days 1970-01-01 .. 2024-01-01 (UTC session)
     day_us = 86_400_000_000
@@ -2755,3 +2751,71 @@ def stream_hll_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("set_name")
     )
+
+
+# ---------------------------------------------------------------------------
+# stream_lindley_backlog_live
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "stream_lindley_backlog_live",
+    # Full oracle via the CLOSE-ON-ROLLOVER identity (the round-7
+    # sessionizer trick): a day emits exactly once, when the first
+    # event of a LATER day folds, so the drained table equals the
+    # batch Lindley recursion minus the never-closed LAST day — for
+    # any batching of the time-ordered replay.
+    oracle="""
+    WITH RECURSIVE d AS (
+      SELECT CAST(ts AS DATE) AS day, CAST(count(*) AS BIGINT) AS a
+      FROM events GROUP BY 1),
+    cap AS (
+      SELECT a AS c FROM d WHERE day = (SELECT min(day) FROM d)),
+    s AS (
+      SELECT day, a, CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS rn
+      FROM d),
+    r AS (
+      SELECT s.rn, s.day, s.a,
+             greatest(CAST(0 AS BIGINT), s.a - cap.c) AS b
+      FROM s, cap WHERE s.rn = 1
+      UNION ALL
+      SELECT s.rn, s.day, s.a,
+             greatest(CAST(0 AS BIGINT), r.b + s.a - cap.c)
+      FROM r JOIN s ON s.rn = r.rn + 1, cap)
+    SELECT r.day, r.a AS arrivals, cap.c AS capacity, r.b AS backlog,
+           CASE WHEN r.b > 0 THEN 1 ELSE 0 END AS overloaded
+    FROM r, cap
+    WHERE r.day < (SELECT max(day) FROM d)
+    ORDER BY r.day
+    """,
+)
+def stream_lindley_backlog_live(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """LIVE LINDLEY BACKLOG MONITOR via applyInPandasWithState — the
+    streaming twin of win_lindley_queue_backlog, ticking the queue
+    recursion ONLINE: state carries (current day, its running count,
+    the carried backlog, the calibrated capacity); when the first
+    event of a later day folds, the closed day emits its backlog row.
+    Capacity calibrates to the FIRST day's throughput (an online
+    monitor cannot know the long-run mean in advance — day-1 is its
+    baseline; the batch sibling uses the full-series mean, and the
+    two are deliberately different estimators of the same recursion).
+
+    Full oracle: close-on-rollover means a day emits exactly once
+    regardless of batching (the stream_gap_sessionize_live identity),
+    so the drained table equals the batch recursion MINUS the final
+    never-closed day — the WHERE day < max(day) twin.  The fold is
+    pure BIGINT.  Calendar days with NO events are SKIPPED (cur_day
+    jumps to the next populated day without emitting or draining),
+    mirroring the oracle's present-days-only recursion — so the
+    identity survives a fixture regeneration with empty days
+    (ADVICE r11; the fixture itself populates all 30 days).
+
+    Bounded state (4 int64 for the whole queue; shard by queue key
+    for a multi-queue deployment — the single global key here mirrors
+    the one-queue contract and is the documented scale limit: one
+    queue's ORDERED recursion is inherently sequential, so the
+    per-key state store IS the right shape)."""
+
+    return _lindley_live_impl(spark, sf_dir)
