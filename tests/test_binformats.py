@@ -9,7 +9,6 @@ import pytest
 from vectordb_agentic_rag_spark.tables import REPO_ROOT
 from vectordb_agentic_rag_spark.operators.binformats import (
     _PNG_SIG,
-    _lzw_enc_base,
     _png_chunk,
     build_png_gray8,
     build_wav,
@@ -229,6 +228,10 @@ def test_bmp_rejects_non_bmp_and_truncation():
         decode_bmp_gray8(full[:-10])
 
 
+def _lzw_enc_base(min_size: int) -> dict:
+    return {bytes([i]): i for i in range(1 << min_size)}
+
+
 def _lzw_encode_gif_bytewise(data: bytes, min_size: int = 8) -> bytes:
     """Reference GIF-variant LZW encode (LSB-first variable-width
     codes, CLEAR/EOI, code width grows at 2^cs + 1 table entries,
@@ -252,7 +255,7 @@ def _lzw_encode_gif_bytewise(data: bytes, min_size: int = 8) -> bytes:
             acc >>= 8
             nbits -= 8
 
-    table = dict(_lzw_enc_base(min_size))
+    table = _lzw_enc_base(min_size)
     next_code = eoi + 1
     code_size = min_size + 1
     put(clear, code_size)
@@ -270,7 +273,7 @@ def _lzw_encode_gif_bytewise(data: bytes, min_size: int = 8) -> bytes:
                 code_size += 1
         else:
             put(clear, code_size)
-            table = dict(_lzw_enc_base(min_size))
+            table = _lzw_enc_base(min_size)
             next_code = eoi + 1
             code_size = min_size + 1
         w = bytes([ch])

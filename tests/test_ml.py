@@ -59,7 +59,7 @@ def test_mmr_matches_reference_algorithm(spark, sf_dir):
         .select(
             "vec_id",
             "embedding",
-            F.round(cosine(F.col("embedding"), F.col("qv")), 6).alias("sim"),
+            F.round(cosine("embedding", "qv"), 6).alias("sim"),
         )
         .orderBy(F.col("sim").desc(), "vec_id")
         .limit(20)

@@ -4,13 +4,15 @@ retrieve/route -> clear on the sf0.001 documents fixture."""
 from __future__ import annotations
 
 import math
+import subprocess
+import sys
 import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
 from vectordb_agentic_rag_spark.plans import RagPipeline
-from vectordb_agentic_rag_spark.tables import table
+from vectordb_agentic_rag_spark.tables import REPO_ROOT, table
 
 
 @pytest.fixture(scope="module")
@@ -367,3 +369,26 @@ def test_read_path_runs_no_python_worker(pipe, spark):
         plan = df._jdf.queryExecution().executedPlan().toString()
         for node in ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
             assert node not in plan
+
+
+def test_pipeline_imports_no_operator_module():
+    """The product path does not load the operator catalogue: a fresh
+    interpreter importing plans.pipeline holds no operators.* module and
+    no tables (fixture reads, oracle SQL built at import)."""
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {REPO_ROOT!r})\n"
+        "import vectordb_agentic_rag_spark.plans.pipeline\n"
+        "print('\\n'.join(sorted(sys.modules)))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", script], capture_output=True, text=True,
+        timeout=120, check=True,
+    )
+    pkg = "vectordb_agentic_rag_spark"
+    loaded = [m for m in out.stdout.split() if m.startswith(pkg)]
+    assert f"{pkg}.plans.pipeline" in loaded
+    assert [
+        m for m in loaded
+        if m == f"{pkg}.tables" or m.startswith(f"{pkg}.operators")
+    ] == []

@@ -264,7 +264,9 @@ def test_lindley_live_skips_gap_days(spark, tmp_path):
     nothing; day 5 never closes."""
     import uuid
 
-    from vectordb_agentic_rag_spark.streaming.core import _lindley_live_impl
+    from vectordb_agentic_rag_spark.streaming.core import (
+        stream_lindley_backlog_live,
+    )
 
     d = tmp_path / f"lindley_gap_{uuid.uuid4().hex[:8]}"
     d.mkdir()
@@ -290,7 +292,7 @@ def test_lindley_live_skips_gap_days(spark, tmp_path):
     )
     pdf["ts"] = pdf["ts"].astype("datetime64[us]")
     pdf.to_parquet(d / "events.parquet")
-    out = _lindley_live_impl(spark, str(d)).toPandas()
+    out = stream_lindley_backlog_live(spark, str(d)).toPandas()
     got = [
         (str(r.day), int(r.arrivals), int(r.capacity), int(r.backlog))
         for r in out.itertuples()

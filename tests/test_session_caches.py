@@ -27,7 +27,6 @@ _WORKER_MEMOS = {
     "_JPEG_HUFF_LUT_CACHE",
     "_JPEG_DCONLY_MEMO",
     "_DEFLATE_REV_MEMO",
-    "_LZW_BASE_ENC",
     "_LZW_BASE_DEC",
     "_JAC_CODES_CACHE",
 }

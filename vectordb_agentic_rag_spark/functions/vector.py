@@ -15,6 +15,11 @@ Arithmetic notes:
   array order.
 - every declared query rounds the final similarity to 6 decimals on
   both sides (FIXTURES.md parity rules).
+
+Every helper takes column NAMES and renders ONE SQL string, parsed by a
+single F.expr call: a Python-built Column tree costs one py4j
+round-trip per node (~400 calls, measured 1.05 s of the cold-query
+latency for 64-dim cosine), a Python lambda several per frame.
 """
 
 from __future__ import annotations
@@ -25,25 +30,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Sequential-fold dot product of two array<float|double> columns."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def norm2(a: Column) -> Column:
-    """Squared L2 norm."""
-    return dot(a, a)
-
-
-def norm(a: Column) -> Column:
-    """L2 norm."""
-    return F.sqrt(norm2(a))
-
-
 def _dot_hof_sql(a: str, b: str) -> str:
     """``dot`` as SQL text over two array expressions."""
     return (
@@ -52,23 +38,27 @@ def _dot_hof_sql(a: str, b: str) -> str:
     )
 
 
-def cosine(a: Column | str, b: Column | str) -> Column:
+def dot(a: str, b: str) -> Column:
+    """Sequential-fold dot product of two array<float|double> columns."""
+    return F.expr(_dot_hof_sql(f"`{a}`", f"`{b}`"))
+
+
+def norm(a: str) -> Column:
+    """L2 norm."""
+    return F.expr(f"sqrt({_dot_hof_sql(f'`{a}`', f'`{a}`')})")
+
+
+def cosine(a: str, b: str) -> Column:
     """Cosine similarity, the reference's distance metric (app.py:87).
 
     0 when either vector has norm 0 (``operators.ml.mmr_select``'s
     convention), where 0/0 would raise DIVIDE_BY_ZERO under ANSI — e.g.
-    for a query whose TF-IDF vector is all zero. Pass column names (str)
-    for a one-expr plan build: a Python-built higher-order function
-    costs several py4j calls per lambda. Both forms fold identically.
+    for a query whose TF-IDF vector is all zero.
     """
-    if isinstance(a, str) and isinstance(b, str):
-        a, b = f"`{a}`", f"`{b}`"
-        return F.expr(
-            f"coalesce({_dot_hof_sql(a, b)} / nullif(sqrt({_dot_hof_sql(a, a)}) * "
-            f"sqrt({_dot_hof_sql(b, b)}), 0D), 0D)"
-        )
-    return F.coalesce(
-        dot(a, b) / F.nullif(norm(a) * norm(b), F.lit(0.0)), F.lit(0.0)
+    a, b = f"`{a}`", f"`{b}`"
+    return F.expr(
+        f"coalesce({_dot_hof_sql(a, b)} / nullif(sqrt({_dot_hof_sql(a, a)}) * "
+        f"sqrt({_dot_hof_sql(b, b)}), 0D), 0D)"
     )
 
 
@@ -83,20 +73,6 @@ def cosine(a: Column | str, b: Column | str) -> Column:
 # fixed-dim helpers fall back to the HOF path.
 _UNROLL_LIMIT = 256
 
-
-def _elem(a: Column, i: int) -> Column:
-    return F.element_at(a, i + 1).cast("double")
-
-
-# Plan-BUILD cost note: constructing the unrolled chain as a Python
-# Column tree costs one py4j round-trip per node (~400 calls, measured
-# 1.05 s of the cold-query latency for 64-dim cosine). When callers
-# pass column NAMES (str), the whole chain is rendered as ONE SQL
-# string and parsed in a single F.expr call (~ms). `+` and `*` parse
-# left-associative, so the expression tree — and therefore the float
-# fold order — is identical to the Column-built version.
-
-
 def _esql(name: str, i: int) -> str:
     # Backtick-quote so non-simple identifiers (dots, spaces) render
     # as a single column reference, not a parse error.
@@ -104,11 +80,11 @@ def _esql(name: str, i: int) -> str:
 
 
 def _dot_sql(a: str, b: str, d: int) -> str:
+    """<a, b> for a KNOWN dimension d as SQL text. `+` and `*` parse
+    left-associative, so the unrolled chain folds in the HOF's order."""
+    if d > _UNROLL_LIMIT:
+        return _dot_hof_sql(f"`{a}`", f"`{b}`")
     return " + ".join(f"{_esql(a, i)} * {_esql(b, i)}" for i in range(d))
-
-
-def _norm2_sql(a: str, d: int) -> str:
-    return " + ".join(f"{_esql(a, i)} * {_esql(a, i)}" for i in range(d))
 
 
 def _dot_const_sql(a: str, qv: list) -> str:
@@ -120,78 +96,37 @@ def _dot_const_sql(a: str, qv: list) -> str:
                 f"_dot_const_sql: query component {i} is {x!r}; "
                 "vector literals must be finite"
             )
-    return " + ".join(
-        f"{_esql(a, i)} * {float(x)!r}D" for i, x in enumerate(qv)
+    lits = [f"{float(x)!r}D" for x in qv]
+    if len(qv) > _UNROLL_LIMIT:
+        return _dot_hof_sql(f"`{a}`", f"array({', '.join(lits)})")
+    return " + ".join(f"{_esql(a, i)} * {x}" for i, x in enumerate(lits))
+
+
+def dot_fixed(a: str, b: str, d: int) -> Column:
+    """dot(a, b) for a KNOWN dimension d: codegen'd unrolled chain,
+    same sequential fold order as the HOF (bit-identical)."""
+    return F.expr(_dot_sql(a, b, d))
+
+
+def norm_fixed(a: str, d: int) -> Column:
+    return F.expr(f"sqrt({_dot_sql(a, a, d)})")
+
+
+def cosine_fixed(a: str, b: str, d: int) -> Column:
+    """cosine(a, b) for a KNOWN dimension — the hot-path variant."""
+    return F.expr(
+        f"({_dot_sql(a, b, d)}) / "
+        f"(sqrt({_dot_sql(a, a, d)}) * sqrt({_dot_sql(b, b, d)}))"
     )
 
 
-def dot_fixed(a: Column | str, b: Column | str, d: int) -> Column:
-    """dot(a, b) for a KNOWN dimension d: codegen'd unrolled chain,
-    same sequential fold order as the HOF (bit-identical). Pass column
-    names (str) for the one-expr fast plan build."""
-    if d > _UNROLL_LIMIT:
-        return dot(F.col(a) if isinstance(a, str) else a,
-                   F.col(b) if isinstance(b, str) else b)
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_dot_sql(a, b, d))
-    acc = _elem(a, 0) * _elem(b, 0)
-    for i in range(1, d):
-        acc = acc + _elem(a, i) * _elem(b, i)
-    return acc
-
-
-def norm2_fixed(a: Column | str, d: int) -> Column:
-    if d > _UNROLL_LIMIT:
-        return norm2(F.col(a) if isinstance(a, str) else a)
-    if isinstance(a, str):
-        return F.expr(_norm2_sql(a, d))
-    t = _elem(a, 0)
-    acc = t * t
-    for i in range(1, d):
-        t = _elem(a, i)
-        acc = acc + t * t
-    return acc
-
-
-def norm_fixed(a: Column | str, d: int) -> Column:
-    return F.sqrt(norm2_fixed(a, d))
-
-
-def cosine_fixed(a: Column | str, b: Column | str, d: int) -> Column:
-    """cosine(a, b) for a KNOWN dimension — the hot-path variant."""
-    if isinstance(a, str) and isinstance(b, str) and d <= _UNROLL_LIMIT:
-        return F.expr(
-            f"({_dot_sql(a, b, d)}) / "
-            f"(sqrt({_norm2_sql(a, d)}) * sqrt({_norm2_sql(b, d)}))"
-        )
-    return dot_fixed(a, b, d) / (norm_fixed(a, d) * norm_fixed(b, d))
-
-
-def dot_to_const_fixed(a: Column | str, qv: list, d: int | None = None) -> Column:
-    """<a, qv> against a driver-side literal list: each query component
-    embeds as a codegen'd double literal (no array construction at all)."""
-    d = len(qv) if d is None else d
-    if d > _UNROLL_LIMIT:
-        return dot(F.col(a) if isinstance(a, str) else a,
-                   F.array(*[F.lit(float(x)) for x in qv]))
-    if isinstance(a, str):
-        return F.expr(_dot_const_sql(a, qv))
-    acc = _elem(a, 0) * float(qv[0])
-    for i in range(1, d):
-        acc = acc + _elem(a, i) * float(qv[i])
-    return acc
-
-
-def cosine_to_const_fixed(a: Column | str, qv: list, q_norm: float) -> Column:
-    """cosine against a literal query vector: unrolled dot + unrolled
-    corpus norm + precomputed (seq_norm) query norm."""
-    if isinstance(a, str) and len(qv) <= _UNROLL_LIMIT:
-        return F.expr(
-            f"({_dot_const_sql(a, qv)}) / "
-            f"(sqrt({_norm2_sql(a, len(qv))}) * {float(q_norm)!r}D)"
-        )
-    return dot_to_const_fixed(a, qv) / (
-        norm_fixed(a, len(qv)) * F.lit(float(q_norm))
+def cosine_to_const_fixed(a: str, qv: list, q_norm: float) -> Column:
+    """cosine against a literal query vector: unrolled dot (each query
+    component a codegen'd double literal) + unrolled corpus norm +
+    precomputed (seq_norm) query norm."""
+    return F.expr(
+        f"({_dot_const_sql(a, qv)}) / "
+        f"(sqrt({_dot_sql(a, a, len(qv))}) * {float(q_norm)!r}D)"
     )
 
 
@@ -199,25 +134,10 @@ def seq_norm(vec) -> float:
     """Driver-side L2 norm with HOF-identical arithmetic: sequential
     left-fold of float64 products in array order (NOT numpy pairwise
     summation, which differs in the last ulp)."""
-    import math
-
     s = 0.0
     for x in vec:
         s += float(x) * float(x)
     return math.sqrt(s)
-
-
-def l2_distance(a: Column, b: Column) -> Column:
-    """Euclidean distance (used by the IVF/LSH approximate paths)."""
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(
-                a, b, lambda x, y: (x.cast("double") - y.cast("double")) ** 2
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
 
 
 # Greedy Maximal Marginal Relevance as ONE Catalyst expression over a

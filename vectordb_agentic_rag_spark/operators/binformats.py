@@ -804,16 +804,7 @@ _GIF_W = 20
 _GIF_MAX_BYTES = 256
 
 
-_LZW_BASE_ENC: dict = {}  # min_size -> {bytes([i]): i} seed table
 _LZW_BASE_DEC: dict = {}  # min_size -> [bytes([i]), ...] seed list
-
-
-def _lzw_enc_base(min_size: int) -> dict:
-    base = _LZW_BASE_ENC.get(min_size)
-    if base is None:
-        base = {bytes([i]): i for i in range(1 << min_size)}
-        _LZW_BASE_ENC[min_size] = base
-    return base
 
 
 def _lzw_dec_base(min_size: int) -> list:
@@ -826,7 +817,7 @@ def _lzw_dec_base(min_size: int) -> list:
 
 def _lzw_encode_gif(data: bytes, min_size: int = 8) -> bytes:
     """Trie-form GIF LZW encode, byte-identical to the bytewise
-    reference above: the dictionary keys on (prefix_code << 8) | byte
+    reference in tests/test_binformats.py: the dictionary keys on (prefix_code << 8) | byte
     instead of the growing prefix STRING, so the per-char hot path is
     one int shift/or + one dict probe — no bytes([ch]) allocation, no
     O(len) prefix concatenation, no per-reset rebuild of the 256-entry

@@ -1589,7 +1589,6 @@ def graph_pagerank_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dedup_weighted_prefix_filter
 # ---------------------------------------------------------------------------
 
-_WPF_T = 0.3  # weighted-Jaccard threshold; exact-decimal compare x*10 vs y*3
 _WPF_NUM, _WPF_DEN = 3, 10  # t = _WPF_NUM / _WPF_DEN, integer-exact
 
 

@@ -206,8 +206,6 @@ def graph_triangle_cosupply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _JACCARD_MIN_SUPPORT = 5  # stronger gate than triangles: the wedge
-
-
 # mass of the common-neighbor join is sum(deg^2), 184M at support 3 vs
 # 9.3M at support 5 on sf0.1 (measured) — embeddedness only means
 # anything over strong edges anyway
@@ -719,7 +717,7 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     the support join from the fact table (measured: 25 exchanges /
     6 lineitem scans in the naive plan). Bounded by |P| choose 2,
     orders of magnitude below the fact table — the same 100 TB play
-    as analytics2._cosupply_edges."""
+    as _cosupply_edges."""
     li = (
         table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
@@ -786,7 +784,7 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: edges come from the same support-gated equi-join as
     agg_degree_assortativity; wedge enumeration joins the directed
     edge list to itself on the MIDDLE node, so cost is the wedge mass
-    sum(deg²) that the support gate bounds (the analytics2 wedge-mass
+    sum(deg²) that the support gate bounds (the _JACCARD_MIN_SUPPORT
     note documents the measurement per gate); degrees ride the wedge
     via one broadcastable (node, deg) join; non-edges via LEFT anti
     semantics against the canonical u<v edge list; final top-20 is
@@ -1164,7 +1162,7 @@ def graph_truss_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape, the graph_kcore loop disciplines applied per EDGE:
     each round computes per-edge triangle support with ONE wedge
     self-join over the checkpointed (domain-bounded) edge list —
-    cost = wedge mass, the quantity the analytics2 wedge-mass note
+    cost = wedge mass, the quantity the _JACCARD_MIN_SUPPORT note
     budgets per support gate — then semi-filters the edge list;
     localCheckpoint truncates lineage per round; edge-count equality
     witnesses the fixpoint (deletion is monotone); the budget of 8
@@ -2814,12 +2812,12 @@ def graph_local_bridges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: common-neighbor detection is one wedge-closing join
     (directed lists joined on both endpoints, the triangle-probe
-    shape whose cost the support gate bounds — analytics2's wedge-mass
+    shape whose cost the support gate bounds — the _JACCARD_MIN_SUPPORT
     note), DISTINCT-collapsed to the closed-edge set; bridges are the
     LEFT-ANTI complement against the checkpointed edge list; degrees
     ride in via two broadcastable (node, deg) joins.  All exact
     integers, no floats anywhere."""
-    e = _copurchase_edges_a9(spark, sf_dir)
+    e = _copurchase_edges(spark, sf_dir)
     d = e.select(F.col("u").alias("m"), F.col("v").alias("n")).unionAll(
         e.select(F.col("v").alias("m"), F.col("u").alias("n"))
     )
@@ -2848,13 +2846,6 @@ def graph_local_bridges(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("part_u", "part_v")
     )
-
-
-def _copurchase_edges_a9(spark: SparkSession, sf_dir: str):
-    """Shared support-2 co-purchase edge list (analytics4's cached
-    frame — imported lazily to keep module import order acyclic)."""
-
-    return _copurchase_edges(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------

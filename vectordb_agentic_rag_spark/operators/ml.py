@@ -126,7 +126,7 @@ def _queries_and_corpus(spark: SparkSession, sf_dir: str, n_q: int = 10):
 @session_artifact
 def _corpus_sample(spark: SparkSession, sf_dir: str):
     """The first 4096 embeddings by vec_id as a float64 matrix — a
-    DETERMINISTIC bounded sample that analytics3's semantic-purge
+    DETERMINISTIC bounded sample that dedup_semantic_cluster_purge's
     coarse quantizer trains on, collected once per session."""
     import numpy as np
 

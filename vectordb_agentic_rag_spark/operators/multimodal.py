@@ -275,9 +275,6 @@ def multimodal_resize_thumbnail(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MAGICS = [("%PDF", "pdf"), ("PNG.", "image"), ("RIFF", "audio")]
-
-
 @query(
     "multimodal_mime_sniff",
     oracle="""

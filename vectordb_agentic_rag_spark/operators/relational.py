@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.chunking import chunk_documents
 from ..functions.money import cents, cents_to_dollars
 from ..registry import query
 from ..tables import SCRATCH, session_artifact, sf_tag, table
@@ -97,8 +98,6 @@ def sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrow/pandas bridge renders as a different dtype than Spark's
     BIGINT — every integer aggregate in an oracle needs an explicit
     CAST(… AS BIGINT) (cost one driver hash_match=false to learn)."""
-    from .text import chunk_documents
-
     out = f"{SCRATCH}/chunks_{sf_tag(sf_dir)}.parquet"
     docs = table(spark, sf_dir, "documents")
     chunks = chunk_documents(docs, keep_cols=("lang",))

@@ -1951,10 +1951,6 @@ _AB_ARM = (
     "CAST((user_id * 2654435761) % 4294967296 div 2147483648"
     " AS BIGINT) AS arm"
 )
-_AB_ARM_DUCK = (
-    "CAST((user_id * 2654435761) % 4294967296 // 2147483648"
-    " AS BIGINT) AS arm"
-)
 
 
 @query(
@@ -3533,8 +3529,6 @@ def agg_model_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # agg_calibration_bins
 # ---------------------------------------------------------------------------
-
-_CAL_BINS = 5
 
 
 def _cal_oracle() -> str:

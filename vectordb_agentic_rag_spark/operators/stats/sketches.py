@@ -442,7 +442,6 @@ def agg_unseen_vocab_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _KMV_K = 256
 _KMV_P = 2147483647  # Lehmer modulus (2^31 - 1)
-_KMV_SCALE = (_KMV_K - 1) * _KMV_P  # 547608329985, exact BIGINT/double
 # 3-round Lehmer mix: one round has no wraparound for small keys (the
 # K smallest hashes would just be the K smallest keys * 48271 and the
 # estimate degenerates to P/48271 regardless of n); three rounds wrap

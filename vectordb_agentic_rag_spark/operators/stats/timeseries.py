@@ -17,7 +17,6 @@ from ..windows import _CUSUM_K, _purchase_day_totals
 # agg_decayed_count
 # ---------------------------------------------------------------------------
 
-_DECAY_HALFLIFE_WEEKS = 1
 _DECAY_CAP_WEEKS = 8
 
 
@@ -43,8 +42,8 @@ _DECAY_CAP_WEEKS = 8
 )
 def agg_decayed_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXPONENTIALLY TIME-DECAYED event counts per type (halflife =
-    {_DECAY_HALFLIFE_WEEKS} week, integer week buckets, capped at
-    {_DECAY_CAP_WEEKS}) — the recency-weighted popularity counter
+    1 week, integer week buckets, capped at
+    8 weeks) — the recency-weighted popularity counter
     behind trending rankings and feature-store freshness signals: an
     event k weeks old contributes 2^-k.
 

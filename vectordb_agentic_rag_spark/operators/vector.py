@@ -88,8 +88,8 @@ def vec_norm_dot(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.where(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     return emb.crossJoin(F.broadcast(q)).select(
         "vec_id",
-        F.round(norm(F.col("embedding")), 6).alias("l2_norm"),
-        F.round(dot(F.col("embedding"), F.col("qv")), 6).alias("dot_q0"),
+        F.round(norm("embedding"), 6).alias("l2_norm"),
+        F.round(dot("embedding", "qv"), 6).alias("dot_q0"),
     )
 
 
@@ -343,7 +343,7 @@ def _unit_embeddings(spark: SparkSession, sf_dir: str) -> str:
     # divide, don't multiply by a reciprocal: x/n rounds once, while
     # x*(1/n) rounds twice — the oracle divides, so we must too for
     # bit parity at round(…,6)
-    n_col = norm(F.col("embedding"))
+    n_col = norm("embedding")
     (
         emb.select(
             "vec_id",
@@ -784,8 +784,6 @@ def eval_rankings_topk(spark: SparkSession, sf_dir: str):
 
     truth columns: (query_id, neighbor_id, rn); system: (query_id,
     neighbor_id, p)."""
-    from ..functions.vector import cosine_fixed
-
     emb = table(spark, sf_dir, "embeddings")
     d = len(_query_vector_raw(spark, sf_dir, 0))
     qs = _query_vectors(spark, sf_dir, 10)
@@ -1210,8 +1208,6 @@ def vec_pairwise_cos_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     (list_dot_product == the sequential-fold dot, the repo-wide
     precedent), identical division shape, floor on identical doubles;
     counts exact."""
-    from ..functions.vector import dot_fixed, norm_fixed
-
     emb = table(spark, sf_dir, "embeddings")
     d = len(_query_vector_raw(spark, sf_dir, 0))
     pan = (
@@ -1595,8 +1591,6 @@ def vec_nn_distance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape at 100 TB: broadcast query panel, one corpus scan, window
     top-2 partitioned by query_id, 10-row pivot — the exact
     per-query-kNN plan with k=2."""
-    from ..functions.vector import cosine_fixed
-
     emb = table(spark, sf_dir, "embeddings")
     q = _query_vectors(spark, sf_dir, 10)
     corpus = emb.where(F.col("vec_id") >= 10).select(
@@ -1698,8 +1692,6 @@ def vec_hubness_topk_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     window top-k, then two bounded aggregates (occurrence counts over
     <= k*|panel| hit rows; histogram over <= |panel|*k levels) and a
     1-row corpus count for the antihub row."""
-    from ..functions.vector import cosine_fixed
-
     emb = table(spark, sf_dir, "embeddings")
     q = _query_vectors(spark, sf_dir, _HUB_QUERIES)
     corpus = emb.where(F.col("vec_id") >= _HUB_QUERIES).select(
@@ -1827,8 +1819,6 @@ def vec_matryoshka_recall_sweep(
     four truncated sims, ONE shuffle (the four rank windows share the
     query_id partitioning), a 1-row conditional aggregate fanned to
     four rows — never a per-dim rescan."""
-    from ..functions.vector import cosine_fixed
-
     emb = table(spark, sf_dir, "embeddings")
     q = _query_vectors(spark, sf_dir, _MRS_QUERIES)
     corpus = emb.where(F.col("vec_id") >= _MRS_QUERIES).select(

@@ -15,11 +15,12 @@ each maps to one method here:
 
 Scale design (the part the reference outsources to Qdrant/Cohere):
 
-- the "vector store" is a partitioned parquet layout under
-  ``index_dir`` (chunks + embeddings + idf weights) — a storage format
-  a 1000-executor cluster can scan/prune, not a serving index. Its two
-  tables have fixed schemas (``CHUNKS_SCHEMA``, ``IDF_SCHEMA``) and are
-  read with them, so building a read plan runs no Spark job;
+- the "vector store" is two unpartitioned parquet tables under
+  ``index_dir``: ``chunks`` (text + embedding per chunk) and ``idf``
+  (one row of idf weights) — a storage format a 1000-executor cluster
+  can scan in parallel, not a serving index. Both have fixed schemas
+  (``CHUNKS_SCHEMA``, ``IDF_SCHEMA``) and are read with them, so
+  building a read plan runs no Spark job;
 - embedding is HashingTF(dim)+IDF: hashing is stateless murmur3 (any
   executor embeds any row with no model shuffle), and the IDF fit is
   the single global aggregate of the write path (SURVEY §3.1);
@@ -47,8 +48,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.chunking import chunk_documents
 from ..functions.vector import cosine, mmr_picks
-from ..operators.text import chunk_documents
 
 # reference retrieval constants, app.py:264-266
 DEFAULT_K = 5
@@ -124,10 +125,13 @@ class RagPipeline:
         self, docs: DataFrame, text_col: str = "text", mode: str = "overwrite"
     ) -> IngestStats:
         """SURVEY §3.1: documents -> 1000/200 chunks -> TF-IDF embed ->
-        partitioned parquet index. ``mode="overwrite"`` reproduces the
-        reference's new-file cache invalidation (app.py:455-461): a
-        re-ingest atomically replaces the collection. It is the only
-        mode: any other raises ``ValueError`` before any Spark work.
+        the ``chunks`` and ``idf`` parquet tables. ``mode="overwrite"``
+        reproduces the reference's new-file cache invalidation
+        (app.py:455-461): a re-ingest overwrites ``chunks``, then
+        ``idf``. The two writes are independent, with no commit point:
+        a failure between them leaves new chunks beside the old idf
+        weights. It is the only mode: any other raises ``ValueError``
+        before any Spark work.
 
         The only cross-node boundaries are the IDF document-frequency
         reduce and the final write — same shape at any scale. The chunk

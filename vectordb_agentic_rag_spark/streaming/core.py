@@ -2112,77 +2112,6 @@ def stream_heavy_hitters_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# stream_lindley_backlog_live: implementation (registered below)
-# ---------------------------------------------------------------------------
-
-
-def _lindley_live_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Implementation behind stream_lindley_backlog_live (registered
-    at the end of this module)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    day_us = 86_400_000_000
-
-    def fold(key, pdf_iter, state: GroupState):
-        if state.exists:
-            cur_day, cnt, backlog, cap = state.get
-        else:
-            cur_day, cnt, backlog, cap = -1, 0, 0, -1
-        out = []
-        part = _batch_slice(pdf_iter, ["us", "event_id"])
-        if part is not None:
-            for us in part["us"]:
-                d = int(us) // day_us
-                if cur_day < 0:
-                    cur_day = d
-                if d > cur_day:  # close cur_day on rollover; gap days
-                    # (no events) are SKIPPED — no empty-day emission
-                    # or drain, mirroring the oracle/batch twin which
-                    # fold only days present in events (ADVICE r11).
-                    if cap < 0:  # first day closing calibrates capacity
-                        cap = cnt
-                    backlog = max(0, backlog + cnt - cap)
-                    out.append((cur_day, cnt, cap, backlog))
-                    cur_day = d
-                    cnt = 0
-                cnt += 1
-        state.update((cur_day, cnt, backlog, cap))
-        yield pd.DataFrame(
-            out, columns=["day_d", "arrivals", "capacity", "backlog"]
-        )
-
-    src = replay_events_time_ordered(spark, sf_dir)
-    stream = stream_events(spark, src).select(
-        F.lit(0).alias("q"), "event_id", F.unix_micros("ts").alias("us")
-    )
-    out = stream.groupBy("q").applyInPandasWithState(
-        fold,
-        outputStructType=(
-            "day_d bigint, arrivals bigint, capacity bigint, backlog bigint"
-        ),
-        stateStructType=(
-            "cur_day bigint, cnt bigint, backlog bigint, cap bigint"
-        ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    _run_to_memory(
-        out,
-        "lindley_live",
-        "append",
-        shuffle_partitions=spark.sparkContext.defaultParallelism,
-    )
-    return spark.table("lindley_live").selectExpr(
-        "date_add(DATE'1970-01-01', CAST(day_d AS INT)) AS day",
-        "arrivals",
-        "capacity",
-        "backlog",
-        "CASE WHEN backlog > 0 THEN 1 ELSE 0 END AS overloaded",
-    ).orderBy("day")
-
-
-# ---------------------------------------------------------------------------
 # stream_theta_sketch_live
 # ---------------------------------------------------------------------------
 
@@ -2817,5 +2746,64 @@ def stream_lindley_backlog_live(
     the one-queue contract and is the documented scale limit: one
     queue's ORDERED recursion is inherently sequential, so the
     per-key state store IS the right shape)."""
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    return _lindley_live_impl(spark, sf_dir)
+    day_us = 86_400_000_000
+
+    def fold(key, pdf_iter, state: GroupState):
+        if state.exists:
+            cur_day, cnt, backlog, cap = state.get
+        else:
+            cur_day, cnt, backlog, cap = -1, 0, 0, -1
+        out = []
+        part = _batch_slice(pdf_iter, ["us", "event_id"])
+        if part is not None:
+            for us in part["us"]:
+                d = int(us) // day_us
+                if cur_day < 0:
+                    cur_day = d
+                if d > cur_day:  # close cur_day on rollover; gap days
+                    # (no events) are SKIPPED — no empty-day emission
+                    # or drain, mirroring the oracle/batch twin which
+                    # fold only days present in events (ADVICE r11).
+                    if cap < 0:  # first day closing calibrates capacity
+                        cap = cnt
+                    backlog = max(0, backlog + cnt - cap)
+                    out.append((cur_day, cnt, cap, backlog))
+                    cur_day = d
+                    cnt = 0
+                cnt += 1
+        state.update((cur_day, cnt, backlog, cap))
+        yield pd.DataFrame(
+            out, columns=["day_d", "arrivals", "capacity", "backlog"]
+        )
+
+    src = replay_events_time_ordered(spark, sf_dir)
+    stream = stream_events(spark, src).select(
+        F.lit(0).alias("q"), "event_id", F.unix_micros("ts").alias("us")
+    )
+    out = stream.groupBy("q").applyInPandasWithState(
+        fold,
+        outputStructType=(
+            "day_d bigint, arrivals bigint, capacity bigint, backlog bigint"
+        ),
+        stateStructType=(
+            "cur_day bigint, cnt bigint, backlog bigint, cap bigint"
+        ),
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+    _run_to_memory(
+        out,
+        "lindley_live",
+        "append",
+        shuffle_partitions=spark.sparkContext.defaultParallelism,
+    )
+    return spark.table("lindley_live").selectExpr(
+        "date_add(DATE'1970-01-01', CAST(day_d AS INT)) AS day",
+        "arrivals",
+        "capacity",
+        "backlog",
+        "CASE WHEN backlog > 0 THEN 1 ELSE 0 END AS overloaded",
+    ).orderBy("day")
