@@ -161,6 +161,52 @@ def test_zero_vector_scores_zero_instead_of_raising(spark, tmp_path):
     p.clear()
 
 
+def test_null_query_text_is_answered_as_empty_text(pipe, spark):
+    """A null query_text does not fail the batch: it is answered as an
+    empty text, its null passed through, and every other row gets the
+    answer its text gets alone."""
+    schema = "query_id long, query_text string"
+    rows = [(1, "spark table merge window batch"), (2, None),
+            (3, "latest news about streaming data")]
+    got = {r.query_id: (r.query_text, r.plan_type, r.sources)
+           for r in pipe.query(spark.createDataFrame(rows, schema)).collect()}
+    for qid, text in rows:
+        (alone,) = pipe.query(spark.createDataFrame([(qid, text or "")], schema)).collect()
+        assert got[qid] == (text, alone.plan_type, alone.sources)
+    picked = pipe.retrieve(spark.createDataFrame(rows, schema)).collect()
+    assert {r.query_id for r in picked} <= {1, 2, 3}
+
+
+def test_ingest_skips_null_text_documents(spark, tmp_path):
+    """A document with a null text is left out; the others are indexed
+    (it used to fail the Tokenizer, and so the whole ingest)."""
+    p = RagPipeline(spark, str(tmp_path / "idx"), dim=32)
+    docs = spark.createDataFrame(
+        [(1, "alpha beta"), (2, None), (3, "gamma delta")], "doc_id long, text string"
+    )
+    stats = p.ingest(docs)
+    assert (stats.n_docs, stats.n_chunks) == (2, 2)
+    chunks = spark.read.parquet(f"{p.index_dir}/chunks")
+    assert sorted(r.doc_id for r in chunks.collect()) == [1, 3]
+    p.clear()
+
+
+def test_ingest_of_nothing_raises_and_keeps_the_index(spark, tmp_path):
+    """An empty corpus, or one whose every text is null, raises
+    ValueError before any write: the previous index still answers."""
+    p = RagPipeline(spark, str(tmp_path / "idx"), dim=32)
+    schema = "doc_id long, text string"
+    p.ingest(spark.createDataFrame([(1, "alpha beta"), (2, "gamma delta")], schema))
+    q = spark.createDataFrame([(0, "alpha")], "query_id long, query_text string")
+    before = p.query(q).collect()
+    for docs in ([], [(3, None)]):
+        with pytest.raises(ValueError, match="no document"):
+            p.ingest(spark.createDataFrame(docs, schema))
+        assert spark.read.parquet(f"{p.index_dir}/chunks").count() == 2
+        assert p.query(q).collect() == before
+    p.clear()
+
+
 # ------------------------------------------------ value oracle (Python)
 
 _VALUE_QUERIES = [

@@ -131,7 +131,9 @@ class RagPipeline:
         ``idf``. The two writes are independent, with no commit point:
         a failure between them leaves new chunks beside the old idf
         weights. It is the only mode: any other raises ``ValueError``
-        before any Spark work.
+        before any Spark work. Documents with a null text are skipped;
+        when none is left the call raises ``ValueError`` before any
+        write, and the previous index stays readable.
 
         The only cross-node boundaries are the IDF document-frequency
         reduce and the final write — same shape at any scale. The chunk
@@ -146,6 +148,14 @@ class RagPipeline:
         from pyspark.ml.feature import IDF, HashingTF, Tokenizer
         from pyspark.ml.functions import vector_to_array
 
+        # a null text would chunk into one null page_content, which fails
+        # the Tokenizer and so the whole call
+        docs = docs.where(F.col(text_col).isNotNull())
+        n_docs = docs.count()
+        if n_docs == 0:
+            # IDF.fit would raise "Haven't seen any document yet"; the
+            # previous index is left as it was
+            raise ValueError("ingest: no document with a non-null text to index")
         doc_id = F.col("doc_id").cast("long")
         chunks = chunk_documents(docs, text_col).select(
             (doc_id * F.lit(1_000_000) + F.col("chunk_no")).alias("chunk_id"),
@@ -176,9 +186,7 @@ class RagPipeline:
         self.spark.createDataFrame(idf).write.mode(mode).parquet(
             f"{self.index_dir}/idf"
         )
-        return IngestStats(
-            n_docs=docs.count(), n_chunks=int(idf_model.numDocs), dim=self.dim
-        )
+        return IngestStats(n_docs=n_docs, n_chunks=int(idf_model.numDocs), dim=self.dim)
 
     # ----------------------------------------------------------- read path
 
@@ -193,11 +201,15 @@ class RagPipeline:
         """(query_id, *carry, qv): query rows embedded with the stored idf
         weights — murmur3 HashingTF is deterministic, so query and corpus
         land in the same space with zero model state beyond the idf
-        vector. ``carry`` are further columns of the same scan."""
+        vector. ``carry`` are further columns of the same scan. A null
+        text is embedded as an empty one."""
         from pyspark.ml.feature import HashingTF, Tokenizer
         from pyspark.ml.functions import vector_to_array
 
-        toks = Tokenizer(inputCol=text_col, outputCol="words").transform(queries)
+        # the Tokenizer fails the whole batch on a null text
+        toks = Tokenizer(inputCol="q_tokens_in", outputCol="words").transform(
+            queries.withColumn("q_tokens_in", F.coalesce(F.col(text_col), F.lit("")))
+        )
         tf = HashingTF(
             inputCol="words", outputCol="tf", numFeatures=self.dim
         ).transform(toks)
