@@ -9,8 +9,10 @@ import sys
 import uuid
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
+from vectordb_agentic_rag_spark.memo import clear_session_caches
 from vectordb_agentic_rag_spark.plans import RagPipeline
 from vectordb_agentic_rag_spark.tables import REPO_ROOT, table
 
@@ -97,6 +99,33 @@ def test_route_four_way(pipe, spark):
         if r.plan_type in ("document_rag", "hybrid_search"):
             assert r.sources and len(r.sources) <= 3
             assert all(len(s) <= 300 for s in r.sources)  # app.py:544 [:300]
+
+
+@pytest.mark.parametrize("text_col, id_col", [
+    ("q.text", "query_id"), ("query_text", "q.id"), ("q`t", "query_id"),
+    ("q{t}", "q{i}"),  # spark.sql formats its text with str.format
+])
+def test_read_path_quotes_caller_column_names(pipe, spark, text_col, id_col):
+    """A legal column name holding a dot, a backtick or a brace names
+    the column itself in all four read methods: each answers as it does
+    on the default names."""
+    base = _queries(spark)
+    q = base.toDF(id_col, text_col)
+    names = dict(text_col=text_col, id_col=id_col)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    assert rows(pipe.retrieve(q, **names)) == rows(pipe.retrieve(base))
+    assert rows(pipe.retrieve(q, mmr=False, **names)) == rows(pipe.retrieve(base, mmr=False))
+    answers = pipe.query(q, **names)
+    assert answers.columns == ["query_id", text_col, "plan_type", "sources"]
+    assert rows(answers) == rows(pipe.query(base))
+    relevance = pipe.assess_relevance(pipe.retrieve(q, **names), q, **names)
+    routed = pipe.route(q, relevance, **names)
+    assert routed.columns == ["query_id", text_col, "plan_type"]
+    want = pipe.route(base, pipe.assess_relevance(pipe.retrieve(base), base))
+    assert rows(routed) == rows(want)
 
 
 def test_reingest_overwrites(pipe, spark, sf_dir):
@@ -438,3 +467,120 @@ def test_pipeline_imports_no_operator_module():
         m for m in loaded
         if m == f"{pkg}.tables" or m.startswith(f"{pkg}.operators")
     ] == []
+
+
+def _count_py4j(monkeypatch, fn):
+    """fn()'s result and the number of py4j commands it sent, GC
+    detach messages ("m\\nd\\n") not counted."""
+    from py4j.clientserver import ClientServerConnection
+
+    sent = []
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        if not command.startswith("m\nd\n"):
+            sent.append(command)
+        return send(self, command)
+
+    with monkeypatch.context() as m:
+        m.setattr(ClientServerConnection, "send_command", counting)
+        out = fn()
+    return out, len(sent)
+
+
+def test_query_build_makes_few_py4j_calls(pipe, spark, monkeypatch):
+    """A warm query() build is one SQL text over a session-cached
+    hasher and idf literal: a handful of py4j calls, not one per
+    Column node (661 before)."""
+    pipe.query(_queries(spark))
+    q = _queries(spark)
+    df, calls = _count_py4j(monkeypatch, lambda: pipe.query(q))
+    assert 0 < calls <= 60
+    assert len(df.collect()) == 3
+
+
+def _replay_query(spark, index_dir, dim, rows, k):
+    """Per (query_id, text) row: query()'s (text, plan_type, sources)
+    and retrieve(mmr=False)'s k best sims, replayed in Python over the
+    index on disk, with its idf read from the parquet file."""
+    import pyarrow.parquet as pq
+    from pyspark.ml.feature import HashingTF, Tokenizer
+    from pyspark.ml.functions import vector_to_array
+
+    from vectordb_agentic_rag_spark.operators.ml import mmr_select
+    from vectordb_agentic_rag_spark.plans.pipeline import DEFAULT_FETCH_K, DEFAULT_LAMBDA
+
+    chunks = pq.read_table(f"{index_dir}/chunks").sort_by("chunk_id")
+    ids = chunks["chunk_id"].to_pylist()
+    texts = chunks["page_content"].to_pylist()
+    embs = chunks["embedding"].to_pylist()
+    idf = pq.read_table(f"{index_dir}/idf")["idf"][0].as_py()
+    q = spark.createDataFrame(rows, "query_id long, query_text string")
+    tf = HashingTF(inputCol="w", outputCol="tf", numFeatures=dim).transform(
+        Tokenizer(inputCol="query_text", outputCol="w").transform(q)
+    )
+    tfs = {r.query_id: r.tf for r in
+           tf.select("query_id", vector_to_array("tf").alias("tf")).collect()}
+    out = {}
+    for qid, text in rows:
+        qv = [t * w for t, w in zip(tfs[qid], idf)]
+        seq = [round(_seq_cos(e, qv), 6) for e in embs]
+        ranked = sorted(range(len(ids)), key=lambda i: (-seq[i], ids[i]))
+        want = mmr_select([(ids[i], embs[i], seq[i]) for i in ranked[:DEFAULT_FETCH_K]],
+                          k, DEFAULT_LAMBDA)
+        picked = [texts[ids.index(c)] for c, _ in want]
+        kws = [w for w in text.lower().split(" ") if len(w) > 3]
+        hits = max((sum(w in t.lower() for w in kws) for t in picked), default=0)
+        relevant = bool(picked) and (len(picked) >= 3 or hits >= len(kws) / 2)
+        if any(w in text.lower() for w in ("latest", "current", "news")):
+            plan = "hybrid_search" if relevant else "web_search"
+        else:
+            plan = "document_rag" if relevant else "direct_answer"
+        sources = [t[:300] for t in picked[:3]] if picked else None
+        out[qid] = ((text, plan, sources), [seq[i] for i in ranked[:k]])
+    return out
+
+
+def test_idf_cache_follows_the_index_version(spark, tmp_path):
+    """The idf literal is cached per index version: a re-ingest, through
+    the same RagPipeline or another one, is answered with the new idf;
+    after clear_session_caches the hasher and idf are built again; a
+    cleared index still raises before any job runs."""
+    index_dir = str(tmp_path / "idx")
+    schema = "doc_id long, text string"
+    corpus_a = [(1, "alpha beta gamma"), (2, "alpha delta delta"),
+                (3, "epsilon zeta alpha"), (4, "beta beta eta theta")]
+    corpus_b = [(1, "kappa alpha kappa"), (2, "lambda mu beta"), (3, "kappa nu alpha"),
+                (4, "xi omicron"), (5, "alpha beta gamma delta")]
+    rows = [(0, "alpha beta"), (1, "latest kappa delta"), (2, "gamma theta alpha")]
+    q = spark.createDataFrame(rows, "query_id long, query_text string")
+    k = 3
+    p, other = RagPipeline(spark, index_dir, dim=32), RagPipeline(spark, index_dir, dim=32)
+
+    def check(corpus):
+        want = _replay_query(spark, index_dir, 32, rows, k)
+        got = {r.query_id: (r.query_text, r.plan_type, r.sources)
+               for r in p.query(q, k=k).collect()}
+        assert got == {qid: w[0] for qid, w in want.items()}
+        sims = {qid: [] for qid, _ in rows}
+        for r in sorted(p.retrieve(q, mmr=False, k=k).collect(), key=lambda r: -r.sim):
+            sims[r.query_id].append(r.sim)
+        assert sims == {qid: w[1] for qid, w in want.items()}
+        return want
+
+    p.ingest(spark.createDataFrame(corpus_a, schema))
+    on_a = check(corpus_a)
+    p.ingest(spark.createDataFrame(corpus_b, schema))
+    assert check(corpus_b) != on_a  # the two idf vectors answer differently
+    other.ingest(spark.createDataFrame(corpus_a, schema))
+    assert check(corpus_a) == on_a
+    clear_session_caches()
+    check(corpus_a)
+
+    p.clear()
+
+    def cleared():
+        with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+            p.query(q)
+
+    assert _count_jobs(spark, cleared)[1] == 0

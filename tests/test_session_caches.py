@@ -1,9 +1,10 @@
-"""The session-artifact memo (``tables.session_artifact``) and its clear.
+"""The session-artifact memo (``memo.session_artifact``, re-exported by
+``tables``) and its clear.
 
 Every driver-side session memo in the package goes through
 ``session_artifact``: one key scheme (application id + the build
 function's positional arguments) and one registry, which
-``tables.clear_session_caches`` walks to unpersist what the builds
+``clear_session_caches`` walks to unpersist what the builds
 persisted and to forget write-once layouts. These tests pin the hit,
 miss and release behaviour, and a text scan keeps hand-rolled memos
 from coming back.
@@ -147,7 +148,7 @@ def test_every_cache_module_is_sweepable():
         assert str(PKG_ROOT.parent) not in src, rel
         for m in _MEMO_DECL.finditer(src):
             name = m.group(1) or m.group(2)
-            if (str(rel), name) == ("tables.py", "_MEMOS"):
+            if (str(rel), name) == ("memo.py", "_MEMOS"):
                 continue
             assert name in _WORKER_MEMOS, f"{rel}: hand-rolled memo {name}"
 

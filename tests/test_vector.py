@@ -31,7 +31,7 @@ def test_norm(pairs):
 
 
 def test_cosine_bounds_and_known(pairs):
-    got = [r[0] for r in pairs.select(cosine("a", "b")).collect()]
+    got = [r[0] for r in pairs.select(F.expr(cosine("a", "b"))).collect()]
     assert got[1] == pytest.approx(0.0)  # orthogonal
     assert got[2] == pytest.approx(1.0)  # parallel
     assert all(-1.0 - 1e-9 <= g <= 1.0 + 1e-9 for g in got)
@@ -44,11 +44,11 @@ def test_cosine_of_zero_vector_is_zero(spark, pairs):
         [([0.0, 0.0], [3.0, 4.0]), ([1.0, 2.0], [0.0, 0.0]), ([0.0], [0.0])],
         "a array<double>, b array<double>",
     )
-    rows = pairs.select(cosine("a", "b").alias("c")).collect()
+    rows = pairs.select(F.expr(cosine("a", "b")).alias("c")).collect()
     # nonzero pairs: unchanged from the plain quotient
     plain = pairs.select(dot("a", "b") / (norm("a") * norm("b"))).collect()
     assert [r.c for r in rows] == [r[0] for r in plain]
-    assert [r[0] for r in zero.select(cosine("a", "b")).collect()] == [0.0] * 3
+    assert [r[0] for r in zero.select(F.expr(cosine("a", "b"))).collect()] == [0.0] * 3
 
 
 def test_topk_subset_of_full_sort(spark, sf_dir):
@@ -63,7 +63,7 @@ def test_topk_subset_of_full_sort(spark, sf_dir):
     full = (
         emb.where(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q))
-        .select("vec_id", F.round(cosine("embedding", "qv"), 6).alias("sim"))
+        .select("vec_id", F.round(F.expr(cosine("embedding", "qv")), 6).alias("sim"))
         .orderBy(F.col("sim").desc(), "vec_id")
         .collect()
     )
@@ -143,7 +143,7 @@ def test_mmr_picks_matches_mmr_select(spark, cases):
     # k and lam are literals of the expression: one branch per case
     pick = None
     for g, (_, k, lam) in enumerate(cases):
-        e = mmr_picks("c", k, lam)
+        e = F.expr(mmr_picks("c", k, lam))
         pick = F.when(F.col("g") == g, e) if pick is None else pick.when(F.col("g") == g, e)
     out = spark.createDataFrame(rows, _MMR_SCHEMA).select("g", "c", pick.alias("p"))
     got = {r.g: [(r.c[p.idx].id, p.score) for p in r.p] for r in out.collect()}

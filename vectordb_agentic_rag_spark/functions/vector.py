@@ -17,9 +17,11 @@ Arithmetic notes:
   both sides (FIXTURES.md parity rules).
 
 Every helper takes column NAMES and renders ONE SQL string, parsed by a
-single F.expr call: a Python-built Column tree costs one py4j
-round-trip per node (~400 calls, measured 1.05 s of the cold-query
-latency for 64-dim cosine), a Python lambda several per frame.
+single F.expr call (``cosine`` and ``mmr_picks`` return the string
+itself, so a caller can splice it into a whole ``spark.sql`` text): a
+Python-built Column tree costs one py4j round-trip per node (~400
+calls, measured 1.05 s of the cold-query latency for 64-dim cosine), a
+Python lambda several per frame.
 """
 
 from __future__ import annotations
@@ -48,15 +50,17 @@ def norm(a: str) -> Column:
     return F.expr(f"sqrt({_dot_hof_sql(f'`{a}`', f'`{a}`')})")
 
 
-def cosine(a: str, b: str) -> Column:
-    """Cosine similarity, the reference's distance metric (app.py:87).
+def cosine(a: str, b: str) -> str:
+    """Cosine similarity, the reference's distance metric (app.py:87),
+    as SQL text over the columns ``a`` and ``b``: wrap it in ``F.expr``
+    or splice it into a ``spark.sql`` text.
 
     0 when either vector has norm 0 (``operators.ml.mmr_select``'s
     convention), where 0/0 would raise DIVIDE_BY_ZERO under ANSI — e.g.
     for a query whose TF-IDF vector is all zero.
     """
     a, b = f"`{a}`", f"`{b}`"
-    return F.expr(
+    return (
         f"coalesce({_dot_hof_sql(a, b)} / nullif(sqrt({_dot_hof_sql(a, a)}) * "
         f"sqrt({_dot_hof_sql(b, b)}), 0D), 0D)"
     )
@@ -149,12 +153,13 @@ def seq_norm(vec) -> float:
 # the lowest id. The state is an ``aggregate`` over least(k, n) steps
 # carrying the picks and each candidate's running max cosine to them,
 # so a step scores n candidates against ONE new pick. Rendered as one
-# SQL string: a single F.expr parse at plan build, no Python worker.
+# SQL string: a single parse at plan build, no Python worker.
 
 
-def mmr_picks(cands: str, k: int, lam: float, id_field: str = "id") -> Column:
-    """Greedy-MMR picks over the array<struct> column ``cands`` as an
-    ``array<struct<idx: int, score: double>>`` in pick order: ``idx`` is
+def mmr_picks(cands: str, k: int, lam: float, id_field: str = "id") -> str:
+    """Greedy-MMR picks over the array<struct> column ``cands``, as SQL
+    text of an ``array<struct<idx: int, score: double>>`` in pick order
+    (wrap it in ``F.expr`` or splice it into a ``spark.sql`` text): ``idx`` is
     the 0-based position of the pick in ``cands`` and ``score`` its raw
     (unrounded) MMR score. Each candidate struct has an integral
     ``id_field`` (the tie-break), an ``embedding`` array and ``sim``, its
@@ -185,7 +190,7 @@ def mmr_picks(cands: str, k: int, lam: float, id_field: str = "id") -> Column:
         f"'red', transform(s.red, (r, j) -> greatest(r, {cos})), "
         "'nrm', s.nrm))"
     )
-    return F.expr(
+    return (
         f"aggregate(array_repeat(0, least({int(k)}, size({c}))), {zero}, "
         f"(st, _) -> {step}, st -> st.picks)"
     )

@@ -971,7 +971,10 @@ def vec_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     picked = (
         cand.groupBy("query_id")
         .agg(F.collect_list(F.struct("vec_id", "embedding", "sim")).alias("c"))
-        .select("query_id", "c", mmr_picks("c", 5, 0.5, id_field="vec_id").alias("p"))
+        .select(
+            "query_id", "c",
+            F.expr(mmr_picks("c", 5, 0.5, id_field="vec_id")).alias("p"),
+        )
     )
     return picked.select(
         "query_id",

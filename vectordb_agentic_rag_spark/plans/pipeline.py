@@ -19,8 +19,18 @@ Scale design (the part the reference outsources to Qdrant/Cohere):
   ``index_dir``: ``chunks`` (text + embedding per chunk) and ``idf``
   (one row of idf weights) — a storage format a 1000-executor cluster
   can scan in parallel, not a serving index. Both have fixed schemas
-  (``CHUNKS_SCHEMA``, ``IDF_SCHEMA``) and are read with them, so
-  building a read plan runs no Spark job;
+  (``CHUNKS_SCHEMA``, ``IDF_SCHEMA``) and are read with them;
+- the read path keeps per-session state across a user's successive
+  calls instead of rebuilding it: the Tokenizer/HashingTF pair is built
+  once per (session, dim), and each index version (named by its file
+  listing) is read once: its chunks scan, and its idf vector as an
+  ``array(...)`` literal inlined into the plan, with no idf scan or
+  broadcast. The first call on an index version runs one job to read
+  the idf; a warm call's plan build runs no Spark job;
+- a read call is one SQL text, analyzed once: from the embedded queries
+  to the output row (cosine, window top-k, MMR, gate, route, sources)
+  it is a single ``spark.sql`` over two DataFrame arguments, built in a
+  few dozen py4j calls, not one per Column node;
 - embedding is HashingTF(dim)+IDF: hashing is stateless murmur3 (any
   executor embeds any row with no model shuffle), and the IDF fit is
   the single global aggregate of the write path (SURVEY §3.1);
@@ -44,12 +54,14 @@ Scale design (the part the reference outsources to Qdrant/Cohere):
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.chunking import chunk_documents
 from ..functions.vector import cosine, mmr_picks
+from ..memo import session_artifact
 
 # reference retrieval constants, app.py:264-266
 DEFAULT_K = 5
@@ -68,10 +80,76 @@ IDF_SCHEMA = "idf array<double>"
 # app.py:298-343: the words that make a query need fresh (web) results
 FRESH_WORDS = ("latest", "current", "news")
 
+# the embedding step's own columns, named so that no caller column is
+# replaced by them
+_TEXT, _WORDS, _TF = "__rag_text", "__rag_words", "__rag_tf"
 
-# The gate and route below are SQL text, parsed once each by F.expr: a
-# Python-built higher-order-function Column costs several py4j calls per
-# lambda, and plan build is a large share of a one-query call.
+
+def _quote(name: str) -> str:
+    """A caller-supplied column name as a SQL identifier: backtick-quoted
+    with backticks doubled, so a dot or a backtick is part of the name."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _ident(name: str) -> str:
+    """``_quote(name)`` for a ``spark.sql`` text given DataFrames, which
+    ``spark.sql`` formats through ``str.format``: braces doubled."""
+    return _quote(name).replace("{", "{{").replace("}", "}}")
+
+
+@dataclass(frozen=True)
+class _Jvm:
+    """A session's JVM handles for the read path. The pyspark.ml
+    wrappers are held, not only their ``_java_obj``: a dropped wrapper
+    detaches its Java object on GC. A static method looked up once
+    costs one py4j call a use instead of one per package level."""
+
+    tokenizer: Any
+    hashing_tf: Any
+    to_array: Any  # org.apache.spark.ml.functions.vector_to_array
+    path: Any  # the org.apache.hadoop.fs.Path class
+    stat2paths: Any
+    paths_text: Any  # org.apache.commons.lang3.ArrayUtils.toString
+    hadoop_conf: Any
+
+
+@session_artifact
+def _session_jvm(spark: SparkSession, dim: int) -> _Jvm:
+    from pyspark.ml.feature import HashingTF, Tokenizer
+
+    tokenizer = Tokenizer(inputCol=_TEXT, outputCol=_WORDS)
+    hashing_tf = HashingTF(inputCol=_WORDS, outputCol=_TF, numFeatures=dim)
+    for t in (tokenizer, hashing_tf):
+        t._transfer_params_to_java()
+    jvm = spark._jvm
+    return _Jvm(
+        tokenizer,
+        hashing_tf,
+        jvm.org.apache.spark.ml.functions.vector_to_array,
+        jvm.org.apache.hadoop.fs.Path,
+        jvm.org.apache.hadoop.fs.FileUtil.stat2Paths,
+        jvm.org.apache.commons.lang3.ArrayUtils.toString,
+        spark._jsc.hadoopConfiguration(),
+    )
+
+
+@session_artifact
+def _index(spark: SparkSession, index_dir: str, version: str) -> tuple:
+    """One index version: its chunks scan and its idf weights as an
+    ``array(...)`` literal of doubles (repr round-trips each value).
+    ``version`` is the index's file listing, whose parquet part names
+    carry the writing job's UUID: a re-ingest by any writer makes a new
+    key, read once. Older versions stay until ``clear_session_caches``.
+    A missing index raises here, before any job."""
+    chunks = spark.read.schema(CHUNKS_SCHEMA).parquet(f"{index_dir}/chunks")
+    (row,) = spark.read.schema(IDF_SCHEMA).parquet(f"{index_dir}/idf").collect()
+    return chunks, "array(" + ", ".join(f"{float(x)!r}D" for x in row.idf) + ")"
+
+
+# The gate and route below are SQL text, spliced into the read path's
+# one spark.sql text or parsed by one F.expr: a Python-built
+# higher-order-function Column costs several py4j calls per lambda, and
+# plan build is a large share of a one-query call.
 
 
 def _keywords_sql(text: str) -> str:
@@ -190,87 +268,114 @@ class RagPipeline:
 
     # ----------------------------------------------------------- read path
 
-    def _chunks(self) -> DataFrame:
-        return self.spark.read.schema(CHUNKS_SCHEMA).parquet(
-            f"{self.index_dir}/chunks"
-        )
+    def _index_version(self, jvm: _Jvm) -> str:
+        """The files of the chunks and idf tables, listed through the
+        Hadoop FileSystem with the glob Spark's reader applies to the
+        path too; empty for a missing index."""
+        path = jvm.path(f"{self.index_dir}/{{chunks,idf}}/*")
+        fs = path.getFileSystem(jvm.hadoop_conf)
+        return jvm.paths_text(jvm.stat2paths(fs.globStatus(path)))
 
     def _embed_queries(
-        self, queries: DataFrame, text_col: str, id_col: str, *carry
+        self, queries: DataFrame, text_col: str, id_col: str, jvm: _Jvm
     ) -> DataFrame:
-        """(query_id, *carry, qv): query rows embedded with the stored idf
-        weights — murmur3 HashingTF is deterministic, so query and corpus
-        land in the same space with zero model state beyond the idf
-        vector. ``carry`` are further columns of the same scan. A null
-        text is embedded as an empty one."""
-        from pyspark.ml.feature import HashingTF, Tokenizer
-        from pyspark.ml.functions import vector_to_array
-
-        # the Tokenizer fails the whole batch on a null text
-        toks = Tokenizer(inputCol="q_tokens_in", outputCol="words").transform(
-            queries.withColumn("q_tokens_in", F.coalesce(F.col(text_col), F.lit("")))
+        """(query_id, q_text, __rag_tf): each query row's id and text and
+        the hashed term frequencies of its text as array<double> —
+        murmur3 HashingTF is deterministic, so query and corpus land in
+        the same space with no model state beyond the idf vector. A null
+        text is hashed as an empty one (the Tokenizer fails the whole
+        batch on a null). The session's transformers are called through
+        their Java ``transform``, which sends no param again."""
+        text = _ident(text_col)
+        pre = self.spark.sql(
+            f"SELECT {_ident(id_col)} AS query_id, {text} AS q_text, "
+            f"coalesce({text}, '') AS {_TEXT} FROM {{q}}",
+            q=queries,
         )
-        tf = HashingTF(
-            inputCol="words", outputCol="tf", numFeatures=self.dim
-        ).transform(toks)
-        idf = self.spark.read.schema(IDF_SCHEMA).parquet(f"{self.index_dir}/idf")
-        return tf.crossJoin(F.broadcast(idf)).select(
-            F.col(id_col).alias("query_id"),
-            *carry,
-            F.zip_with(vector_to_array("tf"), "idf", lambda a, b: a * b).alias("qv"),
+        jdf = jvm.hashing_tf._java_obj.transform(
+            jvm.tokenizer._java_obj.transform(pre._jdf)
         )
+        jdf = jdf.withColumn(_TF, jvm.to_array(jdf.col(_TF), "float64"))
+        return DataFrame(jdf, self.spark)
 
-    def _candidates(
-        self, q: DataFrame, n: int, key: str = "query_id", carry: tuple = ()
+    def _read_plan(
+        self, queries: DataFrame, text_col: str, id_col: str,
+        k: int, fetch_k: int, lambda_mult: float, shape: str,
     ) -> DataFrame:
-        """Each ``key`` group's ``n`` best chunks by 6-decimal cosine, ties
-        to the lowest chunk_id: one corpus pass against the broadcast
-        embedded queries ``q``, then a window top-n partitioned by
-        ``key``. ``carry`` columns of ``q`` ride along. A query whose
-        vector is all zero scores 0 against every chunk."""
-        sim = F.round(cosine("embedding", "qv"), 6)
-        w = Window.partitionBy(key).orderBy(
-            F.col("sim").desc(), F.col("chunk_id")
-        )
-        return (
-            self._chunks()
-            .crossJoin(F.broadcast(q))
-            .select(key, *carry, "chunk_id", "doc_id", "page_content",
-                    "embedding", sim.alias("sim"))
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= n)
-            .drop("rn")
-        )
+        """The read path as one SQL text over the chunks and the embedded
+        queries, analyzed once. ``shape`` picks the output: ``"topk"``
+        (``retrieve(mmr=False)``), ``"mmr"`` (``retrieve``) or
+        ``"answer"`` (``query``).
 
-    def _picks(
-        self, q: DataFrame, k: int, fetch_k: int, lambda_mult: float,
-        key: str = "query_id", carry: tuple = (),
-    ) -> DataFrame:
-        """One row per ``key`` group with candidates: ``key``, ``carry``
-        (each group's first value) and ``picks``, its greedy-MMR selection
-        in rank order as array<struct<chunk_id, doc_id, page_content,
-        sim, mmr_score, mmr_rank>>. The groupBy reuses the window's
-        ``key`` partitioning (no extra exchange) and MMR is one Catalyst
-        expression over <= fetch_k candidates."""
-        cands = self._candidates(q, fetch_k, key, carry)
-        grouped = cands.groupBy(key).agg(
-            F.collect_list(
-                F.struct("chunk_id", "doc_id", "page_content", "embedding", "sim")
-            ).alias("c"),
-            *(F.first(c).alias(c) for c in carry),
+        Each query's idf-weighted vector is its term frequencies times
+        the idf literal. One corpus pass scores every chunk against the
+        broadcast queries by 6-decimal cosine; a window top-n keeps each
+        group's best, ties to the lowest chunk_id. A group is a
+        ``query_id`` in ``retrieve`` and a query row (``q_row``) in
+        ``query``, whose id, text and keywords ride along. For MMR the
+        groupBy reuses the window's partitioning (no extra exchange) and
+        the greedy selection is one Catalyst expression over each
+        group's <= fetch_k candidates. A query whose vector is all zero
+        scores 0 against every chunk."""
+        jvm = _session_jvm(self.spark, self.dim)
+        chunks, idf = _index(self.spark, self.index_dir, self._index_version(jvm))
+        q = self._embed_queries(queries, text_col, id_col, jvm)
+        answer = shape == "answer"
+        key = "q_row" if answer else "query_id"
+        n = k if shape == "topk" else fetch_k
+        carry = ("query_id", "q_text", "keywords") if answer else ()
+        q_cols = (
+            f"monotonically_increasing_id() AS q_row, query_id, q_text, "
+            f"{_keywords_sql('q_text')} AS keywords"
+            if answer else "query_id"
         )
-        picked = grouped.select(
-            key, *carry, "c",
-            mmr_picks("c", k, lambda_mult, id_field="chunk_id").alias("p"),
-        )
-        return picked.select(
-            key, *carry,
-            F.expr(
+        ctes = [
+            f"q AS (SELECT {q_cols}, zip_with({_TF}, {idf}, (a, b) -> a * b) AS qv "
+            "FROM {q})",
+            f"scored AS (SELECT /*+ BROADCAST(q) */ {', '.join((key, *carry))}, "
+            "chunk_id, doc_id, page_content, embedding, "
+            f"round({cosine('embedding', 'qv')}, 6) AS sim FROM {{chunks}} CROSS JOIN q)",
+            f"top AS (SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY {key} "
+            f"ORDER BY sim DESC, chunk_id) AS rn FROM scored) WHERE rn <= {int(n)})",
+        ]
+        if shape == "topk":
+            out = "SELECT query_id, chunk_id, doc_id, page_content, sim FROM top"
+        else:
+            firsts = "".join(f", first({c}) AS {c}" for c in carry)
+            ctes += [
+                f"grouped AS (SELECT {key}{firsts}, collect_list(named_struct("
+                "'chunk_id', chunk_id, 'doc_id', doc_id, 'page_content', page_content, "
+                "'embedding', embedding, 'sim', sim)) AS c FROM top GROUP BY " + key + ")",
+                "picked AS (SELECT *, "
+                f"{mmr_picks('c', k, lambda_mult, id_field='chunk_id')} AS p FROM grouped)",
+                f"picks AS (SELECT {', '.join((key, *carry))}, "
                 "transform(p, (x, r) -> named_struct("
                 "'chunk_id', c[x.idx].chunk_id, 'doc_id', c[x.idx].doc_id, "
                 "'page_content', c[x.idx].page_content, 'sim', c[x.idx].sim, "
-                "'mmr_score', round(x.score, 6), 'mmr_rank', r))"
-            ).alias("picks"),
+                "'mmr_score', round(x.score, 6), 'mmr_rank', r)) AS picks FROM picked)",
+            ]
+            if answer:
+                n_docs = "size(picks)"
+                matches = (
+                    "aggregate(picks, 0, (acc, p) -> "
+                    f"greatest(acc, {_hits_sql('keywords', 'p.page_content')}))"
+                )
+                relevant = (
+                    f"({n_docs} > 0 AND {_relevant_sql(n_docs, matches, 'size(keywords)')})"
+                )
+                sources = (
+                    f"CASE WHEN {n_docs} > 0 THEN "
+                    "transform(slice(picks, 1, 3), p -> substring(p.page_content, 1, 300)) END"
+                )
+                out = (
+                    f"SELECT query_id, q_text AS {_ident(text_col)}, "
+                    f"{_plan_type_sql('q_text', relevant)} AS plan_type, "
+                    f"{sources} AS sources FROM picks"
+                )
+            else:
+                out = "SELECT CAST(query_id AS BIGINT) AS query_id, inline(picks) FROM picks"
+        return self.spark.sql(
+            "WITH " + ",\n".join(ctes) + "\n" + out, q=q, chunks=chunks
         )
 
     def retrieve(
@@ -293,14 +398,9 @@ class RagPipeline:
         corpus, and no Python worker. ``mmr=False`` reproduces the
         reference's second, default-settings retriever (app.py:401).
         """
-        q = self._embed_queries(queries, text_col, id_col)
-        if not mmr:
-            return self._candidates(q, k).select(
-                "query_id", "chunk_id", "doc_id", "page_content", "sim"
-            )
-        picks = self._picks(q, k, fetch_k, lambda_mult)
-        return picks.select(
-            F.col("query_id").cast("long").alias("query_id"), F.inline("picks")
+        shape = "mmr" if mmr else "topk"
+        return self._read_plan(
+            queries, text_col, id_col, k, fetch_k, lambda_mult, shape
         )
 
     def assess_relevance(
@@ -312,8 +412,8 @@ class RagPipeline:
         least half of the query's len>3 keywords (substring match,
         exactly the reference's `keyword in content`)."""
         q = queries.select(
-            F.col(id_col).alias("query_id"),
-            F.expr(_keywords_sql(f"`{text_col}`")).alias("keywords"),
+            F.col(_quote(id_col)).alias("query_id"),
+            F.expr(_keywords_sql(_quote(text_col))).alias("keywords"),
         )
         joined = retrieved.join(F.broadcast(q), "query_id")
         per_chunk = joined.select(
@@ -338,11 +438,12 @@ class RagPipeline:
         search-needed bit becomes a freshness-keyword predicate; the
         four-way branch structure is the reference's own
         (app.py:343-433)."""
-        q = queries.select(F.col(id_col).alias("query_id"), F.col(text_col))
+        text = _quote(text_col)
+        q = queries.select(F.col(_quote(id_col)).alias("query_id"), F.col(text))
         j = q.join(relevance, "query_id", "left").fillna({"relevant": False})
         return j.select(
-            "query_id", text_col,
-            F.expr(_plan_type_sql(f"`{text_col}`", "relevant")).alias("plan_type"),
+            "query_id", F.col(text),
+            F.expr(_plan_type_sql(text, "relevant")).alias("plan_type"),
         )
 
     def query(
@@ -367,31 +468,8 @@ class RagPipeline:
         per-row id), so scan -> window -> MMR runs once and nothing joins
         back to the queries.
         """
-        text = f"`{text_col}`"
-        q = self._embed_queries(
-            queries, text_col, id_col,
-            F.monotonically_increasing_id().alias("q_row"),
-            F.col(text_col).alias("q_text"),
-            F.expr(_keywords_sql(text)).alias("keywords"),
-        )
-        picks = self._picks(
-            q, k, DEFAULT_FETCH_K, DEFAULT_LAMBDA,
-            key="q_row", carry=("query_id", "q_text", "keywords"),
-        )
-        n_docs = "size(picks)"
-        matches = (
-            "aggregate(picks, 0, (acc, p) -> "
-            f"greatest(acc, {_hits_sql('keywords', 'p.page_content')}))"
-        )
-        relevant = f"({n_docs} > 0 AND {_relevant_sql(n_docs, matches, 'size(keywords)')})"
-        sources = (
-            f"CASE WHEN {n_docs} > 0 THEN "
-            "transform(slice(picks, 1, 3), p -> substring(p.page_content, 1, 300)) END"
-        )
-        return picks.select(
-            "query_id", F.col("q_text").alias(text_col),
-            F.expr(_plan_type_sql("q_text", relevant)).alias("plan_type"),
-            F.expr(sources).alias("sources"),
+        return self._read_plan(
+            queries, text_col, id_col, k, DEFAULT_FETCH_K, DEFAULT_LAMBDA, "answer"
         )
 
     # ----------------------------------------------------------- DDL path
