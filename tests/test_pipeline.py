@@ -105,10 +105,12 @@ def test_route_four_way(pipe, spark):
     ("q.text", "query_id"), ("query_text", "q.id"), ("q`t", "query_id"),
     ("q{t}", "q{i}"),  # spark.sql formats its text with str.format
 ])
-def test_read_path_quotes_caller_column_names(pipe, spark, text_col, id_col):
+def test_read_path_quotes_caller_column_names(
+    pipe, spark, sf_dir, tmp_path, text_col, id_col
+):
     """A legal column name holding a dot, a backtick or a brace names
-    the column itself in all four read methods: each answers as it does
-    on the default names."""
+    the column itself in all four read methods and in ingest: each
+    answers, or writes the index, as it does on the default names."""
     base = _queries(spark)
     q = base.toDF(id_col, text_col)
     names = dict(text_col=text_col, id_col=id_col)
@@ -126,6 +128,15 @@ def test_read_path_quotes_caller_column_names(pipe, spark, text_col, id_col):
     assert routed.columns == ["query_id", text_col, "plan_type"]
     want = pipe.route(base, pipe.assess_relevance(pipe.retrieve(base), base))
     assert rows(routed) == rows(want)
+
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
+    written = []
+    for i, col in enumerate(("text", text_col)):
+        p = RagPipeline(spark, str(tmp_path / f"idx{i}"), dim=pipe.dim)
+        p.ingest(docs.toDF("doc_id", col), text_col=col)
+        read = spark.read.parquet
+        written.append([rows(read(f"{p.index_dir}/{t}")) for t in ("chunks", "idf")])
+    assert written[0] == written[1]
 
 
 def test_reingest_overwrites(pipe, spark, sf_dir):
@@ -497,6 +508,19 @@ def test_query_build_makes_few_py4j_calls(pipe, spark, monkeypatch):
     df, calls = _count_py4j(monkeypatch, lambda: pipe.query(q))
     assert 0 < calls <= 60
     assert len(df.collect()) == 3
+
+
+def test_ingest_makes_few_py4j_calls(spark, sf_dir, tmp_path, monkeypatch):
+    """A warm ingest() builds its plans as SQL text and embeds through
+    the session hasher and IDF estimator: a few dozen py4j calls, not
+    one per Column node or ML param (474 before on perfbench's input)."""
+    p = RagPipeline(spark, str(tmp_path / "idx"), dim=64)
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
+    p.ingest(docs)
+    stats, calls = _count_py4j(monkeypatch, lambda: p.ingest(docs))
+    assert 0 < calls <= 120
+    assert stats.n_chunks == spark.read.parquet(f"{p.index_dir}/chunks").count()
+    p.clear()
 
 
 def _replay_query(spark, index_dir, dim, rows, k):

@@ -1,5 +1,4 @@
-"""The session-artifact memo (``memo.session_artifact``, re-exported by
-``tables``) and its clear.
+"""The session-artifact memo (``memo.session_artifact``) and its clear.
 
 Every driver-side session memo in the package goes through
 ``session_artifact``: one key scheme (application id + the build
@@ -18,7 +17,7 @@ from pathlib import Path
 
 import pytest
 
-from vectordb_agentic_rag_spark import tables
+from vectordb_agentic_rag_spark import memo, tables
 
 PKG_ROOT = Path(__file__).resolve().parents[1] / "vectordb_agentic_rag_spark"
 
@@ -73,7 +72,7 @@ def test_hit_returns_same_object_without_jobs(spark, sf_dir):
 def test_key_is_application_id_plus_arguments(spark, monkeypatch):
     built = []
 
-    @tables.session_artifact
+    @memo.session_artifact
     def probe(spark, n):
         built.append(n)
         return object()
@@ -81,9 +80,9 @@ def test_key_is_application_id_plus_arguments(spark, monkeypatch):
     a = probe(spark, 1)
     assert probe(spark, 1) is a
     assert probe(spark, 2) is not a  # different argument
-    app_id, jsc = tables._context(spark)
+    app_id, jsc = memo._context(spark)
     monkeypatch.setitem(
-        tables._CONTEXTS, spark.sparkContext, (f"{app_id}-other", jsc)
+        memo._CONTEXTS, spark.sparkContext, (f"{app_id}-other", jsc)
     )
     assert probe(spark, 1) is not a  # different application
     assert built == [1, 2, 1]
@@ -114,23 +113,23 @@ def test_clear_session_caches_empties_every_cache(spark, sf_dir):
         timeseries,
     )
 
-    tables.clear_session_caches()
+    memo.clear_session_caches()
     before = _persistent_rdds(spark)
     distribution._day_type_cells(spark, sf_dir)
     timeseries._polish_frames(spark, sf_dir)
     tables.cache_hot_tables(spark, sf_dir, ["region"])
     assert _persistent_rdds(spark) - before, "builds persisted nothing?"
 
-    tables.clear_session_caches()
+    memo.clear_session_caches()
     assert _persistent_rdds(spark) <= before
-    assert not any(tables._MEMOS)
+    assert not any(memo._MEMOS)
     assert not tables.table(spark, sf_dir, "region").is_cached
     assert distribution._day_type_cells(spark, sf_dir).count() > 0
 
     from vectordb_agentic_rag_spark.sources import readers
 
     readers._events_by_type(spark, sf_dir)
-    tables.clear_session_caches()
+    memo.clear_session_caches()
     _, jobs = _count_jobs(
         spark, lambda: readers._events_by_type(spark, sf_dir)
     )

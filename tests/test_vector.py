@@ -51,6 +51,29 @@ def test_cosine_of_zero_vector_is_zero(spark, pairs):
     assert [r[0] for r in zero.select(F.expr(cosine("a", "b"))).collect()] == [0.0] * 3
 
 
+def test_helpers_quote_names_with_a_backtick_or_a_dot(spark, pairs):
+    """cosine and mmr_picks take any column or field name: a backtick is
+    doubled and a dot is part of the name, not a struct access."""
+    from vectordb_agentic_rag_spark.functions.vector import mmr_picks
+
+    got = pairs.toDF("a`b", "c.d").select(F.expr(cosine("a`b", "c.d"))).collect()
+    want = pairs.select(F.expr(cosine("a", "b"))).collect()
+    assert [r[0] for r in got] == [r[0] for r in want]
+    cands = [(1, [1.0, 0.0], 0.9), (2, [1.0, 0.1], 0.8), (3, [0.0, 1.0], 0.5)]
+
+    def picks(col, id_field):
+        df = spark.createDataFrame(
+            [(cands,)],
+            f"`{col.replace('`', '``')}` array<struct<`{id_field}`: bigint, "
+            "embedding: array<double>, sim: double>>",
+        )
+        (r,) = df.select(F.expr(mmr_picks(col, 2, 0.5, id_field=id_field))).collect()
+        return [(p.idx, p.score) for p in r[0]]
+
+    assert picks("a`b", "c.d") == picks("c", "id")
+    assert len(picks("c", "id")) == 2
+
+
 def test_topk_subset_of_full_sort(spark, sf_dir):
     """Property: top-k == head of the full sort (SURVEY §5.6)."""
     from vectordb_agentic_rag_spark.operators.vector import vec_cosine_topk

@@ -1,4 +1,4 @@
-"""The reference's fixed-window chunker as one Catalyst expression.
+"""The reference's fixed-window chunker as one SQL text.
 
 It is the chunk step of ``RagPipeline.ingest`` (app.py:160-202), kept
 apart from the operator catalogue so the product path imports only
@@ -8,7 +8,8 @@ pyspark: no registry, fixtures or oracle SQL.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from . import _ident
 
 CHUNK_SIZE = 1000  # reference chunk_size, app.py:182
 CHUNK_OVERLAP = 200  # reference chunk_overlap, app.py:183
@@ -30,22 +31,16 @@ def chunk_documents(
     Window starts are 0, 800, 1600, ... while start <= len-201, so the
     final chunk always carries more than just the overlap; docs shorter
     than one chunk yield exactly one chunk (the FIXTURES.md boundary
-    case).
+    case). One ``spark.sql`` text; caller names are quoted (``_ident``).
     """
-    n = F.length(F.col(text_col))
-    starts = F.sequence(
-        F.lit(0), F.greatest(n - F.lit(CHUNK_OVERLAP + 1), F.lit(0)), F.lit(_STRIDE)
-    )
-    keep = list(keep_cols)
-    return (
-        docs.select("doc_id", *keep, F.explode(starts).alias("start"), F.col(text_col))
-        .select(
-            "doc_id",
-            *keep,
-            (F.col("start") / _STRIDE).cast("int").alias("chunk_no"),
-            F.expr(f"substring({text_col}, start + 1, {CHUNK_SIZE})").alias(
-                "page_content"
-            ),
-        )
-        .withColumn("chunk_len", F.length("page_content"))
+    text = f"d.{_ident(text_col)}"
+    keep = "".join(f"d.{_ident(c)}, " for c in keep_cols)
+    starts = f"sequence(0, greatest(length({text}) - {CHUNK_OVERLAP + 1}, 0), {_STRIDE})"
+    # qualified, so a docs column named ``start`` is no ambiguous reference
+    return docs.sparkSession.sql(
+        "SELECT *, length(page_content) AS chunk_len FROM ("
+        f"SELECT d.doc_id, {keep}CAST(w.start / {_STRIDE} AS INT) AS chunk_no, "
+        f"substring({text}, w.start + 1, {CHUNK_SIZE}) AS page_content "
+        f"FROM {{docs}} d LATERAL VIEW explode({starts}) w AS start)",
+        docs=docs,
     )

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..tables import session_artifact
+from ..memo import session_artifact
 
 
 def dist_exclusive_prefix(

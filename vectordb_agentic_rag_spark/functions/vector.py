@@ -31,6 +31,8 @@ import math
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from . import _quote
+
 
 def _dot_hof_sql(a: str, b: str) -> str:
     """``dot`` as SQL text over two array expressions."""
@@ -42,12 +44,12 @@ def _dot_hof_sql(a: str, b: str) -> str:
 
 def dot(a: str, b: str) -> Column:
     """Sequential-fold dot product of two array<float|double> columns."""
-    return F.expr(_dot_hof_sql(f"`{a}`", f"`{b}`"))
+    return F.expr(_dot_hof_sql(_quote(a), _quote(b)))
 
 
 def norm(a: str) -> Column:
     """L2 norm."""
-    return F.expr(f"sqrt({_dot_hof_sql(f'`{a}`', f'`{a}`')})")
+    return F.expr(f"sqrt({_dot_hof_sql(_quote(a), _quote(a))})")
 
 
 def cosine(a: str, b: str) -> str:
@@ -59,7 +61,7 @@ def cosine(a: str, b: str) -> str:
     convention), where 0/0 would raise DIVIDE_BY_ZERO under ANSI — e.g.
     for a query whose TF-IDF vector is all zero.
     """
-    a, b = f"`{a}`", f"`{b}`"
+    a, b = _quote(a), _quote(b)
     return (
         f"coalesce({_dot_hof_sql(a, b)} / nullif(sqrt({_dot_hof_sql(a, a)}) * "
         f"sqrt({_dot_hof_sql(b, b)}), 0D), 0D)"
@@ -78,16 +80,14 @@ def cosine(a: str, b: str) -> str:
 _UNROLL_LIMIT = 256
 
 def _esql(name: str, i: int) -> str:
-    # Backtick-quote so non-simple identifiers (dots, spaces) render
-    # as a single column reference, not a parse error.
-    return f"CAST(element_at(`{name}`, {i + 1}) AS DOUBLE)"
+    return f"CAST(element_at({_quote(name)}, {i + 1}) AS DOUBLE)"
 
 
 def _dot_sql(a: str, b: str, d: int) -> str:
     """<a, b> for a KNOWN dimension d as SQL text. `+` and `*` parse
     left-associative, so the unrolled chain folds in the HOF's order."""
     if d > _UNROLL_LIMIT:
-        return _dot_hof_sql(f"`{a}`", f"`{b}`")
+        return _dot_hof_sql(_quote(a), _quote(b))
     return " + ".join(f"{_esql(a, i)} * {_esql(b, i)}" for i in range(d))
 
 
@@ -102,7 +102,7 @@ def _dot_const_sql(a: str, qv: list) -> str:
             )
     lits = [f"{float(x)!r}D" for x in qv]
     if len(qv) > _UNROLL_LIMIT:
-        return _dot_hof_sql(f"`{a}`", f"array({', '.join(lits)})")
+        return _dot_hof_sql(_quote(a), f"array({', '.join(lits)})")
     return " + ".join(f"{_esql(a, i)} * {x}" for i, x in enumerate(lits))
 
 
@@ -165,7 +165,7 @@ def mmr_picks(cands: str, k: int, lam: float, id_field: str = "id") -> str:
     ``id_field`` (the tie-break), an ``embedding`` array and ``sim``, its
     similarity to the query. Candidate order does not matter; ``k <= 0``
     or an empty array gives no picks."""
-    c = f"`{cands}`"
+    c = _quote(cands)
     nrm = f"transform({c}, x -> sqrt({_dot_hof_sql('x.embedding', 'x.embedding')}))"
     zero = (
         "named_struct('picks', CAST(array() AS ARRAY<STRUCT<idx: INT, score: DOUBLE>>), "
@@ -176,7 +176,7 @@ def mmr_picks(cands: str, k: int, lam: float, id_field: str = "id") -> str:
         f"array_max(filter(transform({c}, (x, i) -> named_struct("
         f"'score', {float(lam)!r}D * CAST(x.sim AS DOUBLE) - "
         f"{float(1 - lam)!r}D * coalesce(st.red[i], 0D), "
-        f"'neg_id', -CAST(x.`{id_field}` AS BIGINT), 'idx', i)), "
+        f"'neg_id', -CAST(x.{_quote(id_field)} AS BIGINT), 'idx', i)), "
         "e -> NOT exists(st.picks, p -> p.idx = e.idx)))"
     )
     cos = (

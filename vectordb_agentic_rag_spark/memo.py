@@ -1,8 +1,7 @@
 """The session artifact memo every driver-side cache in the package shares.
 
 It imports only pyspark, so the product path (``plans.pipeline``) can
-memoize per session without loading the fixture-table module
-``tables``, which re-exports everything here.
+memoize per session without loading the fixture-table module ``tables``.
 """
 
 from __future__ import annotations

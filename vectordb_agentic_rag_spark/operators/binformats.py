@@ -35,8 +35,9 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..memo import session_artifact
 from ..registry import query
-from ..tables import SCRATCH, session_artifact, table
+from ..tables import SCRATCH, table
 
 # --- RIFF / WAVE ---------------------------------------------------------
 

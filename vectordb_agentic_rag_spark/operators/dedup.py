@@ -26,8 +26,9 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..memo import session_artifact
 from ..registry import query
-from ..tables import SCRATCH, session_artifact, sf_tag, table
+from ..tables import SCRATCH, sf_tag, table
 
 # --- shared integer-hash machinery (identical Spark SQL / DuckDB) ---
 

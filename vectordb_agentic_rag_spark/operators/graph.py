@@ -13,8 +13,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..memo import session_artifact
 from ..registry import query
-from ..tables import session_artifact, table
+from ..tables import table
 
 
 # ---------------------------------------------------------------------------

@@ -33,8 +33,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.vector import cosine_fixed, mmr_picks
+from ..memo import session_artifact
 from ..registry import query
-from ..tables import session_artifact, table
+from ..tables import table
 
 # fixed 32-token vocabulary for the oracle-checkable TF embedding
 _VOCAB = [

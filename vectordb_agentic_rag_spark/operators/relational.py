@@ -25,8 +25,9 @@ from pyspark.sql import functions as F
 
 from ..functions.chunking import chunk_documents
 from ..functions.money import cents, cents_to_dollars
+from ..memo import session_artifact
 from ..registry import query
-from ..tables import SCRATCH, session_artifact, sf_tag, table
+from ..tables import SCRATCH, sf_tag, table
 
 # ---------------------------------------------------------------- scans
 

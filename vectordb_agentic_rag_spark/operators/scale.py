@@ -21,8 +21,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.money import cents, cents_to_dollars
+from ..memo import session_artifact
 from ..registry import query
-from ..tables import session_artifact, sf_tag, table
+from ..tables import sf_tag, table
 
 N_SALT = 8
 

@@ -10,8 +10,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ...functions.domain import dist_exclusive_prefix
+from ...memo import session_artifact
 from ...registry import query
-from ...tables import session_artifact, table
+from ...tables import table
 from ..dedup import _KM_D
 from ..windows import _purchase_day_totals
 

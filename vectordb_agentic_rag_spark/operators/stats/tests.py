@@ -8,8 +8,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ...memo import session_artifact
 from ...registry import query
-from ...tables import session_artifact, table
+from ...tables import table
 from ..pipelines import _ANN_A, _ANN_B_DUCK, _ANN_B_SPARK
 from .distribution import _day_type_cells
 

@@ -17,8 +17,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.chunking import CHUNK_OVERLAP, CHUNK_SIZE, _STRIDE, chunk_documents
+from ..memo import session_artifact
 from ..registry import query
-from ..tables import session_artifact, table
+from ..tables import table
 
 
 # --- recursive separator-aware chunker (reference parity, R4) ---

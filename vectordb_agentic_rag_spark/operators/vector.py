@@ -33,8 +33,9 @@ from ..functions.vector import (
     norm_fixed,
     seq_norm,
 )
+from ..memo import session_artifact
 from ..registry import query
-from ..tables import SCRATCH, session_artifact, sf_tag, table
+from ..tables import SCRATCH, sf_tag, table
 from .dedup import _KM_D, _KM_ITERS, _km_asg_ctes, _km_assignments
 
 # DuckDB fragment: cosine similarity between two DOUBLE[] lists, with the

@@ -20,17 +20,18 @@ Scale design (the part the reference outsources to Qdrant/Cohere):
   (one row of idf weights) — a storage format a 1000-executor cluster
   can scan in parallel, not a serving index. Both have fixed schemas
   (``CHUNKS_SCHEMA``, ``IDF_SCHEMA``) and are read with them;
-- the read path keeps per-session state across a user's successive
-  calls instead of rebuilding it: the Tokenizer/HashingTF pair is built
-  once per (session, dim), and each index version (named by its file
-  listing) is read once: its chunks scan, and its idf vector as an
-  ``array(...)`` literal inlined into the plan, with no idf scan or
-  broadcast. The first call on an index version runs one job to read
-  the idf; a warm call's plan build runs no Spark job;
-- a read call is one SQL text, analyzed once: from the embedded queries
-  to the output row (cosine, window top-k, MMR, gate, route, sources)
-  it is a single ``spark.sql`` over two DataFrame arguments, built in a
-  few dozen py4j calls, not one per Column node;
+- both paths keep per-session state across a user's calls: one
+  Tokenizer/HashingTF/IDF set per (session, dim) embeds the chunks and
+  the queries alike, and each index version (named by its file listing)
+  is read once: its chunks scan, and its idf vector as an ``array(...)``
+  literal inlined into the plan, with no idf scan or broadcast. The
+  first call on an index version runs one job to read the idf; a warm
+  call's plan build runs no Spark job;
+- plans are SQL texts with caller column names quoted, each analyzed
+  once and built in a few dozen py4j calls, not one per Column node: a
+  read call is one ``spark.sql`` from the embedded queries to the output
+  row (cosine, window top-k, MMR, gate, route, sources), and ``ingest``
+  filters, chunks and numbers its chunks the same way;
 - embedding is HashingTF(dim)+IDF: hashing is stateless murmur3 (any
   executor embeds any row with no model shuffle), and the IDF fit is
   the single global aggregate of the write path (SURVEY §3.1);
@@ -59,6 +60,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import _ident, _quote
 from ..functions.chunking import chunk_documents
 from ..functions.vector import cosine, mmr_picks
 from ..memo import session_artifact
@@ -82,49 +84,45 @@ FRESH_WORDS = ("latest", "current", "news")
 
 # the embedding step's own columns, named so that no caller column is
 # replaced by them
-_TEXT, _WORDS, _TF = "__rag_text", "__rag_words", "__rag_tf"
-
-
-def _quote(name: str) -> str:
-    """A caller-supplied column name as a SQL identifier: backtick-quoted
-    with backticks doubled, so a dot or a backtick is part of the name."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _ident(name: str) -> str:
-    """``_quote(name)`` for a ``spark.sql`` text given DataFrames, which
-    ``spark.sql`` formats through ``str.format``: braces doubled."""
-    return _quote(name).replace("{", "{{").replace("}", "}}")
+_TEXT, _WORDS, _TF, _EMB = "__rag_text", "__rag_words", "__rag_tf", "__rag_emb"
 
 
 @dataclass(frozen=True)
 class _Jvm:
-    """A session's JVM handles for the read path. The pyspark.ml
-    wrappers are held, not only their ``_java_obj``: a dropped wrapper
-    detaches its Java object on GC. A static method looked up once
-    costs one py4j call a use instead of one per package level."""
+    """A session's JVM handles for both paths. The pyspark.ml wrappers
+    are held, not only their ``_java_obj``: a dropped wrapper detaches
+    its Java object on GC. A static method looked up once costs one
+    py4j call a use instead of one per package level."""
 
     tokenizer: Any
     hashing_tf: Any
+    idf: Any  # the IDF estimator, fitted by ingest()
     to_array: Any  # org.apache.spark.ml.functions.vector_to_array
     path: Any  # the org.apache.hadoop.fs.Path class
     stat2paths: Any
     paths_text: Any  # org.apache.commons.lang3.ArrayUtils.toString
     hadoop_conf: Any
 
+    def hashed(self, jdf: Any) -> Any:
+        """The Java Dataset ``jdf`` plus ``__rag_tf``, its ``__rag_text``'s
+        term counts hashed by murmur3: one space for chunks and queries."""
+        return self.hashing_tf._java_obj.transform(self.tokenizer._java_obj.transform(jdf))
+
 
 @session_artifact
 def _session_jvm(spark: SparkSession, dim: int) -> _Jvm:
-    from pyspark.ml.feature import HashingTF, Tokenizer
+    from pyspark.ml.feature import IDF, HashingTF, Tokenizer
 
     tokenizer = Tokenizer(inputCol=_TEXT, outputCol=_WORDS)
     hashing_tf = HashingTF(inputCol=_WORDS, outputCol=_TF, numFeatures=dim)
-    for t in (tokenizer, hashing_tf):
+    idf = IDF(inputCol=_TF, outputCol=_EMB)
+    for t in (tokenizer, hashing_tf, idf):
         t._transfer_params_to_java()
     jvm = spark._jvm
     return _Jvm(
         tokenizer,
         hashing_tf,
+        idf,
         jvm.org.apache.spark.ml.functions.vector_to_array,
         jvm.org.apache.hadoop.fs.Path,
         jvm.org.apache.hadoop.fs.FileUtil.stat2Paths,
@@ -217,43 +215,40 @@ class RagPipeline:
         reduce and the final write — same shape at any scale. The chunk
         count comes from that IDF fit (one document per chunk), so the
         chunks are derived once.
+
+        The filter, chunker and ids are SQL texts; the chunks are hashed
+        as the queries are (``_Jvm.hashed``) and the session IDF is fitted
+        through its Java ``fit``. The idf row is written from Arrow: an
+        ``array(...)`` literal of 262,144 weights took 21 s to parse.
         """
         if mode != "overwrite":
             # an append would leave a second idf row that every read
             # cross-joins, returning each chunk twice (ROADMAP item 2)
             raise ValueError(f"ingest supports mode='overwrite' only, not {mode!r}")
         import pyarrow as pa
-        from pyspark.ml.feature import IDF, HashingTF, Tokenizer
-        from pyspark.ml.functions import vector_to_array
+        from pyspark.ml.feature import IDFModel
 
         # a null text would chunk into one null page_content, which fails
         # the Tokenizer and so the whole call
-        docs = docs.where(F.col(text_col).isNotNull())
+        docs = self.spark.sql(f"SELECT * FROM {{d}} WHERE {_ident(text_col)} IS NOT NULL", d=docs)
         n_docs = docs.count()
         if n_docs == 0:
             # IDF.fit would raise "Haven't seen any document yet"; the
             # previous index is left as it was
             raise ValueError("ingest: no document with a non-null text to index")
-        doc_id = F.col("doc_id").cast("long")
-        chunks = chunk_documents(docs, text_col).select(
-            (doc_id * F.lit(1_000_000) + F.col("chunk_no")).alias("chunk_id"),
-            doc_id.alias("doc_id"),
-            "chunk_no",
-            "page_content",
-        )
-        toks = Tokenizer(inputCol="page_content", outputCol="words").transform(chunks)
-        tf = HashingTF(
-            inputCol="words", outputCol="tf", numFeatures=self.dim
-        ).transform(toks)
-        idf_model = IDF(inputCol="tf", outputCol="embedding").fit(tf)
-        out = idf_model.transform(tf).select(
-            "chunk_id",
-            "doc_id",
-            "chunk_no",
-            "page_content",
-            vector_to_array("embedding").alias("embedding"),
-        )
-        out.write.mode(mode).parquet(f"{self.index_dir}/chunks")
+        jvm = _session_jvm(self.spark, self.dim)
+        chunks = chunk_documents(docs, text_col)._jdf
+        tf = jvm.hashed(chunks.withColumn(_TEXT, chunks.col("page_content")))
+        # held until idf and numDocs are read: a dropped wrapper detaches it
+        idf_model = IDFModel(jvm.idf._java_obj.fit(tf))
+        emb = idf_model._java_obj.transform(tf)
+        emb = emb.withColumn(_EMB, jvm.to_array(emb.col(_EMB), "float64"))
+        self.spark.sql(
+            "SELECT CAST(doc_id AS BIGINT) * 1000000 + chunk_no AS chunk_id, "
+            "CAST(doc_id AS BIGINT) AS doc_id, chunk_no, page_content, "
+            f"{_EMB} AS embedding FROM {{emb}}",
+            emb=DataFrame(emb, self.spark),
+        ).write.mode(mode).parquet(f"{self.index_dir}/chunks")
         # idf weights as a 1-row table so retrieve() can embed queries
         # identically without refitting (hashing itself is stateless).
         # Built from an Arrow table: a Python-list DataFrame would be
@@ -280,21 +275,16 @@ class RagPipeline:
         self, queries: DataFrame, text_col: str, id_col: str, jvm: _Jvm
     ) -> DataFrame:
         """(query_id, q_text, __rag_tf): each query row's id and text and
-        the hashed term frequencies of its text as array<double> —
-        murmur3 HashingTF is deterministic, so query and corpus land in
-        the same space with no model state beyond the idf vector. A null
-        text is hashed as an empty one (the Tokenizer fails the whole
-        batch on a null). The session's transformers are called through
-        their Java ``transform``, which sends no param again."""
+        the hashed term frequencies of its text (``_Jvm.hashed``, as the
+        corpus) as array<double>. A null text is hashed as an empty one
+        (the Tokenizer fails the whole batch on a null)."""
         text = _ident(text_col)
         pre = self.spark.sql(
             f"SELECT {_ident(id_col)} AS query_id, {text} AS q_text, "
             f"coalesce({text}, '') AS {_TEXT} FROM {{q}}",
             q=queries,
         )
-        jdf = jvm.hashing_tf._java_obj.transform(
-            jvm.tokenizer._java_obj.transform(pre._jdf)
-        )
+        jdf = jvm.hashed(pre._jdf)
         jdf = jdf.withColumn(_TF, jvm.to_array(jdf.col(_TF), "float64"))
         return DataFrame(jdf, self.spark)
 
@@ -478,9 +468,6 @@ class RagPipeline:
         """"Clear All Data" (app.py:492-509): drop the collection. Uses
         the Hadoop FileSystem API so it works on any cluster filesystem,
         not just local disk."""
-        jvm = self.spark._jvm
-        jsc = self.spark._jsc
-        path = jvm.org.apache.hadoop.fs.Path(self.index_dir)
-        fs = path.getFileSystem(jsc.hadoopConfiguration())
-        if fs.exists(path):
-            fs.delete(path, True)
+        jvm = _session_jvm(self.spark, self.dim)
+        path = jvm.path(self.index_dir)
+        path.getFileSystem(jvm.hadoop_conf).delete(path, True)  # False if absent

@@ -14,8 +14,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..memo import session_artifact
 from ..registry import query
-from ..tables import SCRATCH, session_artifact, sf_tag, table
+from ..tables import SCRATCH, sf_tag, table
 
 _SCRATCH = f"{SCRATCH}/sources"
 

@@ -1,5 +1,4 @@
-"""Fixture-table access (TESTDATA.md / FIXTURES.md); re-exports the
-session artifact memo every operator shares (``memo``).
+"""Fixture-table access (TESTDATA.md / FIXTURES.md).
 
 Ten driver-generated parquet tables per scale factor. Reading via
 ``spark.read.parquet`` keeps Catalyst in charge: column pruning and
@@ -13,15 +12,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-# the memo lives in its own module so the product path can use it
-# without loading this one; re-exported for every existing caller
-from .memo import (  # noqa: F401
-    _CONTEXTS,
-    _MEMOS,
-    _context,
-    clear_session_caches,
-    session_artifact,
-)
+from .memo import session_artifact
 
 # the checkout this package lives in; write-once layouts go under SCRATCH
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
